@@ -183,28 +183,6 @@ object Layout {
     fs.delete(trash, true)
   }
 
-  /** Run a probe body that may race [[publishDir]] two-rename swaps,
-    * retrying (bounded, with backoff) while it fails on a missing path.
-    * The swap's invariant makes a retry always safe: every rename moves
-    * a COMPLETE directory, so a racing reader either (a) lists one
-    * consistent version — old or new — and succeeds, (b) hits the
-    * one-rename window where the live path is absent (`PATH_NOT_FOUND`
-    * at plan time), or (c) lists the old version and then scans after
-    * the trash delete has removed those files (`FileNotFoundException`
-    * mid-scan). There is NO outcome that silently mixes versions: stale
-    * listings point at renamed-away paths, which fail loudly rather
-    * than resolve to new content. Each retry re-runs `body` from
-    * scratch — it must REBUILD its DataFrames (a by-name block calling
-    * `spark.read` again, so every attempt re-lists) and MATERIALIZE
-    * them (a lazy frame returned unexecuted would defeat the guard).
-    * One retry is NOT always enough: under dense fold churn (overlapped
-    * maintenance legs shorten each fold cycle) a slow probe's attempt
-    * can straddle swap N and its retry straddle swap N+1, so the guard
-    * retries up to [[retryAttempts]] times with a short growing backoff
-    * — a missing path that persists past every attempt is not a
-    * transient window, the state needs [[recoverPublish]], and the
-    * rethrown error says so.
-    */
   /** Run independent legs CONCURRENTLY (guide §2.6: actions are only
     * sequential because the driver calls them sequentially — overlapping
     * independent jobs back-fills executor capacity freed by each job's
@@ -263,6 +241,29 @@ object Layout {
     }
   }
 
+  /** Run a probe body that may race [[publishDir]] two-rename swaps,
+    * retrying (bounded, with backoff) while it fails on a missing path.
+    * The swap's invariant makes a retry always safe: every rename moves
+    * a COMPLETE directory, so a racing reader either (a) lists one
+    * consistent version — old or new — and succeeds, (b) hits the
+    * one-rename window where the live path is absent (`PATH_NOT_FOUND`
+    * at plan time), or (c) lists the old version and then scans after
+    * the trash delete has removed those files (`FileNotFoundException`
+    * mid-scan — or `java.nio.file.NoSuchFileException` where a local
+    * read goes through NIO). There is NO outcome that silently mixes
+    * versions: stale listings point at renamed-away paths, which fail
+    * loudly rather than resolve to new content. Each retry re-runs `body` from
+    * scratch — it must REBUILD its DataFrames (a by-name block calling
+    * `spark.read` again, so every attempt re-lists) and MATERIALIZE
+    * them (a lazy frame returned unexecuted would defeat the guard).
+    * One retry is NOT always enough: under dense fold churn (overlapped
+    * maintenance legs shorten each fold cycle) a slow probe's attempt
+    * can straddle swap N and its retry straddle swap N+1, so the guard
+    * retries up to [[retryAttempts]] times with a short growing backoff
+    * — a missing path that persists past every attempt is not a
+    * transient window, the state needs [[recoverPublish]], and the
+    * rethrown error says so.
+    */
   private[graft] def retryOnceOnMissing[T](body: => T): T = {
     // cause-chain walk is BOUNDED (depth cap + identity cycle guard —
     // a cyclic cause chain must not hang the probe) and the catch
@@ -275,6 +276,7 @@ object Layout {
       var depth = 0
       while (t != null && depth < 16 && seen.add(t)) {
         if (t.isInstanceOf[java.io.FileNotFoundException] ||
+            t.isInstanceOf[java.nio.file.NoSuchFileException] ||
             (t.isInstanceOf[org.apache.spark.sql.AnalysisException] &&
               t.getMessage != null && t.getMessage.contains("PATH_NOT_FOUND")))
           return true
@@ -650,7 +652,8 @@ object Layout {
   }
 
   /** The COMMITTED `seg=*` directory names under a leg (those whose
-    * write finished — `_SUCCESS` present). Fold input comes from here.
+    * write finished — `_SUCCESS` present); [[committedView]] lists each
+    * leg through here.
     */
   private[graft] def committedSegs(fs: org.apache.hadoop.fs.FileSystem,
                                    legDir: org.apache.hadoop.fs.Path): Seq[String] =
@@ -660,52 +663,116 @@ object Layout {
         fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
       .map(_.getName).toSeq.sorted
 
-  /** The committed two-leg view of a CDC-maintained index for PROBES
-    * and STATS: segments committed in BOTH the doc log and the data
-    * leg (`postings` for the text index, `cells` for the ANN index),
-    * intersected — the same view [[committedSegs]] gives the folds. An
-    * append writes the two legs as two non-atomic jobs, so a reader
-    * racing a writer (or surviving its crash) could otherwise see a
-    * batch's postings without its doclog rows, or either leg's torn
-    * `_temporary` remains; the intersect pins every probe to a
-    * doclog/data pair from the same committed batch set. A leg that
-    * lists EMPTY throws FileNotFoundException — the two-rename publish
-    * window leaves the index root briefly absent, and
-    * [[retryOnceOnMissing]] retries exactly that signal (an absent
-    * maintained INDEX is a caller error or a transient swap, never a
-    * valid empty answer — unlike the single-leg state logs, whose
-    * probes answer empty by the ingest-screening contract).
+  // ---- the segment protocol of the CDC-maintained structures -------------
+  //
+  // The text index, the ANN index, the fp log and the band log all store
+  // versioned `seg=` segments under one protocol: [[append]] writes a
+  // batch's segment past the replay fence, [[committedView]] is what every
+  // probe, stats call and fold reads, and [[fold]] publishes a new base.
+  // A structure supplies only its leg names and its staging writes.
+
+  /** A structure's leg directory; a state log is its own single leg `""`. */
+  private def legDir(root: String, leg: String): String =
+    if (leg.isEmpty) root else s"$root/$leg"
+
+  /** One committed snapshot of a structure: the segment names committed
+    * in every leg, and their reads.
     */
-  private[graft] def committedIndexLegs(s: SparkSession, indexDir: String,
-                                        dataLeg: String): (DataFrame, DataFrame) = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val docDir = s"$indexDir/doclog"
-    val dataDir = s"$indexDir/$dataLeg"
-    val segs = committedSegs(fs, new org.apache.hadoop.fs.Path(docDir))
-      .intersect(committedSegs(fs, new org.apache.hadoop.fs.Path(dataDir)))
-    if (segs.isEmpty)
-      throw new java.io.FileNotFoundException(
-        s"no committed doclog+$dataLeg segment pairs under $indexDir " +
-          "(absent index, or a publish swap in flight — probes retry via " +
-          "Layout.retryOnceOnMissing)")
-    (s.read.option("basePath", docDir).parquet(segs.map(n => s"$docDir/$n"): _*),
-      s.read.option("basePath", dataDir).parquet(segs.map(n => s"$dataDir/$n"): _*))
+  private[graft] final class SegmentView(s: SparkSession, root: String,
+                                         val segs: Seq[String]) {
+    /** `leg`'s committed segments, `seg` read as a partition column. */
+    def read(leg: String): DataFrame = {
+      val dir = legDir(root, leg)
+      s.read.option("basePath", dir).parquet(segs.map(n => s"$dir/$n"): _*)
+    }
   }
 
-  /** Bin-pack a parquet directory toward `targetBytes` per output file —
-    * small-file compaction, the OPTIMIZE half that [[zorderCluster]]'s
-    * re-sort doesn't cover. Streaming ingest (foreachBatch deltas, index
-    * segment appends) accretes many small files; at 100 TB the scan cost
-    * of a million 1 MB files is dominated by per-file open/footer
-    * overhead and task scheduling, so periodic repacking into
-    * ceil(total/target) files is table maintenance, run per partition
-    * directory. Content-preserving rewrite (round-robin repartition — no
-    * sort, no column change), staged and published via [[publishDir]]'s
-    * two-rename swap: a crash leaves a complete directory recoverable
-    * by a single rename, never a half-compacted table. Returns the
-    * output file count.
+  /** The committed view of a CDC-maintained structure — the one read of
+    * every probe, stats call and fold. Each leg (`doclog` + `postings`
+    * for the text index, `doclog` + `cells` for the ANN index, `""` for
+    * a state log) is listed once through [[committedSegs]], and the legs
+    * are intersected: an append writes its legs as separate non-atomic
+    * jobs, so a reader racing a writer (or surviving its crash) could
+    * otherwise see one leg of a batch without the other, or a leg's torn
+    * `_temporary` remains. None when nothing is committed — an absent
+    * structure, one before its first committed batch, or a root briefly
+    * absent inside [[publishDir]]'s two-rename window. The log probes
+    * answer None empty (the ingest-screening contract); the index probes
+    * turn it into [[missingIndex]].
     */
+  private[graft] def committedView(s: SparkSession, root: String,
+                                   legs: Seq[String]): Option[SegmentView] = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val segs = legs
+      .map(l => committedSegs(fs, new org.apache.hadoop.fs.Path(legDir(root, l))))
+      .reduce(_ intersect _)
+    if (segs.isEmpty) None else Some(new SegmentView(s, root, segs))
+  }
+
+  /** An index probe's answer to an empty [[committedView]]: an absent
+    * maintained INDEX is a caller error or a transient publish swap,
+    * never a valid empty answer, so it throws the FileNotFoundException
+    * [[retryOnceOnMissing]] retries.
+    */
+  private[graft] def missingIndex(root: String): Nothing =
+    throw new java.io.FileNotFoundException(
+      s"no committed segments under $root (absent index, or a publish " +
+        "swap in flight — probes retry via Layout.retryOnceOnMissing)")
+
+  /** Append one batch's `segment` to the structure at `root`. A segment
+    * at or below the replay fence was already folded into `seg=base`, so
+    * its replay is SKIPPED (false) — re-created rows would double against
+    * base through the probes' (key, ver) liveness joins. Otherwise the
+    * structure's leg writes run concurrently through [[inParallelLegs]]
+    * (their commit contract is [[committedView]]'s intersect, so order is
+    * free) and the answer is true. `legWrites` is evaluated only past the
+    * fence: a structure's own checks and first-batch setup never run for
+    * a fenced replay.
+    */
+  private[graft] def append(s: SparkSession, root: String, segment: String)
+                           (legWrites: => Seq[() => Unit]): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    if (replayFenced(p.getFileSystem(s.sparkContext.hadoopConfiguration), p, segment))
+      false
+    else { inParallelLegs(legWrites); true }
+  }
+
+  /** The one fold protocol of the CDC-maintained structures:
+    *  1. take the cross-process fold lease ([[withFoldLease]]);
+    *  2. read the [[committedView]] of `legs` — a torn segment belongs
+    *     to an uncommitted batch that will replay, so it is dropped from
+    *     the published tree, never folded and never fenced;
+    *  3. compute the replay fence: the highest ordinal consumed, never
+    *     below the fence already recorded (a base-only re-fold keeps it);
+    *  4. `stage(view, staging)` writes the structure's whole new tree
+    *     under `<root>.<tag>-<pid>`;
+    *  5. write `_folded_through` into the staged tree and publish it with
+    *     [[publishDir]]'s two-rename swap, so the fence lands atomically
+    *     with the fold and a crash leaves the old tree or the new one for
+    *     [[recoverPublish]], never neither.
+    * Never run concurrently with an append to the same structure: the
+    * stream's foreachBatch serializes them in-process, and the lease
+    * makes a second maintenance process fail by name.
+    */
+  private[graft] def fold(s: SparkSession, root: String, legs: Seq[String],
+                          tag: String)(stage: (SegmentView, String) => Unit): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    withFoldLease(fs, p) {
+      val view = committedView(s, root, legs)
+      require(view.isDefined, s"$tag: no committed segments under $root")
+      val upTo = (foldedThrough(fs, p).toSeq ++ view.get.segs
+        .filter(_ != "seg=base")
+        .map(n => segmentOrdinal(n.stripPrefix("seg=")))).maxOption
+      val staging = new org.apache.hadoop.fs.Path(
+        s"$root.$tag-${ProcessHandle.current().pid()}")
+      stage(view.get, staging.toString)
+      upTo.foreach(writeFoldedThrough(fs, staging, _))
+      publishDir(fs, staging, p)
+    }
+  }
+
   /** Automate [[publishDir]]'s documented crash recovery. For a
     * published path `live`, inspect its sibling `.trash-*` /
     * `.compact-*` / `.optimize-*` residues:
@@ -833,6 +900,19 @@ object Layout {
     if (report.isEmpty) "clean" else report.mkString("; ")
   }
 
+  /** Bin-pack a parquet directory toward `targetBytes` per output file —
+    * small-file compaction, the OPTIMIZE half that [[zorderCluster]]'s
+    * re-sort doesn't cover. Streaming ingest (foreachBatch deltas, index
+    * segment appends) accretes many small files; at 100 TB the scan cost
+    * of a million 1 MB files is dominated by per-file open/footer
+    * overhead and task scheduling, so periodic repacking into
+    * ceil(total/target) files is table maintenance, run per partition
+    * directory. Content-preserving rewrite (round-robin repartition — no
+    * sort, no column change), staged and published via [[publishDir]]'s
+    * two-rename swap: a crash leaves a complete directory recoverable
+    * by a single rename, never a half-compacted table. Returns the
+    * output file count.
+    */
   def compactFiles(s: SparkSession, dir: String, targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val p = new org.apache.hadoop.fs.Path(dir)

@@ -533,51 +533,47 @@ object Similarity {
     * deleted) to the ANN index; the first batch also writes the
     * centroids it was quantized under. Segment replay is idempotent
     * (same overwrite-own-rows protocol as [[appendToAnnIndex]]) —
-    * unless a fold already consumed the segment into seg=base
-    * ([[Layout.replayFenced]]): then the append is skipped (returns
-    * false), since re-created rows would score twice through the
-    * probe's (vec_id, ver) liveness join. Returns true iff written.
+    * unless a fold already consumed the segment: [[Layout.append]] then
+    * skips it (false). Returns true iff written.
     */
   def appendCdcAnnSegment(images: DataFrame, indexDir: String,
                           segment: String, k: Int = 16): Boolean = {
     val s = images.sparkSession
     import s.implicits._
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val rootFs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (Layout.replayFenced(rootFs, root, segment)) return false
-    // the quantizer runs on a float view (the assigners' native-dot
-    // path); the STORED embedding stays the exact long array the
-    // integer-dot probe scores — cell choice may be float-rounded,
-    // scores never are
-    val live = images.filter(!$"deleted")
-      .withColumn("emb_exact", $"embedding")
-      .withColumn("embedding", $"embedding".cast("array<float>"))
-    val centPath = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
-    val fs = centPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val assigned =
-      if (!fs.exists(centPath)) {
-        // checkpoint: the assignment feeds the centroid aggregate AND
-        // the segment write — and must not replay the source batch
-        val a = assignCells(live, k).localCheckpoint(true)
-        cellCentroids(a).write.mode("overwrite").parquet(centPath.toString)
-        a
-      } else assignToCentroids(live, s.read.parquet(centPath.toString))
-    // the two legs are independent jobs and their commit contract is
-    // intersection-of-_SUCCESS (order-free) — run them concurrently
-    // (guide §2.6; the text twin does the same)
-    Layout.inParallelLegs(Seq(
-      () => assigned
-        .withColumn("embedding", $"emb_exact").drop("emb_exact")
-        // cluster by cell before the partitionBy write (tasks x cells
-        // small files per segment otherwise — see appendCdcTextSegment)
-        .repartition($"cell")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$indexDir/cells/seg=$segment"),
-      () => images.select($"vec_id", $"ver", $"deleted")
-        .coalesce(4)
-        .write.mode("overwrite").parquet(s"$indexDir/doclog/seg=$segment")))
-    true
+    Layout.append(s, indexDir, segment) {
+      // the quantizer runs on a float view (the assigners' native-dot
+      // path); the STORED embedding stays the exact long array the
+      // integer-dot probe scores — cell choice may be float-rounded,
+      // scores never are
+      val live = images.filter(!$"deleted")
+        .withColumn("emb_exact", $"embedding")
+        .withColumn("embedding", $"embedding".cast("array<float>"))
+      val centPath = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
+      val fs = centPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val assigned =
+        if (!fs.exists(centPath)) {
+          // checkpoint: the assignment feeds the centroid aggregate AND
+          // the segment write — and must not replay the source batch
+          val a = assignCells(live, k).localCheckpoint(true)
+          cellCentroids(a).write.mode("overwrite").parquet(centPath.toString)
+          a
+        } else assignToCentroids(live, s.read.parquet(centPath.toString))
+      Seq(
+        () => assigned
+          .withColumn("embedding", $"emb_exact").drop("emb_exact")
+          // cluster by cell before the partitionBy write (tasks x cells
+          // small files per segment otherwise — see appendCdcTextSegment)
+          .repartition($"cell")
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$indexDir/cells/seg=$segment"),
+        () => images.select($"vec_id", $"ver", $"deleted")
+          .coalesce(4)
+          .write.mode("overwrite").parquet(s"$indexDir/doclog/seg=$segment"))
+    }
   }
+
+  /** The CDC ANN index's legs: the doc log and the cells. */
+  private[graft] val cdcAnnLegs = Seq("doclog", "cells")
 
   /** Fold the CDC ANN index to a live-only base segment — the ANN twin
     * of [[TextAnalysis.compactCdcTextIndex]]: superseded and deleted
@@ -585,55 +581,36 @@ object Similarity {
     * made under the persisted quantizer, which only a rebuild
     * replaces), the doc log collapses to live rows, tombstones vanish.
     * Probe-invariant by construction (spec-pinned); restores O(live)
-    * doc-log scans and O(1) seg fan-out per cell. Maintenance-job
-    * contract as the text twin; two-rename publish.
+    * doc-log scans and O(1) seg fan-out per cell. Published through
+    * [[Layout.fold]].
     */
   def compactCdcAnnIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // cross-process mutex (the text twin's contract): a concurrent fold
-    // of the same structure fails by name instead of racing the publish
-    Layout.withFoldLease(fs, p) {
-    // committed segments only, in BOTH legs, + the replay fence — the
-    // text twin's contract verbatim (Layout's replay-fence block)
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/cells")))
-    require(segs.nonEmpty, s"compact: no committed segments under $indexDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
-      .persist() // feeds the cell filter AND the folded doc log
-    try {
-      val staging = s"$indexDir.compact-${ProcessHandle.current().pid()}"
-      val cells = s.read.option("basePath", s"$indexDir/cells")
-        .parquet(segs.map(n => s"$indexDir/cells/$n"): _*)
-        .drop("seg")
-      // three independent staging legs off the pinned `live` frame,
-      // published atomically by the swap below (guide §2.6)
-      Layout.inParallelLegs(Seq(
-        () => cells
-          .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
-          .select(cells.columns.map(col): _*)
-          .repartition($"cell")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$staging/cells/seg=base"),
-        () => live.select($"vec_id", $"ver", $"deleted")
-          .coalesce(4)
-          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base"),
-        // centroids carry over unchanged (the quantizer is rebuild-only)
-        () => s.read.parquet(s"$indexDir/centroids")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")))
-      upTo.foreach(u =>
-        Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-      Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-    } finally live.unpersist()
+    Layout.fold(s, indexDir, cdcAnnLegs, "compact") { (view, staging) =>
+      val live = view.read("doclog")
+        .groupBy($"vec_id")
+        .agg(max(struct($"ver", $"deleted")).as("m"))
+        .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
+        .filter(!$"deleted")
+        .persist() // feeds the cell filter AND the folded doc log
+      try {
+        val cells = view.read("cells").drop("seg")
+        // three independent staging legs off the pinned `live` frame,
+        // published atomically with the fold (guide §2.6)
+        Layout.inParallelLegs(Seq(
+          () => cells
+            .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
+            .select(cells.columns.map(col): _*)
+            .repartition($"cell")
+            .write.mode("overwrite").partitionBy("cell")
+            .parquet(s"$staging/cells/seg=base"),
+          () => live.select($"vec_id", $"ver", $"deleted")
+            .coalesce(4)
+            .write.mode("overwrite").parquet(s"$staging/doclog/seg=base"),
+          // centroids carry over unchanged (the quantizer is rebuild-only)
+          () => s.read.parquet(s"$indexDir/centroids")
+            .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")))
+      } finally live.unpersist()
     }
   }
 
@@ -658,35 +635,20 @@ object Similarity {
     * assignment pass and one slim (k·dims rows) centroid shuffle,
     * nothing corpus-sized is collected or broadcast. Superseded and
     * tombstoned versions are dropped and the doc log collapses (a
-    * requantize subsumes a compact). Publish: same lease + staging +
-    * `_folded_through` fence + two-rename protocol as the compactors —
-    * a crash anywhere leaves either the old index or the new one,
-    * adjudicated by [[Layout.recoverPublish]], and replayed ingest
-    * batches at or below the fence are skipped.
+    * requantize subsumes a compact). Published through [[Layout.fold]].
     */
   def requantizeCdcAnnIndex(s: SparkSession, indexDir: String, k: Int = 16,
                             iterations: Int = 2): Unit = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.withFoldLease(fs, p) {
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/cells")))
-    require(segs.nonEmpty, s"requantize: no committed segments under $indexDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
+    Layout.fold(s, indexDir, cdcAnnLegs, "optimize") { (view, staging) =>
+    val live = view.read("doclog")
       .groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
       .persist()
     try {
-      val cells = s.read.option("basePath", s"$indexDir/cells")
-        .parquet(segs.map(n => s"$indexDir/cells/$n"): _*)
-        .drop("seg")
+      val cells = view.read("cells").drop("seg")
       // live rows, OLD cell dropped; the Lloyd loop re-reads these, so
       // pin them once (live-corpus-sized, same footprint as a compact)
       val rows = cells
@@ -726,10 +688,9 @@ object Similarity {
             .localCheckpoint(true)
         val assigned = assignToCentroids(floatView, cent)
           .withColumn("embedding", $"emb_exact").drop("emb_exact")
-        val staging = s"$indexDir.optimize-${ProcessHandle.current().pid()}"
         // three independent staging legs (assigned reads the pinned
         // rows, cent is a k-row checkpoint) — run concurrently
-        // (guide §2.6); the swap below publishes them atomically
+        // (guide §2.6); the fold publishes them atomically
         Layout.inParallelLegs(Seq(
           () => assigned
             .repartition($"cell")
@@ -740,9 +701,6 @@ object Similarity {
             .write.mode("overwrite").parquet(s"$staging/doclog/seg=base"),
           () => cent.coalesce(1).write.mode("overwrite")
             .parquet(s"$staging/centroids")))
-        upTo.foreach(u =>
-          Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-        Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
       } finally rows.unpersist()
     } finally live.unpersist()
     }
@@ -763,15 +721,16 @@ object Similarity {
     */
   def cdcAnnIndexStats(s: SparkSession, indexDir: String): DataFrame = {
     import s.implicits._
-    // committed two-leg view, like the probe: the policy must never
-    // threshold on a torn in-flight append's half-written batch
-    val (doclog, cells) = Layout.committedIndexLegs(s, indexDir, "cells")
-    val live = doclog
+    // committed view, like the probe: the policy must never threshold
+    // on a torn in-flight append's half-written batch
+    val view = Layout.committedView(s, indexDir, cdcAnnLegs)
+      .getOrElse(Layout.missingIndex(indexDir))
+    val live = view.read("doclog")
       .groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val occupancy = cells
+    val occupancy = view.read("cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .groupBy($"cell").agg(count(lit(1)).as("n_live"))
     s.read.parquet(s"$indexDir/centroids").select($"cell")
@@ -862,16 +821,18 @@ object Similarity {
                                    nprobe: Int): DataFrame = {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
-    // committed two-leg view (Layout.committedIndexLegs): a torn
-    // in-flight append is invisible, a mid-swap absence throws the
-    // FNF retryOnceOnMissing retries
-    val (doclog, cellsBase) = Layout.committedIndexLegs(s, indexDir, "cells")
-    val live = doclog
+    // committed view (Layout.committedView): a torn in-flight append is
+    // invisible, a mid-swap absence throws the FNF retryOnceOnMissing
+    // retries
+    val view = Layout.committedView(s, indexDir, cdcAnnLegs)
+      .getOrElse(Layout.missingIndex(indexDir))
+    val live = view.read("doclog")
       .groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
     val q = lit(qVec.toArray)
+    val cellsBase = view.read("cells")
     val pruned =
       if (nprobe == Int.MaxValue) cellsBase
       else {

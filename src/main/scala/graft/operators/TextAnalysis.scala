@@ -904,11 +904,8 @@ object TextAnalysis {
     * `images` must hold one row per touched key: (doc_id, text, ver,
     * deleted), with `ver` strictly increasing across a key's successive
     * batches (the batch id — stream order makes it monotone). Replaying
-    * a batch rewrites exactly its own segment — idempotent, the
-    * [[Similarity.appendToAnnIndex]] protocol — UNLESS a fold already
-    * consumed that segment into seg=base ([[Layout.replayFenced]]): then
-    * the append is SKIPPED (returns false) — re-creating the rows would
-    * double them against base through the probe's (doc_id, ver) join.
+    * a batch rewrites exactly its own segment — idempotent — unless a
+    * fold already consumed it: [[Layout.append]] then skips it (false).
     * Returns true iff a segment was written.
     */
   def appendCdcTextSegment(images: DataFrame, indexDir: String,
@@ -916,46 +913,45 @@ object TextAnalysis {
                            nBuckets: Int = textIndexBuckets): Boolean = {
     val s = images.sparkSession
     import s.implicits._
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (Layout.replayFenced(fs, root, segment)) return false
-    // the FIRST append defines the recorded bucket count (the text twin
-    // of the ANN index's first-batch quantizer contract); every later
-    // append must match it or its rows land in directories the probes
-    // never prune to — silently unsearchable
-    textIndexBucketCount(s, indexDir) match {
-      case Some(recorded) => require(recorded == nBuckets,
-        s"append bucketed by $nBuckets but the index at $indexDir records " +
-          s"$recorded term buckets (re-bucketed?) — pass the recorded count")
-      case None => writeBucketMarker(fs, indexDir, nBuckets)
+    Layout.append(s, indexDir, segment) {
+      // the FIRST append defines the recorded bucket count (the text twin
+      // of the ANN index's first-batch quantizer contract); every later
+      // append must match it or its rows land in directories the probes
+      // never prune to — silently unsearchable
+      textIndexBucketCount(s, indexDir) match {
+        case Some(recorded) => require(recorded == nBuckets,
+          s"append bucketed by $nBuckets but the index at $indexDir records " +
+            s"$recorded term buckets (re-bucketed?) — pass the recorded count")
+        case None => writeBucketMarker(new org.apache.hadoop.fs.Path(indexDir)
+          .getFileSystem(s.sparkContext.hadoopConfiguration), indexDir, nBuckets)
+      }
+      Seq(
+        () => images.filter(!$"deleted")
+          .select($"doc_id", $"ver",
+            size(tokens($"text")).cast("long").as("dl"),
+            explode(tokens($"text")).as("term"))
+          .groupBy($"term", $"doc_id", $"ver", $"dl")
+          .agg(count(lit(1)).as("tf"))
+          .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
+          // cluster by bucket before the partitionBy write: without this
+          // every task writes into every bucket dir (tasks x buckets small
+          // files PER SEGMENT — a steady stream melts the probe's listing
+          // cost); with it each bucket's rows land in O(1) files
+          .repartition($"tb")
+          .write.mode("overwrite").partitionBy("tb")
+          .parquet(s"$indexDir/postings/seg=$segment"),
+        // the doc log records DELETES too (a tombstone is a version); slim
+        // rows — a handful of files per segment, not one per task
+        () => images.select($"doc_id", $"ver", $"deleted",
+            when($"deleted", lit(0L))
+              .otherwise(size(tokens($"text")).cast("long")).as("dl"))
+          .coalesce(4)
+          .write.mode("overwrite").parquet(s"$indexDir/doclog/seg=$segment"))
     }
-    // the two legs are independent jobs over the same (cached) images
-    // and their commit contract is already intersection-of-_SUCCESS
-    // (order-free) — run them concurrently (guide §2.6)
-    Layout.inParallelLegs(Seq(
-      () => images.filter(!$"deleted")
-        .select($"doc_id", $"ver",
-          size(tokens($"text")).cast("long").as("dl"),
-          explode(tokens($"text")).as("term"))
-        .groupBy($"term", $"doc_id", $"ver", $"dl")
-        .agg(count(lit(1)).as("tf"))
-        .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
-        // cluster by bucket before the partitionBy write: without this
-        // every task writes into every bucket dir (tasks x buckets small
-        // files PER SEGMENT — a steady stream melts the probe's listing
-        // cost); with it each bucket's rows land in O(1) files
-        .repartition($"tb")
-        .write.mode("overwrite").partitionBy("tb")
-        .parquet(s"$indexDir/postings/seg=$segment"),
-      // the doc log records DELETES too (a tombstone is a version); slim
-      // rows — a handful of files per segment, not one per task
-      () => images.select($"doc_id", $"ver", $"deleted",
-          when($"deleted", lit(0L))
-            .otherwise(size(tokens($"text")).cast("long")).as("dl"))
-        .coalesce(4)
-        .write.mode("overwrite").parquet(s"$indexDir/doclog/seg=$segment")))
-    true
   }
+
+  /** The CDC text index's legs: the doc log and the postings. */
+  private val cdcTextLegs = Seq("doclog", "postings")
 
   /** Fold the CDC index to a live-only single base segment: superseded
     * and deleted versions' postings are DROPPED (the only operation that
@@ -966,122 +962,78 @@ object TextAnalysis {
     * compaction removes (spec-pinned) — but the probe's doc-log scan
     * shrinks from O(touched-versions) to O(live docs) and the pruned
     * posting read loses its seg fan-out, the [[compactTextIndex]]
-    * economics. Maintenance-job contract: never run concurrently with
-    * ingest or probes; the stream's checkpoint guarantees committed
-    * batches are not replayed, so no re-appended segment can resurrect
-    * a compacted-away version. Published via the two-rename
-    * [[graft.operators.Layout.publishDir]] swap.
+    * economics. Published through [[Layout.fold]].
     */
   def compactCdcTextIndex(s: SparkSession, indexDir: String,
-                          nBuckets: Int = textIndexBuckets): Unit = {
-    import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // cross-process mutex: the in-process contract (serialized
-    // foreachBatch) can't see a second maintenance JOB; the lease makes
-    // a concurrent fold of the same structure fail by name
-    Layout.withFoldLease(fs, p) {
-    // fold only COMMITTED segments, in BOTH legs (a batch writes
-    // postings then doclog; either torn means the batch never committed
-    // and will replay — its segment must be dropped, not folded), and
-    // record the replay fence so the replay skips instead of doubling
-    // rows against base (Layout's replay-fence contract)
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/postings")))
-    require(segs.nonEmpty, s"compact: no committed segments under $indexDir")
-    textIndexBucketCount(s, indexDir).foreach(recorded =>
-      require(recorded == nBuckets,
-        s"compact asked for $nBuckets term buckets but the index at $indexDir " +
-          s"records $recorded (re-bucketed?) — pass the recorded count"))
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"),
-        $"m.deleted".as("deleted"), $"m.dl".as("dl"))
-      .filter(!$"deleted")
-      .persist() // feeds the posting filter AND the folded doc log
-    try {
-      val staging = s"$indexDir.compact-${ProcessHandle.current().pid()}"
-      // both staging legs consume the pinned `live` frame and publish
-      // atomically via the directory swap below — independent jobs,
-      // run concurrently (guide §2.6)
-      Layout.inParallelLegs(Seq(
-        () => s.read.option("basePath", s"$indexDir/postings")
-          .parquet(segs.map(n => s"$indexDir/postings/$n"): _*)
-          .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
-          .select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb")
-          .write.mode("overwrite").partitionBy("tb")
-          .parquet(s"$staging/postings/seg=base"),
-        () => live.select($"doc_id", $"ver", $"deleted", $"dl")
-          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
-      upTo.foreach(u =>
-        Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-      // the marker travels with the tree (the swap replaces the whole
-      // root, and a fold never changes the bucket count)
-      writeBucketMarker(fs, staging, nBuckets)
-      Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-    } finally live.unpersist()
-    }
-  }
+                          nBuckets: Int = textIndexBuckets): Unit =
+    foldCdcTextIndex(s, indexDir, nBuckets, rebucket = false)
 
   /** [[rebucketTextIndex]] for the CDC-maintained index: rewrite the
     * postings under a NEW term-bucket count — one postings-sized
     * shuffle, no corpus or change-stream re-read. A re-bucket subsumes
     * a compact (reading every posting row anyway, it drops superseded
     * and tombstoned versions and collapses the doc log for free), so it
-    * publishes with the fold's full protocol: committed-segments-only,
-    * replay fence at the highest consumed ordinal, lease, staged tree +
-    * two-rename swap. The staged tree carries the new `_nbuckets`
-    * marker; subsequent appends and probes verify against it by name —
-    * under live ingest this runs exactly where the compactors do (the
-    * serialized foreachBatch maintenance window or a maintenance job),
-    * and an append still carrying the old count after the swap fails
-    * loudly instead of writing unsearchable rows.
+    * publishes through the same [[Layout.fold]]. The staged tree carries
+    * the new `_nbuckets` marker; subsequent appends and probes verify
+    * against it by name — under live ingest this runs exactly where the
+    * compactors do (the serialized foreachBatch maintenance window or a
+    * maintenance job), and an append still carrying the old count after
+    * the swap fails loudly instead of writing unsearchable rows.
     */
   def rebucketCdcTextIndex(s: SparkSession, indexDir: String,
                            newBuckets: Int): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
+    foldCdcTextIndex(s, indexDir, newBuckets, rebucket = true)
+  }
+
+  /** The one body of [[compactCdcTextIndex]] and [[rebucketCdcTextIndex]]:
+    * the doc-log argmax pins each live doc's version, the (doc_id, ver)
+    * join keeps only those postings, and the doc log collapses to the
+    * live rows. A re-bucket re-hashes every posting to `nBuckets` (the one
+    * unavoidable shuffle: rows MOVE buckets); a compact keeps each
+    * posting's `tb` — posting files live inside their `tb=` directories,
+    * so read tasks carry one bucket's rows and the partitionBy write lands
+    * them back without an exchange — and requires the recorded count to
+    * be `nBuckets`. Either way the staged tree records `nBuckets`.
+    */
+  private def foldCdcTextIndex(s: SparkSession, indexDir: String,
+                               nBuckets: Int, rebucket: Boolean): Unit = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.withFoldLease(fs, p) {
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/postings")))
-    require(segs.nonEmpty, s"rebucket: no committed segments under $indexDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"),
-        $"m.deleted".as("deleted"), $"m.dl".as("dl"))
-      .filter(!$"deleted")
-      .persist()
-    try {
-      val staging = s"$indexDir.optimize-${ProcessHandle.current().pid()}"
-      // independent staging legs off the pinned `live` frame (guide §2.6)
-      Layout.inParallelLegs(Seq(
-        () => s.read.option("basePath", s"$indexDir/postings")
-          .parquet(segs.map(n => s"$indexDir/postings/$n"): _*)
-          .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
-          .select($"term", $"doc_id", $"ver", $"dl", $"tf")
-          .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
-          .repartition($"tb")
-          .write.mode("overwrite").partitionBy("tb")
-          .parquet(s"$staging/postings/seg=base"),
-        () => live.select($"doc_id", $"ver", $"deleted", $"dl")
-          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
-      upTo.foreach(u =>
-        Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-      writeBucketMarker(fs, staging, newBuckets)
-      Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-    } finally live.unpersist()
+    val fs = new org.apache.hadoop.fs.Path(indexDir)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    Layout.fold(s, indexDir, cdcTextLegs, if (rebucket) "optimize" else "compact") {
+        (view, staging) =>
+      if (!rebucket) textIndexBucketCount(s, indexDir).foreach(recorded =>
+        require(recorded == nBuckets,
+          s"compact asked for $nBuckets term buckets but the index at $indexDir " +
+            s"records $recorded (re-bucketed?) — pass the recorded count"))
+      val live = view.read("doclog")
+        .groupBy($"doc_id")
+        .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
+        .select($"doc_id", $"m.ver".as("ver"),
+          $"m.deleted".as("deleted"), $"m.dl".as("dl"))
+        .filter(!$"deleted")
+        .persist() // feeds the posting filter AND the folded doc log
+      try {
+        // both staging legs consume the pinned `live` frame and publish
+        // atomically with the fold — independent jobs, run concurrently
+        // (guide §2.6)
+        Layout.inParallelLegs(Seq(
+          () => {
+            val posts = view.read("postings")
+              .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
+            (if (rebucket)
+              posts.select($"term", $"doc_id", $"ver", $"dl", $"tf")
+                .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
+                .repartition($"tb")
+            else posts.select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb"))
+              .write.mode("overwrite").partitionBy("tb")
+              .parquet(s"$staging/postings/seg=base")
+          },
+          () => live.select($"doc_id", $"ver", $"deleted", $"dl")
+            .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
+        writeBucketMarker(fs, staging, nBuckets)
+      } finally live.unpersist()
     }
   }
 
@@ -1117,13 +1069,14 @@ object TextAnalysis {
                                   indexDir: String): (Int, DataFrame) = {
     import s.implicits._
     val nb = textIndexBucketCount(s, indexDir).getOrElse(textIndexBuckets)
-    val (doclog, postings) = Layout.committedIndexLegs(s, indexDir, "postings")
-    val live = doclog
+    val view = Layout.committedView(s, indexDir, cdcTextLegs)
+      .getOrElse(Layout.missingIndex(indexDir))
+    val live = view.read("doclog")
       .groupBy($"doc_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val occupancy = postings
+    val occupancy = view.read("postings")
       .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
       .groupBy($"tb").agg(count(lit(1)).as("n_postings"))
     (nb, occupancy)
@@ -1215,18 +1168,19 @@ object TextAnalysis {
       require(recorded == nBuckets,
         s"probe asked for $nBuckets term buckets but the index at $indexDir " +
           s"records $recorded (re-bucketed?) — pass the recorded count"))
-    // committed two-leg view (Layout.committedIndexLegs): a torn
-    // in-flight append is invisible, a mid-swap absence throws the
-    // FNF retryOnceOnMissing retries
-    val (doclog, postings) = Layout.committedIndexLegs(s, indexDir, "postings")
-    val live = doclog.groupBy($"doc_id")
+    // committed view (Layout.committedView): a torn in-flight append is
+    // invisible, a mid-swap absence throws the FNF retryOnceOnMissing
+    // retries
+    val view = Layout.committedView(s, indexDir, cdcTextLegs)
+      .getOrElse(Layout.missingIndex(indexDir))
+    val live = view.read("doclog").groupBy($"doc_id")
       .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
       .select($"doc_id", $"m.ver".as("ver"),
         $"m.deleted".as("deleted"), $"m.dl".as("dl"))
       .filter(!$"deleted")
     val stats = live.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
     val tbs = termBuckets(s, terms, nBuckets)
-    val posts = postings
+    val posts = view.read("postings")
       .filter($"tb".isin(tbs: _*) && $"term".isin(terms: _*))
       .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
       .select($"term", $"doc_id", $"dl", $"tf")

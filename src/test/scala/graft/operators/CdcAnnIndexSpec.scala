@@ -112,7 +112,7 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** The committed two-leg read contract, ANN twin of the text leg
-    * (Layout.committedIndexLegs): a half-committed append — doclog
+    * (Layout.committedView): a half-committed append — doclog
     * job done, cells job torn — is invisible to the probe and to the
     * policy's stats; an absent index throws the FileNotFoundException
     * retryOnceOnMissing retries, never an empty answer.

@@ -1,13 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{array, length, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The replay-after-fold seam, reconstructed deterministically for all
-  * three CDC-maintained structures. foreachBatch is at-least-once: a
-  * crash between a batch's append and its checkpoint commit replays the
-  * batch. Plain replay is an idempotent overwrite of the batch's own
+  * six fold entry points of the four CDC-maintained structures.
+  * foreachBatch is at-least-once: a crash between a batch's append and
+  * its checkpoint commit replays the batch. Plain replay is an idempotent overwrite of the batch's own
   * segment — but if a MID-STREAM COMPACTION folded that segment into
   * seg=base before the crash, the replay would re-create rows base
   * already holds, and the probes' (doc_id|vec_id, ver) liveness joins
@@ -40,8 +41,6 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def collectStr(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  // ---- text -------------------------------------------------------------
-
   private def textImages(rows: (Int, String, Int, Boolean)*): DataFrame = {
     import spark.implicits._
     rows.toSeq.toDF("doc_id", "text", "ver", "deleted")
@@ -49,120 +48,135 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
         $"ver".cast("long").as("ver"), $"deleted")
   }
 
-  test("text: a replayed folded batch is fenced — no segment, no double counting") {
-    graft.functions.GraftFunctions.register(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft-fence-txt")
-    val idx = work.resolve("index").toString
-    val terms = Seq("alpha", "beta")
-    def probe() = collectStr(TextAnalysis
-      .bm25TopKViaCdcIndex(spark, idx, terms, 10, nBuckets = 4)
-      .orderBy("r_sparse"))
+  // ---- every fold entry point ---------------------------------------------
 
-    val b2 = textImages((4, "alpha beta beta", 2, false), (2, "", 2, true))
-    assert(TextAnalysis.appendCdcTextSegment(
-      textImages((1, "alpha alpha x", 0, false), (2, "beta y", 0, false)),
-      idx, "b000000", nBuckets = 4))
-    assert(TextAnalysis.appendCdcTextSegment(
-      textImages((3, "alpha z", 1, false), (1, "beta beta w", 1, false)),
-      idx, "b000001", nBuckets = 4))
-    assert(TextAnalysis.appendCdcTextSegment(b2, idx, "b000002", nBuckets = 4))
-    val want = probe()
-    assert(want.nonEmpty)
+  /** One fold entry point over its structure. Every structure is fed the
+    * same (doc_id, text, ver, deleted) batches, mapped to its own images:
+    * the text index indexes the text, the ANN index embeds it as
+    * (id, length, 1), the fp log fingerprints it as the text itself and
+    * the band log shingles and bands it. `legs` are the directories that
+    * carry `seg=` segments (`""` is the root of a log); `fencedClaim`
+    * names what the structure's probe shows for a fenced replay.
+    */
+  private case class FoldEntry(label: String, fencedClaim: String,
+                               legs: Seq[String],
+                               append: (String, DataFrame, String) => Boolean,
+                               fold: String => Unit,
+                               probe: String => Seq[String])
 
-    TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
-    assert(segNames(s"$idx/doclog") === Set("seg=base"))
-    assert(probe() === want, "compaction alone must be probe-invariant")
+  private def recordedBuckets(idx: String): Int =
+    TextAnalysis.textIndexBucketCount(spark, idx).getOrElse(4)
 
-    // the crash replay: batch 2 re-runs after its segment was folded
-    assert(!TextAnalysis.appendCdcTextSegment(b2, idx, "b000002", nBuckets = 4),
-      "replay of a folded batch must be fenced")
-    assert(segNames(s"$idx/doclog") === Set("seg=base"),
-      "the fenced replay must not re-create its segment")
-    assert(probe() === want,
-      "a replayed folded batch double-counted postings through the probe")
+  private def appendText(idx: String, b: DataFrame, seg: String): Boolean =
+    TextAnalysis.appendCdcTextSegment(b, idx, seg, nBuckets = recordedBuckets(idx))
 
-    // post-fence ingest still lands and supersedes
-    assert(TextAnalysis.appendCdcTextSegment(
-      textImages((1, "z only", 3, false)), idx, "b000003", nBuckets = 4))
-    assert(segNames(s"$idx/doclog") === Set("seg=base", "seg=b000003"))
-    val after = probe()
-    assert(after !== want, "the post-fence update must be visible")
-    assert(!after.exists(_.startsWith("[1,")),
-      "doc 1 no longer matches the terms after its update")
-  }
+  private def probeText(idx: String): Seq[String] = collectStr(TextAnalysis
+    .bm25TopKViaCdcIndex(spark, idx, Seq("alpha", "beta"), 10,
+      nBuckets = recordedBuckets(idx))
+    .orderBy("r_sparse"))
 
-  test("text: a torn segment is dropped by the fold, not folded — its replay rewrites it") {
-    graft.functions.GraftFunctions.register(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft-fence-torn")
-    val idx = work.resolve("index").toString
-    val terms = Seq("alpha")
-    def probe() = collectStr(TextAnalysis
-      .bm25TopKViaCdcIndex(spark, idx, terms, 10, nBuckets = 4)
-      .orderBy("r_sparse"))
-
-    assert(TextAnalysis.appendCdcTextSegment(
-      textImages((1, "alpha a", 0, false), (2, "alpha b", 0, false)),
-      idx, "b000000", nBuckets = 4))
-    val want = probe()
-
-    // a crashed append: segment written but its doclog commit torn
-    val b1 = textImages((3, "alpha c", 1, false))
-    assert(TextAnalysis.appendCdcTextSegment(b1, idx, "b000001", nBuckets = 4))
-    assert(fs.delete(new org.apache.hadoop.fs.Path(
-      s"$idx/doclog/seg=b000001/_SUCCESS"), false))
-
-    TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
-    // the torn segment is gone from the tree and NOT behind the fence
-    assert(segNames(s"$idx/doclog") === Set("seg=base"))
-    assert(Layout.foldedThrough(fs, new org.apache.hadoop.fs.Path(idx)) === Some(0L))
-    assert(probe() === want, "the torn (uncommitted) batch must not be folded")
-
-    // the batch replays (it never committed) and lands normally now
-    assert(TextAnalysis.appendCdcTextSegment(b1, idx, "b000001", nBuckets = 4))
-    assert(probe().size === want.size + 1)
-  }
-
-  // ---- ANN --------------------------------------------------------------
-
-  private def annImages(rows: (Int, Seq[Long], Int, Boolean)*): DataFrame = {
+  private def appendAnn(idx: String, b: DataFrame, seg: String): Boolean = {
     import spark.implicits._
-    rows.toSeq.toDF("vec_id", "embedding", "ver", "deleted")
-      .select($"vec_id".cast("long").as("vec_id"), $"embedding",
-        $"ver".cast("long").as("ver"), $"deleted")
+    Similarity.appendCdcAnnSegment(b.select($"doc_id".as("vec_id"),
+      array($"doc_id", length($"text").cast("long"), lit(1L)).as("embedding"),
+      $"ver", $"deleted"), idx, seg, k = 2)
   }
 
-  test("ANN: a replayed folded batch is fenced — no duplicate vec_ids in the top-k") {
-    graft.functions.GraftFunctions.register(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft-fence-ann")
-    val idx = work.resolve("annindex").toString
-    val qVec = Seq(3L, 1L, 2L)
-    def probe() = collectStr(Similarity
-      .mipsTopKViaCdcAnnIndex(spark, idx, qVec, 10).orderBy("r_dense"))
+  private def probeAnn(idx: String): Seq[String] = collectStr(Similarity
+    .mipsTopKViaCdcAnnIndex(spark, idx, Seq(3L, 1L, 2L), 10).orderBy("r_dense"))
 
-    val b1 = annImages((4, Seq(5L, 5L, 5L), 1, false), (1, Seq(9L, 0L, 0L), 1, false))
-    assert(Similarity.appendCdcAnnSegment(
-      annImages((1, Seq(1L, 2L, 3L), 0, false), (2, Seq(2L, 2L, 2L), 0, false),
-        (3, Seq(0L, 1L, 0L), 0, false)), idx, "b000000", k = 4))
-    assert(Similarity.appendCdcAnnSegment(b1, idx, "b000001", k = 4))
-    val want = probe()
-    assert(want.size === 4)
+  private def appendFp(log: String, b: DataFrame, seg: String): Boolean = {
+    import spark.implicits._
+    CdcBinlog.appendCdcFpSegment(
+      b.select($"doc_id", $"ver", $"deleted", $"text".as("fp")), log, seg)
+  }
 
-    Similarity.compactCdcAnnIndex(spark, idx)
-    assert(segNames(s"$idx/doclog") === Set("seg=base"))
-    assert(segNames(s"$idx/cells") === Set("seg=base"))
-    assert(probe() === want, "compaction alone must be probe-invariant")
+  private val entries = Seq(
+    FoldEntry("text", " — no segment, no double counting",
+      Seq("doclog", "postings"), appendText,
+      idx => TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4), probeText),
+    FoldEntry("text rebucket", " — no segment, no double counting",
+      Seq("doclog", "postings"), appendText,
+      idx => TextAnalysis.rebucketCdcTextIndex(spark, idx, 8), probeText),
+    FoldEntry("ANN", " — no duplicate vec_ids in the top-k",
+      Seq("doclog", "cells"), appendAnn,
+      idx => Similarity.compactCdcAnnIndex(spark, idx), probeAnn),
+    FoldEntry("ANN requantize", " — no duplicate vec_ids in the top-k",
+      Seq("doclog", "cells"), appendAnn,
+      idx => Similarity.requantizeCdcAnnIndex(spark, idx, k = 2), probeAnn),
+    FoldEntry("fp log", "; groups unchanged", Seq(""), appendFp,
+      log => CdcBinlog.compactCdcFpLog(spark, log),
+      log => collectStr(CdcBinlog.cdcFpGroups(spark, log))),
+    FoldEntry("band log", "; pairs unchanged", Seq(""),
+      (log, b, seg) => CdcBinlog.appendCdcFpSegment(
+        CdcBinlog.cdcm15BandImages(b), log, seg),
+      log => CdcBinlog.compactCdcBandLog(spark, log),
+      log => collectStr(CdcBinlog.cdcNearDupPairs(spark, log))))
 
-    assert(!Similarity.appendCdcAnnSegment(b1, idx, "b000001", k = 4),
-      "replay of a folded batch must be fenced")
-    assert(segNames(s"$idx/doclog") === Set("seg=base"))
-    val got = probe()
-    assert(got === want,
-      "a replayed folded batch produced duplicate scored rows in the top-k")
+  // texts long enough to shingle; equal texts are exact and near dups
+  private val t1 = "alpha beta gamma delta"
+  private val t2 = "beta epsilon zeta eta"
+  private val t3 = "alpha alpha theta"
 
-    // post-fence ingest still lands
-    assert(Similarity.appendCdcAnnSegment(
-      annImages((5, Seq(7L, 7L, 7L), 2, false)), idx, "b000002", k = 4))
-    assert(probe().size === 5)
+  private def legDir(root: String, leg: String) =
+    if (leg.isEmpty) root else s"$root/$leg"
+
+  for (e <- entries) {
+    test(s"${e.label}: a replayed folded batch is fenced${e.fencedClaim}") {
+      graft.functions.GraftFunctions.register(spark)
+      val root = java.nio.file.Files.createTempDirectory("graft-fence")
+        .resolve("structure").toString
+      val b2 = textImages((4, t3, 2, false), (2, "", 2, true))
+      assert(e.append(root, textImages((1, t1, 0, false), (2, t2, 0, false)), "b000000"))
+      assert(e.append(root, textImages((3, t1, 1, false), (4, t2, 1, false)), "b000001"))
+      assert(e.append(root, b2, "b000002"))
+      val want = e.probe(root)
+      assert(want.nonEmpty)
+
+      e.fold(root)
+      e.legs.foreach(l => assert(segNames(legDir(root, l)) === Set("seg=base")))
+      assert(Layout.foldedThrough(fs, new org.apache.hadoop.fs.Path(root)) === Some(2L))
+      assert(e.probe(root) === want, "the fold alone must be probe-invariant")
+
+      // the crash replay: batch 2 re-runs after its segment was folded
+      assert(!e.append(root, b2, "b000002"),
+        "replay of a folded batch must be fenced")
+      e.legs.foreach(l => assert(segNames(legDir(root, l)) === Set("seg=base"),
+        "the fenced replay must not re-create its segment"))
+      assert(e.probe(root) === want,
+        "a replayed folded batch double-counted rows through the probe")
+
+      // post-fence ingest still lands and supersedes
+      assert(e.append(root, textImages((1, t3, 3, false)), "b000003"))
+      e.legs.foreach(l =>
+        assert(segNames(legDir(root, l)) === Set("seg=base", "seg=b000003")))
+      assert(e.probe(root) !== want, "the post-fence update must be visible")
+    }
+
+    test(s"${e.label}: a torn segment is dropped by the fold, not folded — its replay rewrites it") {
+      graft.functions.GraftFunctions.register(spark)
+      val root = java.nio.file.Files.createTempDirectory("graft-fence-torn")
+        .resolve("structure").toString
+      assert(e.append(root, textImages((1, t1, 0, false), (2, t2, 0, false)), "b000000"))
+      val want = e.probe(root)
+
+      // a crashed append: the segment is written but its first leg's
+      // commit is torn
+      val b1 = textImages((3, t1, 1, false))
+      assert(e.append(root, b1, "b000001"))
+      assert(fs.delete(new org.apache.hadoop.fs.Path(
+        s"${legDir(root, e.legs.head)}/seg=b000001/_SUCCESS"), false))
+
+      e.fold(root)
+      // the torn segment is gone from the tree and NOT behind the fence
+      e.legs.foreach(l => assert(segNames(legDir(root, l)) === Set("seg=base")))
+      assert(Layout.foldedThrough(fs, new org.apache.hadoop.fs.Path(root)) === Some(0L))
+      assert(e.probe(root) === want, "the torn (uncommitted) batch must not be folded")
+
+      // the batch replays (it never committed) and lands normally now
+      assert(e.append(root, b1, "b000001"))
+      assert(e.probe(root).size === want.size + 1)
+    }
   }
 
   test("text: the fence is monotone across successive folds") {
@@ -203,39 +217,5 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
     assert(Layout.foldedThrough(fs, root) === Some(3L))
     assert(probe().size === 3)
-  }
-
-  // ---- fingerprint log ----------------------------------------------------
-
-  test("fp log: a replayed folded batch is fenced; groups unchanged") {
-    import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft-fence-fp")
-    val log = work.resolve("fplog").toString
-    def fpImages(rows: (Int, Int, Boolean, String)*): DataFrame =
-      rows.toSeq.toDF("doc_id", "ver", "deleted", "fp")
-        .select($"doc_id".cast("long").as("doc_id"),
-          $"ver".cast("long").as("ver"), $"deleted", $"fp")
-    def groups() = collectStr(CdcBinlog.cdcFpGroups(spark, log))
-
-    val b1 = fpImages((3, 1, false, "A"), (4, 1, false, "B"))
-    assert(CdcBinlog.appendCdcFpSegment(
-      fpImages((1, 0, false, "A"), (2, 0, false, "B")), log, "b000000"))
-    assert(CdcBinlog.appendCdcFpSegment(b1, log, "b000001"))
-    val want = groups()
-    assert(want.size === 2) // {1,3} on A, {2,4} on B
-
-    CdcBinlog.compactCdcFpLog(spark, log)
-    assert(segNames(log) === Set("seg=base"))
-    assert(groups() === want)
-
-    assert(!CdcBinlog.appendCdcFpSegment(b1, log, "b000001"),
-      "replay of a folded batch must be fenced")
-    assert(segNames(log) === Set("seg=base"))
-    assert(groups() === want)
-
-    // post-fence ingest: doc 1 moves off A — group A dissolves
-    assert(CdcBinlog.appendCdcFpSegment(
-      fpImages((1, 2, false, "C")), log, "b000002"))
-    assert(groups().size === 1)
   }
 }

@@ -198,7 +198,7 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally tw.close()
   }
 
-  /** The committed two-leg read contract (Layout.committedIndexLegs):
+  /** The committed two-leg read contract (Layout.committedView):
     * an append writes doclog and postings as two non-atomic jobs, so a
     * probe or the policy's stats racing a writer (or surviving its
     * crash between the jobs) must not see a batch's doclog without its

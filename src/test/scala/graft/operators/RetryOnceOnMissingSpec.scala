@@ -102,6 +102,23 @@ class RetryOnceOnMissingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(attempt === 2)
   }
 
+  /** A local read that goes through NIO reports a file deleted under it
+    * as `java.nio.file.NoSuchFileException`, not FileNotFoundException —
+    * the same missing-path signal, so it is retried the same way.
+    */
+  test("NIO NoSuchFileException in the cause chain is retried") {
+    var attempt = 0
+    val got = Layout.retryOnceOnMissing {
+      attempt += 1
+      if (attempt == 1)
+        throw new RuntimeException("task failed",
+          new java.nio.file.NoSuchFileException("/idx/part-0 deleted by a writer"))
+      5
+    }
+    assert(got === 5)
+    assert(attempt === 2)
+  }
+
   test("cyclic cause chain: bounded walk terminates, non-missing propagates once") {
     val a = new RuntimeException("a")
     val b = new RuntimeException("b", a)
