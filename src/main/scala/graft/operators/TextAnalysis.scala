@@ -965,8 +965,18 @@ object TextAnalysis {
     * economics. Published through [[Layout.fold]].
     */
   def compactCdcTextIndex(s: SparkSession, indexDir: String,
-                          nBuckets: Int = textIndexBuckets): Unit =
-    foldCdcTextIndex(s, indexDir, nBuckets, rebucket = false)
+                          nBuckets: Int = textIndexBuckets): Unit = {
+    import s.implicits._
+    textIndexBucketCount(s, indexDir).foreach(recorded =>
+      require(recorded == nBuckets,
+        s"compact asked for $nBuckets term buckets but the index at $indexDir " +
+          s"records $recorded (re-bucketed?) — pass the recorded count"))
+    // posting files live inside their `tb=` directories, so read tasks
+    // carry one bucket's rows and the partitionBy write lands them back
+    // without an exchange
+    foldCdcTextIndex(s, indexDir, nBuckets, "compact")(
+      _.select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb"))
+  }
 
   /** [[rebucketTextIndex]] for the CDC-maintained index: rewrite the
     * postings under a NEW term-bucket count — one postings-sized
@@ -983,30 +993,26 @@ object TextAnalysis {
   def rebucketCdcTextIndex(s: SparkSession, indexDir: String,
                            newBuckets: Int): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    foldCdcTextIndex(s, indexDir, newBuckets, rebucket = true)
+    import s.implicits._
+    // the one unavoidable shuffle: rows MOVE buckets
+    foldCdcTextIndex(s, indexDir, newBuckets, "optimize")(
+      _.select($"term", $"doc_id", $"ver", $"dl", $"tf")
+        .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
+        .repartition($"tb"))
   }
 
   /** The one body of [[compactCdcTextIndex]] and [[rebucketCdcTextIndex]]:
     * the doc-log argmax pins each live doc's version, the (doc_id, ver)
     * join keeps only those postings, and the doc log collapses to the
-    * live rows. A re-bucket re-hashes every posting to `nBuckets` (the one
-    * unavoidable shuffle: rows MOVE buckets); a compact keeps each
-    * posting's `tb` — posting files live inside their `tb=` directories,
-    * so read tasks carry one bucket's rows and the partitionBy write lands
-    * them back without an exchange — and requires the recorded count to
-    * be `nBuckets`. Either way the staged tree records `nBuckets`.
+    * live rows. `postings` turns the live postings into the staged rows
+    * partitioned by `tb`; the staged tree records `nBuckets`.
     */
-  private def foldCdcTextIndex(s: SparkSession, indexDir: String,
-                               nBuckets: Int, rebucket: Boolean): Unit = {
+  private def foldCdcTextIndex(s: SparkSession, indexDir: String, nBuckets: Int,
+                               tag: String)(postings: DataFrame => DataFrame): Unit = {
     import s.implicits._
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.fold(s, indexDir, cdcTextLegs, if (rebucket) "optimize" else "compact") {
-        (view, staging) =>
-      if (!rebucket) textIndexBucketCount(s, indexDir).foreach(recorded =>
-        require(recorded == nBuckets,
-          s"compact asked for $nBuckets term buckets but the index at $indexDir " +
-            s"records $recorded (re-bucketed?) — pass the recorded count"))
+    Layout.fold(s, indexDir, cdcTextLegs, tag) { (view, staging) =>
       val live = view.read("doclog")
         .groupBy($"doc_id")
         .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
@@ -1019,17 +1025,10 @@ object TextAnalysis {
         // atomically with the fold — independent jobs, run concurrently
         // (guide §2.6)
         Layout.inParallelLegs(Seq(
-          () => {
-            val posts = view.read("postings")
-              .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
-            (if (rebucket)
-              posts.select($"term", $"doc_id", $"ver", $"dl", $"tf")
-                .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
-                .repartition($"tb")
-            else posts.select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb"))
-              .write.mode("overwrite").partitionBy("tb")
-              .parquet(s"$staging/postings/seg=base")
-          },
+          () => postings(view.read("postings")
+              .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver")))
+            .write.mode("overwrite").partitionBy("tb")
+            .parquet(s"$staging/postings/seg=base"),
           () => live.select($"doc_id", $"ver", $"deleted", $"dl")
             .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
         writeBucketMarker(fs, staging, nBuckets)

@@ -56,13 +56,18 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     * (id, length, 1), the fp log fingerprints it as the text itself and
     * the band log shingles and bands it. `legs` are the directories that
     * carry `seg=` segments (`""` is the root of a log); `fencedClaim`
-    * names what the structure's probe shows for a fenced replay.
+    * names what the structure's probe shows for a fenced replay;
+    * `postFence` checks the probe before (`want`) and after the
+    * post-fence batch that updates doc 1 and inserts doc 6 — exact
+    * answers, so an update that lands but leaves doc 1's old version
+    * live fails it.
     */
   private case class FoldEntry(label: String, fencedClaim: String,
                                legs: Seq[String],
                                append: (String, DataFrame, String) => Boolean,
                                fold: String => Unit,
-                               probe: String => Seq[String])
+                               probe: String => Seq[String],
+                               postFence: (Seq[String], Seq[String]) => Unit)
 
   private def recordedBuckets(idx: String): Int =
     TextAnalysis.textIndexBucketCount(spark, idx).getOrElse(4)
@@ -71,7 +76,7 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     TextAnalysis.appendCdcTextSegment(b, idx, seg, nBuckets = recordedBuckets(idx))
 
   private def probeText(idx: String): Seq[String] = collectStr(TextAnalysis
-    .bm25TopKViaCdcIndex(spark, idx, Seq("alpha", "beta"), 10,
+    .bm25TopKViaCdcIndex(spark, idx, Seq("beta"), 10,
       nBuckets = recordedBuckets(idx))
     .orderBy("r_sparse"))
 
@@ -91,32 +96,66 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       b.select($"doc_id", $"ver", $"deleted", $"text".as("fp")), log, seg)
   }
 
+  // texts long enough to shingle; equal texts are exact and near dups;
+  // the text probe's term "beta" is in t1 and t2, not in t3
+  private val t1 = "alpha beta gamma delta"
+  private val t2 = "beta epsilon zeta eta"
+  private val t3 = "alpha alpha theta"
+
+  private def rowsOf(id: Int, rows: Seq[String]) = rows.filter(_.startsWith(s"[$id,"))
+
+  /** Text: doc 1 (t1 -> t3) no longer matches "beta"; doc 6 (t2) does. */
+  private def textPostFence(want: Seq[String], after: Seq[String]): Unit = {
+    assert(want.size === 4) // docs 1, 3 (t1) and 4, 5 (t2)
+    assert(after.size === 4)
+    assert(rowsOf(1, after).isEmpty, "doc 1 no longer matches the terms after its update")
+    assert(rowsOf(6, after).size === 1)
+  }
+
+  /** ANN: doc 1 keeps one vector, re-embedded by its new text; doc 6 lands. */
+  private def annPostFence(want: Seq[String], after: Seq[String]): Unit = {
+    assert(want.size === 4) // vec_ids 1, 3, 4, 5; 2 is deleted
+    assert(after.size === 5)
+    assert(rowsOf(1, want).size === 1 && rowsOf(1, after).size === 1)
+    assert(rowsOf(1, after) !== rowsOf(1, want), "doc 1's new vector must supersede the old")
+  }
+
   private val entries = Seq(
     FoldEntry("text", " — no segment, no double counting",
       Seq("doclog", "postings"), appendText,
-      idx => TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4), probeText),
+      idx => TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4), probeText,
+      textPostFence),
     FoldEntry("text rebucket", " — no segment, no double counting",
       Seq("doclog", "postings"), appendText,
-      idx => TextAnalysis.rebucketCdcTextIndex(spark, idx, 8), probeText),
+      idx => TextAnalysis.rebucketCdcTextIndex(spark, idx, 8), probeText,
+      textPostFence),
     FoldEntry("ANN", " — no duplicate vec_ids in the top-k",
       Seq("doclog", "cells"), appendAnn,
-      idx => Similarity.compactCdcAnnIndex(spark, idx), probeAnn),
+      idx => Similarity.compactCdcAnnIndex(spark, idx), probeAnn, annPostFence),
     FoldEntry("ANN requantize", " — no duplicate vec_ids in the top-k",
       Seq("doclog", "cells"), appendAnn,
-      idx => Similarity.requantizeCdcAnnIndex(spark, idx, k = 2), probeAnn),
+      idx => Similarity.requantizeCdcAnnIndex(spark, idx, k = 2), probeAnn,
+      annPostFence),
     FoldEntry("fp log", "; groups unchanged", Seq(""), appendFp,
       log => CdcBinlog.compactCdcFpLog(spark, log),
-      log => collectStr(CdcBinlog.cdcFpGroups(spark, log))),
+      log => collectStr(CdcBinlog.cdcFpGroups(spark, log)),
+      (want, after) => {
+        // (fp, keeper_doc_id, n_docs): doc 1 moves off t1 — that group
+        // dissolves — and doc 6 joins t2's
+        assert(want === Seq(s"[$t1,1,2]", s"[$t2,4,2]"))
+        assert(after === Seq(s"[$t2,4,3]"))
+      }),
     FoldEntry("band log", "; pairs unchanged", Seq(""),
       (log, b, seg) => CdcBinlog.appendCdcFpSegment(
         CdcBinlog.cdcm15BandImages(b), log, seg),
       log => CdcBinlog.compactCdcBandLog(spark, log),
-      log => collectStr(CdcBinlog.cdcNearDupPairs(spark, log))))
-
-  // texts long enough to shingle; equal texts are exact and near dups
-  private val t1 = "alpha beta gamma delta"
-  private val t2 = "beta epsilon zeta eta"
-  private val t3 = "alpha alpha theta"
+      log => collectStr(CdcBinlog.cdcNearDupPairs(spark, log)),
+      (want, after) => {
+        // (doc_a, doc_b, jaccard): doc 1 moves off t1 — its pair with 3
+        // goes — and doc 6 pairs with 4 and 5
+        assert(want === Seq("[1,3,1.0]", "[4,5,1.0]"))
+        assert(after === Seq("[4,5,1.0]", "[4,6,1.0]", "[5,6,1.0]"))
+      }))
 
   private def legDir(root: String, leg: String) =
     if (leg.isEmpty) root else s"$root/$leg"
@@ -126,9 +165,10 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.functions.GraftFunctions.register(spark)
       val root = java.nio.file.Files.createTempDirectory("graft-fence")
         .resolve("structure").toString
-      val b2 = textImages((4, t3, 2, false), (2, "", 2, true))
+      // batch 2 updates doc 4, inserts doc 5 and deletes doc 2
+      val b2 = textImages((4, t2, 2, false), (5, t2, 2, false), (2, "", 2, true))
       assert(e.append(root, textImages((1, t1, 0, false), (2, t2, 0, false)), "b000000"))
-      assert(e.append(root, textImages((3, t1, 1, false), (4, t2, 1, false)), "b000001"))
+      assert(e.append(root, textImages((3, t1, 1, false), (4, t3, 1, false)), "b000001"))
       assert(e.append(root, b2, "b000002"))
       val want = e.probe(root)
       assert(want.nonEmpty)
@@ -147,10 +187,10 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
         "a replayed folded batch double-counted rows through the probe")
 
       // post-fence ingest still lands and supersedes
-      assert(e.append(root, textImages((1, t3, 3, false)), "b000003"))
+      assert(e.append(root, textImages((1, t3, 3, false), (6, t2, 3, false)), "b000003"))
       e.legs.foreach(l =>
         assert(segNames(legDir(root, l)) === Set("seg=base", "seg=b000003")))
-      assert(e.probe(root) !== want, "the post-fence update must be visible")
+      e.postFence(want, e.probe(root))
     }
 
     test(s"${e.label}: a torn segment is dropped by the fold, not folded — its replay rewrites it") {
