@@ -3,7 +3,7 @@ package graft.operators
 import java.math.{BigDecimal => JBigDecimal}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -1283,6 +1283,166 @@ object CdcBinlog {
       out
     }
 
+  // ---- The streaming cdcm gates' ingest harness -----------------------
+  //
+  // Every streaming cdcm gate runs the same daemon: one bounded-admission
+  // reader over a fixture, one foreachBatch deriving image frames from
+  // the decoded batch, and per-structure legs that append a frame's
+  // images as segment `b<batchId>` and then run the structure's
+  // maintenance. [[ingest]] owns that loop — decode once, route N ways
+  // (the reference's single event multiplex, `mysql_binlog.clj:804-811`,
+  // `jdbc.clj:41-48`); a gate declares its routes, legs and maintenance
+  // and reads the legs' tallies afterwards.
+
+  /** A leg's maintenance after each of its appends. */
+  private[graft] sealed trait Upkeep
+  private[graft] case object NoUpkeep extends Upkeep
+  /** Fold once, right after the `n`-th append (given that batch's id). */
+  private[graft] final case class FoldAt(n: Int, fold: Long => Unit) extends Upkeep
+  /** Grow while the advice fires (its first field) and its suggested
+    * size (its second) exceeds the last one acted on — `start` until the
+    * first fire. A growth step cures the projected mean, residual skew
+    * may demand another; the must-grow guard terminates the loop even
+    * against an unsplittable hot term or a quantizer that dropped empty
+    * cells below the requested size.
+    */
+  private[graft] final case class Grow(start: Int, advice: () => (Boolean, Int),
+                                       grow: Int => Unit) extends Upkeep
+  /** Compact whenever the log owes debt, measured on the appends the
+    * cadence marks due; one fold must retire the whole debt. A cadence
+    * over 1 owes one final measure-and-fold at shutdown (the
+    * [[MaintenanceCadence]] contract), or mid-cadence debt outlives the
+    * stream just because it ended.
+    */
+  private[graft] final case class Compact(advice: () => LogMaintenanceAdvice,
+                                          fold: () => Unit,
+                                          cadence: MaintenanceCadence =
+                                            new MaintenanceCadence(1))
+      extends Upkeep
+
+  /** One maintained structure fed by a route: `append` writes a frame's
+    * images as the named segment (true iff it wrote one), `upkeep` runs
+    * after every append that wrote. The stream must yield at least
+    * `minAppends` appends. Appends run on one thread at a time (batches
+    * serialize on the driver), tallies are read after the stream.
+    */
+  private[graft] final class Leg(val name: String, val minAppends: Int,
+                                 append: (DataFrame, String) => Boolean,
+                                 upkeep: Upkeep = NoUpkeep) {
+    private val nAppends = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val nFired = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val suggested = new java.util.concurrent.atomic.AtomicInteger(
+      upkeep match { case g: Grow => g.start; case _ => 0 })
+    def appends: Int = nAppends.get()
+    /** Maintenance runs so far (folds, growth steps, compactions). */
+    def fired: Int = nFired.get()
+    /** A [[Grow]] leg's last acted-on suggestion (`start` until it fires). */
+    def lastSuggested: Int = suggested.get()
+
+    private[CdcBinlog] def run(images: DataFrame, batchId: Long): Unit =
+      if (append(images, f"b$batchId%06d")) {
+        val n = nAppends.incrementAndGet()
+        upkeep match {
+          case FoldAt(at, fold) =>
+            if (n == at) { nFired.incrementAndGet(); fold(batchId) }
+          case Grow(_, advice, grow) =>
+            var a = advice()
+            while (a._1 && a._2 > suggested.get()) {
+              nFired.incrementAndGet()
+              suggested.set(a._2)
+              grow(a._2)
+              a = advice()
+            }
+          case c: Compact => if (c.cadence.due()) compactIfOwing(c, mustClear = true)
+          case NoUpkeep => ()
+        }
+      }
+
+    private def compactIfOwing(c: Compact, mustClear: Boolean): Unit =
+      if (c.advice().compact) {
+        nFired.incrementAndGet()
+        c.fold()
+        if (mustClear) {
+          val after = c.advice()
+          require(!after.compact,
+            s"one fold must retire the $name's whole debt; still owing: $after")
+        }
+      }
+
+    private[CdcBinlog] def shutdown(): Unit = upkeep match {
+      case c: Compact if c.cadence.everyN > 1 => compactIfOwing(c, mustClear = false)
+      case _ => ()
+    }
+  }
+
+  /** One image frame per batch and the legs it feeds. The frame is
+    * derived, persisted and checked for emptiness once per batch:
+    * without the persist, the emptiness probe, every leg and each of a
+    * leg's writes would re-derive it from the batch's binlog span. An
+    * empty frame runs no leg, so it mints no `seg=` directory that an
+    * admission proof would count.
+    */
+  private[graft] final case class Route(images: (DataFrame, Long) => DataFrame,
+                                        legs: Leg*)
+
+  /** The stream driver: read `fix` with `maxBytesPerTrigger` =
+    * fixture bytes / `divisor` (backpressure forcing several real
+    * micro-batches), run every route per batch, then require each leg's
+    * minimum appends and run the legs' shutdown maintenance.
+    *
+    * Per batch: the decoded batch is persisted when two or more routes
+    * share it; each route's frame is persisted and probed for emptiness
+    * in route order; then every leg of every non-empty frame runs
+    * concurrently through [[Layout.inParallelLegs]] (legs own disjoint
+    * directories, and each leg still serializes its own maintenance
+    * against its own ingest, which is all the fold contract demands).
+    */
+  private[graft] def ingest(s: SparkSession, work: java.nio.file.Path, fix: String,
+                            divisor: Int)(routes: Route*): Unit = {
+    val totalBytes = fixtureBinlogBytes(s, fix)
+    val cap = math.max(totalBytes / divisor, 1L)
+    val q = s.readStream.format("mysql-binlog")
+      .option("payloadDdl", payloadDdl)
+      .option("maxBytesPerTrigger", cap.toString)
+      .load(fix)
+      .writeStream
+      .option("checkpointLocation", work.resolve("ckpt").toString)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val shared = routes.sizeIs > 1
+        val b = if (shared) batch.persist() else batch
+        val frames = new scala.collection.mutable.ArrayBuffer[DataFrame]
+        try {
+          val live = routes.flatMap { r =>
+            val imgs = r.images(b, batchId).persist()
+            frames += imgs
+            if (imgs.isEmpty) Nil else r.legs.map(l => () => l.run(imgs, batchId))
+          }
+          Layout.inParallelLegs(live)
+          ()
+        } finally {
+          frames.foreach(_.unpersist())
+          if (shared) b.unpersist()
+        }
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val legs = routes.flatMap(_.legs)
+    val short = legs.filter(l => l.appends < l.minAppends)
+    require(short.isEmpty,
+      s"bounded admission degenerated (cap=$cap of $totalBytes bytes): " +
+        short.map(l => s"${l.name} made ${l.appends} appends, needs >= ${l.minAppends}")
+          .mkString("; "))
+    legs.foreach(_.shutdown())
+  }
+
+  /** A probe's answer DETACHED from the workdir (the [[withRotatingWorkdir]]
+    * contract) and built under the publish-race guard: the by-name block
+    * rebuilds AND executes the probe, so a concurrent fold's two-rename
+    * swap costs at most a bounded retry ([[Layout.retryOnceOnMissing]]).
+    */
+  private def detached(probe: => DataFrame): DataFrame =
+    Layout.retryOnceOnMissing(probe.localCheckpoint(true))
+
   def cdcm1MaterializedTable(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm1") { work =>
       import s.implicits._
@@ -1431,45 +1591,17 @@ object CdcBinlog {
   // against the log, not against a rebuild schedule.
   def cdcm4IndexFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm4") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 4, 1L)
       val idx = work.resolve("index").toString
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // persist: the images feed postings AND the doc log (plus the
-          // emptiness probe) — without it each consumer re-decodes the
-          // batch's binlog span
-          val imgs = cdcm4BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty)
-              graft.operators.TextAnalysis.appendCdcTextSegment(
-                imgs, idx, f"b$batchId%06d", nBuckets = cdcm4Buckets)
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val segs = segNames(s, s"$idx/doclog")
-      require(segs.size >= 3,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes) — " +
-          "the freshness gate needs >= 3 real ingest segments")
-      // materialize via the publish-race guard: the by-name block
-      // rebuilds AND executes the probe, so a concurrent compactor's
-      // two-rename swap costs at most a bounded retry (Layout.retryOnceOnMissing)
-      Layout.retryOnceOnMissing {
-        graft.operators.TextAnalysis
-          .bm25TopKViaCdcIndex(s, idx, cdcm4Terms, 100, nBuckets = cdcm4Buckets)
-          .orderBy($"r_sparse")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"r_sparse")
+      ingest(s, work, fixtureDir(d), divisor = 4)(Route(cdcm4BatchImages,
+        new Leg("text index", 3,
+          TextAnalysis.appendCdcTextSegment(_, idx, _, nBuckets = cdcm4Buckets))))
+      cdcm4Probe(s, idx, cdcm4Buckets)
     }
+
+  /** The text gates' probe: cdcm4's top-100 BM25 query, detached. */
+  private def cdcm4Probe(s: SparkSession, idx: String, nBuckets: Int): DataFrame =
+    detached(TextAnalysis.bm25TopKViaCdcIndex(s, idx, cdcm4Terms, 100, nBuckets = nBuckets)
+      .orderBy(col("r_sparse"))).orderBy(col("r_sparse"))
 
   // cdcm7 — the index MAINTENANCE lifecycle fused with CDC ingest,
   // under the oracle: cdcm4's pipeline, but compactCdcTextIndex runs
@@ -1488,50 +1620,15 @@ object CdcBinlog {
   // follow it, and post-compaction versions must supersede folded ones.
   def cdcm7CompactedIndexFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm7") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
+      val idx = work.resolve("index").toString
       // /6 (vs cdcm4's /4): the gate needs 3 pre-compaction segments
       // AND >= 2 post-compaction ones out of the same fixture
-      val cap = math.max(totalBytes / 6, 1L)
-      val idx = work.resolve("index").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm4BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty &&
-                graft.operators.TextAnalysis.appendCdcTextSegment(
-                  imgs, idx, f"b$batchId%06d", nBuckets = cdcm4Buckets) &&
-                appended.incrementAndGet() == 3)
-              graft.operators.TextAnalysis.compactCdcTextIndex(
-                s, idx, nBuckets = cdcm4Buckets)
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the gate needs 3 pre-compaction " +
-          "segments and >= 2 post-compaction ones")
-      // the physical state must show the fold actually happened under
-      // the ingest: one base segment + ONLY the post-compaction appends
-      val docSegs = segNames(s, s"$idx/doclog")
-      require(docSegs.contains("seg=base") &&
-        docSegs.size == appended.get() - 3 + 1,
-        s"expected seg=base + ${appended.get() - 3} ingest segments, got $docSegs")
-      Layout.retryOnceOnMissing {
-        graft.operators.TextAnalysis
-          .bm25TopKViaCdcIndex(s, idx, cdcm4Terms, 100, nBuckets = cdcm4Buckets)
-          .orderBy($"r_sparse")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"r_sparse")
+      val text = new Leg("text index", 5,
+        TextAnalysis.appendCdcTextSegment(_, idx, _, nBuckets = cdcm4Buckets),
+        FoldAt(3, _ => TextAnalysis.compactCdcTextIndex(s, idx, nBuckets = cdcm4Buckets)))
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm4BatchImages, text))
+      requireFolded(s, s"$idx/doclog", text)
+      cdcm4Probe(s, idx, cdcm4Buckets)
     }
 
   // cdcm14 — RE-BUCKET-under-ingest: the bucket-count lifecycle op run
@@ -1553,47 +1650,21 @@ object CdcBinlog {
   // lost, duplicated or mis-bucketed postings.
   def cdcm14RebucketedTextFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm14") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      // /6, cdcm7's recipe: 3 pre-rebucket segments AND >= 2 post ones
-      val cap = math.max(totalBytes / 6, 1L)
       val idx = work.resolve("index").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
       val grown = 4 * cdcm4Buckets
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm4BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty) {
-              val nb = graft.operators.TextAnalysis
-                .textIndexBucketCount(s, idx).getOrElse(cdcm4Buckets)
-              if (graft.operators.TextAnalysis.appendCdcTextSegment(
-                    imgs, idx, f"b$batchId%06d", nBuckets = nb) &&
-                  appended.incrementAndGet() == 3)
-                graft.operators.TextAnalysis.rebucketCdcTextIndex(s, idx, grown)
-            }
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the gate needs 3 pre-rebucket " +
-          "segments and >= 2 post-rebucket ones")
+      // /6, cdcm7's recipe: 3 pre-rebucket segments AND >= 2 post ones
+      val text = new Leg("text index", 5,
+        (imgs, seg) => TextAnalysis.appendCdcTextSegment(imgs, idx, seg,
+          nBuckets = TextAnalysis.textIndexBucketCount(s, idx).getOrElse(cdcm4Buckets)),
+        FoldAt(3, _ => TextAnalysis.rebucketCdcTextIndex(s, idx, grown)))
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm4BatchImages, text))
       require(graft.operators.TextAnalysis.textIndexBucketCount(s, idx)
           .contains(grown),
         "the re-bucket did not update the recorded bucket count")
       val docSegs = segNames(s, s"$idx/doclog")
       require(docSegs.contains("seg=base") &&
-        docSegs.size == appended.get() - 3 + 1,
-        s"expected seg=base + ${appended.get() - 3} post-rebucket segments, got $docSegs")
+        docSegs.size == text.appends - 3 + 1,
+        s"expected seg=base + ${text.appends - 3} post-rebucket segments, got $docSegs")
       // the grown range is in PHYSICAL use (a re-bucket that kept the
       // old hash would still pass the probe — directories don't lie)
       val baseP = new org.apache.hadoop.fs.Path(s"$idx/postings/seg=base")
@@ -1602,12 +1673,7 @@ object CdcBinlog {
         .filter(_.startsWith("tb=")).map(_.stripPrefix("tb=").toInt)
       require(tbs.exists(_ >= cdcm4Buckets),
         s"re-bucketing left every posting inside the old bucket range: ${tbs.toSeq.sorted}")
-      Layout.retryOnceOnMissing {
-        graft.operators.TextAnalysis
-          .bm25TopKViaCdcIndex(s, idx, cdcm4Terms, 100, nBuckets = grown)
-          .orderBy($"r_sparse")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"r_sparse")
+      cdcm4Probe(s, idx, grown)
     }
 
   // cdcm16 — POLICY-triggered maintenance: cdcm14 folds on a hardcoded
@@ -1628,71 +1694,37 @@ object CdcBinlog {
   // the maintenance loop is closed end-to-end with no human in it.
   def cdcm16PolicyRebucketFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm16") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 6, 1L)
       val idx = work.resolve("index").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val fired = new java.util.concurrent.atomic.AtomicInteger(0)
-      val lastSuggested = new java.util.concurrent.atomic.AtomicInteger(2)
       // one stats pass per decision (guide §1.2): the previous two-step
       // form (agg for the budget + advice's own collect) ran the full
       // index measurement twice per call
       def advice() = graft.operators.TextAnalysis.cdcTextIndexAdvice(s, idx)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm4BatchImages(batch, batchId).persist()
-          try {
-            val nb = graft.operators.TextAnalysis
-              .textIndexBucketCount(s, idx).getOrElse(2)
-            if (!imgs.isEmpty &&
-                graft.operators.TextAnalysis.appendCdcTextSegment(
-                  imgs, idx, f"b$batchId%06d", nBuckets = nb)) {
-              appended.incrementAndGet()
-              // fold until the policy is satisfied (a growth step cures
-              // projected MEAN, residual skew may demand one more); the
-              // suggested-count-must-grow guard terminates the loop even
-              // against a single unsplittable hot term at the 2^20 cap
-              var a = advice()
-              while (a.rebucket && a.suggestedBuckets > lastSuggested.get()) {
-                fired.incrementAndGet()
-                lastSuggested.set(a.suggestedBuckets)
-                graft.operators.TextAnalysis.rebucketCdcTextIndex(
-                  s, idx, a.suggestedBuckets)
-                a = advice()
-              }
-            }
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends)")
-      require(fired.get() >= 1,
+      val text = policyTextLeg(s, idx, () => advice())
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm4BatchImages, text))
+      require(text.fired >= 1,
         "the maintenance policy never fired — the planted 2-bucket " +
           "pressure should violate a quarter-of-postings budget")
       require(graft.operators.TextAnalysis.textIndexBucketCount(s, idx)
-          .contains(lastSuggested.get()),
-        s"recorded marker != the policy's last suggestion ${lastSuggested.get()}")
+          .contains(text.lastSuggested),
+        s"recorded marker != the policy's last suggestion ${text.lastSuggested}")
       val endState = advice()
       require(!endState.rebucket,
         s"the closed loop left maintenance owing at stream end: $endState")
-      Layout.retryOnceOnMissing {
-        graft.operators.TextAnalysis
-          .bm25TopKViaCdcIndex(s, idx, cdcm4Terms, 100,
-            nBuckets = lastSuggested.get())
-          .orderBy($"r_sparse")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"r_sparse")
+      cdcm4Probe(s, idx, text.lastSuggested)
     }
+
+  /** The policy-driven text leg (cdcm16, cdcm19): a deliberately
+    * undersized 2-bucket index whose appends follow the recorded bucket
+    * count (marker-driven), re-bucketed at the advice's suggestion while
+    * it fires and still grows.
+    */
+  private def policyTextLeg(s: SparkSession, idx: String,
+                            advice: () => TextAnalysis.TextMaintenanceAdvice): Leg =
+    new Leg("text index", 5,
+      (imgs, seg) => TextAnalysis.appendCdcTextSegment(imgs, idx, seg,
+        nBuckets = TextAnalysis.textIndexBucketCount(s, idx).getOrElse(2)),
+      Grow(2, () => { val a = advice(); (a.rebucket, a.suggestedBuckets) },
+        TextAnalysis.rebucketCdcTextIndex(s, idx, _)))
 
   /** cdcm5's stub encoder, columnar: component i = first 4 bytes of
     * md5(word ‖ ':' ‖ i) mod 2001, shifted to [-1000, 1000] — the mm10
@@ -1757,43 +1789,20 @@ object CdcBinlog {
   // rebuild schedule.
   def cdcm5AnnFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm5") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 4, 1L)
       val idx = work.resolve("annindex").toString
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm5BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty)
-              graft.operators.Similarity.appendCdcAnnSegment(
-                imgs, idx, f"b$batchId%06d")
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val segs = segNames(s, s"$idx/doclog")
-      require(segs.size >= 3,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes) — " +
-          "the ANN freshness gate needs >= 3 real ingest segments")
-      // probe vector: the smallest live id's embedding, read back from
-      // the index itself (one slim row to the driver)
-      val probeVec = annProbeVector(s, idx)
-      Layout.retryOnceOnMissing {
-        graft.operators.Similarity
-          .mipsTopKViaCdcAnnIndex(s, idx, probeVec, 100)
-          .orderBy($"r_dense")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }
-        .orderBy($"r_dense")
+      ingest(s, work, fixtureDir(d), divisor = 4)(Route(cdcm5BatchImages,
+        new Leg("ann index", 3, Similarity.appendCdcAnnSegment(_, idx, _))))
+      cdcm5Probe(s, idx)
     }
+
+  /** The ANN gates' probe: top-100 exact MIPS for the smallest live id's
+    * embedding, read back from the index itself, detached.
+    */
+  private def cdcm5Probe(s: SparkSession, idx: String): DataFrame = {
+    val probeVec = annProbeVector(s, idx)
+    detached(Similarity.mipsTopKViaCdcAnnIndex(s, idx, probeVec, 100)
+      .orderBy(col("r_dense"))).orderBy(col("r_dense"))
+  }
 
   // cdcm8 — cdcm7's ANN twin: compact-UNDER-ingest for the CDC-
   // maintained vector index, under the oracle. cdcm5's pipeline, but
@@ -1809,55 +1818,21 @@ object CdcBinlog {
   // over the latest-image ground truth.
   def cdcm8CompactedAnnFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm8") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
+      val idx = work.resolve("annindex").toString
       // /6 (vs cdcm5's /4): 3 pre-compaction segments AND >= 2
       // post-compaction ones out of the same fixture (the cdcm7 recipe)
-      val cap = math.max(totalBytes / 6, 1L)
-      val idx = work.resolve("annindex").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm5BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty &&
-                graft.operators.Similarity.appendCdcAnnSegment(
-                  imgs, idx, f"b$batchId%06d") &&
-                appended.incrementAndGet() == 3)
-              graft.operators.Similarity.compactCdcAnnIndex(s, idx)
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the gate needs 3 pre-compaction " +
-          "segments and >= 2 post-compaction ones")
+      val ann = new Leg("ann index", 5, Similarity.appendCdcAnnSegment(_, idx, _),
+        FoldAt(3, _ => Similarity.compactCdcAnnIndex(s, idx)))
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm5BatchImages, ann))
       // physical state: the fold happened under the ingest — one base
       // segment + ONLY the post-compaction appends, in BOTH layouts
       for (leg <- Seq("doclog", "cells")) {
         val segs = segNames(s, s"$idx/$leg")
         require(segs.contains("seg=base") &&
-          segs.size == appended.get() - 3 + 1,
-          s"$leg: expected seg=base + ${appended.get() - 3} ingest segments, got $segs")
+          segs.size == ann.appends - 3 + 1,
+          s"$leg: expected seg=base + ${ann.appends - 3} ingest segments, got $segs")
       }
-      // probe vector: the smallest live id's embedding, read back from
-      // the index itself (one slim row to the driver — cdcm5's shape)
-      val probeVec = annProbeVector(s, idx)
-      Layout.retryOnceOnMissing {
-        graft.operators.Similarity
-          .mipsTopKViaCdcAnnIndex(s, idx, probeVec, 100)
-          .orderBy($"r_dense")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }
-        .orderBy($"r_dense")
+      cdcm5Probe(s, idx)
     }
 
   // cdcm13 — REQUANTIZE-UNDER-INGEST, under the oracle: the
@@ -1885,55 +1860,32 @@ object CdcBinlog {
   def cdcm13RequantizedAnnFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm13") { work =>
       import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      // /6, the cdcm8 recipe: 3 pre-requantize segments AND >= 2
-      // post-requantize ones out of the same fixture
-      val cap = math.max(totalBytes / 6, 1L)
       val idx = work.resolve("annindex").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
       val centBefore =
         new java.util.concurrent.atomic.AtomicReference[Seq[String]](null)
       val fenceAt = new java.util.concurrent.atomic.AtomicLong(-1L)
       def centroidPrint(): Seq[String] =
         s.read.parquet(s"$idx/centroids")
           .orderBy($"cell").collect().map(_.toString).toSeq
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm5BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty &&
-                graft.operators.Similarity.appendCdcAnnSegment(
-                  imgs, idx, f"b$batchId%06d") &&
-                appended.incrementAndGet() == 3) {
-              // the first batch's quantizer, fingerprinted right before
-              // the rebuild (k rows — bounded by the quantizer)
-              centBefore.set(centroidPrint())
-              fenceAt.set(batchId)
-              graft.operators.Similarity.requantizeCdcAnnIndex(s, idx)
-            }
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the gate needs 3 pre-requantize " +
-          "segments and >= 2 post-requantize ones")
+      // /6, the cdcm8 recipe: 3 pre-requantize segments AND >= 2
+      // post-requantize ones out of the same fixture
+      val ann = new Leg("ann index", 5, Similarity.appendCdcAnnSegment(_, idx, _),
+        FoldAt(3, { batchId =>
+          // the first batch's quantizer, fingerprinted right before
+          // the rebuild (k rows — bounded by the quantizer)
+          centBefore.set(centroidPrint())
+          fenceAt.set(batchId)
+          Similarity.requantizeCdcAnnIndex(s, idx)
+        }))
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm5BatchImages, ann))
       // physical contract: the rebuild folded everything it consumed
       // (lone base + ONLY the post-requantize appends, in BOTH layouts),
       // fence at the third batch, NEW centroids
       for (leg <- Seq("doclog", "cells")) {
         val segs = segNames(s, s"$idx/$leg")
         require(segs.contains("seg=base") &&
-          segs.size == appended.get() - 3 + 1,
-          s"$leg: expected seg=base + ${appended.get() - 3} post-requantize " +
+          segs.size == ann.appends - 3 + 1,
+          s"$leg: expected seg=base + ${ann.appends - 3} post-requantize " +
             s"segments, got $segs")
       }
       val root = new org.apache.hadoop.fs.Path(idx)
@@ -1944,16 +1896,7 @@ object CdcBinlog {
           "replayed pre-requantize batch would re-enter under the new quantizer")
       require(centroidPrint() != centBefore.get(),
         "requantize kept the first batch's centroids — the quantizer was not rebuilt")
-      // probe vector: the smallest live id's embedding, read back from
-      // the REQUANTIZED index (one slim row to the driver — cdcm5's shape)
-      val probeVec = annProbeVector(s, idx)
-      Layout.retryOnceOnMissing {
-        graft.operators.Similarity
-          .mipsTopKViaCdcAnnIndex(s, idx, probeVec, 100)
-          .orderBy($"r_dense")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }
-        .orderBy($"r_dense")
+      cdcm5Probe(s, idx)
     }
 
   // cdcm17 — POLICY-triggered requantize: cdcm16's ANN twin. The index
@@ -1975,14 +1918,7 @@ object CdcBinlog {
   // vector across the policy's requantizes breaks the hash).
   def cdcm17PolicyRequantizeFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm17") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 6, 1L)
       val idx = work.resolve("annindex").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val fired = new java.util.concurrent.atomic.AtomicInteger(0)
-      val lastK = new java.util.concurrent.atomic.AtomicInteger(2)
       // maxK = 32: the deployment's quantizer budget (the production
       // knob annMaintenanceAdvice documents). Without it the √n rule at
       // sf0.1 demands k~400, and since EVERY per-batch cost scales with
@@ -1993,40 +1929,9 @@ object CdcBinlog {
       def advice() = graft.operators.Similarity.annMaintenanceAdvice(
         graft.operators.Similarity.cdcAnnIndexStats(s, idx),
         skewRatio = Double.MaxValue, maxK = 32)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm5BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty &&
-                graft.operators.Similarity.appendCdcAnnSegment(
-                  imgs, idx, f"b$batchId%06d", k = 2)) {
-              appended.incrementAndGet()
-              // fold until the policy is satisfied; the must-grow guard
-              // terminates even if empty-cell drops shrink the published
-              // quantizer below the requested k
-              var a = advice()
-              while (a.requantize && a.suggestedK > lastK.get()) {
-                fired.incrementAndGet()
-                lastK.set(a.suggestedK)
-                graft.operators.Similarity.requantizeCdcAnnIndex(
-                  s, idx, k = a.suggestedK)
-                a = advice()
-              }
-            }
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends)")
-      require(fired.get() >= 1,
+      val ann = policyAnnLeg(s, idx, () => advice())
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm5BatchImages, ann))
+      require(ann.fired >= 1,
         "the maintenance policy never fired — the planted k=2 quantizer " +
           "should violate live > 4k² within the first batches")
       val endState = advice()
@@ -2035,15 +1940,18 @@ object CdcBinlog {
       val cellsNow = s.read.parquet(s"$idx/centroids").count()
       require(cellsNow > 2,
         s"the quantizer never grew past its planted k=2 ($cellsNow cells)")
-      val probeVec = annProbeVector(s, idx)
-      Layout.retryOnceOnMissing {
-        graft.operators.Similarity
-          .mipsTopKViaCdcAnnIndex(s, idx, probeVec, 100)
-          .orderBy($"r_dense")
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }
-        .orderBy($"r_dense")
+      cdcm5Probe(s, idx)
     }
+
+  /** The policy-driven ANN leg (cdcm17, cdcm19): a deliberately tiny
+    * k=2 first-batch quantizer, requantized at the advice's suggested k
+    * while it fires and still grows.
+    */
+  private def policyAnnLeg(s: SparkSession, idx: String,
+                           advice: () => Similarity.AnnMaintenanceAdvice): Leg =
+    new Leg("ann index", 5, Similarity.appendCdcAnnSegment(_, idx, _, k = 2),
+      Grow(2, () => { val a = advice(); (a.requantize, a.suggestedK) },
+        k => Similarity.requantizeCdcAnnIndex(s, idx, k = k)))
 
   // cdcm6 — CDC-maintained DEDUP state, the third freshness leg (text
   // cdcm4, vectors cdcm5, duplicates here): each micro-batch appends a
@@ -2060,44 +1968,11 @@ object CdcBinlog {
   // report, compacted by [[compactCdcFpLog]] when segment count grows.
   def cdcm6DedupFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm6") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 4, 1L)
       val log = work.resolve("fplog").toString
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm4BatchImages(batch, batchId)
-            // dd01's exact-dedup key over the row's content column (the
-            // word — the synthesized cdcm4 text mixes in id, which would
-            // make every doc trivially unique)
-            .withColumn("fp", md5(TextAnalysis.normalize($"word")))
-            .select($"doc_id", $"ver", $"deleted", $"fp")
-            .coalesce(4)
-            .persist()
-          // mirror cdcm4/cdcm5: an EMPTY micro-batch must not mint a
-          // seg= directory — it would count toward the ">= 3 real
-          // ingest segments" admission proof as a degenerate segment
-          try {
-            if (!imgs.isEmpty)
-              appendCdcFpSegment(imgs, log, f"b$batchId%06d")
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val segs = segNames(s, log)
-      require(segs.size >= 3,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes)")
-      Layout.retryOnceOnMissing {
-        cdcFpGroups(s, log)
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"keeper_doc_id")
+      ingest(s, work, fixtureDir(d), divisor = 4)(Route(
+        (b, id) => cdcm6FpImages(cdcm4BatchImages(b, id), col("word")),
+        new Leg("fp log", 3, appendCdcFpSegment(_, log, _))))
+      detached(cdcFpGroups(s, log)).orderBy(col("keeper_doc_id"))
     }
 
   /** A state log is one leg: its `seg=` segments sit directly under its
@@ -2296,6 +2171,17 @@ object CdcBinlog {
       when($"deleted", lit(null))
         .otherwise(Dedup.bandStructs($"text")).as("bands"))
   }
+
+  /** One CDC batch's fingerprint-log rows: (doc_id, ver, deleted, fp),
+    * fp = md5 of the normalized `content` — dd01's exact-dedup key over
+    * the row's content column (the word, or its vocabulary prefix; the
+    * synthesized cdcm4 text mixes in id, which would make every doc
+    * trivially unique).
+    */
+  private def cdcm6FpImages(imgs: DataFrame, content: Column): DataFrame =
+    imgs.withColumn("fp", md5(TextAnalysis.normalize(content)))
+      .select("doc_id", "ver", "deleted", "fp")
+      .coalesce(4)
 
   /** Current near-dup pairs from the band log (dd02's answer, fresh as
     * the last batch): doc-log argmax → live rows → identical-payload
@@ -2928,52 +2814,18 @@ object CdcBinlog {
     withRotatingWorkdir("graft-cdcm21") { work =>
       import s.implicits._
       graft.functions.GraftFunctions.register(s)
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 6, 1L)
       val fpLog = work.resolve("fplog").toString
       val bandLog = work.resolve("bandlog").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one decode, two screening structures (cdcm19's fan-out shape)
-          val imgs = cdcm4BatchImages(batch, batchId).persist()
-          try {
-            if (!imgs.isEmpty) {
-              val fp = imgs
-                .withColumn("fp", md5(TextAnalysis.normalize($"word")))
-                .select($"doc_id", $"ver", $"deleted", $"fp")
-                .coalesce(4)
-              val band = cdcm15BandImages(imgs).coalesce(4)
-              // the two structure appends are independent (disjoint
-              // logs off one cached image fold) — run them
-              // concurrently (guide §2.6); both legs' fences sit at
-              // the same ordinal, so evaluating both uncurries the
-              // old short-circuit without changing what gets written
-              val Seq(fpOk, bandOk) = inParallelLegs(Seq(
-                () => appendCdcFpSegment(fp, fpLog, f"b$batchId%06d"),
-                () => appendCdcFpSegment(band, bandLog, f"b$batchId%06d")))
-              if (fpOk && bandOk && appended.incrementAndGet() == 3)
-                // two independent folds of disjoint structures
-                inParallelLegs(Seq(
-                  () => compactCdcFpLog(s, fpLog),
-                  () => compactCdcBandLog(s, bandLog)))
-              ()
-            }
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the screens need folded AND " +
-          "post-fold state under them")
+      // one decode, two screening structures (cdcm19's fan-out shape),
+      // each folded after its third append; the screens need folded AND
+      // post-fold state under them
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm4BatchImages,
+        new Leg("fp log", 5,
+          (imgs, seg) => appendCdcFpSegment(cdcm6FpImages(imgs, $"word"), fpLog, seg),
+          FoldAt(3, _ => compactCdcFpLog(s, fpLog))),
+        new Leg("band log", 5,
+          (imgs, seg) => appendCdcFpSegment(cdcm15BandImages(imgs).coalesce(4), bandLog, seg),
+          FoldAt(3, _ => compactCdcBandLog(s, bandLog)))))
       Seq(fpLog, bandLog).foreach { p =>
         require(segNames(s, p).contains("seg=base") && fenceOf(s, p).isDefined,
           s"the mid-stream fold left no base segment or fence under $p")
@@ -2996,20 +2848,18 @@ object CdcBinlog {
           .filter($"doc_id" % mod === 0).select($"doc_id").distinct()
           .localCheckpoint(true) // slim id set; DETACH — workdir rotates
       // two disjoint-structure screens, run concurrently (guide §2.6)
-      val Seq(fpLeg, bandLeg) = inParallelLegs(Seq(
-        () => Layout.retryOnceOnMissing {
+      val Seq(fpLeg, bandLeg) = Layout.inParallelLegs(Seq(
+        () => detached {
           cdcFpProbeBatch(s, fpLog, probes(fpLog, 7))
             .select(lit("fp").as("leg"), $"probe_doc_id".as("probe_id"),
               $"dup_doc_id".as("key_a"), lit(-1L).as("key_b"),
               lit(1.0).as("score"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         },
-        () => Layout.retryOnceOnMissing {
+        () => detached {
           cdcNearDupProbeBatch(s, bandLog, probes(bandLog, 991))
             .select(lit("band").as("leg"), $"probe_doc_id".as("probe_id"),
               $"doc_a".as("key_a"), $"doc_b".as("key_b"),
               $"jaccard".as("score"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         }))
       require(fpLeg.limit(1).count() == 1 && bandLeg.limit(1).count() == 1,
         "a vacuous screen (an empty leg) cannot prove the batch shape")
@@ -3029,46 +2879,30 @@ object CdcBinlog {
   // the hash.
   def cdcm15NearDupFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm15") { work =>
-      import s.implicits._
       graft.functions.GraftFunctions.register(s)
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 6, 1L)
       val log = work.resolve("bandlog").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm15BandImages(cdcm4BatchImages(batch, batchId))
-            .coalesce(4)
-            .persist()
-          try {
-            if (!imgs.isEmpty &&
-                appendCdcFpSegment(imgs, log, f"b$batchId%06d") &&
-                appended.incrementAndGet() == 3)
-              compactCdcBandLog(s, log)
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the gate needs 3 pre-compaction " +
-          "segments and >= 2 post-compaction ones")
-      val segs = segNames(s, log)
-      require(segs.contains("seg=base") &&
-        segs.size == appended.get() - 3 + 1,
-        s"expected seg=base + ${appended.get() - 3} ingest segments, got $segs")
-      Layout.retryOnceOnMissing {
-        cdcNearDupPairs(s, log)
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"doc_a", $"doc_b")
+      val band = foldedLogLeg("band log", log, compactCdcBandLog(s, log))
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(
+        (b, id) => cdcm15BandImages(cdcm4BatchImages(b, id)).coalesce(4), band))
+      requireFolded(s, log, band)
+      detached(cdcNearDupPairs(s, log)).orderBy(col("doc_a"), col("doc_b"))
     }
+
+  /** cdcm9/cdcm15's log leg: 3 pre-compaction segments, then the fold,
+    * then >= 2 post-compaction ones.
+    */
+  private def foldedLogLeg(name: String, log: String, fold: => Unit): Leg =
+    new Leg(name, 5, appendCdcFpSegment(_, log, _), FoldAt(3, _ => fold))
+
+  /** The physical trace of a fold after the third append under the
+    * ingest: one base segment + ONLY the post-compaction appends.
+    */
+  private def requireFolded(s: SparkSession, dir: String, leg: Leg): Unit = {
+    val segs = segNames(s, dir)
+    require(segs.contains("seg=base") &&
+      segs.size == leg.appends - 3 + 1,
+      s"expected seg=base + ${leg.appends - 3} ingest segments, got $segs")
+  }
 
   // cdcm9 — the dedup leg of the compact-under-ingest family (text
   // cdcm7, vectors cdcm8): cdcm6's fingerprint-log pipeline with
@@ -3082,46 +2916,12 @@ object CdcBinlog {
   // under live ingest with its probe none the wiser.
   def cdcm9CompactedFpFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm9") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 6, 1L)
       val log = work.resolve("fplog").toString
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm4BatchImages(batch, batchId)
-            .withColumn("fp", md5(TextAnalysis.normalize($"word")))
-            .select($"doc_id", $"ver", $"deleted", $"fp")
-            .coalesce(4)
-            .persist()
-          try {
-            if (!imgs.isEmpty &&
-                appendCdcFpSegment(imgs, log, f"b$batchId%06d") &&
-                appended.incrementAndGet() == 3)
-              compactCdcFpLog(s, log)
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the gate needs 3 pre-compaction " +
-          "segments and >= 2 post-compaction ones")
-      val segs = segNames(s, log)
-      require(segs.contains("seg=base") &&
-        segs.size == appended.get() - 3 + 1,
-        s"expected seg=base + ${appended.get() - 3} ingest segments, got $segs")
-      Layout.retryOnceOnMissing {
-        cdcFpGroups(s, log)
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"keeper_doc_id")
+      val fp = foldedLogLeg("fp log", log, compactCdcFpLog(s, log))
+      ingest(s, work, fixtureDir(d), divisor = 6)(Route(
+        (b, id) => cdcm6FpImages(cdcm4BatchImages(b, id), col("word")), fp))
+      requireFolded(s, log, fp)
+      detached(cdcFpGroups(s, log)).orderBy(col("keeper_doc_id"))
     }
 
   // cdcm18 — POLICY-triggered log compaction, the log twin of cdcm16
@@ -3144,53 +2944,18 @@ object CdcBinlog {
   // maintained-state kind whose debt is churn, not skew.
   def cdcm18PolicyCompactFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm18") { work =>
-      import s.implicits._
-      val fix = fixtureDir(d)
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 8, 1L)
       val log = work.resolve("fplog").toString
       val segBudget = 2
-      val appended = new java.util.concurrent.atomic.AtomicInteger(0)
-      val fired = new java.util.concurrent.atomic.AtomicInteger(0)
       def advice() =
         logMaintenanceAdvice(cdcLogStats(s, log), maxSegments = segBudget)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val imgs = cdcm4BatchImages(batch, batchId)
-            .withColumn("fp", md5(TextAnalysis.normalize($"word")))
-            .select($"doc_id", $"ver", $"deleted", $"fp")
-            .coalesce(4)
-            .persist()
-          try {
-            if (!imgs.isEmpty &&
-                appendCdcFpSegment(imgs, log, f"b$batchId%06d")) {
-              appended.incrementAndGet()
-              val a = advice()
-              if (a.compact) {
-                fired.incrementAndGet()
-                compactCdcFpLog(s, log)
-                val after = advice()
-                require(!after.compact,
-                  s"one fold must retire a log's whole debt; still owing: $after")
-              }
-            }
-          } finally imgs.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(appended.get() >= 6,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes, " +
-          s"${appended.get()} appends) — the policy needs two full " +
-          "accumulate-past-budget cycles")
-      require(fired.get() >= 2,
-        s"the maintenance policy fired ${fired.get()} time(s) — a " +
-          s"$segBudget-segment budget under ${appended.get()} appends " +
+      // >= 6 appends: the policy needs two full accumulate-past-budget cycles
+      val fp = new Leg("fp log", 6, appendCdcFpSegment(_, log, _),
+        Compact(() => advice(), () => compactCdcFpLog(s, log)))
+      ingest(s, work, fixtureDir(d), divisor = 8)(Route(
+        (b, id) => cdcm6FpImages(cdcm4BatchImages(b, id), col("word")), fp))
+      require(fp.fired >= 2,
+        s"the maintenance policy fired ${fp.fired} time(s) — a " +
+          s"$segBudget-segment budget under ${fp.appends} appends " +
           "must fire at least twice")
       val endState = advice()
       require(!endState.compact,
@@ -3198,11 +2963,15 @@ object CdcBinlog {
       val nonBase = segNames(s, log).count(_ != "seg=base")
       require(nonBase <= segBudget,
         s"$nonBase non-base segments survived a $segBudget-segment budget")
-      Layout.retryOnceOnMissing {
-        cdcFpGroups(s, log)
-          .localCheckpoint(true) // DETACH — the workdir rotates away
-      }.orderBy($"keeper_doc_id")
+      detached(cdcFpGroups(s, log)).orderBy(col("keeper_doc_id"))
     }
+
+  /** cdcm10's bucket count: HALF cdcm4's — the fan-out gate writes one
+    * file set per bucket per index per batch, and it maintains TWO
+    * indexes; 8 keeps the physical file count per batch at cdcm4's
+    * level while probe pruning stays at 2-of-8 postings buckets.
+    */
+  private[operators] val cdcm10Buckets = 8
 
   // cdcm10 — multi-table fan-out: ONE bounded-admission reader over a
   // log whose every transaction writes TWO tables (same id range — only
@@ -3216,67 +2985,33 @@ object CdcBinlog {
   // asymmetric mutations (d1 updates where d2 deletes, and vice versa)
   // make any cross-table bleed — a missed filter, a swapped index path,
   // a shared-state slip — a hash failure, not a plausible answer.
-  /** cdcm10's bucket count: HALF cdcm4's — the fan-out gate writes one
-    * file set per bucket per index per batch, and it maintains TWO
-    * indexes; 8 keeps the physical file count per batch at cdcm4's
-    * level while probe pruning stays at 2-of-8 postings buckets.
-    */
-  private[operators] val cdcm10Buckets = 8
-
   def cdcm10MultiIndexRouting(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm10") { work =>
       import s.implicits._
-      val fix = Paths.get(fixtureDir(d), "multi").toString
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 4, 1L)
       val tables = Seq("d1", "d2")
       def idxOf(tbl: String) = work.resolve(s"idx_$tbl").toString
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // decode once, route N ways: the persist pins the decoded
-          // batch so each table's image fold re-reads columnar cache,
-          // not the binlog span
-          val b = batch.persist()
-          // decode once, route N ways — and run the N independent
-          // per-table routes concurrently (guide §2.6): each leg owns
-          // its table's image fold and its index directory outright
-          try inParallelLegs(tables.map(tbl => () => {
-            val imgs = cdcm4BatchImages(
-              b.filter(b("table") === tbl), batchId).persist()
-            try {
-              if (!imgs.isEmpty)
-                graft.operators.TextAnalysis.appendCdcTextSegment(
-                  imgs, idxOf(tbl), f"b$batchId%06d", nBuckets = cdcm10Buckets)
-              ()
-            } finally imgs.unpersist()
-          })) finally b.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      tables.foreach { tbl =>
-        val segs = segNames(s, s"${idxOf(tbl)}/doclog")
-        require(segs.size >= 3,
-          s"bounded admission degenerated for $tbl (cap=$cap of " +
-            s"$totalBytes bytes) — the routing gate needs >= 3 real " +
-            "segments per index")
-      }
+      // decode once, route N ways: each table's route owns its image
+      // fold and its index directory outright
+      ingest(s, work, multiFixtureDir(d), divisor = 4)(tables.map(tbl =>
+        Route(tableImages(tbl, cdcm4BatchImages),
+          new Leg(s"$tbl text index", 3,
+            TextAnalysis.appendCdcTextSegment(_, idxOf(tbl), _, nBuckets = cdcm10Buckets)))): _*)
       // independent per-index probes, run concurrently (guide §2.6)
-      inParallelLegs(tables.map(tbl => () =>
-        Layout.retryOnceOnMissing {
-          graft.operators.TextAnalysis
-            .bm25TopKViaCdcIndex(s, idxOf(tbl), cdcm4Terms, 50,
-              nBuckets = cdcm10Buckets)
-            .select(lit(tbl).as("tbl"), $"doc_id", $"bm25", $"r_sparse")
-            .localCheckpoint(true) // DETACH — the workdir rotates away
-        }
-      )).reduce(_.unionAll(_)).orderBy($"tbl", $"r_sparse")
+      Layout.inParallelLegs(tables.map(tbl => () => detached {
+        TextAnalysis.bm25TopKViaCdcIndex(s, idxOf(tbl), cdcm4Terms, 50,
+            nBuckets = cdcm10Buckets)
+          .select(lit(tbl).as("tbl"), $"doc_id", $"bm25", $"r_sparse")
+      })).reduce(_.unionAll(_)).orderBy($"tbl", $"r_sparse")
     }
+
+  /** The multi-table fixture (every transaction writes tables d1 and d2). */
+  private def multiFixtureDir(d: String): String =
+    Paths.get(fixtureDir(d), "multi").toString
+
+  /** A multi-fixture route's frame: `images` over one table's changes. */
+  private def tableImages(tbl: String, images: (DataFrame, Long) => DataFrame)
+      : (DataFrame, Long) => DataFrame =
+    (b, batchId) => images(b.filter(b("table") === tbl), batchId)
 
   // cdcm11 — HETEROGENEOUS fan-out: cdcm10's multiplex routed to
   // DIFFERENT structure kinds in one pass — d1's changes maintain a
@@ -3292,73 +3027,30 @@ object CdcBinlog {
   def cdcm11HeteroIndexRouting(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm11") { work =>
       import s.implicits._
-      val fix = Paths.get(fixtureDir(d), "multi").toString
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      val cap = math.max(totalBytes / 4, 1L)
       val txtIdx = work.resolve("idx_text").toString
       val annIdx = work.resolve("idx_ann").toString
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          // the two heterogeneous routes are independent — run them
-          // concurrently (guide §2.6); each leg owns its own image
-          // fold, cache and index directory
-          try inParallelLegs(Seq(
-            () => {
-              val t = cdcm4BatchImages(
-                b.filter(b("table") === "d1"), batchId).persist()
-              try {
-                if (!t.isEmpty)
-                  graft.operators.TextAnalysis.appendCdcTextSegment(
-                    t, txtIdx, f"b$batchId%06d", nBuckets = cdcm10Buckets)
-                ()
-              } finally t.unpersist()
-            },
-            () => {
-              val v = cdcm5BatchImages(
-                b.filter(b("table") === "d2"), batchId).persist()
-              try {
-                if (!v.isEmpty)
-                  graft.operators.Similarity.appendCdcAnnSegment(
-                    v, annIdx, f"b$batchId%06d")
-                ()
-              } finally v.unpersist()
-            })) finally b.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      Seq(txtIdx, annIdx).foreach { idx =>
-        val segs = segNames(s, s"$idx/doclog")
-        require(segs.size >= 3,
-          s"bounded admission degenerated under $idx (cap=$cap of " +
-            s"$totalBytes bytes) — the heterogeneous gate needs >= 3 " +
-            "real segments per structure")
-      }
+      // two heterogeneous routes, each with its own image fold, cache
+      // and index directory
+      ingest(s, work, multiFixtureDir(d), divisor = 4)(
+        Route(tableImages("d1", cdcm4BatchImages), new Leg("text index", 3,
+          TextAnalysis.appendCdcTextSegment(_, txtIdx, _, nBuckets = cdcm10Buckets))),
+        Route(tableImages("d2", cdcm5BatchImages), new Leg("ann index", 3,
+          Similarity.appendCdcAnnSegment(_, annIdx, _))))
       // probe vector: the smallest live id's embedding, read back from
       // the vector index itself (one slim row to the driver)
       val probeVec = annProbeVector(s, annIdx)
       // two disjoint-structure probes, run concurrently (guide §2.6)
-      val Seq(textLeg, annLeg) = inParallelLegs(Seq(
-        () => Layout.retryOnceOnMissing {
-          graft.operators.TextAnalysis
-            .bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
+      val Seq(textLeg, annLeg) = Layout.inParallelLegs(Seq(
+        () => detached {
+          TextAnalysis.bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
               nBuckets = cdcm10Buckets)
             .select(lit("text").as("leg"), $"doc_id".cast("long").as("key_id"),
               $"bm25".as("score"), $"r_sparse".as("r"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         },
-        () => Layout.retryOnceOnMissing {
-          graft.operators.Similarity
-            .mipsTopKViaCdcAnnIndex(s, annIdx, probeVec, 50)
+        () => detached {
+          Similarity.mipsTopKViaCdcAnnIndex(s, annIdx, probeVec, 50)
             .select(lit("ann").as("leg"), $"vec_id".cast("long").as("key_id"),
               $"dot".cast("double").as("score"), $"r_dense".as("r"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         }))
       textLeg.unionAll(annLeg).orderBy($"leg", $"r")
     }
@@ -3410,90 +3102,35 @@ object CdcBinlog {
   def cdcm12TriFanout(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm12") { work =>
       import s.implicits._
-      val fix = Paths.get(fixtureDir(d), "multi").toString
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      // /6: both staggered folds need post-fold appends out of the same
-      // fixture (text >= 2 after its fold at 3, ANN >= 1 after its at 4)
-      val cap = math.max(totalBytes / 6, 1L)
       val txtIdx = work.resolve("idx_text").toString
       val annIdx = work.resolve("idx_ann").toString
       val fpLog = work.resolve("fplog").toString
-      val txtAppends = new java.util.concurrent.atomic.AtomicInteger(0)
-      val annAppends = new java.util.concurrent.atomic.AtomicInteger(0)
-      val fpAppends = new java.util.concurrent.atomic.AtomicInteger(0)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          try {
-            // d1's images are derived ONCE and routed to BOTH the text
-            // index and the fp log — the decoded batch and the image
-            // fold are shared work, only the structure appends differ
-            val t = cdcm4BatchImages(
-              b.filter(b("table") === "d1"), batchId).persist()
-            // if building v throws, t's cache entry must not leak for
-            // the stream's lifetime — unpersist before rethrowing
-            val v = try cdcm5BatchImages(
-                b.filter(b("table") === "d2"), batchId).persist()
-              catch { case e: Throwable => t.unpersist(); throw e }
-            try {
-              val tNonEmpty = !t.isEmpty
-              val vNonEmpty = !v.isEmpty
-              // three independent structure legs off one decode — run
-              // concurrently (guide §2.6); each leg's staggered fold
-              // stays serialized against ITS OWN ingest on its thread
-              inParallelLegs(Seq(
-                () => if (tNonEmpty) {
-                  if (graft.operators.TextAnalysis.appendCdcTextSegment(
-                        t, txtIdx, f"b$batchId%06d", nBuckets = cdcm10Buckets) &&
-                      txtAppends.incrementAndGet() == 3)
-                    graft.operators.TextAnalysis.compactCdcTextIndex(
-                      s, txtIdx, nBuckets = cdcm10Buckets)
-                },
-                () => if (tNonEmpty) {
-                  val fp = t.withColumn("fp",
-                      md5(TextAnalysis.normalize(
-                        expr("substring_index(word, '_', 1)"))))
-                    .select($"doc_id", $"ver", $"deleted", $"fp")
-                    .coalesce(4)
-                  if (appendCdcFpSegment(fp, fpLog, f"b$batchId%06d"))
-                    fpAppends.incrementAndGet()
-                  ()
-                },
-                () => if (vNonEmpty) {
-                  if (graft.operators.Similarity.appendCdcAnnSegment(
-                        v, annIdx, f"b$batchId%06d") &&
-                      annAppends.incrementAndGet() == 4)
-                    graft.operators.Similarity.compactCdcAnnIndex(s, annIdx)
-                }))
-              ()
-            } finally { v.unpersist(); t.unpersist() }
-          } finally b.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(txtAppends.get() >= 5 && annAppends.get() >= 5 && fpAppends.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes; " +
-          s"text=${txtAppends.get()}, ann=${annAppends.get()}, " +
-          s"fp=${fpAppends.get()} appends) — the staggered folds need " +
-          "post-fold appends on every folded structure")
+      // /6: both staggered folds need post-fold appends out of the same
+      // fixture (text >= 2 after its fold at 3, ANN >= 1 after its at 4)
+      val text = new Leg("text index", 5,
+        TextAnalysis.appendCdcTextSegment(_, txtIdx, _, nBuckets = cdcm10Buckets),
+        FoldAt(3, _ => TextAnalysis.compactCdcTextIndex(s, txtIdx, nBuckets = cdcm10Buckets)))
+      val fp = new Leg("fp log", 5, prefixFpLegAppend(fpLog))
+      val ann = new Leg("ann index", 5, Similarity.appendCdcAnnSegment(_, annIdx, _),
+        FoldAt(4, _ => Similarity.compactCdcAnnIndex(s, annIdx)))
+      // d1's images are derived ONCE and routed to BOTH the text index
+      // and the fp log — the decoded batch and the image fold are shared
+      // work, only the structure appends differ
+      ingest(s, work, multiFixtureDir(d), divisor = 6)(
+        Route(tableImages("d1", cdcm4BatchImages), text, fp),
+        Route(tableImages("d2", cdcm5BatchImages), ann))
       // physical state: each structure folded on ITS OWN schedule
       val txtSegs = segNames(s, s"$txtIdx/doclog")
       require(txtSegs.contains("seg=base") &&
-        txtSegs.size == txtAppends.get() - 3 + 1,
-        s"text: expected seg=base + ${txtAppends.get() - 3} segments, got $txtSegs")
+        txtSegs.size == text.appends - 3 + 1,
+        s"text: expected seg=base + ${text.appends - 3} segments, got $txtSegs")
       val annSegs = segNames(s, s"$annIdx/doclog")
       require(annSegs.contains("seg=base") &&
-        annSegs.size == annAppends.get() - 4 + 1,
-        s"ann: expected seg=base + ${annAppends.get() - 4} segments, got $annSegs")
+        annSegs.size == ann.appends - 4 + 1,
+        s"ann: expected seg=base + ${ann.appends - 4} segments, got $annSegs")
       val fpSegs = segNames(s, fpLog)
-      require(!fpSegs.contains("seg=base") && fpSegs.size == fpAppends.get(),
-        s"fp: expected ${fpAppends.get()} unfolded segments, got $fpSegs")
+      require(!fpSegs.contains("seg=base") && fpSegs.size == fp.appends,
+        s"fp: expected ${fp.appends} unfolded segments, got $fpSegs")
       // the fences themselves: per-structure, never shared — the text
       // fence sits at its 3rd appended ordinal, the ANN fence at its
       // 4th, and the never-folded fp log must carry NO fence at all
@@ -3506,23 +3143,19 @@ object CdcBinlog {
           "slip would silently drop its replays")
       val probeVec = annProbeVector(s, annIdx)
       // three disjoint-structure probes, run concurrently (guide §2.6)
-      val Seq(textLeg, annLeg, fpLeg) = inParallelLegs(Seq(
-        () => Layout.retryOnceOnMissing {
-          graft.operators.TextAnalysis
-            .bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
+      val Seq(textLeg, annLeg, fpLeg) = Layout.inParallelLegs(Seq(
+        () => detached {
+          TextAnalysis.bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
               nBuckets = cdcm10Buckets)
             .select(lit("text").as("leg"), $"doc_id".cast("long").as("key_id"),
               $"bm25".as("score"), $"r_sparse".as("r"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         },
-        () => Layout.retryOnceOnMissing {
-          graft.operators.Similarity
-            .mipsTopKViaCdcAnnIndex(s, annIdx, probeVec, 50)
+        () => detached {
+          Similarity.mipsTopKViaCdcAnnIndex(s, annIdx, probeVec, 50)
             .select(lit("ann").as("leg"), $"vec_id".cast("long").as("key_id"),
               $"dot".cast("double").as("score"), $"r_dense".as("r"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         },
-        () => Layout.retryOnceOnMissing {
+        () => detached {
           cdcFpGroups(s, fpLog)
             // unpartitioned rank is SAFE here: the input is the per-prefix
             // group report — bounded by the vocabulary (8 prefixes), not
@@ -3532,10 +3165,17 @@ object CdcBinlog {
               row_number().over(Window.orderBy($"keeper_doc_id")).cast("long"))
             .select(lit("fp").as("leg"), $"keeper_doc_id".cast("long").as("key_id"),
               $"n_docs".cast("double").as("score"), $"r")
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         }))
       textLeg.unionAll(annLeg).unionAll(fpLeg).orderBy($"leg", $"r")
     }
+
+  /** cdcm12/cdcm19's fp-log append: dedup state keyed on the word's
+    * vocabulary prefix, so the multi fixture's near-unique words still
+    * form real groups.
+    */
+  private def prefixFpLegAppend(fpLog: String): (DataFrame, String) => Boolean =
+    (imgs, seg) => appendCdcFpSegment(
+      cdcm6FpImages(imgs, expr("substring_index(word, '_', 1)")), fpLog, seg)
 
   // cdcm19 — the MAINTENANCE DAEMON under the oracle, the engine's
   // capstone claim ("no human in the maintenance loop") as a gate: ONE
@@ -3561,33 +3201,15 @@ object CdcBinlog {
   // ground truth in a common (leg, key_a, key_b, score, r) shape —
   // text BM25, exact MIPS, duplicate groups, and the near-dup pair
   // report with exact Jaccard.
-  private def inParallelLegs[T](legs: Seq[() => T]): Seq[T] =
-    Layout.inParallelLegs(legs)
-
   def cdcm19PolicyDaemonFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm19") { work =>
       import s.implicits._
       graft.functions.GraftFunctions.register(s)
-      val fix = Paths.get(fixtureDir(d), "multi").toString
-      val totalBytes = fixtureBinlogBytes(s, fix)
-      // /6, cdcm12's recipe: every policy needs room to fire AND to see
-      // post-fold appends out of the same fixture
-      val cap = math.max(totalBytes / 6, 1L)
       val txtIdx = work.resolve("idx_text").toString
       val annIdx = work.resolve("idx_ann").toString
       val fpLog = work.resolve("fplog").toString
       val bandLog = work.resolve("bandlog").toString
       val segBudget = 2
-      val txtAppends = new java.util.concurrent.atomic.AtomicInteger(0)
-      val annAppends = new java.util.concurrent.atomic.AtomicInteger(0)
-      val fpAppends = new java.util.concurrent.atomic.AtomicInteger(0)
-      val bandAppends = new java.util.concurrent.atomic.AtomicInteger(0)
-      val txtFired = new java.util.concurrent.atomic.AtomicInteger(0)
-      val annFired = new java.util.concurrent.atomic.AtomicInteger(0)
-      val fpFired = new java.util.concurrent.atomic.AtomicInteger(0)
-      val bandFired = new java.util.concurrent.atomic.AtomicInteger(0)
-      val lastNb = new java.util.concurrent.atomic.AtomicInteger(2)
-      val lastK = new java.util.concurrent.atomic.AtomicInteger(2)
       // one stats pass per decision (guide §1.2), same budget rule:
       // budget = max(1, live postings / 4)
       def txtAdvice() = graft.operators.TextAnalysis.cdcTextIndexAdvice(s, txtIdx)
@@ -3609,134 +3231,27 @@ object CdcBinlog {
       // run per append — and the probes are fold-invariant, so WHEN the
       // fold lands cannot change the gate's rows. The other three legs
       // keep per-append measurement (both cadences stay gate-tested).
-      val bandCadence = new MaintenanceCadence(2)
-      val changes = s.readStream.format("mysql-binlog")
-        .option("payloadDdl", payloadDdl)
-        .option("maxBytesPerTrigger", cap.toString)
-        .load(fix)
-      val q = changes.writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val b = batch.persist()
-          try {
-            // d1's images are derived ONCE and routed to text index,
-            // fp log AND band log (the daemon shape: one decode, N
-            // structures); d2's to the ANN index
-            val t = cdcm4BatchImages(
-              b.filter(b("table") === "d1"), batchId).persist()
-            // if building v throws, t's cache entry must not leak for
-            // the stream's lifetime — unpersist before rethrowing
-            val v = try cdcm5BatchImages(
-                b.filter(b("table") === "d2"), batchId).persist()
-              catch { case e: Throwable => t.unpersist(); throw e }
-            try {
-              val tNonEmpty = !t.isEmpty
-              val vNonEmpty = !v.isEmpty
-              // the four structures' append→measure→fold legs are
-              // independent (disjoint directories, per-leg state) — run
-              // them concurrently (guide §2.6); each leg alone still
-              // serializes ITS structure's maintenance against its
-              // ingest, which is all the fold contract demands
-              val textLeg0 = () => if (tNonEmpty) {
-                val nb = graft.operators.TextAnalysis
-                  .textIndexBucketCount(s, txtIdx).getOrElse(2)
-                if (graft.operators.TextAnalysis.appendCdcTextSegment(
-                      t, txtIdx, f"b$batchId%06d", nBuckets = nb)) {
-                  txtAppends.incrementAndGet()
-                  // fold until the policy is satisfied (cdcm16's loop:
-                  // a growth step cures projected mean, residual skew
-                  // may demand one more; must-grow guard terminates)
-                  var a = txtAdvice()
-                  while (a.rebucket && a.suggestedBuckets > lastNb.get()) {
-                    txtFired.incrementAndGet()
-                    lastNb.set(a.suggestedBuckets)
-                    graft.operators.TextAnalysis.rebucketCdcTextIndex(
-                      s, txtIdx, a.suggestedBuckets)
-                    a = txtAdvice()
-                  }
-                }
-              }
-              val fpLeg0 = () => if (tNonEmpty) {
-                val fp = t.withColumn("fp",
-                    md5(TextAnalysis.normalize(
-                      expr("substring_index(word, '_', 1)"))))
-                  .select($"doc_id", $"ver", $"deleted", $"fp")
-                  .coalesce(4)
-                if (appendCdcFpSegment(fp, fpLog, f"b$batchId%06d")) {
-                  fpAppends.incrementAndGet()
-                  val a = fpAdvice()
-                  if (a.compact) {
-                    fpFired.incrementAndGet()
-                    compactCdcFpLog(s, fpLog)
-                    val after = fpAdvice()
-                    require(!after.compact,
-                      s"one fold must retire the fp log's whole debt: $after")
-                  }
-                }
-              }
-              val bandLeg0 = () => if (tNonEmpty) {
-                val band = cdcm15BandImages(t).coalesce(4)
-                if (appendCdcFpSegment(band, bandLog, f"b$batchId%06d")) {
-                  bandAppends.incrementAndGet()
-                  if (bandCadence.due()) {
-                    val a = bandAdvice()
-                    if (a.compact) {
-                      bandFired.incrementAndGet()
-                      compactCdcBandLog(s, bandLog)
-                      val after = bandAdvice()
-                      require(!after.compact,
-                        s"one fold must retire the band log's whole debt: $after")
-                    }
-                  }
-                }
-              }
-              val annLeg0 = () => if (vNonEmpty) {
-                if (graft.operators.Similarity.appendCdcAnnSegment(
-                      v, annIdx, f"b$batchId%06d", k = 2)) {
-                  annAppends.incrementAndGet()
-                  var a = annAdvice()
-                  while (a.requantize && a.suggestedK > lastK.get()) {
-                    annFired.incrementAndGet()
-                    lastK.set(a.suggestedK)
-                    graft.operators.Similarity.requantizeCdcAnnIndex(
-                      s, annIdx, k = a.suggestedK)
-                    a = annAdvice()
-                  }
-                }
-              }
-              inParallelLegs(Seq(textLeg0, fpLeg0, bandLeg0, annLeg0))
-              ()
-            } finally { v.unpersist(); t.unpersist() }
-          } finally b.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      require(txtAppends.get() >= 5 && annAppends.get() >= 5 &&
-        fpAppends.get() >= 5 && bandAppends.get() >= 5,
-        s"bounded admission degenerated (cap=$cap of $totalBytes bytes; " +
-          s"text=${txtAppends.get()}, ann=${annAppends.get()}, " +
-          s"fp=${fpAppends.get()}, band=${bandAppends.get()} appends) — " +
-          "every policy needs pressure cycles")
-      // the cadence-carrying leg's documented shutdown obligation: a
-      // daemon shutting down runs ONE final measure-and-fold regardless
-      // of phase, or mid-cadence debt outlives the stream just because
-      // it ended (the MaintenanceCadence contract — no shutdown hook,
-      // the caller owes the final measure)
-      locally {
-        val a = bandAdvice()
-        if (a.compact) {
-          bandFired.incrementAndGet()
-          compactCdcBandLog(s, bandLog)
-        }
-      }
+      val text = policyTextLeg(s, txtIdx, () => txtAdvice())
+      val fp = new Leg("fp log", 5, prefixFpLegAppend(fpLog),
+        Compact(() => fpAdvice(), () => compactCdcFpLog(s, fpLog)))
+      val band = new Leg("band log", 5,
+        (t, seg) => appendCdcFpSegment(cdcm15BandImages(t).coalesce(4), bandLog, seg),
+        Compact(() => bandAdvice(), () => compactCdcBandLog(s, bandLog),
+          new MaintenanceCadence(2)))
+      val ann = policyAnnLeg(s, annIdx, () => annAdvice())
+      // /6, cdcm12's recipe: every policy needs room to fire AND to see
+      // post-fold appends out of the same fixture. d1's images are
+      // derived ONCE and routed to text index, fp log AND band log (the
+      // daemon shape: one decode, N structures); d2's to the ANN index.
+      // The band leg's shutdown measure-and-fold runs inside ingest.
+      ingest(s, work, multiFixtureDir(d), divisor = 6)(
+        Route(tableImages("d1", cdcm4BatchImages), text, fp, band),
+        Route(tableImages("d2", cdcm5BatchImages), ann))
       // checked AFTER the shutdown measure-and-fold: that fold is the
       // cadence leg's documented obligation, so it counts as a fire
-      require(txtFired.get() >= 1 && annFired.get() >= 1 &&
-        fpFired.get() >= 1 && bandFired.get() >= 1,
+      require(text.fired >= 1 && ann.fired >= 1 && fp.fired >= 1 && band.fired >= 1,
         s"every policy must fire under its planted pressure (text=" +
-          s"${txtFired.get()}, ann=${annFired.get()}, fp=${fpFired.get()}, " +
-          s"band=${bandFired.get()})")
+          s"${text.fired}, ann=${ann.fired}, fp=${fp.fired}, band=${band.fired})")
       // the daemon left nothing owing: the per-append legs measured after
       // every append, the cadence leg just ran its shutdown measure —
       // end-state debt cannot survive either cadence
@@ -3745,12 +3260,12 @@ object CdcBinlog {
         s"the daemon left maintenance owing at stream end: " +
           s"text=$te ann=$ae fp=$fe band=$be")
       require(graft.operators.TextAnalysis.textIndexBucketCount(s, txtIdx)
-          .contains(lastNb.get()) && lastNb.get() > 2,
+          .contains(text.lastSuggested) && text.lastSuggested > 2,
         s"text marker ${graft.operators.TextAnalysis
           .textIndexBucketCount(s, txtIdx)} != policy's last suggestion " +
-          s"${lastNb.get()} (or never grew)")
-      require(lastK.get() > 2,
-        s"the ANN policy fired but the quantizer never grew (k=${lastK.get()})")
+          s"${text.lastSuggested} (or never grew)")
+      require(ann.lastSuggested > 2,
+        s"the ANN policy fired but the quantizer never grew (k=${ann.lastSuggested})")
       // every policy-folded structure carries its own replay fence —
       // the physical trace of a policy-chosen fold point (exact
       // per-ordinal pins are CdcMultiRouteCompactSpec's daemon leg;
@@ -3766,23 +3281,19 @@ object CdcBinlog {
       // the four probes read four disjoint, now-quiescent structures and
       // each detaches eagerly — independent jobs, run concurrently
       // (guide §2.6)
-      val Seq(textLeg, annLeg, fpLeg, bandLeg) = inParallelLegs(Seq(
-        () => Layout.retryOnceOnMissing {
-          graft.operators.TextAnalysis
-            .bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
-              nBuckets = lastNb.get())
+      val Seq(textLeg, annLeg, fpLeg, bandLeg) = Layout.inParallelLegs(Seq(
+        () => detached {
+          TextAnalysis.bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
+              nBuckets = text.lastSuggested)
             .select(lit("text").as("leg"), $"doc_id".cast("long").as("key_a"),
               negOne, $"bm25".as("score"), $"r_sparse".as("r"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         },
-        () => Layout.retryOnceOnMissing {
-          graft.operators.Similarity
-            .mipsTopKViaCdcAnnIndex(s, annIdx, probeVec, 50)
+        () => detached {
+          Similarity.mipsTopKViaCdcAnnIndex(s, annIdx, probeVec, 50)
             .select(lit("ann").as("leg"), $"vec_id".cast("long").as("key_a"),
               negOne, $"dot".cast("double").as("score"), $"r_dense".as("r"))
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         },
-        () => Layout.retryOnceOnMissing {
+        () => detached {
           cdcFpGroups(s, fpLog)
             // unpartitioned rank: bounded by the 8-prefix vocabulary,
             // never the corpus (cdcm12's fp-leg contract)
@@ -3790,9 +3301,8 @@ object CdcBinlog {
               row_number().over(Window.orderBy($"keeper_doc_id")).cast("long"))
             .select(lit("fp").as("leg"), $"keeper_doc_id".cast("long").as("key_a"),
               negOne, $"n_docs".cast("double").as("score"), $"r")
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         },
-        () => Layout.retryOnceOnMissing {
+        () => detached {
           cdcNearDupPairs(s, bandLog)
             // unpartitioned rank: the report is limit-bounded (<= 500
             // rows) before the window ever runs; the report detaches via
@@ -3805,7 +3315,6 @@ object CdcBinlog {
               row_number().over(Window.orderBy($"doc_a", $"doc_b")).cast("long"))
             .select(lit("band").as("leg"), $"doc_a".as("key_a"),
               $"doc_b".as("key_b"), $"jaccard".as("score"), $"r")
-            .localCheckpoint(true) // DETACH — the workdir rotates away
         }))
       textLeg.unionAll(annLeg).unionAll(fpLeg).unionAll(bandLeg)
         .orderBy($"leg", $"r")
@@ -3891,16 +3400,6 @@ object CdcBinlog {
     "cdcb6_v2_rows_scan" -> cdcb6V2RowsScan _,
     "cdcb7_v2_event_stats" -> cdcb7V2EventStats _)
 
-  /** DuckDB oracles over the generator's expected_* ground truth (absolute
-    * paths — these tables live beside the binlog fixture, not in the sf
-    * parquet dir; derived deterministically from `sfDir`).
-    */
-  /** The latest-image ground-truth oracle shared by cdcb4 (window query
-    * over the plain fixture), cdcb13 (compressed twin) and cdcm1 (the
-    * streaming materializer): final state per key under the rollover-safe
-    * (file ordinal, file, pos, seq) total order — ONE definition so an
-    * ordering fix can never apply to one twin and silently miss another.
-    */
   /** cdcm6/cdcm9's shared oracle: current duplicate groups recomputed
     * from the latest-image ground truth, same dd01 fingerprint
     * derivation — ONE definition so the steady-state gate and its
@@ -3944,6 +3443,12 @@ object CdcBinlog {
        |QUALIFY r_dense <= 100
        |ORDER BY r_dense""".stripMargin
 
+  /** The latest-image ground-truth oracle shared by cdcb4 (window query
+    * over the plain fixture), cdcb13 (compressed twin) and cdcm1 (the
+    * streaming materializer): final state per key under the rollover-safe
+    * (file ordinal, file, pos, seq) total order — ONE definition so an
+    * ordering fix can never apply to one twin and silently miss another.
+    */
   private def latestImageOracle(sfDir: String): String =
     s"""WITH ranked AS (
        |  SELECT id, val, word, _delta_type,
@@ -3955,6 +3460,10 @@ object CdcBinlog {
        |WHERE rn = 1 AND _delta_type <> 'delete'
        |ORDER BY id""".stripMargin
 
+  /** DuckDB oracles over the generator's expected_* ground truth (absolute
+    * paths — these tables live beside the binlog fixture, not in the sf
+    * parquet dir; derived deterministically from `sfDir`).
+    */
   def oracles(sfDir: String): Map[String, String] = Map(
     "cdcb19_schema_drift" ->
       s"""SELECT id, n_cols, row_txt

@@ -1021,16 +1021,19 @@ object TextAnalysis {
         .filter(!$"deleted")
         .persist() // feeds the posting filter AND the folded doc log
       try {
-        // both staging legs consume the pinned `live` frame and publish
-        // atomically with the fold — independent jobs, run concurrently
-        // (guide §2.6)
-        Layout.inParallelLegs(Seq(
-          () => postings(view.read("postings")
-              .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver")))
-            .write.mode("overwrite").partitionBy("tb")
-            .parquet(s"$staging/postings/seg=base"),
-          () => live.select($"doc_id", $"ver", $"deleted", $"dl")
-            .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
+        // both staging legs read the cached `live` frame and publish
+        // atomically with the fold. They run one after the other, doclog
+        // first, so the doclog write builds the cache: an adaptive write
+        // that finds a cached frame not yet built launches a job to build
+        // it, so two legs started together could both launch one (the
+        // job count varied run to run), and a separate job pinning the
+        // cache costs one job more per fold than this order
+        live.select($"doc_id", $"ver", $"deleted", $"dl")
+          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")
+        postings(view.read("postings")
+            .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver")))
+          .write.mode("overwrite").partitionBy("tb")
+          .parquet(s"$staging/postings/seg=base")
         writeBucketMarker(fs, staging, nBuckets)
       } finally live.unpersist()
     }
