@@ -24,6 +24,20 @@ object GraftSession {
     graft.functions.GraftFunctions.register(spark)
   }
 
+  /** Run `body` with every Spark job it launches attributed to `name`:
+    * sets this thread's `callSite.short`/`callSite.long` and restores the
+    * previous values afterwards. Inside a `foreachBatch` Spark otherwise
+    * reports every job at the stream's `start()` line.
+    */
+  def withCallSite[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val keys = Seq("callSite.short", "callSite.long")
+    val prev = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, name))
+    try body
+    finally keys.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
   /** Register typed change views for many tables of one binlog stream —
     * `<db>_<table>_changes` each with its own pushed-down scan. The
     * reference serves any table from a single connection

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.binlog.BinlogWriter._
 import graft.binlog.TableMeta
+import graft.core.GraftSession.withCallSite
 
 /** Binlog CDC queries over deterministic generated fixtures — the engine's
   * reference-parity surface wired into the driver contract.
@@ -1415,7 +1416,9 @@ object CdcBinlog {
           val live = routes.flatMap { r =>
             val imgs = r.images(b, batchId).persist()
             frames += imgs
-            if (imgs.isEmpty) Nil else r.legs.map(l => () => l.run(imgs, batchId))
+            if (withCallSite(s, "ingest: frame")(imgs.isEmpty)) Nil
+            else r.legs.map(l => () =>
+              withCallSite(s, s"ingest: ${l.name}")(l.run(imgs, batchId)))
           }
           Layout.inParallelLegs(live)
           ()

@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+
+import graft.core.GraftSession.withCallSite
 
 /** CDC → queryable table maintenance: the sink-side counterpart of the
   * latest-image *query* (cdcb4). The reference leaves materialization to
@@ -16,7 +19,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * pruning on the read side). Per-trigger cost is
   * O(touched buckets ÷ nBuckets × table), not O(table): a trickle of
   * changes against a 100 TB table rewrites a few buckets, a bulk load
-  * rewrites them all — both the plan you'd want.
+  * rewrites them all — both the plan you'd want. A trigger runs one
+  * shuffle-free job to find its touched buckets and one write (two jobs
+  * under AQE) that shuffles once, on the bucket, and writes each touched
+  * bucket as one file; the table's schema comes from a parquet footer
+  * read on the driver, not from a schema-inference job.
   *
   * Merge is latest-wins on the envelope's total order
   * (log_file, log_pos, log_seq), which makes it idempotent: a replayed
@@ -54,49 +61,108 @@ object CdcMaterializer {
     when(ext === "", lit(-1L)).otherwise(ext.cast("long"))
   }
 
-  /** One idempotent merge of a batch of change rows into the table. */
+  /** One idempotent merge of a batch of change rows into the table: one
+    * job finds the touched buckets, one shuffled write (two jobs under
+    * AQE) rewrites them.
+    */
   private[streaming] def mergeBatch(batch: DataFrame, keyCol: String,
-                                    tablePath: String, nBuckets: Int): Unit = {
-    val s = batch.sparkSession
-    // persist: isEmpty, the touched-bucket collect, and the merge would
-    // otherwise each re-decode the batch's binlog span from the source —
-    // ~3x decode per trigger (materializeAll already persists for the same
-    // reason)
-    val b = batch.filter(col("_delta_type") =!= "update-before")
-      .withColumn("_bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
-      .persist()
-    try {
-      if (!b.isEmpty) {
+                                    tablePath: String, nBuckets: Int): Unit =
+    withCallSite(batch.sparkSession, "CdcMaterializer.mergeBatch") {
+      val s = batch.sparkSession
+      // persist: the touched-bucket scan and the merge would otherwise each
+      // re-decode the batch's binlog span from the source (materializeAll
+      // already persists for the same reason)
+      val b = batch.filter(col("_delta_type") =!= "update-before")
+        .withColumn("_bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
+        .persist()
+      try {
         // touched bucket ids: bounded by nBuckets, safe to collect — and as
-        // literals they prune the existing-table read to those partitions
-        val touched = b.select("_bucket").distinct().collect().map(_.getInt(0)).toSeq
-        // existence via the table's own filesystem (HDFS/S3/local alike —
-        // java.io.File would answer "no" for every non-local URI and silently
-        // drop the previously materialized rows of touched buckets)
-        val hPath = new org.apache.hadoop.fs.Path(tablePath)
-        val exists = hPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hPath)
-        val existing =
-          if (exists) s.read.parquet(tablePath).where(col("_bucket").isin(touched: _*))
-          else null
-        val all = if (existing != null) existing.unionByName(b) else b
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(col(keyCol))
-          .orderBy(fileSeq(col("log_file")).desc, col("log_file").desc,
-            col("log_pos").desc, col("log_seq").desc)
-        val merged = all
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        // materialize before writing: the write overwrites the very
-        // partitions the merge just read (touched buckets only, so the
-        // checkpointed footprint is the batch's working set, not the table)
-        val snap = merged.localCheckpoint(true)
-        // writer-scoped dynamic overwrite — never mutate the shared session
-        // conf (a sibling job's full-table overwrite must stay STATIC)
-        snap.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_bucket").parquet(tablePath)
-        snap.unpersist()
+        // literals they prune the existing-table read to those partitions.
+        // None touched means nothing to write.
+        val touched = bucketSet(b)
+        if (touched.nonEmpty) {
+          // the existing table, read with its footer's schema (no inference
+          // job); a batch whose columns differ fails in unionByName, before
+          // anything is written
+          val all = readExisting(s, tablePath)
+            .fold(b)(_.where(col("_bucket").isin(touched: _*)).unionByName(b))
+          // one shuffle, on the bucket: the window's (bucket, key) partitions
+          // need no second one, and each touched bucket is written by one
+          // task as one file
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("_bucket"), col(keyCol))
+            .orderBy(fileSeq(col("log_file")).desc, col("log_file").desc,
+              col("log_pos").desc, col("log_seq").desc)
+          // the merge streams straight into the partitions it reads: dynamic
+          // overwrite stages every task's output and replaces the touched
+          // `_bucket=N` directories only at job commit, after every task has
+          // read them. Writer-scoped — never mutate the shared session conf
+          // (a sibling job's full-table overwrite must stay STATIC).
+          all.repartition(col("_bucket"))
+            .withColumn("_rn", row_number().over(w))
+            .filter(col("_rn") === 1).drop("_rn")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bucket").parquet(tablePath)
+        }
+      } finally b.unpersist()
+    }
+
+  /** The distinct `_bucket` ids of `df` in one shuffle-free job: a set per
+    * partition, merged on the driver.
+    */
+  private def bucketSet(df: DataFrame): Seq[Int] =
+    df.select(col("_bucket")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val seen = scala.collection.mutable.BitSet.empty
+        rows.foreach(r => seen += r.getInt(0))
+        Iterator.single(seen.toArray)
       }
-    } finally b.unpersist()
+      .collect().flatten.distinct.sorted.toSeq
+
+  /** The table at `tablePath`, read with the schema in one data file's
+    * parquet footer (read on the driver: no schema-inference job), or
+    * None while it has no data file.
+    */
+  private def readExisting(s: SparkSession, tablePath: String): Option[DataFrame] = {
+    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val conf = s.sparkContext.hadoopConfiguration
+    // the table's own filesystem (HDFS/S3/local alike — java.io.File would
+    // answer "no" for every non-local URI and silently drop the previously
+    // materialized rows of touched buckets)
+    val fs = root.getFileSystem(conf)
+    def visible(p: org.apache.hadoop.fs.Path) =
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    val file =
+      if (!fs.exists(root)) None
+      else fs.listStatus(root).iterator
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith("_bucket="))
+        .flatMap(d => fs.listStatus(d.getPath).iterator
+          .filter(f => f.isFile && visible(f.getPath)))
+        .nextOption()
+    file.map { f =>
+      // options from the session's conf: the no-options overload parses a
+      // fresh Hadoop conf from its XML resources on every call
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf)
+          .withMetadataFilter(org.apache.parquet.format.converter
+            .ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          .build())
+      // Spark writes its schema into every file's key-value metadata
+      val sparkSchema =
+        try Option(reader.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      sparkSchema match {
+        case Some(json) =>
+          val data = DataType.fromJson(json).asInstanceOf[StructType]
+          val schema = StructType(data.fields.map(_.copy(nullable = true)))
+            .add("_bucket", IntegerType)
+          s.read.schema(schema).parquet(tablePath)
+        case None => s.read.parquet(tablePath)
+      }
+    }
   }
 
   /** Current state of the materialized table (tombstones filtered). */
@@ -111,43 +177,43 @@ object CdcMaterializer {
     * "rewrite to empty". Run between triggers (or from a maintenance
     * job), not concurrently with the maintaining stream's own writes.
     */
-  def compact(s: SparkSession, tablePath: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // cross-process fold lease (the structure compactors' contract): two
-    // concurrent tombstone compactions of the same table would race the
-    // dynamic bucket overwrites — the loser fails by name instead
-    graft.operators.Layout.withFoldLease(fs, hPath) {
-      val t = s.read.parquet(tablePath)
-      val tombBuckets = t.filter(col("_delta_type") === "delete")
-        .select("_bucket").distinct().collect().map(_.getInt(0)).toSeq
-      if (tombBuckets.nonEmpty) {
-        // only needed for the degenerate-case guard below — keep the
-        // common tombstone-free call to a single scan
-        val allBuckets = t.select("_bucket").distinct().collect().map(_.getInt(0)).toSet
-        val live = t.where(col("_bucket").isin(tombBuckets: _*))
-          .filter(col("_delta_type") =!= "delete")
-          .localCheckpoint(true)
-        val liveBuckets = live.select("_bucket").distinct().collect().map(_.getInt(0)).toSet
-        // Degenerate case: EVERY key in the table is dead. Deleting all
-        // partition directories would leave a parquet root with no data
-        // files — unreadable by every subsequent read/merge. Tombstones are
-        // logically invisible anyway (readTable filters them), so skip:
-        // compaction is an optimization and must never break the table.
-        if (liveBuckets.isEmpty && tombBuckets.toSet == allBuckets) live.unpersist()
-        else {
-          if (!live.isEmpty)
-            live.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_bucket").parquet(tablePath)
-          live.unpersist()
-          tombBuckets.filterNot(liveBuckets).foreach { bId =>
-            fs.delete(new org.apache.hadoop.fs.Path(hPath, s"_bucket=$bId"), true)
+  def compact(s: SparkSession, tablePath: String): Unit =
+    withCallSite(s, "CdcMaterializer.compact") {
+      val hPath = new org.apache.hadoop.fs.Path(tablePath)
+      val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      // cross-process fold lease (the structure compactors' contract): two
+      // concurrent tombstone compactions of the same table would race the
+      // dynamic bucket overwrites — the loser fails by name instead
+      graft.operators.Layout.withFoldLease(fs, hPath) {
+        val t = s.read.parquet(tablePath)
+        val tombBuckets = bucketSet(t.filter(col("_delta_type") === "delete"))
+        if (tombBuckets.nonEmpty) {
+          // only needed for the degenerate-case guard below — keep the
+          // common tombstone-free call to a single scan
+          val allBuckets = bucketSet(t).toSet
+          val live = t.where(col("_bucket").isin(tombBuckets: _*))
+            .filter(col("_delta_type") =!= "delete")
+            .localCheckpoint(true)
+          val liveBuckets = bucketSet(live).toSet
+          // Degenerate case: EVERY key in the table is dead. Deleting all
+          // partition directories would leave a parquet root with no data
+          // files — unreadable by every subsequent read/merge. Tombstones are
+          // logically invisible anyway (readTable filters them), so skip:
+          // compaction is an optimization and must never break the table.
+          if (liveBuckets.isEmpty && tombBuckets.toSet == allBuckets) live.unpersist()
+          else {
+            if (liveBuckets.nonEmpty)
+              live.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_bucket").parquet(tablePath)
+            live.unpersist()
+            tombBuckets.filterNot(liveBuckets).foreach { bId =>
+              fs.delete(new org.apache.hadoop.fs.Path(hPath, s"_bucket=$bId"), true)
+            }
           }
         }
       }
     }
-  }
 
   // ---- incremental aggregate-view maintenance (IVM) ----------------------
   //

@@ -41,14 +41,13 @@ object ProfileOne {
           val wall = (for (s <- si.submissionTime; c <- si.completionTime)
             yield c - s).getOrElse(0L)
           // prefer the deepest graft.* frame from the long callsite: inside
-          // a foreachBatch every stage's short name is the writeStream line
-          val key = {
-            val frames = Option(si.details).getOrElse("").linesIterator
-              .filter(l => l.contains("graft.") && !l.contains("ProfileOne"))
-              .toVector
-            val op = frames.headOption.map(_.trim).getOrElse("")
-            s"${si.name.takeWhile(_ != ' ')} @ $op"
-          }
+          // a foreachBatch every stage's short name is the writeStream line.
+          // A stage without one (named by GraftSession.withCallSite, which
+          // sets no stack) is keyed by its whole name.
+          val key = Option(si.details).getOrElse("").linesIterator
+            .find(l => l.contains("graft.") && !l.contains("ProfileOne"))
+            .map(f => s"${si.name.takeWhile(_ != ' ')} @ ${f.trim}")
+            .getOrElse(si.name)
           jobs.synchronized {
             val (n, t, w, tt) = bySite.getOrElse(key, (0, 0, 0L, 0L))
             bySite(key) = (n + 1, t + si.numTasks, w + wall, tt)

@@ -188,6 +188,102 @@ class CdcMaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("word").collect().map(_.getString(0)).toSeq === Seq("back"))
   }
 
+  private def allPartFiles(table: String): Set[String] =
+    (0 until nBuckets).flatMap(b => partFiles(table, b).map(f => s"$b/$f")).toSet
+
+  private def state(table: String): Seq[(Int, String)] =
+    CdcMaterializer.readTable(spark, table)
+      .select("id", "word").collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+
+  /** Jobs `body` launches, counted by a listener over this thread's job
+    * group; a marker job closes the window, so every earlier job start
+    * has reached the listener when the count is read.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          starts.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "")
+      try {
+        body
+        sc.setJobDescription("marker")
+        sc.parallelize(Seq(1), 1).count()
+      } finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!starts.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.contains("marker"), "listener never saw the marker job")
+      starts.size() - 1
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("column drift fails the merge before anything is written") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("mat-drift").resolve("t").toString
+    val batch = Seq(("insert", "f", 1L, 0, 1, "one"), ("insert", "f", 1L, 1, 2, "two"))
+      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
+    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets)
+    val files = allPartFiles(table)
+    val answer = state(table)
+    assert(answer === Seq((1, "one"), (2, "two")))
+
+    // one column more than the table
+    val extra = Seq(("update", "f", 2L, 0, 1, "ONE", 7L))
+      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word", "extra")
+    val e1 = intercept[org.apache.spark.sql.AnalysisException](
+      CdcMaterializer.mergeBatch(extra, "id", table, nBuckets))
+    assert(e1.getCondition === "NUM_COLUMNS_MISMATCH", e1.getMessage)
+    assert(allPartFiles(table) === files)
+    assert(state(table) === answer)
+
+    // one column fewer: the table's `word` cannot be resolved in the batch
+    val missing = Seq(("update", "f", 2L, 0, 2))
+      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id")
+    val e2 = intercept[org.apache.spark.sql.AnalysisException](
+      CdcMaterializer.mergeBatch(missing, "id", table, nBuckets))
+    assert(e2.getMessage.contains("Cannot resolve column name \"word\""), e2.getMessage)
+    assert(allPartFiles(table) === files)
+    assert(state(table) === answer)
+  }
+
+  test("merge keeps untouched keys of a touched bucket, in at most 3 jobs") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("mat-samebucket").resolve("t").toString
+    // two keys sharing one bucket
+    val ids = (1 to 64).map(i => i -> spark.range(1)
+      .select(pmod(hash(lit(i)), lit(nBuckets))).head.getInt(0))
+    val (a, bucket) = ids.head
+    val b = ids.tail.collectFirst { case (i, bk) if bk == bucket => i }.get
+    val both = Seq(("insert", "f", 1L, 0, a, "a1"), ("insert", "f", 1L, 1, b, "b1"))
+      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
+    CdcMaterializer.mergeBatch(both, "id", table, nBuckets)
+
+    // the second merge rewrites that bucket straight from a read of it
+    val onlyA = Seq(("update", "f", 2L, 0, a, "a2"))
+      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
+    val jobs = jobsOf(CdcMaterializer.mergeBatch(onlyA, "id", table, nBuckets))
+    assert(state(table) === Seq((a, "a2"), (b, "b1")).sortBy(_._1))
+    assert(jobs <= 3, s"a merge into an existing table launched $jobs jobs")
+    // one file per touched bucket per batch
+    assert(partFiles(table, bucket).size === 1)
+
+    // a batch of only before-images touches no bucket and writes nothing
+    val files = allPartFiles(table)
+    val before = Seq(("update-before", "f", 3L, 0, b, "b1"))
+      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
+    val beforeJobs = jobsOf(CdcMaterializer.mergeBatch(before, "id", table, nBuckets))
+    assert(allPartFiles(table) === files)
+    assert(state(table) === Seq((a, "a2"), (b, "b1")).sortBy(_._1))
+    assert(beforeJobs <= 1, s"an update-before-only batch launched $beforeJobs jobs")
+  }
+
   test("materializeAll: one scan maintains several typed tables") {
     val dcols = Seq(ColSpec.int, ColSpec.decimal(12, 4))
     val dir = Files.createTempDirectory("matall-src")
