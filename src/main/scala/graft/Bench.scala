@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR at local[N], prints ONE JSON line.
   *

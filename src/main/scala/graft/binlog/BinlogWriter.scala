@@ -1,6 +1,6 @@
 package graft.binlog
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.{Charset, StandardCharsets}
 

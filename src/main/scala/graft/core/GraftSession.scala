@@ -38,15 +38,6 @@ object GraftSession {
     finally keys.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
-  /** Register typed change views for many tables of one binlog stream —
-    * `<db>_<table>_changes` each with its own pushed-down scan. The
-    * reference serves any table from a single connection
-    * (`jdbc.clj:170-178`); this is the multi-table typed equivalent.
-    *
-    * @param schemas "db.table" -> payload DDL (names come from outside the
-    *                log, as in the reference: `mysql_binlog.clj:505-508`)
-    * @param streaming readStream (micro-batch) instead of batch
-    */
   /** Split a "db.table" key, with a named error instead of a MatchError
     * when the dot is missing.
     */
@@ -57,6 +48,15 @@ object GraftSession {
         s"table key must be 'db.table', got '$qualified'")
     }
 
+  /** Register typed change views for many tables of one binlog stream —
+    * `<db>_<table>_changes` each with its own pushed-down scan. The
+    * reference serves any table from a single connection
+    * (`jdbc.clj:170-178`); this is the multi-table typed equivalent.
+    *
+    * @param schemas "db.table" -> payload DDL (names come from outside the
+    *                log, as in the reference: `mysql_binlog.clj:505-508`)
+    * @param streaming readStream (micro-batch) instead of batch
+    */
   def registerChangeViews(spark: SparkSession, binlogPath: String,
                           schemas: Map[String, String],
                           streaming: Boolean = false): Map[String, DataFrame] = {

@@ -133,13 +133,32 @@ object Dedup {
   // verified with exact shingle Jaccard ≥ 0.2.
   def dd02MinhashLsh(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    import s.implicits._
     // signature computation is the compute-heavy narrow stage: the
     // single-pass graft_minhash expression (one md5 per shingle, all four
     // window minima in one traversal) spread over all cores. The banding
     // is the SAME bandsOf dd06's incremental path indexes — one
     // implementation, so the gate query and the index cannot drift.
     dd02PairsVia(spread(s, documents(s, d)), bandsOf)
+  }
+
+  /** Spec hook: the collapsed engine on an arbitrary docs frame. */
+  private[operators] def dd02PairsCollapsed(docs: DataFrame): DataFrame =
+    dd02PairsVia(docs, bandsOf)
+
+  /** The PRE-collapse dd02 formulation (band self-join over ALL docs) —
+    * reference semantics, kept as the spec equality baseline only: its
+    * band join is quadratic in a duplicate group's size, which is
+    * exactly what [[dd02PairsVia]] bounds away.
+    */
+  private[operators] def dd02PairsNaive(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    val bands = bandsOf(docs)
+    val cands = bands.as("a").join(bands.as("b"),
+        $"a.band_id" === $"b.band_id" && $"a.h" === $"b.h" &&
+          $"a.doc_id" < $"b.doc_id")
+      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
+      .distinct()
+    verifyJaccard(cands, docs.select($"doc_id", shingles($"text").as("sh")), 0.2)
   }
 
   /** dd02's candidate-pair engine with identical-text PRE-COLLAPSE.
@@ -163,26 +182,6 @@ object Dedup {
     * its id array in memory is a corpus whose pair LIST is infeasible
     * to emit at all — the bound is inherent to the query's shape.)
     */
-  /** Spec hook: the collapsed engine on an arbitrary docs frame. */
-  private[operators] def dd02PairsCollapsed(docs: DataFrame): DataFrame =
-    dd02PairsVia(docs, bandsOf)
-
-  /** The PRE-collapse dd02 formulation (band self-join over ALL docs) —
-    * reference semantics, kept as the spec equality baseline only: its
-    * band join is quadratic in a duplicate group's size, which is
-    * exactly what [[dd02PairsVia]] bounds away.
-    */
-  private[operators] def dd02PairsNaive(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    val bands = bandsOf(docs)
-    val cands = bands.as("a").join(bands.as("b"),
-        $"a.band_id" === $"b.band_id" && $"a.h" === $"b.h" &&
-          $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .distinct()
-    verifyJaccard(cands, docs.select($"doc_id", shingles($"text").as("sh")), 0.2)
-  }
-
   private def dd02PairsVia(docsIn: DataFrame,
                            bandsFn: DataFrame => DataFrame,
                            rawfpFn: Column => Column = md5(_)): DataFrame = {

@@ -1194,7 +1194,6 @@ object Layout {
     */
   private[operators] def probeRows(s: SparkSession, key: Long, mBits: Long,
                                    k: Int): DataFrame = {
-    import s.implicits._
     s.range(1).select(explode(bloomPositions(lit(key), mBits, k)).as("pos"))
       .select(expr("pos div 64").as("word"),
         expr("shiftleft(1L, int(pos % 64))").as("bit"))

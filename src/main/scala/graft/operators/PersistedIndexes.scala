@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.lit
 
 import graft.core.Tables._
 
@@ -96,20 +97,25 @@ object PersistedIndexes {
       TextAnalysis.buildTextIndex(documents(s, sfDir), dir)
     }
 
-  /** txt18's maintenance-lifecycle index: base build over 70% of the
-    * corpus, two appended ingest segments (20% + 10%), then a compaction
-    * back to one base segment — the steady-state shape of an index that
-    * has lived through ingest. Covers the same full corpus as [[textIndex]]
+  /** txt18's maintenance-lifecycle index: the CDC text index fed the
+    * corpus as three insert-only batches (70%, 20%, 10% — segments
+    * `b000000`–`b000002`, `ver` the batch ordinal), then compacted back
+    * to one base segment — the steady-state shape of an index that has
+    * lived through ingest. Covers the same full corpus as [[textIndex]]
     * by construction, so the probe oracle is the one-shot build's.
     */
   def textIndexLifecycle(s: SparkSession, sfDir: String): String =
-    cached(s"graft-index-r11c-textlc-${sfKey(sfDir)}") { dir =>
+    cached(s"graft-index-r11d-textlc-${sfKey(sfDir)}") { dir =>
       import s.implicits._
       val docs = documents(s, sfDir)
-      TextAnalysis.buildTextIndex(docs.filter($"doc_id" % 10 < 7), dir)
-      TextAnalysis.appendToTextIndex(
-        docs.filter($"doc_id" % 10 === 7 || $"doc_id" % 10 === 8), dir, "b1")
-      TextAnalysis.appendToTextIndex(docs.filter($"doc_id" % 10 === 9), dir, "b2")
-      TextAnalysis.compactTextIndex(s, dir)
+      val slices = Seq($"doc_id" % 10 < 7,
+        $"doc_id" % 10 === 7 || $"doc_id" % 10 === 8, $"doc_id" % 10 === 9)
+      slices.zipWithIndex.foreach { case (slice, b) =>
+        TextAnalysis.appendCdcTextSegment(
+          docs.filter(slice).select($"doc_id", $"text",
+            lit(b.toLong).as("ver"), lit(false).as("deleted")),
+          dir, f"b$b%06d")
+      }
+      TextAnalysis.compactCdcTextIndex(s, dir)
     }
 }

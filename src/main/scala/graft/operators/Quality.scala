@@ -38,8 +38,6 @@ object Quality {
     * computable downstream without a second count job.
     */
   def report(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
     val aggs = count(lit(1)).as("rows_total") +:
       checks.map(c => sum(when(c.violation, 1L).otherwise(0L)).as(c.name))
     val row = df.agg(aggs.head, aggs.tail: _*)
@@ -60,8 +58,6 @@ object Quality {
   def orphanCount(child: DataFrame, childKey: String,
                   parent: DataFrame, parentKey: String,
                   name: String): DataFrame = {
-    val s = child.sparkSession
-    import s.implicits._
     child.select(col(childKey))
       .join(parent.select(col(parentKey).as(childKey)).distinct(),
         Seq(childKey), "left_anti")

@@ -428,8 +428,7 @@ object Similarity {
       .delete(cellsPath, true)
     val assigned = assignCells(e, k).localCheckpoint(true)
     try {
-      // segment-addressed from the start (seg=base) so incremental batches
-      // ([[appendToAnnIndex]]) land beside it without a layout migration
+      // segment-addressed (seg=base), the layout the CDC ANN index shares
       assigned.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$indexDir/cells/seg=base")
       cellCentroids(assigned).write.mode("overwrite")
@@ -480,43 +479,6 @@ object Similarity {
         (-$"best".getField("nsid")).cast("int").as("cell"): _*)
   }
 
-  /** Append a batch to an existing ANN index: assign against the persisted
-    * centroids, land the rows SEGMENT-ADDRESSED under
-    * `cells/seg=<segment>` (cell-partitioned inside, like the base
-    * segment) — re-running a segment overwrites exactly its own rows, so
-    * replayed ingest batches are idempotent by construction, the same
-    * protocol as [[Dedup.buildDedupIndex]]. Probes are unchanged: partition
-    * discovery sees (seg, cell) and cell pruning still applies.
-    */
-  def appendToAnnIndex(s: SparkSession, batch: DataFrame, indexDir: String,
-                       segment: String): Unit = {
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    assignToCentroids(batch, cent).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$indexDir/cells/seg=$segment")
-  }
-
-  /** Fold every segment of the ANN index's cell table into one fresh base
-    * segment. Appends are correctness-neutral but each adds a `seg=` level
-    * under every cell a probe prunes to — steady ingest turns the pruned
-    * read into thousands of tiny files. Rows are concatenated UNCHANGED
-    * (assignments were made under the persisted quantizer, which only a
-    * rebuild replaces, so re-deriving anything would be wrong as well as
-    * wasteful) and land without an exchange: cell files live inside their
-    * `cell=` directories, so read tasks carry single-cell rows and the
-    * partitionBy write keeps them there. Centroids are untouched. Staged
-    * + swapped under the no-concurrent-probes contract
-    * ([[TextAnalysis.compactTextIndex]]).
-    */
-  def compactAnnIndex(s: SparkSession, indexDir: String): Unit = {
-    import s.implicits._
-    val staging = s"$indexDir/cells.compact-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/cells")
-      .select($"vec_id", $"label", $"embedding", $"cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/seg=base")
-    TextAnalysis.swapDirs(s, staging, s"$indexDir/cells")
-  }
-
   // ---- CDC-maintained ANN index (cdcm5) --------------------------------
   //
   // The ANN twin of the CDC text index (cdcm4): a change stream's vectors
@@ -532,9 +494,9 @@ object Similarity {
   /** Append one CDC batch's latest images (vec_id, embedding, ver,
     * deleted) to the ANN index; the first batch also writes the
     * centroids it was quantized under. Segment replay is idempotent
-    * (same overwrite-own-rows protocol as [[appendToAnnIndex]]) —
-    * unless a fold already consumed the segment: [[Layout.append]] then
-    * skips it (false). Returns true iff written.
+    * (a replayed segment overwrites exactly its own rows) — unless a
+    * fold already consumed the segment: [[Layout.append]] then skips it
+    * (false). Returns true iff written.
     */
   def appendCdcAnnSegment(images: DataFrame, indexDir: String,
                           segment: String, k: Int = 16): Boolean = {
@@ -851,20 +813,6 @@ object Similarity {
       // to the interpreted HOF fold it replaced), one per live row
       .select($"vec_id", call_function("graft_dot", $"embedding", q).as("dot"))
     rankedTopK(scored, $"dot", $"vec_id", kTop, "r_dense")
-  }
-
-  /** [[compactAnnIndex]] for the IVF-PQ layout: fold `codes/seg=*` into a
-    * fresh `codes/seg=base`; centroids and codebook (rebuild-scoped
-    * geometry) are untouched.
-    */
-  def compactIvfPqIndex(s: SparkSession, indexDir: String): Unit = {
-    import s.implicits._
-    val staging = s"$indexDir/codes.compact-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/codes")
-      .select($"vec_id", $"label", $"codes", $"cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/seg=base")
-    TextAnalysis.swapDirs(s, staging, s"$indexDir/codes")
   }
 
   /** sim05 against the persisted index: centroids are read (tiny), the
@@ -1293,28 +1241,6 @@ object Similarity {
       .select($"vec_id", $"label", $"codes", $"cell")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$indexDir/codes/seg=base")
-  }
-
-  /** Append a batch to an existing IVF-PQ index: assign against the
-    * PERSISTED centroids and encode against the PERSISTED codebook (the
-    * quantizer and codebook only change on a rebuild — the
-    * [[appendToAnnIndex]] contract), land segment-addressed under
-    * `codes/seg=<segment>` so a replayed ingest batch overwrites exactly
-    * its own rows (idempotent). Probes are unchanged: partition discovery
-    * sees (seg, cell) and cell pruning still applies.
-    */
-  def appendToIvfPqIndex(s: SparkSession, batch: DataFrame, indexDir: String,
-                         segment: String): Unit = {
-    import s.implicits._
-    val cent = s.read.parquet(s"$indexDir/centroids")
-    val cbFlat = s.read.parquet(s"$indexDir/codebook")
-    val dims = cbFlat.agg((max($"m") + 1).as("mc"), max(size($"cw")).as("sl"),
-      (max($"code") + 1).as("kq")).head()
-    val (mCnt, subLen, kq) = (dims.getInt(0), dims.getInt(1), dims.getInt(2))
-    pqEncode(assignToCentroids(batch, cent), pqAssemble(cbFlat), mCnt, subLen, kq)
-      .select($"vec_id", $"label", $"codes", $"cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/codes/seg=$segment")
   }
 
   def sim08ViaIndex(s: SparkSession, d: String, indexDir: String,

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables._
 
 /** Text-analysis operators for a large-scale training-data pipeline:
@@ -589,59 +588,51 @@ object TextAnalysis {
   //
   // Build cost: one (term, doc_id) aggregation of the exploded token
   // stream — the single corpus-sized shuffle, paid at BUILD time, slim
-  // (term, doc_id, dl) rows. Rebuild on corpus drift; the protocol for
-  // incremental segments would mirror [[Similarity.appendToAnnIndex]].
+  // (term, doc_id, dl) rows. Rebuild on corpus drift; a corpus that
+  // changes in place is the CDC-maintained index's job (below).
 
   def textIndexBuckets: Int = 64
 
-  /** Write one segment of the index (postings + per-term df + corpus
-    * stats for `docs` alone) under `seg=<segment>` — the shared engine of
-    * [[buildTextIndex]] (seg=base) and [[appendToTextIndex]]. Re-running
-    * a segment overwrites exactly its own rows, so replayed ingest
-    * batches are idempotent — the [[Similarity.appendToAnnIndex]]
-    * protocol.
+  /** Build the index over `docs` as one `seg=base` segment: postings,
+    * per-term df and corpus stats, plus the `_nbuckets` marker.
     */
-  private def writeTextSegment(docs: DataFrame, indexDir: String,
-                               segment: String, nBuckets: Int): Unit = {
+  def buildTextIndex(docs: DataFrame, indexDir: String,
+                     nBuckets: Int = textIndexBuckets): Unit = {
     val s = docs.sparkSession
     import s.implicits._
+    // a (re)build starts a NEW index: earlier segments described a corpus
+    // that no longer exists — the buildAnnIndex wipe contract
+    val root = new org.apache.hadoop.fs.Path(indexDir)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(root, true)
     val base = docs
       .select($"doc_id", size(tokens($"text")).cast("long").as("dl"),
         explode(tokens($"text")).as("term"))
     base.groupBy($"term", $"doc_id", $"dl").agg(count(lit(1)).as("tf"))
       .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
       .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$indexDir/postings/seg=$segment")
+      .parquet(s"$indexDir/postings/seg=base")
     // per-term document frequency — recomputed from the written postings
     // (slim read, no second corpus tokenization), bucketed like them
-    s.read.parquet(s"$indexDir/postings/seg=$segment")
+    s.read.parquet(s"$indexDir/postings/seg=base")
       .groupBy($"term").agg(count(lit(1)).as("df"))
       .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
       .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$indexDir/termstats/seg=$segment")
-    // segment-level corpus stats over ALL the segment's docs (zero-match
-    // docs count toward n and sumdl — the txt13 statistics contract)
+      .parquet(s"$indexDir/termstats/seg=base")
+    // corpus stats over ALL the docs (zero-match docs count toward n and
+    // sumdl — the txt13 statistics contract)
     docs.select(size(tokens($"text")).cast("long").as("dl"))
       .agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
-      .write.mode("overwrite").parquet(s"$indexDir/stats/seg=$segment")
-  }
-
-  def buildTextIndex(docs: DataFrame, indexDir: String,
-                     nBuckets: Int = textIndexBuckets): Unit = {
-    // a (re)build starts a NEW index: earlier segments described a corpus
-    // that no longer exists — the buildAnnIndex wipe contract
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    writeTextSegment(docs, indexDir, "base", nBuckets)
+      .write.mode("overwrite").parquet(s"$indexDir/stats/seg=base")
     writeBucketMarker(fs, indexDir, nBuckets)
   }
 
   /** The index's RECORDED term-bucket count (`_nbuckets` at the root).
-    * The bucket count became a runtime property when [[rebucketTextIndex]]
-    * arrived: a probe pruning with the wrong count reads the wrong
-    * directories and silently misses postings, so the layout records its
-    * own count and the probes verify against it by name. Indexes built
+    * The bucket count became a runtime property when re-bucketing
+    * ([[rebucketCdcTextIndex]]) arrived: a probe pruning with the wrong
+    * count reads the wrong directories and silently misses postings, so
+    * the layout records its own count and the probes verify against it
+    * by name. Indexes built
     * before the marker existed return None (verification skipped).
     */
   def textIndexBucketCount(s: SparkSession, indexDir: String): Option[Int] = {
@@ -673,144 +664,6 @@ object TextAnalysis {
       new org.apache.hadoop.fs.Path(root, "_nbuckets"), true)
     try out.write(nBuckets.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-  }
-
-  /** Append a document batch to an existing index: postings, df and
-    * corpus stats land segment-addressed beside the base segment; the
-    * query path merges them with EXACT integer sums (df/n/sumdl are
-    * longs), so scores after any append sequence are bit-identical to a
-    * full rebuild over the union (spec-pinned). Nothing already indexed
-    * is re-read or re-tokenized — append cost is O(batch).
-    */
-  def appendToTextIndex(batch: DataFrame, indexDir: String, segment: String,
-                        nBuckets: Int = textIndexBuckets): Unit = {
-    // an append bucketed under a count that differs from the layout's
-    // would land rows in directories the probes never prune to —
-    // silently unsearchable; verify against the recorded count by name
-    textIndexBucketCount(batch.sparkSession, indexDir).foreach(recorded =>
-      require(recorded == nBuckets,
-        s"append bucketed by $nBuckets but the index at $indexDir records " +
-          s"$recorded term buckets (re-bucketed?) — pass the recorded count"))
-    writeTextSegment(batch, indexDir, segment, nBuckets)
-  }
-
-  /** Fold every segment of a text index into a single fresh base segment.
-    *
-    * Appends keep probe correctness but grow the file fan-out: a probe
-    * reads |segments| x |query-term buckets| directories, and a year of
-    * hourly ingest batches is ~9k segments — at that point the probe's
-    * list/open cost dwarfs its byte cost. Compaction restores O(1) dirs
-    * per bucket without touching the corpus: postings rows are
-    * CONCATENATED unchanged (the probe already merges segments by exact
-    * long-sum, so row concatenation is score-preserving by construction —
-    * bit-identical, spec-pinned), df is re-summed per term from the slim
-    * termstats rows, and stats collapse to one row. No corpus re-read, no
-    * re-tokenization, and no posting shuffle either: posting files live
-    * inside their `tb=` directories, so every read task carries rows of
-    * one bucket and the partitionBy write lands them back without an
-    * exchange.
-    *
-    * The rewritten tree is staged beside the index and swapped in with
-    * recursive-delete + rename. Run from a maintenance job, not
-    * concurrently with probes or appends — the [[graft.streaming.CdcMaterializer.compact]]
-    * contract.
-    */
-  def compactTextIndex(s: SparkSession, indexDir: String,
-                       nBuckets: Int = textIndexBuckets): Unit = {
-    import s.implicits._
-    val tgt = new org.apache.hadoop.fs.Path(indexDir)
-    Layout.withFoldLease(
-      tgt.getFileSystem(s.sparkContext.hadoopConfiguration), tgt) {
-    val staging = s"$indexDir.compact-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/postings")
-      .select($"term", $"doc_id", $"dl", $"tf", $"tb")
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/postings/seg=base")
-    s.read.parquet(s"$indexDir/termstats")
-      .groupBy($"term").agg(sum($"df").as("df"))
-      .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/termstats/seg=base")
-    s.read.parquet(s"$indexDir/stats")
-      .agg(sum($"n").as("n"), sum($"sumdl").as("sumdl"))
-      .write.mode("overwrite").parquet(s"$staging/stats/seg=base")
-    // the bucket marker travels with the tree (the swap replaces the
-    // whole root, and a fold never changes the bucket count)
-    writeBucketMarker(
-      tgt.getFileSystem(s.sparkContext.hadoopConfiguration), staging, nBuckets)
-    swapDirs(s, staging, indexDir)
-    }
-  }
-
-  /** RE-BUCKET the index: rewrite postings and termstats under a NEW
-    * term-bucket count — the lifecycle op [[compactTextIndex]]
-    * deliberately is not (a fold never moves rows between buckets).
-    * `nBuckets` is fixed at build time, and the right count scales with
-    * the corpus: 64 directories prune beautifully at gigabytes, but a
-    * corpus grown 100× wants its per-bucket postings files back down to
-    * probe-sized reads, and the only alternative to this op is a full
-    * rebuild — a re-tokenization of the whole corpus plus a probe
-    * outage. The re-bucket reads the POSTINGS once (never the corpus:
-    * no re-tokenization, df re-sums from the slim termstats rows, stats
-    * collapse to one row), hashes each row to its new bucket, and pays
-    * exactly one postings-sized shuffle — the cost floor for a layout
-    * change that moves every row's directory. Scores are bit-identical
-    * by construction: bucketing is pure physical placement (the probe
-    * prunes directories, then scores rows it would have scored anyway),
-    * pinned in IndexCompactionSpec against both probe paths.
-    *
-    * Published like every fold: lease + staged tree + two-rename swap
-    * ([[Layout.publishDir]] / [[Layout.recoverPublish]]) — no
-    * rebuild-probe outage, a crash leaves old or new, never neither.
-    * The staged tree carries the new `_nbuckets` marker, and the probes
-    * verify their pruning count against it BY NAME — a probe still
-    * passing the old count after a re-bucket fails loudly instead of
-    * silently missing every moved posting.
-    */
-  def rebucketTextIndex(s: SparkSession, indexDir: String,
-                        newBuckets: Int): Unit = {
-    require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
-    import s.implicits._
-    val tgt = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = tgt.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.withFoldLease(fs, tgt) {
-    val staging = s"$indexDir.optimize-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/postings")
-      .select($"term", $"doc_id", $"dl", $"tf")
-      .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
-      // the one unavoidable shuffle: rows MOVE buckets, so cluster by
-      // the new tb before the partitionBy write (tasks × buckets tiny
-      // files otherwise)
-      .repartition($"tb")
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/postings/seg=base")
-    s.read.parquet(s"$indexDir/termstats")
-      .groupBy($"term").agg(sum($"df").as("df"))
-      .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
-      .repartition($"tb")
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/termstats/seg=base")
-    s.read.parquet(s"$indexDir/stats")
-      .agg(sum($"n").as("n"), sum($"sumdl").as("sumdl"))
-      .write.mode("overwrite").parquet(s"$staging/stats/seg=base")
-    writeBucketMarker(fs, staging, newBuckets)
-    swapDirs(s, staging, indexDir)
-    }
-  }
-
-  /** Swap a staged index tree over the live one via the two-rename
-    * publish ([[graft.operators.Layout.publishDir]]): a crash always
-    * leaves a COMPLETE tree recoverable by one rename — never a window
-    * where the only copy survives under a PID-suffixed staging name.
-    * Callers hold the no-concurrent-probes contract; the path's OWN
-    * filesystem is used (HDFS/S3A/local alike).
-    */
-  private[operators] def swapDirs(s: SparkSession, staging: String,
-                                  target: String): Unit = {
-    val tgt = new org.apache.hadoop.fs.Path(target)
-    Layout.publishDir(
-      tgt.getFileSystem(s.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(staging), tgt)
   }
 
   /** The query terms' bucket ids, computed by Spark's own hash expression
@@ -847,8 +700,8 @@ object TextAnalysis {
         s"probe asked for $nBuckets term buckets but the index at $indexDir " +
           s"records $recorded (re-bucketed?) — pass the recorded count"))
     val tbs = termBuckets(s, terms, nBuckets)
-    // segment merge is EXACT: n/sumdl/df are long sums, associative in any
-    // order, so an appended index scores bit-identically to a full rebuild
+    // n/sumdl/df are long sums over the `seg=` directories (one,
+    // `seg=base`, for a one-shot build) — exact in any order
     val stats = s.read.parquet(s"$indexDir/stats")
       .agg(sum($"n").as("n"), sum($"sumdl").as("sumdl"))
     val tstats = s.read.parquet(s"$indexDir/termstats")
@@ -887,8 +740,8 @@ object TextAnalysis {
 
   // ---- CDC-maintained text index (cdcm4) -------------------------------
   //
-  // The append-only segment protocol above assumes docs are immutable;
-  // a CDC stream UPDATES and DELETES them. The CDC index handles both
+  // The one-shot index above assumes docs are immutable; a CDC stream
+  // UPDATES and DELETES them. The CDC index handles both
   // with MERGE-ON-READ versioning (the Lucene/Delta shape, built from
   // Spark primitives): postings rows carry the writing version, and a
   // slim per-segment DOC LOG records (doc_id, ver, deleted, dl) for
@@ -961,8 +814,8 @@ object TextAnalysis {
     * construction — the probe's liveness join already ignored everything
     * compaction removes (spec-pinned) — but the probe's doc-log scan
     * shrinks from O(touched-versions) to O(live docs) and the pruned
-    * posting read loses its seg fan-out, the [[compactTextIndex]]
-    * economics. Published through [[Layout.fold]].
+    * posting read loses its seg fan-out (O(1) directories per bucket
+    * again). Published through [[Layout.fold]].
     */
   def compactCdcTextIndex(s: SparkSession, indexDir: String,
                           nBuckets: Int = textIndexBuckets): Unit = {
@@ -978,12 +831,14 @@ object TextAnalysis {
       _.select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb"))
   }
 
-  /** [[rebucketTextIndex]] for the CDC-maintained index: rewrite the
-    * postings under a NEW term-bucket count — one postings-sized
-    * shuffle, no corpus or change-stream re-read. A re-bucket subsumes
-    * a compact (reading every posting row anyway, it drops superseded
-    * and tombstoned versions and collapses the doc log for free), so it
-    * publishes through the same [[Layout.fold]]. The staged tree carries
+  /** RE-BUCKET the CDC-maintained index: rewrite the postings under a
+    * NEW term-bucket count — one postings-sized shuffle, no corpus or
+    * change-stream re-read. `nBuckets` is fixed when the index is
+    * created, and a corpus grown 100× wants its per-bucket postings
+    * files back down to probe-sized reads without a full rebuild. A
+    * re-bucket subsumes a compact (reading every posting row anyway, it
+    * drops superseded and tombstoned versions and collapses the doc log
+    * for free), so it publishes through the same [[Layout.fold]]. The staged tree carries
     * the new `_nbuckets` marker; subsequent appends and probes verify
     * against it by name — under live ingest this runs exactly where the
     * compactors do (the serialized foreachBatch maintenance window or a
@@ -1155,8 +1010,8 @@ object TextAnalysis {
   /** Top-k BM25 over the CDC-maintained index, exactly as fresh as the
     * last appended batch. Plan shape at scale: the doc-log argmax is one
     * shuffle of slim 4-long rows (the only corpus-proportional step —
-    * periodic compaction folds the log like [[compactTextIndex]] folds
-    * segments); the liveness join's posting side is bucket-pruned to the
+    * periodic compaction ([[compactCdcTextIndex]]) folds the log to live
+    * rows); the liveness join's posting side is bucket-pruned to the
     * query terms, so AQE broadcasts it and the corpus-sized side never
     * shuffles twice; scoring is [[bm25ScoreTopK]]'s pruned-hits path.
     */
@@ -1193,17 +1048,17 @@ object TextAnalysis {
   }
 
   // txt18 — the index MAINTENANCE lifecycle under the oracle: the gate's
-  // index is built over 70% of the corpus, extended by two appended
-  // ingest segments (20% + 10%), then compacted back to a single base
+  // index is the CDC text index fed the corpus as three insert-only
+  // batches (70% + 20% + 10%), then compacted back to a single base
   // segment — and only then probed. Every maintenance step is exact by
-  // construction (segment merge and compaction are long-sum/concatenation
-  // preserving), so the probe must hash-match the same full-corpus BM25
-  // the one-shot build would give; a regression in append bookkeeping,
-  // segment layout, or the compaction swap surfaces HERE as a hash
-  // mismatch rather than only in a spec. k=100 with the (bm25, doc_id)
-  // total order keeps the cut deterministic cross-engine.
+  // construction (the doc-log liveness and long-sum stats are order-free,
+  // compaction keeps every live posting), so the probe must hash-match
+  // the same full-corpus BM25 the one-shot build would give; a regression
+  // in append bookkeeping, segment layout, or the fold's publish surfaces
+  // HERE as a hash mismatch rather than only in a spec. k=100 with the
+  // (bm25, doc_id) total order keeps the cut deterministic cross-engine.
   def txt18IndexLifecycle(s: SparkSession, d: String): DataFrame =
-    bm25TopKViaIndex(s, PersistedIndexes.textIndexLifecycle(s, d),
+    bm25TopKViaCdcIndex(s, PersistedIndexes.textIndexLifecycle(s, d),
       bm25Terms, 100)
 
   val txt18Sql: String =
@@ -1726,7 +1581,6 @@ object TextAnalysis {
   def txt23BpeMerges(s: SparkSession, d: String,
                      iterations: Int = 2, show: Int = 5): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val wf = graft.core.Tables.documents(s, d)
       .select(explode(split($"text", " ")).as("w"))
       .filter(length($"w") > 0)

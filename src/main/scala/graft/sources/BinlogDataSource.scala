@@ -573,8 +573,8 @@ class BinlogPartitionReader(part: BinlogInputPartition, schema: StructType,
   private def tableWanted(db: String, table: String): Boolean =
     dbFilter.forall(_ == db) && tableFilter.forall(_ == table)
 
-  private def toCatalyst(v: Any, dt: DataType, dict: Array[String] = null,
-                         json: Boolean = false): Any = v match {
+  private def toCatalyst(v: Any, dt: DataType, dict: Array[String],
+                         json: Boolean): Any = v match {
     case null | RowImage.Unused => null
     // dictionary decode (opt-in per column): ENUM ordinal -> label (1-based;
     // 0 / out-of-range = MySQL's '' pseudo-value), SET bitset -> label array

@@ -167,7 +167,8 @@ object CdcMaterializer {
 
   /** Current state of the materialized table (tombstones filtered). */
   def readTable(s: SparkSession, tablePath: String): DataFrame =
-    s.read.parquet(tablePath).filter(col("_delta_type") =!= "delete")
+    readExisting(s, tablePath).getOrElse(s.read.parquet(tablePath))
+      .filter(col("_delta_type") =!= "delete")
 
   /** Periodic tombstone compaction: physically drops delete rows. Only
     * buckets that CONTAIN a tombstone are rewritten (bucket-id pruning on
@@ -185,7 +186,7 @@ object CdcMaterializer {
       // concurrent tombstone compactions of the same table would race the
       // dynamic bucket overwrites — the loser fails by name instead
       graft.operators.Layout.withFoldLease(fs, hPath) {
-        val t = s.read.parquet(tablePath)
+        val t = readExisting(s, tablePath).getOrElse(s.read.parquet(tablePath))
         val tombBuckets = bucketSet(t.filter(col("_delta_type") === "delete"))
         if (tombBuckets.nonEmpty) {
           // only needed for the degenerate-case guard below — keep the

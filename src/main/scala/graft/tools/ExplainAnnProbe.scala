@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 /** Dev harness: print the CDC ANN probe's formatted plan over a small
   * planted index — the committable evidence for plan-shape claims about
   * [[graft.operators.Similarity.mipsTopKViaCdcAnnIndex]] (its gates —

@@ -47,6 +47,20 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("cell").collect().map(_.toString).toSeq
     assert(centAfter === centBefore,
       "appending must never move the coarse quantizer")
+    // row level: batch 1's live rows sit in the cells an assignment
+    // against the persisted centroids gives (on the appender's float view)
+    val b1Live = images(b1).filter(!col("deleted"))
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    val wantCells = Similarity
+      .assignToCentroids(b1Live, spark.read.parquet(s"$idx/centroids"))
+      .select(col("vec_id"), col("cell")).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    val diskCells = spark.read.parquet(s"$idx/cells")
+      .filter(col("seg") === "b000001")
+      .select(col("vec_id"), col("cell").cast("int")).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    assert(diskCells === wantCells,
+      "batch 1's cells differ from an assignment against the persisted centroids")
 
     // latest images the index should now represent
     val latest = (1L to 40L).filterNot(_ == 9L)

@@ -93,31 +93,6 @@ class HybridRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     inline.foreach { case (id, v) => assert(viaIndex(id) == v, s"doc $id") }
   }
 
-  test("text index: segment appends merge bit-identically with a full rebuild") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("txtidx")
-    try {
-      val docs = graft.core.Tables.documents(spark, d)
-      val k = 10000
-      TextAnalysis.buildTextIndex(docs.filter($"doc_id" % 10 < 8), s"$tmp/inc")
-      TextAnalysis.appendToTextIndex(docs.filter($"doc_id" % 10 >= 8), s"$tmp/inc", "b1")
-      TextAnalysis.buildTextIndex(docs, s"$tmp/full")
-      def q(dir: String) = TextAnalysis
-        .bm25TopKViaIndex(spark, dir, TextAnalysis.bm25Terms, k)
-        .collect().map(_.toString).sorted.toSeq
-      val full = q(s"$tmp/full")
-      assert(full.nonEmpty)
-      // df/n/sumdl merge by exact long sums ⇒ scores AND ranks identical
-      assert(q(s"$tmp/inc") == full)
-      // replaying a segment overwrites exactly its own rows — idempotent
-      TextAnalysis.appendToTextIndex(docs.filter($"doc_id" % 10 >= 8), s"$tmp/inc", "b1")
-      assert(q(s"$tmp/inc") == full)
-    } finally {
-      java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
   test("sim09b: full-outer RRF over indexed streams — null sides contribute 0") {
     val fused = Similarity.sim09bHybridIndexed(spark, d).collect()
     assert(fused.length == 10)

@@ -4,16 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Segment compaction across the three persisted index families
-  * ([[TextAnalysis.compactTextIndex]], [[Similarity.compactAnnIndex]],
-  * [[Similarity.compactIvfPqIndex]]). Pinned, for each:
-  *  - probing a compacted index is IDENTICAL to probing the segmented
-  *    one it folded (bit-exact rows — compaction concatenates postings /
-  *    code rows and long-sums stats, all score-preserving by
-  *    construction);
-  *  - the compacted layout is a single `seg=base` directory (the whole
-  *    point: probe file fan-out back to O(buckets), not
-  *    O(segments x buckets)).
+/** The persisted text index's lifecycle gate and its bucket marker:
+  *  - txt18's cached index ([[PersistedIndexes.textIndexLifecycle]])
+  *    really is compacted — one `seg=base` per CDC leg, fenced at its
+  *    last ingest batch — so the gate probes the folded layout;
+  *  - the recorded term-bucket count (`_nbuckets`) fails by name when
+  *    it is corrupt.
+  * Compaction and re-bucketing of the CDC indexes are pinned in
+  * [[CdcTextIndexSpec]] and [[CdcAnnIndexSpec]].
   */
 class IndexCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -43,135 +41,17 @@ class IndexCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
       .forEach(p => java.nio.file.Files.deleteIfExists(p))
   }
 
-  test("text index: compaction preserves probe results bit-exactly, folds to seg=base") {
-    import spark.implicits._
-    withTmp { tmp =>
-      val docs = graft.core.Tables.documents(spark, d)
-      val dir = s"$tmp/idx"
-      TextAnalysis.buildTextIndex(docs.filter($"doc_id" % 10 < 7), dir)
-      TextAnalysis.appendToTextIndex(
-        docs.filter($"doc_id" % 10 === 7 || $"doc_id" % 10 === 8), dir, "b1")
-      TextAnalysis.appendToTextIndex(docs.filter($"doc_id" % 10 === 9), dir, "b2")
-      def probe() = TextAnalysis
-        .bm25TopKViaIndex(spark, dir, TextAnalysis.bm25Terms, 10000)
-        .collect().map(_.toString).sorted.toSeq
-      val before = probe()
-      assert(before.nonEmpty)
-      assert(segDirs(s"$dir/postings").toSet == Set("seg=base", "seg=b1", "seg=b2"))
-      TextAnalysis.compactTextIndex(spark, dir)
-      assert(probe() == before)
-      assert(segDirs(s"$dir/postings") == Seq("seg=base"))
-      assert(segDirs(s"$dir/termstats") == Seq("seg=base"))
-      assert(segDirs(s"$dir/stats") == Seq("seg=base"))
-    }
-  }
-
-  test("text index: re-bucketing preserves probe results bit-exactly under the NEW pruning; drifted probes and appends fail by name") {
-    import spark.implicits._
-    withTmp { tmp =>
-      val docs = graft.core.Tables.documents(spark, d)
-      val dir = s"$tmp/idx"
-      TextAnalysis.buildTextIndex(docs.filter($"doc_id" % 10 < 7), dir,
-        nBuckets = 8)
-      TextAnalysis.appendToTextIndex(
-        docs.filter($"doc_id" % 10 === 7 || $"doc_id" % 10 === 8), dir, "b1",
-        nBuckets = 8)
-      def probe(nb: Int) = TextAnalysis
-        .bm25TopKViaIndex(spark, dir, TextAnalysis.bm25Terms, 10000,
-          nBuckets = nb)
-        .collect().map(_.toString).sorted.toSeq
-      val before = probe(8)
-      assert(before.nonEmpty)
-      assert(TextAnalysis.textIndexBucketCount(spark, dir) === Some(8))
-
-      TextAnalysis.rebucketTextIndex(spark, dir, newBuckets = 32)
-
-      // the layout really moved: marker updated, folded to one base,
-      // and postings occupy buckets beyond the old range (32 dirs can't
-      // all be < 8 for a real vocabulary)
-      assert(TextAnalysis.textIndexBucketCount(spark, dir) === Some(32))
-      assert(segDirs(s"$dir/postings") == Seq("seg=base"))
-      val tbs = new java.io.File(s"$dir/postings/seg=base").listFiles()
-        .map(_.getName).filter(_.startsWith("tb="))
-        .map(_.stripPrefix("tb=").toInt).toSeq
-      assert(tbs.exists(_ >= 8),
-        s"re-bucketing left every posting in the old bucket range: $tbs")
-
-      // bit-identical scores under the new pruning — bucketing is pure
-      // physical placement
-      assert(probe(32) === before)
-      // probing (or appending) with the STALE count fails by name
-      // instead of silently missing moved postings
-      val e = intercept[IllegalArgumentException] { probe(8) }
-      assert(e.getMessage.contains("records 32"), e.getMessage)
-      val e2 = intercept[IllegalArgumentException] {
-        TextAnalysis.appendToTextIndex(
-          docs.filter($"doc_id" % 10 === 9), dir, "b2", nBuckets = 8)
-      }
-      assert(e2.getMessage.contains("records 32"), e2.getMessage)
-
-      // the lifecycle continues at the new count: append, probe, fold
-      TextAnalysis.appendToTextIndex(
-        docs.filter($"doc_id" % 10 === 9), dir, "b2", nBuckets = 32)
-      val rebuilt = s"$tmp/rebuilt"
-      TextAnalysis.buildTextIndex(docs, rebuilt, nBuckets = 32)
-      val after = probe(32)
-      assert(after === TextAnalysis
-        .bm25TopKViaIndex(spark, rebuilt, TextAnalysis.bm25Terms, 10000,
-          nBuckets = 32)
-        .collect().map(_.toString).sorted.toSeq,
-        "post-rebucket append diverged from a full rebuild at the new count")
-      TextAnalysis.compactTextIndex(spark, dir, nBuckets = 32)
-      assert(TextAnalysis.textIndexBucketCount(spark, dir) === Some(32),
-        "the fold dropped the bucket marker")
-      assert(probe(32) === after, "the post-rebucket fold changed scores")
-    }
-  }
-
   test("txt18 lifecycle index: the gate probes a genuinely compacted layout") {
-    // the cached gate index must end its build-append-append-compact
-    // lifecycle as a single base segment — otherwise the gate would be
-    // re-testing the multi-segment merge path instead of compaction
+    // the cached gate index must end its three-batch ingest + compact
+    // lifecycle as a single base segment in both CDC legs, fenced at the
+    // last batch — otherwise the gate would be re-testing the
+    // multi-segment merge-on-read path instead of compaction
     val dir = PersistedIndexes.textIndexLifecycle(spark, d)
     assert(segDirs(s"$dir/postings") == Seq("seg=base"))
-    assert(segDirs(s"$dir/termstats") == Seq("seg=base"))
-    assert(segDirs(s"$dir/stats") == Seq("seg=base"))
-  }
-
-  test("ann index: compaction preserves probe results bit-exactly, folds to seg=base") {
-    import spark.implicits._
-    withTmp { tmp =>
-      val e = graft.core.Tables.embeddings(spark, d)
-      val dir = s"$tmp/ann"
-      Similarity.buildAnnIndex(e.filter($"vec_id" % 5 =!= 4), dir)
-      Similarity.appendToAnnIndex(spark, e.filter($"vec_id" % 5 === 4), dir, "b1")
-      def probe() = Similarity.sim05ViaIndex(spark, d, dir)
-        .collect().map(_.toString).toSeq
-      val before = probe()
-      assert(before.nonEmpty)
-      assert(segDirs(s"$dir/cells").toSet == Set("seg=base", "seg=b1"))
-      Similarity.compactAnnIndex(spark, dir)
-      assert(probe() == before)
-      assert(segDirs(s"$dir/cells") == Seq("seg=base"))
-    }
-  }
-
-  test("ivf-pq index: compaction preserves probe results bit-exactly, folds to seg=base") {
-    import spark.implicits._
-    withTmp { tmp =>
-      val e = graft.core.Tables.embeddings(spark, d)
-      val dir = s"$tmp/ivfpq"
-      Similarity.buildIvfPqIndex(e.filter($"vec_id" % 5 =!= 4), dir)
-      Similarity.appendToIvfPqIndex(spark, e.filter($"vec_id" % 5 === 4), dir, "b1")
-      def probe() = Similarity.sim08ViaIndex(spark, d, dir)
-        .collect().map(_.toString).toSeq
-      val before = probe()
-      assert(before.nonEmpty)
-      assert(segDirs(s"$dir/codes").toSet == Set("seg=base", "seg=b1"))
-      Similarity.compactIvfPqIndex(spark, dir)
-      assert(probe() == before)
-      assert(segDirs(s"$dir/codes") == Seq("seg=base"))
-    }
+    assert(segDirs(s"$dir/doclog") == Seq("seg=base"))
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(Layout.foldedThrough(fs, root) === Some(2L))
   }
 
   test("a corrupt _nbuckets marker fails BY NAME; a missing one is None") {

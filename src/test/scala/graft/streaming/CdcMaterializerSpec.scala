@@ -284,6 +284,23 @@ class CdcMaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(beforeJobs <= 1, s"an update-before-only batch launched $beforeJobs jobs")
   }
 
+  test("readTable of an existing table takes its schema from a footer: the read is one job") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("mat-read").resolve("t").toString
+    val batch = Seq(("insert", "f", 1L, 0, 1, "one"), ("insert", "f", 1L, 1, 2, "two"),
+      ("delete", "f", 1L, 2, 2, "two"), ("insert", "f", 1L, 3, 3, "three"))
+      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
+    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets)
+    var rows = Seq.empty[(Int, String)]
+    val jobs = jobsOf {
+      rows = CdcMaterializer.readTable(spark, table).select("id", "word")
+        .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+    }
+    assert(rows === Seq((1, "one"), (3, "three")))
+    // a schema-inference job before the scan would make this 2
+    assert(jobs <= 1, s"readTable(...).collect() launched $jobs jobs")
+  }
+
   test("materializeAll: one scan maintains several typed tables") {
     val dcols = Seq(ColSpec.int, ColSpec.decimal(12, 4))
     val dir = Files.createTempDirectory("matall-src")
