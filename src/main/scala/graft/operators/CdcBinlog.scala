@@ -1341,7 +1341,7 @@ object CdcBinlog {
     def lastSuggested: Int = suggested.get()
 
     private[CdcBinlog] def run(images: DataFrame, batchId: Long): Unit =
-      if (append(images, f"b$batchId%06d")) {
+      if (append(images, Layout.segmentOf(batchId))) {
         val n = nAppends.incrementAndGet()
         upkeep match {
           case FoldAt(at, fold) =>
@@ -1473,14 +1473,15 @@ object CdcBinlog {
   // cdcm2 — incremental aggregate-view maintenance under the oracle: the
   // per-word COUNT(*)/SUM(val) view is maintained from the change stream
   // ALONE ([[graft.streaming.CdcMaterializer.maintainAggregate]] — signed
-  // deltas, +after/-before, idempotent batch-addressed delta partitions),
-  // then COMPACTED into a fresh base, then read back. The oracle
-  // aggregates the latest-image ground truth instead — the two agree only
-  // if every retraction, group move (an update changing `word` retracts
-  // from the old group through its before image) and the compaction fold
-  // are exact, which integer fixed-point sums (val scaled x10^4 into a
-  // long) guarantee order-independently. The deltas-path read (before
-  // compaction) is pinned equal in `CdcAggregateSpec`.
+  // deltas, +after/-before, one batch-addressed segment per batch on
+  // `Layout`'s segment protocol), then COMPACTED into a fresh base, then
+  // read back. The oracle aggregates the latest-image ground truth
+  // instead — the two agree only if every retraction, group move (an
+  // update changing `word` retracts from the old group through its
+  // before image) and the compaction fold are exact, which integer
+  // fixed-point sums (val scaled x10^4 into a long) guarantee
+  // order-independently. The segment read before
+  // compaction is pinned equal in `CdcAggregateSpec`.
   def cdcm2IncrementalAgg(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm2") { work =>
       import s.implicits._
@@ -1891,9 +1892,7 @@ object CdcBinlog {
           s"$leg: expected seg=base + ${ann.appends - 3} post-requantize " +
             s"segments, got $segs")
       }
-      val root = new org.apache.hadoop.fs.Path(idx)
-      val fence = Layout.foldedThrough(
-        root.getFileSystem(s.sparkContext.hadoopConfiguration), root)
+      val fence = Layout.fenceOf(s, idx)
       require(fence.contains(fenceAt.get()),
         s"replay fence $fence != the requantize point ${fenceAt.get()} — a " +
           "replayed pre-requantize batch would re-enter under the new quantizer")
@@ -2830,7 +2829,7 @@ object CdcBinlog {
           (imgs, seg) => appendCdcFpSegment(cdcm15BandImages(imgs).coalesce(4), bandLog, seg),
           FoldAt(3, _ => compactCdcBandLog(s, bandLog)))))
       Seq(fpLog, bandLog).foreach { p =>
-        require(segNames(s, p).contains("seg=base") && fenceOf(s, p).isDefined,
+        require(segNames(s, p).contains("seg=base") && Layout.fenceOf(s, p).isDefined,
           s"the mid-stream fold left no base segment or fence under $p")
       }
       // the probe batches are derived from the LOG (what an ingest
@@ -3079,11 +3078,6 @@ object CdcBinlog {
     else fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("seg=")).toSet
   }
 
-  private def fenceOf(s: SparkSession, dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    Layout.foldedThrough(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
   // cdcm12 — THREE-WAY heterogeneous fan-out with STAGGERED per-structure
   // folds: the engine's own promise ("the same log multiplex feeds
   // retrieval, dedup state and vector search" — the reference analogue is
@@ -3137,11 +3131,11 @@ object CdcBinlog {
       // the fences themselves: per-structure, never shared — the text
       // fence sits at its 3rd appended ordinal, the ANN fence at its
       // 4th, and the never-folded fp log must carry NO fence at all
-      val tf = fenceOf(s, txtIdx)
-      val af = fenceOf(s, annIdx)
+      val tf = Layout.fenceOf(s, txtIdx)
+      val af = Layout.fenceOf(s, annIdx)
       require(tf.isDefined && af.isDefined && tf != af,
         s"staggered folds must leave per-structure fences (text=$tf, ann=$af)")
-      require(fenceOf(s, fpLog).isEmpty,
+      require(Layout.fenceOf(s, fpLog).isEmpty,
         "the never-folded fp log grew a replay fence — a shared-fence " +
           "slip would silently drop its replays")
       val probeVec = annProbeVector(s, annIdx)
@@ -3276,7 +3270,7 @@ object CdcBinlog {
       // skipped its fence write cannot pass)
       Seq("text" -> txtIdx, "ann" -> annIdx, "fp" -> fpLog,
           "band" -> bandLog).foreach { case (kind, p) =>
-        require(fenceOf(s, p).isDefined,
+        require(Layout.fenceOf(s, p).isDefined,
           s"the $kind structure's policy fired but left no replay fence")
       }
       val probeVec = annProbeVector(s, annIdx)

@@ -592,15 +592,11 @@ object Dedup {
   /** dd06 against the persistent index: identical semantics to
     * [[dd06IncrementalDedup]]'s recompute path (spec-pinned), with the
     * corpus side read from parquet — no corpus text scan, no corpus
-    * signature recompute. `excludeSegment` drops one segment from the
-    * probe (partition-pruned): streaming replay uses it so a crashed
-    * attempt's own partial rows can never influence the replayed
-    * admission decision. Requires globally unique doc_ids across corpus
+    * signature recompute. Requires globally unique doc_ids across corpus
     * and batches (the pipeline invariant the self-pair exclusion and the
     * index itself are keyed on).
     */
-  def dd06ViaIndex(s: SparkSession, fresh: DataFrame, indexDir: String,
-                   excludeSegment: Option[String] = None): DataFrame = {
+  def dd06ViaIndex(s: SparkSession, fresh: DataFrame, indexDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     // refuse the pre-segment flat layout outright: mixing it with seg=
     // subdirectories would fail partition discovery on every later read
@@ -611,10 +607,7 @@ object Dedup {
       throw new IllegalStateException(
         s"dedup index at $indexDir uses the pre-segment flat layout — rebuild it " +
           "(Dedup.rebuildDedupIndex) before probing")
-    def tbl(name: String): DataFrame = {
-      val df = s.read.parquet(s"$indexDir/$name")
-      excludeSegment.fold(df)(seg => df.filter(col("seg") =!= seg))
-    }
+    def tbl(name: String): DataFrame = s.read.parquet(s"$indexDir/$name")
     incrementalCore(fresh, tbl("fp"), tbl("bands"), tbl("shingles"))
   }
 

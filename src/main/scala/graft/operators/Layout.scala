@@ -247,7 +247,8 @@ object Layout {
     * a COMPLETE directory, so a racing reader either (a) lists one
     * consistent version — old or new — and succeeds, (b) hits the
     * one-rename window where the live path is absent (`PATH_NOT_FOUND`
-    * at plan time), or (c) lists the old version and then scans after
+    * at plan time, or a [[committedView]] read's `basePath` not found),
+    * or (c) lists the old version and then scans after
     * the trash delete has removed those files (`FileNotFoundException`
     * mid-scan — or `java.nio.file.NoSuchFileException` where a local
     * read goes through NIO). There is NO outcome that silently mixes
@@ -278,7 +279,9 @@ object Layout {
         if (t.isInstanceOf[java.io.FileNotFoundException] ||
             t.isInstanceOf[java.nio.file.NoSuchFileException] ||
             (t.isInstanceOf[org.apache.spark.sql.AnalysisException] &&
-              t.getMessage != null && t.getMessage.contains("PATH_NOT_FOUND")))
+              t.getMessage != null && t.getMessage.contains("PATH_NOT_FOUND")) ||
+            (t.isInstanceOf[IllegalArgumentException] && // a view's root, mid-swap
+              t.getMessage != null && t.getMessage.contains("'basePath'")))
           return true
         t = t.getCause
         depth += 1
@@ -593,9 +596,19 @@ object Layout {
   // to an uncommitted batch, so it is dropped from the published tree —
   // never folded, never fenced — and the batch's replay rewrites it.
 
+  /** Batch `batchId`'s segment name, `bNNNNNN`. */
+  private[graft] def segmentOf(batchId: Long): String = f"b$batchId%06d"
+
   /** Ordinal of a `bNNNNNN` segment name (zero-padding-independent). */
   private[graft] def segmentOrdinal(segment: String): Long =
     segment.stripPrefix("b").toLong
+
+  /** [[segmentOrdinal]] of a [[SegmentView.read]]'s `seg` column, with
+    * `seg=base` — older than every segment it folded — as -1.
+    */
+  private[graft] val segmentOrder: Column =
+    when(col("seg") === "base", lit(-1L))
+      .otherwise(substring(col("seg"), 2, Int.MaxValue).cast("long"))
 
   /** The structure's replay fence, if any fold has run.
     *
@@ -636,11 +649,13 @@ object Layout {
     }
   }
 
-  /** True iff `segment` is at or below the fence — the append must skip. */
-  private[graft] def replayFenced(fs: org.apache.hadoop.fs.FileSystem,
-                                  root: org.apache.hadoop.fs.Path,
-                                  segment: String): Boolean =
-    foldedThrough(fs, root).exists(segmentOrdinal(segment) <= _)
+  /** The replay fence of the structure at `root`, on the session's
+    * filesystem ([[foldedThrough]]).
+    */
+  private[graft] def fenceOf(s: SparkSession, root: String): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    foldedThrough(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+  }
 
   /** Record the fence in a staging tree about to be published. */
   private[graft] def writeFoldedThrough(fs: org.apache.hadoop.fs.FileSystem,
@@ -665,8 +680,10 @@ object Layout {
 
   // ---- the segment protocol of the CDC-maintained structures -------------
   //
-  // The text index, the ANN index, the fp log and the band log all store
-  // versioned `seg=` segments under one protocol: [[append]] writes a
+  // The text index, the ANN index, the fp log, the band log, the IVM
+  // aggregate view (`CdcMaterializer.maintainAggregate`) and the durable
+  // windowed view (`StreamOps.maintainWindowedAgg`) all store
+  // batch-addressed `seg=` segments under one protocol: [[append]] writes a
   // batch's segment past the replay fence, [[committedView]] is what every
   // probe, stats call and fold reads, and [[fold]] publishes a new base.
   // A structure supplies only its leg names and its staging writes.
@@ -731,12 +748,9 @@ object Layout {
     * a fenced replay.
     */
   private[graft] def append(s: SparkSession, root: String, segment: String)
-                           (legWrites: => Seq[() => Unit]): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (replayFenced(p.getFileSystem(s.sparkContext.hadoopConfiguration), p, segment))
-      false
+                           (legWrites: => Seq[() => Unit]): Boolean =
+    if (fenceOf(s, root).exists(segmentOrdinal(segment) <= _)) false
     else { inParallelLegs(legWrites); true }
-  }
 
   /** The one fold protocol of the CDC-maintained structures:
     *  1. take the cross-process fold lease ([[withFoldLease]]);
@@ -898,40 +912,6 @@ object Layout {
         report += s"fold lease held by a LIVE holder (${holder.getOrElse("unreadable")}) — left in place"
     }
     if (report.isEmpty) "clean" else report.mkString("; ")
-  }
-
-  /** Bin-pack a parquet directory toward `targetBytes` per output file —
-    * small-file compaction, the OPTIMIZE half that [[zorderCluster]]'s
-    * re-sort doesn't cover. Streaming ingest (foreachBatch deltas, index
-    * segment appends) accretes many small files; at 100 TB the scan cost
-    * of a million 1 MB files is dominated by per-file open/footer
-    * overhead and task scheduling, so periodic repacking into
-    * ceil(total/target) files is table maintenance, run per partition
-    * directory. Content-preserving rewrite (round-robin repartition — no
-    * sort, no column change), staged and published via [[publishDir]]'s
-    * two-rename swap: a crash leaves a complete directory recoverable
-    * by a single rename, never a half-compacted table. Returns the
-    * output file count.
-    */
-  def compactFiles(s: SparkSession, dir: String, targetBytes: Long): Int = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    withFoldLease(fs, p) {
-    val total = fs.listStatus(p).filter(f =>
-      f.isFile && !f.getPath.getName.startsWith("_")).map(_.getLen).sum
-    val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    // the staging write executes the lazy plan against the ORIGINAL
-    // directory (which still exists — the swap below comes after), so no
-    // detach is needed; checkpointing here would transiently materialize
-    // the whole table in block storage, a non-starter at 100 TB
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$dir.compact-${ProcessHandle.current().pid()}")
-    s.read.parquet(dir).repartition(n)
-      .write.mode("overwrite").parquet(staging.toString)
-    publishDir(fs, staging, p)
-    n
-    }
   }
 
   /** Per-file min/max envelope of `cols` for a written parquet dir — the

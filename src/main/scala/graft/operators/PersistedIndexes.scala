@@ -114,7 +114,7 @@ object PersistedIndexes {
         TextAnalysis.appendCdcTextSegment(
           docs.filter(slice).select($"doc_id", $"text",
             lit(b.toLong).as("ver"), lit(false).as("deleted")),
-          dir, f"b$b%06d")
+          dir, Layout.segmentOf(b.toLong))
       }
       TextAnalysis.compactCdcTextIndex(s, dir)
     }

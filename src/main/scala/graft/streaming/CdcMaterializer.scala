@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 import graft.core.GraftSession.withCallSite
+import graft.operators.Layout
 
 /** CDC → queryable table maintenance: the sink-side counterpart of the
   * latest-image *query* (cdcb4). The reference leaves materialization to
@@ -185,7 +186,7 @@ object CdcMaterializer {
       // cross-process fold lease (the structure compactors' contract): two
       // concurrent tombstone compactions of the same table would race the
       // dynamic bucket overwrites — the loser fails by name instead
-      graft.operators.Layout.withFoldLease(fs, hPath) {
+      Layout.withFoldLease(fs, hPath) {
         val t = readExisting(s, tablePath).getOrElse(s.read.parquet(tablePath))
         val tombBuckets = bucketSet(t.filter(col("_delta_type") === "delete"))
         if (tombBuckets.nonEmpty) {
@@ -232,12 +233,15 @@ object CdcMaterializer {
   // Exactly-once without a transactional sink: foreachBatch is
   // at-least-once, and a SUM-merge (unlike the latest-wins merge above)
   // is NOT replay-idempotent — so a batch never merges into shared state.
-  // It writes its pre-aggregated deltas to its OWN `batch=<id>` partition
-  // (overwrite), and a replayed batch id rewrites exactly that partition:
-  // idempotence by addressing, the same protocol as the index segment
-  // writes. The view read folds base + delta partitions (exact long
-  // sums); a periodic [[compactAggregate]] collapses them into a new
-  // base, bounding read fan-out at O(batches since last compaction).
+  // The view is a structure on `Layout`'s segment protocol (one leg, like
+  // the fp and band logs): each batch appends its pre-aggregated deltas
+  // as its OWN segment `seg=b<id>`, so a replayed batch rewrites exactly
+  // that segment, or is skipped once a fold consumed it (the replay
+  // fence — re-summing a folded batch would double-count, since SUM
+  // deltas are signed increments, not idempotent images). The view read
+  // sums the committed segments (exact long sums); a periodic
+  // [[compactAggregate]] folds them into `seg=base`, bounding read
+  // fan-out at O(batches since last compaction).
   //
   // At 100 TB: per trigger this moves |touched groups| slim rows (the
   // batch pre-aggregation is the only shuffle, map-side combined); the
@@ -260,7 +264,9 @@ object CdcMaterializer {
       }
       .start()
 
-  /** One batch's pre-aggregated deltas, written to its own partition. */
+  /** One batch's pre-aggregated deltas, appended as the batch's own
+    * segment (skipped when a fold already consumed it).
+    */
   private[streaming] def writeAggDeltas(batch: DataFrame, groupCol: String,
                                         valCol: String, tablePath: String,
                                         batchId: Long): Unit = {
@@ -269,88 +275,46 @@ object CdcMaterializer {
     // accepted too so a re-encoded stream folds identically)
     val sign = when(col("_delta_type").isin("insert", "update", "update-after"), 1L)
       .when(col("_delta_type").isin("delete", "update-before"), -1L)
-    batch.select(col(groupCol), sign.as("_sign"), col(valCol).as("_v"))
+    val deltas = batch.select(col(groupCol), sign.as("_sign"), col(valCol).as("_v"))
       .filter(col("_sign").isNotNull)
       .groupBy(col(groupCol))
       .agg(sum(col("_sign")).as("n"), sum(col("_sign") * col("_v")).as("s"))
-      .write.mode("overwrite").parquet(s"$tablePath/deltas/batch=$batchId")
+    val segment = Layout.segmentOf(batchId)
+    Layout.append(batch.sparkSession, tablePath, segment)(Seq(
+      () => deltas.write.mode("overwrite").parquet(s"$tablePath/seg=$segment")))
   }
 
-  /** The folded state of base + all delta partitions, before the
-    * liveness filter (compaction keeps n=0 anomalies visible; the view
-    * read drops them).
+  /** Per group, the sums of `n` and `s` over the committed segments read
+    * as `segs`, before any liveness filter.
     */
-  private def aggState(s: SparkSession, tablePath: String): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    def existing(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(conf).exists(hp)) Some(s.read.parquet(p)) else None
-    }
-    // delta partitions at or below the base's fold fence are ALREADY IN
-    // base: they survive only when a crash hit [[compactAggregate]]
-    // between its publish and its delta cleanup, and summing them again
-    // would silently double-count (SUM deltas are signed increments, not
-    // idempotent full images — the one structure here where a stale
-    // leftover corrupts instead of merely repeating)
-    val basePath = new org.apache.hadoop.fs.Path(s"$tablePath/base")
-    val fence = graft.operators.Layout.foldedThrough(
-      basePath.getFileSystem(conf), basePath)
-    val parts = Seq(existing(s"$tablePath/base"),
-      existing(s"$tablePath/deltas").map { d =>
-        fence.fold(d)(f => d.filter(col("batch") > f)).drop("batch")
-      }).flatten
-    require(parts.nonEmpty, s"no aggregate state under $tablePath")
-    val all = parts.reduce(_.unionByName(_))
+  private def summed(segs: DataFrame): DataFrame = {
+    val all = segs.drop("seg")
     val gcols = all.columns.filterNot(Set("n", "s")).toSeq
     all.groupBy(gcols.map(col): _*)
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
   }
 
   /** Current view: per group, live-row count `n` and exact sum `s`. */
-  def readAggregate(s: SparkSession, tablePath: String): DataFrame =
-    aggState(s, tablePath).filter(col("n") =!= 0)
-
-  /** Fold base + deltas into a fresh base and drop the delta partitions —
-    * the read-fan-out bound. A complete row lifecycle telescopes to
-    * (0, 0) and is dropped; a group at n=0 with s<>0 (a stream started
-    * mid-log retracting rows it never saw inserted) is KEPT so the
-    * anomaly stays visible instead of silently vanishing. Run between
-    * triggers, never concurrently with the maintaining stream ([[compact]]
-    * contract), under the cross-process fold lease.
-    *
-    * Crash-safe in BOTH windows (this used to be delete-then-rename,
-    * which had a window with NO base, and recovery via the staged fold
-    * would then double-count any deltas the cleanup hadn't deleted yet):
-    * the new base carries a `_folded_through` fence at the highest delta
-    * batch it consumed, published atomically with it by the two-rename
-    * [[graft.operators.Layout.publishDir]] swap, and the delta cleanup
-    * runs AFTER the publish — a crash in between leaves the new base
-    * plus stale fenced deltas, which [[aggState]] excludes and the next
-    * fold's cleanup removes. The stream's replayed batch, if any, has an
-    * id above the fence (batch ids are monotone), so its rewrite is
-    * never masked.
-    */
-  def compactAggregate(s: SparkSession, tablePath: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(s"$tablePath/base")
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.operators.Layout.withFoldLease(fs, base) {
-      val deltasPath = new org.apache.hadoop.fs.Path(s"$tablePath/deltas")
-      val upTo = (graft.operators.Layout.foldedThrough(fs, base).toSeq ++
-        (if (!fs.exists(deltasPath)) Seq.empty[Long]
-         else fs.listStatus(deltasPath).map(_.getPath.getName)
-           .filter(_.startsWith("batch="))
-           .map(_.stripPrefix("batch=").toLong).toSeq)).maxOption
-      val folded = aggState(s, tablePath)
-        .filter(col("n") =!= 0 || col("s") =!= 0)
-      val staging = s"$tablePath/base.compact-${ProcessHandle.current().pid()}"
-      folded.write.mode("overwrite").parquet(staging)
-      upTo.foreach(u => graft.operators.Layout.writeFoldedThrough(fs,
-        new org.apache.hadoop.fs.Path(staging), u))
-      graft.operators.Layout.publishDir(fs,
-        new org.apache.hadoop.fs.Path(staging), base)
-      fs.delete(deltasPath, true)
-    }
+  def readAggregate(s: SparkSession, tablePath: String): DataFrame = {
+    val view = Layout.committedView(s, tablePath, Seq(""))
+    require(view.isDefined, s"no aggregate state under $tablePath")
+    summed(view.get.read("")).filter(col("n") =!= 0)
   }
+
+  /** Fold the committed segments into a fresh `seg=base` through
+    * [[Layout.fold]] — the read-fan-out bound. A complete row lifecycle
+    * telescopes to (0, 0) and is dropped; a group at n=0 with s<>0 (a
+    * stream started mid-log retracting rows it never saw inserted) is
+    * KEPT so the anomaly stays visible instead of silently vanishing.
+    * Run between triggers, never concurrently with the maintaining
+    * stream ([[compact]] contract).
+    */
+  def compactAggregate(s: SparkSession, tablePath: String): Unit =
+    Layout.fold(s, tablePath, Seq(""), "compact") { (view, staging) =>
+      summed(view.read(""))
+        .filter(col("n") =!= 0 || col("s") =!= 0)
+        .write.mode("overwrite").parquet(s"$staging/seg=base")
+    }
 
   /** Maintain MANY tables from ONE binlog scan: the stream is the source's
     * dynamic-payload mode (no `payloadDdl` — `row` is the positional

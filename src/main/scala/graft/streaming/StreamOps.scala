@@ -57,19 +57,6 @@ object StreamOps {
       spark.readStream.schema(schema).parquet(staged.toString))
   }
 
-  /** Watermarked tumbling-window aggregation: late data beyond 10 minutes
-    * is dropped; state is evicted as the watermark passes — bounded memory
-    * at any scale.
-    */
-  def windowedCounts(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window($"ts", "1 hour"), $"event_type")
-      .agg(count(lit(1)).as("n_events"), sum($"value").as("sum_value"))
-      .select($"window.start".as("window_start"), $"event_type", $"n_events", $"sum_value")
-  }
-
   // st01 — streaming SLIDING-window aggregation under the DuckDB oracle:
   // 2-hour windows sliding hourly (each event lands in exactly two
   // windows), run as a REAL Structured Streaming job over the staged
@@ -563,15 +550,16 @@ object StreamOps {
   // answer either: with AvailableNow the final watermark never passes the
   // last windows, so their rows are silently dropped (st01's pitfall).
   //
-  // The production shape is UPDATE mode + foreachBatch into
-  // batch-addressed partitions — cdcm2's replay-idempotent protocol
-  // applied to windowed aggregates. Each trigger emits only the groups it
-  // touched (O(|updated|), not O(|groups|)), each batch overwrites its
-  // OWN `batch=<id>` partition (a replayed batch id rewrites exactly that
-  // partition — idempotence by addressing, no transactional sink needed),
-  // and the read folds LATEST-WINS per group by batch id (update mode
-  // emits full current aggregates, so unlike cdcm2's signed deltas the
-  // fold is argmax-by-batch, not a sum). Nothing is ever dropped by
+  // The production shape is UPDATE mode + foreachBatch into a
+  // structure on `Layout`'s segment protocol — cdcm2's replay-idempotent
+  // protocol applied to windowed aggregates. Each trigger emits only the
+  // groups it touched (O(|updated|), not O(|groups|)), each batch appends
+  // its OWN `seg=b<id>` segment (a replayed batch rewrites exactly that
+  // segment, or is skipped once a fold consumed it — idempotence by
+  // addressing, no transactional sink needed), and the read folds
+  // LATEST-WINS per group by segment ordinal (update mode emits full
+  // current aggregates, so unlike cdcm2's signed deltas the fold is
+  // argmax-by-batch, not a sum). Nothing is ever dropped by
   // finalization: every window's last update is durable the moment its
   // batch commits, whether or not the watermark ever passed it.
   //
@@ -598,70 +586,52 @@ object StreamOps {
       }
       .start()
 
-  /** One batch's updated groups, written to the batch's own partition
-    * (overwrite: an at-least-once replay rewrites exactly its rows).
+  /** One batch's updated groups, appended as the batch's own segment
+    * (an at-least-once replay rewrites exactly its rows, or is skipped
+    * once a fold consumed them).
     */
   private[streaming] def writeWindowedUpdates(batch: DataFrame, tablePath: String,
-                                              batchId: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$tablePath/updates/batch=$batchId")
-
-  private def windowedAggState(s: SparkSession, tablePath: String): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
-    def existing(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(conf).exists(hp)) Some(s.read.parquet(p)) else None
-    }
-    // the base is a pre-folded snapshot: older than any live update
-    // partition by the compaction contract, so it folds as batch = -1
-    val base = existing(s"$tablePath/base")
-      .map(_.withColumn("_b", lit(-1L)))
-    val updates = existing(s"$tablePath/updates")
-      .map(d => d.withColumn("_b", col("batch").cast("long")).drop("batch"))
-    val parts = Seq(base, updates).flatten
-    require(parts.nonEmpty, s"no windowed-agg state under $tablePath")
-    parts.reduce(_.unionByName(_))
+                                              batchId: Long): Unit = {
+    val segment = graft.operators.Layout.segmentOf(batchId)
+    graft.operators.Layout.append(batch.sparkSession, tablePath, segment)(Seq(
+      () => batch.write.mode("overwrite").parquet(s"$tablePath/seg=$segment")))
   }
 
-  /** Current view: per `keyCols` group, the aggregate columns from that
-    * group's LATEST update (argmax by batch id — update mode emits full
-    * current aggregates, so the newest row IS the group's value).
+  /** Per `keyCols` group of the committed segments read as `segs`, the
+    * aggregate columns from the group's LATEST update: argmax by segment
+    * ordinal, with `seg=base` — a pre-folded snapshot, older than every
+    * segment by the fold contract — ordered first.
     */
-  def readWindowedAgg(s: SparkSession, tablePath: String,
-                      keyCols: Seq[String]): DataFrame = {
-    val all = windowedAggState(s, tablePath)
+  private def latestWins(segs: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val all = segs.withColumn("_b", graft.operators.Layout.segmentOrder).drop("seg")
     val valCols = all.columns.filterNot((keyCols :+ "_b").toSet).toSeq
     all.groupBy(keyCols.map(col): _*)
       .agg(max(struct((col("_b") +: valCols.map(col)): _*)).as("_m"))
       .select(keyCols.map(col) ++ valCols.map(c => col(s"_m.$c").as(c)): _*)
   }
 
-  /** Fold updates into a fresh base and drop the update partitions — the
-    * read-fan-out bound (cdcm2's [[CdcMaterializer.compactAggregate]]
-    * contract: run between triggers, never concurrently with the
-    * maintaining stream; staged + swapped so a crash leaves either the
-    * old state or the staged fold, never a half-written base).
+  /** Current view: per `keyCols` group, the aggregate columns from that
+    * group's LATEST update (update mode emits full current aggregates, so
+    * the newest row IS the group's value).
+    */
+  def readWindowedAgg(s: SparkSession, tablePath: String,
+                      keyCols: Seq[String]): DataFrame = {
+    val view = graft.operators.Layout.committedView(s, tablePath, Seq(""))
+    require(view.isDefined, s"no windowed-agg state under $tablePath")
+    latestWins(view.get.read(""), keyCols)
+  }
+
+  /** Fold the committed segments into a fresh `seg=base` through
+    * [[graft.operators.Layout.fold]] — the read-fan-out bound, under
+    * cdcm2's [[CdcMaterializer.compactAggregate]] contract: run between
+    * triggers, never concurrently with the maintaining stream.
     */
   def compactWindowedAgg(s: SparkSession, tablePath: String,
-                         keyCols: Seq[String]): Unit = {
-    val base = new org.apache.hadoop.fs.Path(s"$tablePath/base")
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // cross-process mutex (the maintained-structure compactors' lease):
-    // a concurrent fold of the same table fails by name
-    graft.operators.Layout.withFoldLease(fs, base) {
-    val folded = readWindowedAgg(s, tablePath, keyCols)
-    val staging = s"$tablePath/base.compact-${ProcessHandle.current().pid()}"
-    folded.write.mode("overwrite").parquet(staging)
-    // publish the fold FIRST (two-rename swap — a crash never leaves
-    // the path with no complete directory), THEN drop the folded-in
-    // update partitions: a crash in between leaves new base + old
-    // updates, and re-folding those updates is idempotent (update mode
-    // emits full current aggregates; argmax by batch re-selects the
-    // same newest row per group).
-    graft.operators.Layout.publishDir(fs,
-      new org.apache.hadoop.fs.Path(staging), base)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath/updates"), true)
+                         keyCols: Seq[String]): Unit =
+    graft.operators.Layout.fold(s, tablePath, Seq(""), "compact") { (view, staging) =>
+      latestWins(view.read(""), keyCols)
+        .write.mode("overwrite").parquet(s"$staging/seg=base")
     }
-  }
 
   /** Streaming view of the events table staged as `nFiles` parquet files,
     * so `maxFilesPerTrigger=1` yields `nFiles` real micro-batches (the
@@ -691,8 +661,8 @@ object StreamOps {
   // under the same DuckDB oracle: the sliding-window rollup runs in
   // UPDATE mode over a 4-file staging (maxFilesPerTrigger=1 → 4 real
   // micro-batches; repartition splits windows ACROSS batches and out of
-  // event-time order), each batch lands in its own `batch=<id>`
-  // partition, and the result is the latest-wins fold — which
+  // event-time order), each batch lands as its own `seg=b<id>`
+  // segment, and the result is the latest-wins fold — which
   // hash-matches the batch oracle only if every window's final update
   // survives finalization and the fold picks exactly the newest row per
   // group. The memory-sink gates prove the aggregation; this one proves
@@ -721,8 +691,8 @@ object StreamOps {
   // st03b — st03's enrichment rollup through the DURABLE finalization
   // path: the same fact-stream ⋈ broadcast-dimension → windowed rollup
   // runs in UPDATE mode over a 2-file staging (windows span micro-batches
-  // and arrive out of event-time order), lands batch-addressed update
-  // partitions via [[maintainWindowedAgg]], and the latest-wins fold is
+  // and arrive out of event-time order), appends batch-addressed update
+  // segments via [[maintainWindowedAgg]], and the latest-wins fold is
   // hash-matched against st03's batch oracle. Together with st01b this
   // retires the complete-mode memory sink as anything but a gate-harness
   // device for the windowed-aggregation family: both the plain and the
@@ -964,19 +934,6 @@ object StreamOps {
     "st05_running_state" -> st05Sql,
     "st06_stream_join" -> st06Sql)
 
-  /** Session windows per user: a session closes after 30 minutes of
-    * inactivity (builtin session_window keeps state per open session only).
-    */
-  def sessionCounts(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window($"ts", "30 minutes").as("sw"), $"user_id")
-      .agg(count(lit(1)).as("n_events"), sum($"value").as("session_value"))
-      .select($"sw.start".as("session_start"), $"sw.end".as("session_end"),
-        $"user_id", $"n_events", $"session_value")
-  }
-
   case class UserEvent(user_id: Long, event_type: String, value: Double)
   case class UserRunning(user_id: Long, n_events: Long, running_sum: Double)
 
@@ -1035,76 +992,5 @@ object StreamOps {
       .filter($"_delta_type" === "update")
       .groupBy($"table")
       .agg(count(lit(1)).as("n_updates"), sum($"val").as("sum_val"))
-  }
-
-  /** Streaming ingest with dedup-at-the-door: each micro-batch of
-    * documents (doc_id, text) first dedups within itself (exact
-    * fingerprint, min doc_id wins), then against the persistent corpus
-    * index ([[graft.operators.Dedup.dd06ViaIndex]]: fingerprint anti-join
-    * + LSH band probe — corpus text is never rescanned). Accepted docs
-    * append to `acceptedDir` AND to the index, so later batches — in this
-    * run or any restart — dedup against everything already admitted. The
-    * maintenance is incremental by construction: per trigger the index
-    * grows by the accepted delta only, nothing is rebuilt.
-    *
-    * `localCheckpoint` pins the accepted set before the two appends — the
-    * second write must not re-evaluate the plan against the index files
-    * the first one just extended.
-    *
-    * Restart safety under foreachBatch's at-least-once replay is a real
-    * commit protocol, not write ordering:
-    *  - every write is segment-addressed by batch id (`batch=<id>` /
-    *    `seg=batch<id>`, overwrite) — a replay rewrites exactly its rows;
-    *  - the replayed admission decision reads the index EXCLUDING the
-    *    current batch's own segment, so a crashed attempt's partial rows
-    *    (self OR cross pairs within the batch) can never change the
-    *    outcome — the replay recomputes the first attempt's exact result
-    *    from the exact same prior-batches-only view;
-    *  - a `_commits/batch=<id>` marker written after all four writes
-    *    makes a post-success replay a pure no-op.
-    */
-  def dedupIngest(docs: DataFrame, indexDir: String, acceptedDir: String,
-                  checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.expressions.Window
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        import s.implicits._
-        val hConf = s.sparkContext.hadoopConfiguration
-        val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_commits/batch=$batchId")
-        val mfs = marker.getFileSystem(hConf)
-        if (!mfs.exists(marker)) { // marker present = fully processed before
-          val w = Window.partitionBy($"fp").orderBy($"doc_id")
-          val batchUnique = batch
-            .withColumn("fp", graft.operators.TextAnalysis.fingerprint($"text"))
-            .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-            .select($"doc_id", $"text")
-          // bootstrap: a fresh pipeline has no index yet — the first batch
-          // is all-novel and CREATES it, rather than crashing on a missing
-          // parquet path
-          val fpPath = new org.apache.hadoop.fs.Path(s"$indexDir/fp")
-          val indexExists = fpPath.getFileSystem(hConf).exists(fpPath)
-          val keep =
-            if (indexExists)
-              graft.operators.Dedup.dd06ViaIndex(s, batchUnique, indexDir,
-                excludeSegment = Some(s"batch$batchId"))
-            else batchUnique.select($"doc_id")
-          val accepted = batchUnique.join(keep, "doc_id").localCheckpoint(true)
-          try {
-            if (!accepted.isEmpty) {
-              accepted.write.mode("overwrite").parquet(s"$acceptedDir/batch=$batchId")
-              graft.operators.Dedup.buildDedupIndex(accepted, indexDir,
-                segment = s"batch$batchId")
-            }
-            mfs.create(marker, true).close()
-          } finally accepted.unpersist() // drop the checkpoint blocks NOW —
-          // a long-running ingest must not accumulate one orphaned RDD per
-          // trigger waiting for the driver's GC-driven ContextCleaner
-        }
-        ()
-      }
-      .start()
   }
 }

@@ -16,7 +16,7 @@ import scala.collection.mutable
   */
 object ProfileOne {
   private final case class JobRec(id: Int, submitted: Long, var completed: Long,
-                                  site: String, var tasks: Int,
+                                  site: String, exec: Option[Long], var tasks: Int,
                                   var taskTimeMs: Long)
 
   def main(args: Array[String]): Unit = {
@@ -33,31 +33,49 @@ object ProfileOne {
     val stageToJob = mutable.HashMap[Int, Int]()
     // per-stage-callsite aggregation: (stages, tasks, wall ms, task ms)
     val bySite = mutable.HashMap[String, (Int, Int, Long, Long)]()
+    // each SQL execution's (description, call-site stack)
+    val execSite = mutable.HashMap[Long, (String, String)]()
+    // the first graft.* frame of a call-site stack, with the action's name:
+    // inside a foreachBatch every stage's short name is the writeStream line
+    def graftFrame(name: String, details: String): Option[String] =
+      Option(details).getOrElse("").linesIterator
+        .find(l => l.contains("graft.") && !l.contains("ProfileOne"))
+        .map(f => s"${name.takeWhile(_ != ' ')} @ ${f.trim}")
     @volatile var recording = false
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          jobs.synchronized { execSite(x.executionId) = (x.description, x.details) }
+        case _ => ()
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (recording) {
           val si = e.stageInfo
           val wall = (for (s <- si.submissionTime; c <- si.completionTime)
             yield c - s).getOrElse(0L)
-          // prefer the deepest graft.* frame from the long callsite: inside
-          // a foreachBatch every stage's short name is the writeStream line.
-          // A stage without one (named by GraftSession.withCallSite, which
-          // sets no stack) is keyed by its whole name.
-          val key = Option(si.details).getOrElse("").linesIterator
-            .find(l => l.contains("graft.") && !l.contains("ProfileOne"))
-            .map(f => s"${si.name.takeWhile(_ != ' ')} @ ${f.trim}")
-            .getOrElse(si.name)
+          // a stage submitted from the adaptive-execution pool carries the
+          // pool thread's stack, with no graft frame: take its SQL
+          // execution's call site instead, then the job's short call site
+          // (the name GraftSession.withCallSite sets, which has no stack),
+          // then the execution's own name (this harness's count of the
+          // gate's result has no graft frame but its own)
           jobs.synchronized {
+            val job = stageToJob.get(si.stageId).flatMap(jobs.get)
+            val exec = job.flatMap(_.exec).flatMap(execSite.get)
+            val key = graftFrame(si.name, si.details)
+              .orElse(exec.flatMap { case (desc, details) => graftFrame(desc, details) })
+              .orElse(job.map(_.site).filter(_ != "?"))
+              .orElse(exec.map(_._1))
+              .getOrElse(si.name)
             val (n, t, w, tt) = bySite.getOrElse(key, (0, 0, 0L, 0L))
             bySite(key) = (n + 1, t + si.numTasks, w + wall, tt)
           }
         }
       override def onJobStart(e: SparkListenerJobStart): Unit = if (recording) {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
         jobs.synchronized {
-          jobs(e.jobId) = JobRec(e.jobId, e.time, -1L, site, 0, 0L)
+          jobs(e.jobId) = JobRec(e.jobId, e.time, -1L, prop("callSite.short").getOrElse("?"),
+            prop("spark.sql.execution.id").map(_.toLong), 0, 0L)
           e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)
         }
       }

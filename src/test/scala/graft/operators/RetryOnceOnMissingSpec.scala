@@ -100,6 +100,17 @@ class RetryOnceOnMissingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(got === 42)
     assert(attempt === 2)
+    // a committed view's read planned while its root (the `basePath`)
+    // is renamed away inside a publish swap
+    attempt = 0
+    assert(Layout.retryOnceOnMissing {
+      attempt += 1
+      if (attempt == 1)
+        throw new RuntimeException("plan failed",
+          new IllegalArgumentException("Option 'basePath' not found"))
+      7
+    } === 7)
+    assert(attempt === 2)
   }
 
   /** A local read that goes through NIO reports a file deleted under it

@@ -14,8 +14,11 @@ import org.scalatest.BeforeAndAfterAll
   *    whose before/after images straddle two groups MOVES the row's
   *    count and sum between them;
   *  - replay idempotence by addressing: re-writing the same batch id
-  *    leaves the view unchanged (the foreachBatch at-least-once corner);
-  *  - compaction: view identical before and after, deltas folded away;
+  *    leaves the view unchanged (the foreachBatch at-least-once corner),
+  *    and a replay at or below the fold's replay fence is skipped;
+  *  - compaction: view identical before and after, every batch segment
+  *    folded into `seg=base`;
+  *  - a torn segment (no `_SUCCESS`) is invisible and dropped by the fold;
   *  - a fully-retracted group (n=0) disappears from the view.
   */
 class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -33,6 +36,10 @@ class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     rows.toSeq.toDF("_delta_type", "word", "v")
   }
+
+  /** The `seg=*` directory names under the view's root. */
+  private def segs(path: String): Set[String] =
+    Option(new java.io.File(path).list()).toSet.flatten.filter(_.startsWith("seg="))
 
   private def view(path: String): Map[String, (Long, Long)] =
     CdcMaterializer.readAggregate(spark, path).collect()
@@ -58,15 +65,15 @@ class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
       val afterB2 = Map("a" -> (1L, 5L), "b" -> (1L, 12L))
       assert(view(path) == afterB2)
 
-      // foreachBatch replay: same batch id rewrites its own partition
+      // foreachBatch replay: same batch id rewrites its own segment
       CdcMaterializer.writeAggDeltas(b2, "word", "v", path, 1L)
       assert(view(path) == afterB2)
 
-      // compaction folds deltas into a base without changing the view
+      // compaction folds the batch segments into a base without
+      // changing the view
       CdcMaterializer.compactAggregate(spark, path)
       assert(view(path) == afterB2)
-      assert(new java.io.File(s"$path/base").exists())
-      assert(!new java.io.File(s"$path/deltas").exists())
+      assert(segs(path) == Set("seg=base"))
 
       // deltas keep landing after a compaction; a fully-retracted group
       // folds to n=0 and leaves the view
@@ -81,52 +88,71 @@ class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** The compactAggregate crash seam: its cleanup runs AFTER the
-    * two-rename publish, so a crash in between leaves the new base plus
-    * delta partitions the fold already consumed. SUM deltas are signed
-    * increments — re-summing them double-counts silently — so the base
-    * carries a `_folded_through` fence and the read excludes deltas at
-    * or below it. (The old delete-then-rename order had a worse window:
-    * no base at all, and recovery would double-count.)
+  /** The replay seam: foreachBatch is at-least-once, so a batch the
+    * fold already consumed into `seg=base` can be replayed after it.
+    * SUM deltas are signed increments — re-summing them double-counts
+    * silently — so the fold records a `_folded_through` replay fence and
+    * [[graft.operators.Layout.append]] skips any batch at or below it.
     */
   test("stale already-folded deltas surviving a crashed cleanup never double-count") {
     val tmp = java.nio.file.Files.createTempDirectory("cdcagg-fence")
     val path = s"$tmp/agg"
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      val w = java.nio.file.Files.walk(from)
-      try w.forEach { p =>
-        val t = to.resolve(from.relativize(p))
-        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally w.close()
-    }
     try {
-      CdcMaterializer.writeAggDeltas(batch(
-        ("insert", "a", 10L), ("insert", "b", 7L)), "word", "v", path, 0L)
-      CdcMaterializer.writeAggDeltas(batch(("insert", "a", 5L)),
-        "word", "v", path, 1L)
+      val b0 = batch(("insert", "a", 10L), ("insert", "b", 7L))
+      val b1 = batch(("insert", "a", 5L))
+      CdcMaterializer.writeAggDeltas(b0, "word", "v", path, 0L)
+      CdcMaterializer.writeAggDeltas(b1, "word", "v", path, 1L)
       val want = Map("a" -> (2L, 15L), "b" -> (1L, 7L))
       assert(view(path) == want)
-      // snapshot the deltas, compact, then restore them — exactly the
-      // state a crash between publish and cleanup leaves behind
-      val snapshot = java.nio.file.Files.createTempDirectory("cdcagg-snap")
-      copyTree(java.nio.file.Paths.get(s"$path/deltas"), snapshot)
       CdcMaterializer.compactAggregate(spark, path)
       assert(view(path) == want)
-      copyTree(snapshot, java.nio.file.Paths.get(s"$path/deltas"))
+      assert(graft.operators.Layout.fenceOf(spark, path) == Some(1L))
+      // replaying both folded batches writes nothing and counts nothing
+      CdcMaterializer.writeAggDeltas(b0, "word", "v", path, 0L)
+      CdcMaterializer.writeAggDeltas(b1, "word", "v", path, 1L)
+      assert(segs(path) == Set("seg=base"),
+        "a replay at or below the fence re-created its segment")
       assert(view(path) == want,
-        "stale folded deltas were re-summed — the fence failed and the " +
-          "view double-counted")
+        "replayed folded deltas were re-summed — the view double-counted")
       // a FRESH batch (id above the fence) still lands normally
       CdcMaterializer.writeAggDeltas(batch(("insert", "b", 3L)),
         "word", "v", path, 2L)
       val want2 = Map("a" -> (2L, 15L), "b" -> (2L, 10L))
       assert(view(path) == want2)
-      // the next fold consumes only the unfenced delta and cleans up all
+      // the next fold consumes it and moves the fence
       CdcMaterializer.compactAggregate(spark, path)
       assert(view(path) == want2)
-      assert(!new java.io.File(s"$path/deltas").exists())
+      assert(segs(path) == Set("seg=base"))
+      assert(graft.operators.Layout.fenceOf(spark, path) == Some(2L))
+    } finally {
+      java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
+
+  /** A batch whose write crashed leaves its segment without `_SUCCESS`:
+    * it belongs to an uncommitted batch that will replay, so the view
+    * must not count it and the fold must drop it.
+    */
+  test("a torn delta segment is invisible to the view and dropped by the fold") {
+    val tmp = java.nio.file.Files.createTempDirectory("cdcagg-torn")
+    val path = s"$tmp/agg"
+    try {
+      CdcMaterializer.writeAggDeltas(batch(("insert", "a", 10L)),
+        "word", "v", path, 0L)
+      CdcMaterializer.writeAggDeltas(batch(("insert", "a", 5L)),
+        "word", "v", path, 1L)
+      java.nio.file.Files.delete(java.nio.file.Paths.get(path, "seg=b000001", "_SUCCESS"))
+      assert(view(path) == Map("a" -> (1L, 10L)),
+        "the view counted a torn segment")
+      CdcMaterializer.compactAggregate(spark, path)
+      assert(segs(path) == Set("seg=base"))
+      assert(view(path) == Map("a" -> (1L, 10L)))
+      // the torn batch is not fenced: its replay lands
+      assert(graft.operators.Layout.fenceOf(spark, path) == Some(0L))
+      CdcMaterializer.writeAggDeltas(batch(("insert", "a", 5L)),
+        "word", "v", path, 1L)
+      assert(view(path) == Map("a" -> (2L, 15L)))
     } finally {
       java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))

@@ -33,35 +33,6 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.awaitTermination(120000)
   }
 
-  test("watermarked tumbling windows match batch aggregation") {
-    // complete mode: append would (correctly) hold back the last window
-    // whose end is still beyond the watermark
-    runToMemory(StreamOps.windowedCounts(StreamOps.eventsStream(spark, dir)), "wincounts", mode = "complete")
-    val streamed = spark.sql("select sum(n_events) from wincounts").head.getLong(0)
-    val batch = graft.core.Tables.events(spark, dir).count()
-    // AvailableNow processes all data in order; with a single input file no
-    // event is late, so nothing may be dropped
-    assert(streamed === batch)
-    // spot-check one window against batch
-    val g = spark.sql("select n_events from wincounts where event_type = 'click' order by window_start limit 1").head.getLong(0)
-    import spark.implicits._
-    val b = graft.core.Tables.events(spark, dir)
-      .filter($"event_type" === "click")
-      .groupBy(date_trunc("hour", $"ts")).count()
-      .orderBy($"date_trunc(hour, ts)").head.getLong(1)
-    assert(g === b)
-  }
-
-  test("session windows: per-user sessions close after 30 min inactivity") {
-    runToMemory(StreamOps.sessionCounts(StreamOps.eventsStream(spark, dir)), "sessions", mode = "complete")
-    val total = spark.sql("select sum(n_events) from sessions").head.getLong(0)
-    assert(total === graft.core.Tables.events(spark, dir).count())
-    // sessions per user >= 1, and session bounds are consistent
-    val bad = spark.sql(
-      "select count(*) from sessions where session_end <= session_start").head.getLong(0)
-    assert(bad === 0L)
-  }
-
   test("flatMapGroupsWithState running totals converge to batch totals") {
     runToMemory(StreamOps.runningTotals(StreamOps.eventsStream(spark, dir)).toDF(), "running")
     // last emitted state per user == batch per-user totals

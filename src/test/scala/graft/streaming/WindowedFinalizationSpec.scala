@@ -9,11 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The durable finalization path for windowed streaming aggregations
-  * (update-mode foreachBatch → batch-addressed partitions → latest-wins
-  * fold): proves the folded read equals the complete-mode gate result on
-  * the staged events stream, that a replayed batch is a no-op
-  * (idempotence by addressing), and that compaction preserves the view
-  * while dropping the update partitions.
+  * (update-mode foreachBatch → batch-addressed `seg=b<id>` segments →
+  * latest-wins fold): proves the folded read equals the complete-mode
+  * gate result on the staged events stream, that a replayed batch is a
+  * no-op (idempotence by addressing), that compaction preserves the view
+  * while folding the batch segments into `seg=base`, and that a torn
+  * segment is invisible to the read and dropped by the fold.
   */
 class WindowedFinalizationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -27,6 +28,10 @@ class WindowedFinalizationSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** The `seg=*` directory names under the view's root. */
+  private def segs(path: String): Set[String] =
+    Option(new java.io.File(path).list()).toSet.flatten.filter(_.startsWith("seg="))
 
   test("folded read equals the complete-mode gate result on the staged events stream") {
     val dir = "/root/testdata/sf0.001"
@@ -72,26 +77,44 @@ class WindowedFinalizationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(folded === expected)
 
     // replayed batch (at-least-once foreachBatch): rewriting batch 1's own
-    // partition with the same rows changes nothing — idempotence by
+    // segment with the same rows changes nothing — idempotence by
     // addressing, not by sink transactionality
     // detach (eager localCheckpoint) — the overwrite below deletes the
     // very files a lazy plan would re-read
-    val replay = spark.read.parquet(s"$view/updates/batch=1").localCheckpoint(true)
+    val replay = spark.read.parquet(s"$view/seg=b000001").localCheckpoint(true)
     StreamOps.writeWindowedUpdates(replay, view, 1L)
     assert(folded === expected)
 
-    // compaction: view unchanged, update partitions gone, base present
+    // compaction: view unchanged, batch segments folded into seg=base
     StreamOps.compactWindowedAgg(spark, view, Seq("ws", "k"))
     assert(folded === expected)
-    assert(!Files.exists(java.nio.file.Paths.get(view, "updates")))
-    assert(Files.exists(java.nio.file.Paths.get(view, "base")))
+    assert(segs(view) === Set("seg=base"))
 
-    // post-compaction updates fold OVER the base (base is batch -1)
+    // post-compaction updates fold OVER the base (base orders first)
     val late = Seq(("2024-01-01 10:00:00", "a", 3L, 9.0)).toDF("ws", "k", "n", "s")
     StreamOps.writeWindowedUpdates(late, view, 2L)
     assert(folded === Seq(
       "[2024-01-01 10:00:00,a,3,9.0]",
       "[2024-01-01 10:00:00,b,1,2.0]",
       "[2024-01-01 11:00:00,c,1,8.0]"))
+  }
+
+  test("a torn update segment is invisible to the read and dropped by the fold") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-winfin-torn")
+    val view = work.resolve("view").toString
+    def folded = StreamOps.readWindowedAgg(spark, view, Seq("ws", "k"))
+      .orderBy("ws", "k").collect().map(_.toString).toSeq
+    StreamOps.writeWindowedUpdates(
+      Seq(("2024-01-01 10:00:00", "a", 1L, 1.0)).toDF("ws", "k", "n", "s"), view, 0L)
+    // batch 1's write crashed before its commit: no _SUCCESS
+    StreamOps.writeWindowedUpdates(
+      Seq(("2024-01-01 10:00:00", "a", 2L, 5.0)).toDF("ws", "k", "n", "s"), view, 1L)
+    Files.delete(java.nio.file.Paths.get(view, "seg=b000001", "_SUCCESS"))
+    assert(folded === Seq("[2024-01-01 10:00:00,a,1,1.0]"),
+      "the read took its latest update from a torn segment")
+    StreamOps.compactWindowedAgg(spark, view, Seq("ws", "k"))
+    assert(segs(view) === Set("seg=base"))
+    assert(folded === Seq("[2024-01-01 10:00:00,a,1,1.0]"))
   }
 }
