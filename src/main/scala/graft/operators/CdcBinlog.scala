@@ -1439,9 +1439,8 @@ object CdcBinlog {
   }
 
   /** A probe's answer DETACHED from the workdir (the [[withRotatingWorkdir]]
-    * contract) and built under the publish-race guard: the by-name block
-    * rebuilds AND executes the probe, so a concurrent fold's two-rename
-    * swap costs at most a bounded retry ([[Layout.retryOnceOnMissing]]).
+    * contract), built under [[Layout.retryOnceOnMissing]]: the by-name
+    * block rebuilds AND executes the probe.
     */
   private def detached(probe: => DataFrame): DataFrame =
     Layout.retryOnceOnMissing(probe.localCheckpoint(true))
@@ -1620,7 +1619,7 @@ object CdcBinlog {
   // below continuous ingest) — by hash-matching the final probe
   // against the same full-rebuild-over-latest-images oracle as cdcm4:
   // the fold must drop exactly the superseded and tombstoned rows,
-  // the two-rename publish must be invisible to the appends that
+  // the fold's manifest commit must be invisible to the appends that
   // follow it, and post-compaction versions must supersede folded ones.
   def cdcm7CompactedIndexFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm7") { work =>
@@ -1631,7 +1630,7 @@ object CdcBinlog {
         TextAnalysis.appendCdcTextSegment(_, idx, _, nBuckets = cdcm4Buckets),
         FoldAt(3, _ => TextAnalysis.compactCdcTextIndex(s, idx, nBuckets = cdcm4Buckets)))
       ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm4BatchImages, text))
-      requireFolded(s, s"$idx/doclog", text)
+      requireFolded(s, idx, text)
       cdcm4Probe(s, idx, cdcm4Buckets)
     }
 
@@ -1639,7 +1638,7 @@ object CdcBinlog {
   // where it runs in production, under the live stream. cdcm7's
   // pipeline, but after the third appended segment the maintenance
   // window re-buckets the index 4× (TextAnalysis.rebucketCdcTextIndex —
-  // subsumes the fold: live-only base, replay fence, lease, two-rename)
+  // subsumes the fold: live-only base, replay fence, lease, manifest)
   // and ingest continues for >= 2 more segments. The appender is
   // MARKER-DRIVEN — each batch buckets by the index's RECORDED count
   // (`_nbuckets`, written by the first append, updated by the
@@ -1659,19 +1658,19 @@ object CdcBinlog {
       // /6, cdcm7's recipe: 3 pre-rebucket segments AND >= 2 post ones
       val text = new Leg("text index", 5,
         (imgs, seg) => TextAnalysis.appendCdcTextSegment(imgs, idx, seg,
-          nBuckets = TextAnalysis.textIndexBucketCount(s, idx).getOrElse(cdcm4Buckets)),
+          nBuckets = TextAnalysis.cdcTextIndexBucketCount(s, idx).getOrElse(cdcm4Buckets)),
         FoldAt(3, _ => TextAnalysis.rebucketCdcTextIndex(s, idx, grown)))
       ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm4BatchImages, text))
-      require(graft.operators.TextAnalysis.textIndexBucketCount(s, idx)
+      require(graft.operators.TextAnalysis.cdcTextIndexBucketCount(s, idx)
           .contains(grown),
         "the re-bucket did not update the recorded bucket count")
-      val docSegs = segNames(s, s"$idx/doclog")
-      require(docSegs.contains("seg=base") &&
-        docSegs.size == text.appends - 3 + 1,
-        s"expected seg=base + ${text.appends - 3} post-rebucket segments, got $docSegs")
+      val view = Layout.committedView(s, idx).get
+      require(view.segs.contains("seg=base") &&
+        view.segs.size == text.appends - 3 + 1,
+        s"expected seg=base + ${text.appends - 3} post-rebucket segments, got ${view.segs}")
       // the grown range is in PHYSICAL use (a re-bucket that kept the
       // old hash would still pass the probe — directories don't lie)
-      val baseP = new org.apache.hadoop.fs.Path(s"$idx/postings/seg=base")
+      val baseP = new org.apache.hadoop.fs.Path(s"${view.dir}/postings/seg=base")
       val tbs = baseP.getFileSystem(s.sparkContext.hadoopConfiguration)
         .listStatus(baseP).map(_.getPath.getName)
         .filter(_.startsWith("tb=")).map(_.stripPrefix("tb=").toInt)
@@ -1708,7 +1707,7 @@ object CdcBinlog {
       require(text.fired >= 1,
         "the maintenance policy never fired — the planted 2-bucket " +
           "pressure should violate a quarter-of-postings budget")
-      require(graft.operators.TextAnalysis.textIndexBucketCount(s, idx)
+      require(graft.operators.TextAnalysis.cdcTextIndexBucketCount(s, idx)
           .contains(text.lastSuggested),
         s"recorded marker != the policy's last suggestion ${text.lastSuggested}")
       val endState = advice()
@@ -1726,7 +1725,7 @@ object CdcBinlog {
                             advice: () => TextAnalysis.TextMaintenanceAdvice): Leg =
     new Leg("text index", 5,
       (imgs, seg) => TextAnalysis.appendCdcTextSegment(imgs, idx, seg,
-        nBuckets = TextAnalysis.textIndexBucketCount(s, idx).getOrElse(2)),
+        nBuckets = TextAnalysis.cdcTextIndexBucketCount(s, idx).getOrElse(2)),
       Grow(2, () => { val a = advice(); (a.rebucket, a.suggestedBuckets) },
         TextAnalysis.rebucketCdcTextIndex(s, idx, _)))
 
@@ -1745,25 +1744,20 @@ object CdcBinlog {
 
   /** The ANN gates' shared probe-vector derivation: the smallest live
     * id's embedding, read back from the index ITSELF (one slim row to
-    * the driver) through the committed doclog+cells view — the SAME
-    * [[Layout.committedView]] read every probe and stats call takes,
-    * retried across a publish swap. Raw single-leg reads
-    * of a maintained index belong to the folds' own internals only
-    * (they run under the fold lease, where the leg set cannot move).
+    * the driver) through the SAME [[Layout.committedView]] read every
+    * probe and stats call takes.
     */
   private def annProbeVector(s: SparkSession, indexDir: String): Seq[Long] = {
     import s.implicits._
-    Layout.retryOnceOnMissing {
-      val view = Layout.committedView(s, indexDir, Similarity.cdcAnnLegs)
-        .getOrElse(Layout.missingIndex(indexDir))
-      val live = view.read("doclog").groupBy($"vec_id")
-        .agg(max(struct($"ver", $"deleted")).as("m"))
-        .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-        .filter(!$"deleted")
-      view.read("cells").join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
-        .orderBy($"vec_id").select($"embedding")
-        .head().getSeq[Long](0) // <= 1 slim row — materializes INSIDE the retry
-    }
+    val view = Layout.committedView(s, indexDir)
+      .getOrElse(Layout.missingIndex(indexDir))
+    val live = view.read("doclog").groupBy($"vec_id")
+      .agg(max(struct($"ver", $"deleted")).as("m"))
+      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
+      .filter(!$"deleted")
+    view.read("cells").join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
+      .orderBy($"vec_id").select($"embedding")
+      .head().getSeq[Long](0) // <= 1 slim row
   }
 
   private[graft] def cdcm5BatchImages(batch: DataFrame, batchId: Long): DataFrame = {
@@ -1815,9 +1809,9 @@ object CdcBinlog {
   // maintenance window) and ingest continues for >= 2 more segments
   // before the probe. The fold keeps cell assignments (made under the
   // persisted quantizer, which only a rebuild replaces) while dropping
-  // superseded and tombstoned versions; the whole-index two-rename
-  // publish must be invisible to the appends that follow it — the very
-  // next batch re-reads the centroids THROUGH the published path — and
+  // superseded and tombstoned versions; the fold's manifest commit
+  // must be invisible to the appends that follow it — the very next
+  // batch re-reads the centroids THROUGH the committed generation — and
   // the final exact-MIPS probe hash-matches cdcm5's brute-force oracle
   // over the latest-image ground truth.
   def cdcm8CompactedAnnFreshness(s: SparkSession, d: String): DataFrame =
@@ -1829,13 +1823,11 @@ object CdcBinlog {
         FoldAt(3, _ => Similarity.compactCdcAnnIndex(s, idx)))
       ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm5BatchImages, ann))
       // physical state: the fold happened under the ingest — one base
-      // segment + ONLY the post-compaction appends, in BOTH layouts
-      for (leg <- Seq("doclog", "cells")) {
-        val segs = segNames(s, s"$idx/$leg")
-        require(segs.contains("seg=base") &&
-          segs.size == ann.appends - 3 + 1,
-          s"$leg: expected seg=base + ${ann.appends - 3} ingest segments, got $segs")
-      }
+      // segment + ONLY the post-compaction appends
+      val segs = segNames(s, idx)
+      require(segs.contains("seg=base") &&
+        segs.size == ann.appends - 3 + 1,
+        s"expected seg=base + ${ann.appends - 3} ingest segments, got $segs")
       cdcm5Probe(s, idx)
     }
 
@@ -1847,11 +1839,11 @@ object CdcBinlog {
   // foreachBatch bodies serialize on the driver, the real maintenance
   // window — Similarity.requantizeCdcAnnIndex re-derives centroids from
   // the CURRENT live corpus and re-assigns every live vector through
-  // the same lease + fence + two-rename protocol as the folds, and
+  // the same lease + fence + manifest protocol as the folds, and
   // ingest then CONTINUES for >= 2 more segments whose appends assign
-  // against the rebuilt quantizer re-read THROUGH the published path.
+  // against the rebuilt quantizer re-read THROUGH the committed generation.
   // The gate pins the physical contract (seg=base + only the
-  // post-requantize appends in both layouts, the replay fence at the
+  // post-requantize appends, the replay fence at the
   // third batch's ordinal, and the centroid table actually CHANGED —
   // a requantize that silently kept the stale quantizer would pass any
   // probe-only check) and then hash-compares the exact-MIPS probe
@@ -1869,7 +1861,7 @@ object CdcBinlog {
         new java.util.concurrent.atomic.AtomicReference[Seq[String]](null)
       val fenceAt = new java.util.concurrent.atomic.AtomicLong(-1L)
       def centroidPrint(): Seq[String] =
-        s.read.parquet(s"$idx/centroids")
+        s.read.parquet(s"${Layout.committedView(s, idx).get.dir}/centroids")
           .orderBy($"cell").collect().map(_.toString).toSeq
       // /6, the cdcm8 recipe: 3 pre-requantize segments AND >= 2
       // post-requantize ones out of the same fixture
@@ -1883,15 +1875,12 @@ object CdcBinlog {
         }))
       ingest(s, work, fixtureDir(d), divisor = 6)(Route(cdcm5BatchImages, ann))
       // physical contract: the rebuild folded everything it consumed
-      // (lone base + ONLY the post-requantize appends, in BOTH layouts),
-      // fence at the third batch, NEW centroids
-      for (leg <- Seq("doclog", "cells")) {
-        val segs = segNames(s, s"$idx/$leg")
-        require(segs.contains("seg=base") &&
-          segs.size == ann.appends - 3 + 1,
-          s"$leg: expected seg=base + ${ann.appends - 3} post-requantize " +
-            s"segments, got $segs")
-      }
+      // (lone base + ONLY the post-requantize appends), fence at the
+      // third batch, NEW centroids
+      val segs = segNames(s, idx)
+      require(segs.contains("seg=base") &&
+        segs.size == ann.appends - 3 + 1,
+        s"expected seg=base + ${ann.appends - 3} post-requantize segments, got $segs")
       val fence = Layout.fenceOf(s, idx)
       require(fence.contains(fenceAt.get()),
         s"replay fence $fence != the requantize point ${fenceAt.get()} — a " +
@@ -1939,7 +1928,8 @@ object CdcBinlog {
       val endState = advice()
       require(!endState.requantize,
         s"the closed loop left maintenance owing at stream end: $endState")
-      val cellsNow = s.read.parquet(s"$idx/centroids").count()
+      val cellsNow = s.read.parquet(s"${Layout.committedView(s, idx).get.dir}/centroids")
+        .count()
       require(cellsNow > 2,
         s"the quantizer never grew past its planted k=2 ($cellsNow cells)")
       cdcm5Probe(s, idx)
@@ -1977,14 +1967,12 @@ object CdcBinlog {
       detached(cdcFpGroups(s, log)).orderBy(col("keeper_doc_id"))
     }
 
-  /** A state log is one leg: its `seg=` segments sit directly under its
-    * root. Every report, probe, stats call and fold reads the log
-    * through [[Layout.committedView]], so a torn or in-flight append is
-    * invisible to all of them, and an absent or not-yet-committed log
-    * answers empty (None) instead of an AnalysisException ("unknown doc
-    * probes empty" holds even before the first committed batch).
-    */
-  private val logLegs = Seq("")
+  // A state log is one leg, `""`: its `seg=` segments sit directly under
+  // its generation. Every report, probe, stats call and fold reads the
+  // log through [[Layout.committedView]], so a torn or in-flight append
+  // is invisible to all of them, and an absent or not-yet-committed log
+  // answers empty (None) instead of an AnalysisException ("unknown doc
+  // probes empty" holds even before the first committed batch).
 
   /** Current duplicate groups from a cdcm6 fingerprint log: doc-log
     * argmax to the latest version per doc, live rows only, then group
@@ -1994,7 +1982,7 @@ object CdcBinlog {
     */
   private[graft] def cdcFpGroups(s: SparkSession, logDir: String): DataFrame = {
     import s.implicits._
-    Layout.committedView(s, logDir, logLegs).map(_.read("")).getOrElse(
+    Layout.committedView(s, logDir).map(_.read("")).getOrElse(
         return Seq.empty[(String, Long, Long)]
           .toDF("fp", "keeper_doc_id", "n_docs"))
       .groupBy($"doc_id")
@@ -2068,7 +2056,7 @@ object CdcBinlog {
                                 maxBroadcastCandidates: Long = 1L << 20): DataFrame = {
     import s.implicits._
     val empty = Seq.empty[(Long, String)].toDF("dup_doc_id", "fp")
-    val log = Layout.committedView(s, logDir, logLegs).map(_.read(""))
+    val log = Layout.committedView(s, logDir).map(_.read(""))
       .getOrElse(return empty)
     val t = log.filter($"doc_id" === docId)
       .groupBy($"doc_id")
@@ -2105,8 +2093,8 @@ object CdcBinlog {
     */
   private[graft] def appendCdcFpSegment(images: DataFrame, logDir: String,
                                         segment: String): Boolean =
-    Layout.append(images.sparkSession, logDir, segment)(Seq(
-      () => images.write.mode("overwrite").parquet(s"$logDir/seg=$segment")))
+    Layout.append(images.sparkSession, logDir, segment)(out =>
+      Seq(() => out.write("", images)))
 
   /** Fold the cdcm6 fingerprint log to a live-only single base segment —
     * the dedup twin of [[TextAnalysis.compactCdcTextIndex]] /
@@ -2127,16 +2115,15 @@ object CdcBinlog {
     * `seg` partition column — live rows only, as one `seg=base`.
     */
   private def compactCdcLog(s: SparkSession, logDir: String): Unit =
-    Layout.fold(s, logDir, logLegs, "compact") { (view, staging) =>
+    Layout.fold(s, logDir) { (view, out) =>
       val log = view.read("")
       val carried = Seq("ver", "deleted") ++
         log.columns.filterNot(Set("doc_id", "ver", "deleted", "seg"))
-      log.groupBy(col("doc_id"))
+      out.write("", log.groupBy(col("doc_id"))
         .agg(max(struct(carried.map(col): _*)).as("m"))
         .select(col("doc_id") +: carried.map(c => col(s"m.$c").as(c)): _*)
         .filter(!col("deleted"))
-        .coalesce(4)
-        .write.mode("overwrite").parquet(s"$staging/seg=base")
+        .coalesce(4))
     }
 
   // ---- CDC-maintained NEAR-dup state: the LSH band log (cdcm15) -------
@@ -2221,7 +2208,7 @@ object CdcBinlog {
     */
   private[graft] def cdcNearDupLive(s: SparkSession, logDir: String): DataFrame = {
     import s.implicits._
-    val log = Layout.committedView(s, logDir, logLegs).map(_.read("")).getOrElse(
+    val log = Layout.committedView(s, logDir).map(_.read("")).getOrElse(
       return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
           "doc_id BIGINT, sh ARRAY<BINARY>, " +
@@ -2328,7 +2315,7 @@ object CdcBinlog {
                                      maxBroadcastCandidates: Long = 1L << 20): DataFrame = {
     import s.implicits._
     val empty = Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
-    val log = Layout.committedView(s, logDir, logLegs).map(_.read(""))
+    val log = Layout.committedView(s, logDir).map(_.read(""))
       .getOrElse(return empty)
     val t = log.filter($"doc_id" === docId)
       .groupBy($"doc_id")
@@ -2438,7 +2425,7 @@ object CdcBinlog {
     import s.implicits._
     val empty = Seq.empty[(Long, Long, String)]
       .toDF("probe_doc_id", "dup_doc_id", "fp")
-    val log = Layout.committedView(s, logDir, logLegs).map(_.read(""))
+    val log = Layout.committedView(s, logDir).map(_.read(""))
       .getOrElse(return empty)
     val targets = docIds.select($"doc_id").distinct()
     val tSmall = underCap(targets, maxBroadcastCandidates)
@@ -2493,7 +2480,7 @@ object CdcBinlog {
     import s.implicits._
     val empty = Seq.empty[(Long, Long, Long, Double)]
       .toDF("probe_doc_id", "doc_a", "doc_b", "jaccard")
-    val log = Layout.committedView(s, logDir, logLegs).map(_.read(""))
+    val log = Layout.committedView(s, logDir).map(_.read(""))
       .getOrElse(return empty)
     val targets = docIds.select($"doc_id").distinct()
     val tSmall = underCap(targets, maxBroadcastCandidates)
@@ -2570,7 +2557,8 @@ object CdcBinlog {
     * decides WHEN to run [[compactCdcFpLog]] / [[compactCdcBandLog]]
     * (or the text/ANN doclog folds — any log whose rows are
     * (`keyCol`, ver, deleted, payload...) under the seg= layout reads
-    * the same way; pass `keyCol = "vec_id"` for the ANN doclog).
+    * the same way: `logDir` is a log's root or an index leg such as
+    * `<index>/doclog`; pass `keyCol = "vec_id"` for the ANN doclog).
     * Returns ONE row: (n_rows, n_keys, n_live, n_segments) where
     * n_rows counts every version incl. tombstones (what the per-report
     * argmax reads), n_live counts keys whose latest version is not
@@ -2588,10 +2576,12 @@ object CdcBinlog {
   def cdcLogStats(s: SparkSession, logDir: String,
                   keyCol: String = "doc_id"): DataFrame = {
     import s.implicits._
-    val view = Layout.committedView(s, logDir, logLegs).getOrElse(
-      return Seq((0L, 0L, 0L, 0)).toDF("n_rows", "n_keys", "n_live", "n_segments"))
+    val leg = new org.apache.hadoop.fs.Path(logDir)
+    val (view, legName) = Layout.committedView(s, logDir).map(_ -> "")
+      .orElse(Layout.committedView(s, leg.getParent.toString).map(_ -> leg.getName))
+      .getOrElse(return Seq((0L, 0L, 0L, 0)).toDF("n_rows", "n_keys", "n_live", "n_segments"))
     val nSegs = view.segs.count(_ != "seg=base")
-    view.read("")
+    view.read(legName)
       .select(col(keyCol).as("k"), $"ver", $"deleted")
       .groupBy($"k")
       .agg(count(lit(1)).as("n_vers"), max(struct($"ver", $"deleted")).as("m"))
@@ -2703,13 +2693,9 @@ object CdcBinlog {
     import s.implicits._
     val rows = structures.map { case (name, kind, path) =>
       kind.split(":", 2).toList match {
-        // the text/ANN stats read the committed two-leg view, which
-        // throws FileNotFoundException during a rebucket/requantize
-        // publish swap (the one reader MOST likely to race a daemon
-        // fold is this ops report) — retry per STRUCTURE, so one
-        // mid-swap index recomputes alone instead of failing the whole
-        // report or re-measuring its healthy neighbors
-        case "text" :: _ => Layout.retryOnceOnMissing {
+        // the text/ANN stats read one pinned manifest version, so a
+        // daemon fold racing this ops report cannot tear either measure
+        case "text" :: _ =>
           // one stats pass per structure (guide §1.2); the budget the
           // advice used is re-derived from its own totalPostings
           val a = graft.operators.TextAnalysis.cdcTextIndexAdvice(
@@ -2718,8 +2704,7 @@ object CdcBinlog {
           StructureAdvice(name, "text", a.rebucket, a.suggestedBuckets.toLong,
             a.totalPostings, a.maxBucket.toDouble / budget, at_cap = false,
             a.reason)
-        }
-        case "ann" :: _ => Layout.retryOnceOnMissing {
+        case "ann" :: _ =>
           val a = graft.operators.Similarity.annMaintenanceAdvice(
             graft.operators.Similarity.cdcAnnIndexStats(s, path),
             skewRatio = annSkewRatio, growthFactor = annGrowthFactor,
@@ -2728,7 +2713,6 @@ object CdcBinlog {
             a.nLive,
             if (a.meanCell > 0) a.maxCell / a.meanCell else 0.0,
             a.atCap, a.reason)
-        }
         case "log" :: rest =>
           val keyCol = rest.headOption.getOrElse("doc_id")
           val a = logMaintenanceAdvice(cdcLogStats(s, path, keyCol),
@@ -2765,21 +2749,19 @@ object CdcBinlog {
       try {
         val fpLog = work.resolve("fplog").toString
         (0 to 2).foreach { v =>
-          docs.filter($"doc_id" % 3 >= v)
+          appendCdcFpSegment(docs.filter($"doc_id" % 3 >= v)
             .select($"doc_id", lit(v.toLong).as("ver"),
               ($"doc_id" % 3 === v && $"doc_id" % 5 === 0).as("deleted"),
               md5($"doc_id".cast("string")).as("fp"))
-            .coalesce(2)
-            .write.mode("overwrite").parquet(f"$fpLog/seg=b$v%06d")
+            .coalesce(2), fpLog, Layout.segmentOf(v))
         }
         val bandLog = work.resolve("bandlog").toString
         (0 to 19).foreach { g =>
-          docs.filter($"doc_id" % 20 === g)
+          appendCdcFpSegment(docs.filter($"doc_id" % 20 === g)
             .select($"doc_id", lit(0L).as("ver"),
               ($"doc_id" % 11 === 0).as("deleted"),
               md5($"doc_id".cast("string")).as("payload"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(f"$bandLog/seg=b$g%06d")
+            .coalesce(1), bandLog, Layout.segmentOf(g))
         }
         maintenanceAdviceReport(s,
           Seq(("band_log", "log", bandLog), ("fp_log", "log", fpLog)))
@@ -2846,7 +2828,7 @@ object CdcBinlog {
       // filtered rows (e.g. skipped band-less docs) must not let the fp
       // log silently define the band screen's probe set
       def probes(logDir: String, mod: Int) =
-        Layout.committedView(s, logDir, logLegs).get.read("")
+        Layout.committedView(s, logDir).get.read("")
           .filter($"doc_id" % mod === 0).select($"doc_id").distinct()
           .localCheckpoint(true) // slim id set; DETACH — workdir rotates
       // two disjoint-structure screens, run concurrently (guide §2.6)
@@ -2899,8 +2881,8 @@ object CdcBinlog {
   /** The physical trace of a fold after the third append under the
     * ingest: one base segment + ONLY the post-compaction appends.
     */
-  private def requireFolded(s: SparkSession, dir: String, leg: Leg): Unit = {
-    val segs = segNames(s, dir)
+  private def requireFolded(s: SparkSession, root: String, leg: Leg): Unit = {
+    val segs = segNames(s, root)
     require(segs.contains("seg=base") &&
       segs.size == leg.appends - 3 + 1,
       s"expected seg=base + ${leg.appends - 3} ingest segments, got $segs")
@@ -3070,13 +3052,11 @@ object CdcBinlog {
       .map(_.getLen).sum
   }
 
-  /** `seg=*` directory names under a structure leg, via the same FS. */
-  private[graft] def segNames(s: SparkSession, dir: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("seg=")).toSet
-  }
+  /** The committed `seg=` names of the structure at `root` — its latest
+    * manifest version's ([[Layout.committedView]]).
+    */
+  private[graft] def segNames(s: SparkSession, root: String): Set[String] =
+    Layout.committedView(s, root).map(_.segs.toSet).getOrElse(Set.empty)
 
   // cdcm12 — THREE-WAY heterogeneous fan-out with STAGGERED per-structure
   // folds: the engine's own promise ("the same log multiplex feeds
@@ -3117,11 +3097,11 @@ object CdcBinlog {
         Route(tableImages("d1", cdcm4BatchImages), text, fp),
         Route(tableImages("d2", cdcm5BatchImages), ann))
       // physical state: each structure folded on ITS OWN schedule
-      val txtSegs = segNames(s, s"$txtIdx/doclog")
+      val txtSegs = segNames(s, txtIdx)
       require(txtSegs.contains("seg=base") &&
         txtSegs.size == text.appends - 3 + 1,
         s"text: expected seg=base + ${text.appends - 3} segments, got $txtSegs")
-      val annSegs = segNames(s, s"$annIdx/doclog")
+      val annSegs = segNames(s, annIdx)
       require(annSegs.contains("seg=base") &&
         annSegs.size == ann.appends - 4 + 1,
         s"ann: expected seg=base + ${ann.appends - 4} segments, got $annSegs")
@@ -3256,10 +3236,10 @@ object CdcBinlog {
       require(!te.rebucket && !ae.requantize && !fe.compact && !be.compact,
         s"the daemon left maintenance owing at stream end: " +
           s"text=$te ann=$ae fp=$fe band=$be")
-      require(graft.operators.TextAnalysis.textIndexBucketCount(s, txtIdx)
+      require(graft.operators.TextAnalysis.cdcTextIndexBucketCount(s, txtIdx)
           .contains(text.lastSuggested) && text.lastSuggested > 2,
         s"text marker ${graft.operators.TextAnalysis
-          .textIndexBucketCount(s, txtIdx)} != policy's last suggestion " +
+          .cdcTextIndexBucketCount(s, txtIdx)} != policy's last suggestion " +
           s"${text.lastSuggested} (or never grew)")
       require(ann.lastSuggested > 2,
         s"the ANN policy fired but the quantizer never grew (k=${ann.lastSuggested})")

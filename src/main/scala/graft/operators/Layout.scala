@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Storage-layout optimization: Z-order clustering for multi-dimensional
   * data skipping (SURVEY §2.18).
@@ -83,52 +84,15 @@ object Layout {
       .sortWithinPartitions(leadCol)
       .write.mode("overwrite").parquet(outDir)
 
-  /** Publish a staged directory at `live` via TWO RENAMES of complete
-    * directories — never delete-then-rename (a crash between a delete
-    * of the live dir and the rename of staging would leave NOTHING at
-    * the published path, with the data surviving only under a
-    * PID-suffixed staging name). Here the live dir is first renamed
-    * aside to a trash name, then staging renamed in, then trash
-    * deleted: a crash leaves either the old directory, or a brief
-    * window where the path is absent but BOTH complete directories
-    * exist under adjacent names (trash + live, or trash + staging) —
-    * recovery is renaming one back, never reconstructing data. If the
-    * staging rename fails the set-aside is rolled back so the
-    * published path does not stay absent on a clean error path.
-    */
-  private[graft] def publishDir(fs: org.apache.hadoop.fs.FileSystem,
-                                staging: org.apache.hadoop.fs.Path,
-                                live: org.apache.hadoop.fs.Path): Unit = {
-    val trash = new org.apache.hadoop.fs.Path(live.getParent,
-      s"${live.getName}.trash-${ProcessHandle.current().pid()}")
-    if (fs.exists(live))
-      require(fs.rename(live, trash), s"publish: set-aside of $live failed")
-    if (!fs.rename(staging, live)) {
-      // roll the set-aside back so the published path does not stay
-      // absent on a clean error path — and if THAT also fails, say so:
-      // the old state then survives only under the PID-suffixed trash
-      // name, and a caller reading just "publish failed" would not know
-      // to go looking for it
-      val rollback =
-        if (!fs.exists(trash)) " (no prior state existed; nothing to roll back)"
-        else if (fs.rename(trash, live)) " (old state rolled back to live)"
-        else s"; ROLLBACK ALSO FAILED — old state survives only at $trash"
-      throw new IllegalStateException(
-        s"publish of $staging at $live failed$rollback")
-    }
-    fs.delete(trash, true)
-  }
-
   /** FILE-LEVEL two-rename swap (the q41 / incrementalZorder protocol):
     * `displaced` files move into a `.ftrash-PID` sibling of `liveDir`,
     * then `stagedFiles` (complete replacement files, written anywhere)
     * are renamed into `liveDir`, then the trash is dropped. The live
-    * directory EXISTS THROUGHOUT — which is exactly why this protocol
-    * must not share [[publishDir]]'s `.trash-*` namespace: that
-    * protocol's recovery rule "live present ⇒ residues are garbage"
+    * directory EXISTS THROUGHOUT, so a residue cannot be judged by
+    * whether live exists: a rule "live present ⇒ residues are garbage"
     * would delete the only copies of the displaced rows if a crash hit
-    * between set-aside and swap-in. Instead the distinct `ftrash`
-    * namespace carries its own commit marker: a `_PENDING` file listing
+    * between set-aside and swap-in. Instead the `ftrash` namespace
+    * carries its own commit marker: a `_PENDING` file listing
     * the replacement file names is written FIRST and deleted only after
     * every replacement is in, so [[recoverPublish]] can tell the two
     * crash families apart — marker present = swap incomplete, roll back
@@ -191,10 +155,10 @@ object Layout {
     * maintenance serialized on its thread, so the
     * never-concurrent-with-ingest contract still holds per structure)
     * and across LEGS OF ONE WRITE (an append/fold's postings and doclog
-    * jobs, whose commit contract is already intersection-of-_SUCCESS —
+    * jobs, which commit together by one manifest version afterwards —
     * order-free by construction). All legs run to completion even if one
     * fails — an interrupted sibling mid-write would be replay-safe
-    * anyway (a torn uncommitted segment is invisible to readers), but
+    * anyway (a segment no manifest lists is invisible to readers), but
     * letting it finish keeps the failure the only abnormality — then the
     * first failure rethrows on the calling thread. Spark's scheduler
     * properties (job group, description) are InheritableThreadLocals, so
@@ -241,29 +205,19 @@ object Layout {
     }
   }
 
-  /** Run a probe body that may race [[publishDir]] two-rename swaps,
-    * retrying (bounded, with backoff) while it fails on a missing path.
-    * The swap's invariant makes a retry always safe: every rename moves
-    * a COMPLETE directory, so a racing reader either (a) lists one
-    * consistent version — old or new — and succeeds, (b) hits the
-    * one-rename window where the live path is absent (`PATH_NOT_FOUND`
-    * at plan time, or a [[committedView]] read's `basePath` not found),
-    * or (c) lists the old version and then scans after
-    * the trash delete has removed those files (`FileNotFoundException`
-    * mid-scan — or `java.nio.file.NoSuchFileException` where a local
-    * read goes through NIO). There is NO outcome that silently mixes
-    * versions: stale listings point at renamed-away paths, which fail
-    * loudly rather than resolve to new content. Each retry re-runs `body` from
+  /** Run a probe body, retrying (bounded, with backoff) while it fails on
+    * a missing path. The segment-protocol structures no longer need it:
+    * their readers pin a manifest version whose files no fold renames
+    * away ([[committedView]]). It is kept for the benchmark's probes and
+    * for the gates' `detached` probes. Each retry re-runs `body` from
     * scratch — it must REBUILD its DataFrames (a by-name block calling
-    * `spark.read` again, so every attempt re-lists) and MATERIALIZE
-    * them (a lazy frame returned unexecuted would defeat the guard).
-    * One retry is NOT always enough: under dense fold churn (overlapped
-    * maintenance legs shorten each fold cycle) a slow probe's attempt
-    * can straddle swap N and its retry straddle swap N+1, so the guard
-    * retries up to [[retryAttempts]] times with a short growing backoff
-    * — a missing path that persists past every attempt is not a
-    * transient window, the state needs [[recoverPublish]], and the
-    * rethrown error says so.
+    * `spark.read` again) and MATERIALIZE them (a lazy frame returned
+    * unexecuted would defeat the guard). The guard retries up to
+    * [[retryAttempts]] times with a short growing backoff on a
+    * `FileNotFoundException`, a `java.nio.file.NoSuchFileException`, a
+    * `PATH_NOT_FOUND` or a missing `basePath`; a missing path that
+    * persists past every attempt is not transient, and the rethrown
+    * error says so.
     */
   private[graft] def retryOnceOnMissing[T](body: => T): T = {
     // cause-chain walk is BOUNDED (depth cap + identity cycle guard —
@@ -319,13 +273,12 @@ object Layout {
   // (foreachBatch bodies serialize on the driver; CdcProbeCompactRaceSpec's
   // maintenance thread folds sequentially) — across processes nothing
   // stopped two maintenance jobs from staging competing folds of the
-  // same structure, whose interleaved two-rename swaps could publish one
-  // fold and leak the other's staging as a residue recoverPublish would
-  // later mistake for a crash. The lease closes that: every compactor
+  // same structure, whose interleaved commits would fail one fold by name
+  // only after it had done all its work. The lease closes that: every compactor
   // create-exclusives `<live>.foldlock` (atomic on HDFS; best-effort on
   // raw local FS, which is fine — local contention is same-host and the
   // PID rule below adjudicates it) BEFORE staging and deletes it after
-  // publish. A lease left by a holder that died between acquire and
+  // its commit. A lease left by a holder that died between acquire and
   // release is taken over when the holder's PID is provably dead on this
   // host, or — the cross-host rule, where PID liveness is unknowable —
   // when the lease file is older than `staleMs`. The holder HEARTBEATS
@@ -576,25 +529,37 @@ object Layout {
     }
   }
 
-  // ---- replay fence for CDC-maintained structures -----------------------
+  // ---- the segment protocol of the CDC-maintained structures -------------
   //
-  // foreachBatch is AT-LEAST-ONCE: a crash between a batch's side effects
-  // and its checkpoint commit replays the batch on resume. Segment writes
-  // are batch-id-addressed overwrites, so a plain replay is idempotent —
-  // EXCEPT across a mid-stream compaction: if the fold consumed the
-  // batch's segment into seg=base before the crash, the replay would
-  // re-create rows base already holds, and the merge-on-read probes
-  // (which join postings/cells on (doc_id|vec_id, ver)) would double-
-  // count them. The fence closes that seam: every fold records the
-  // highest segment ordinal it consumed in a `_folded_through` marker at
-  // the structure root (written into staging, published atomically with
-  // the fold), and appends SKIP any segment at or below it — the skipped
-  // replay's content is already in base, byte-for-byte, because batch
-  // offsets come from the checkpoint WAL and the image derivation is
-  // deterministic. Folds consume only segments whose write COMMITTED
-  // (`_SUCCESS` present): a torn segment from a crashed append belongs
-  // to an uncommitted batch, so it is dropped from the published tree —
-  // never folded, never fenced — and the batch's replay rewrites it.
+  // The text index, the ANN index, the fp log, the band log, the IVM
+  // aggregate view (`CdcMaterializer.maintainAggregate`) and the durable
+  // windowed view (`StreamOps.maintainWindowedAgg`) all store
+  // batch-addressed `seg=` segments under one protocol. A structure's root
+  // holds generation directories (`g<version>`) and a versioned manifest,
+  // `_manifest` — Spark's HDFSMetadataLog, the metadata log of Structured
+  // Streaming. Each version names the current generation, the segments
+  // committed in it, the replay fence and each leg's read schema, and
+  // adding a version is the ONLY commit point:
+  //  - [[append]] writes a batch's legs into the current generation, then
+  //    adds the version that lists the new segment;
+  //  - [[fold]] writes a whole new tree into a fresh generation, then adds
+  //    the version that names it;
+  //  - [[committedView]] reads the latest version once and resolves every
+  //    path through it.
+  // Nothing is renamed, so a reader cannot see a torn or missing state: a
+  // segment no version lists (a crashed append's) and a generation no
+  // version names (a crashed fold's) are invisible, and a fold leaves the
+  // generation a reader pinned in place. A structure supplies only its leg
+  // writes and its staging writes.
+  //
+  // The replay fence: foreachBatch is AT-LEAST-ONCE, and a crash between a
+  // batch's append and its checkpoint commit replays the batch. A replay
+  // rewrites exactly its own segment with the same rows (batch offsets come
+  // from the checkpoint WAL and the image derivation is deterministic) —
+  // unless a fold already consumed the segment into `seg=base`: re-created
+  // rows would then double against base through the probes' (key, ver)
+  // liveness joins. So every fold records the highest ordinal it consumed,
+  // and [[append]] skips any segment at or below it.
 
   /** Batch `batchId`'s segment name, `bNNNNNN`. */
   private[graft] def segmentOf(batchId: Long): String = f"b$batchId%06d"
@@ -610,208 +575,202 @@ object Layout {
     when(col("seg") === "base", lit(-1L))
       .otherwise(substring(col("seg"), 2, Int.MaxValue).cast("long"))
 
-  /** The structure's replay fence, if any fold has run.
-    *
-    * Concurrency contract: appends and folds on the SAME structure must
-    * serialize (every maintained-structure driver here runs both inside
-    * one foreachBatch, and cross-process folds take [[withFoldLease]]).
-    * The guard below is for the one hole that contract can't close: a
-    * fence PROBE landing inside [[publishDir]]'s two-rename window sees
-    * the root momentarily absent and would read "no fence ever" — so a
-    * miss with a missing root (or a marker that vanishes between exists
-    * and open) re-checks once after the swap settles, mirroring
-    * [[retryOnceOnMissing]].
+  /** The generation a fold commits at manifest `version` (the first
+    * append's is version 0's), and the version a generation name holds.
     */
-  private[graft] def foldedThrough(fs: org.apache.hadoop.fs.FileSystem,
-                                   root: org.apache.hadoop.fs.Path): Option[Long] = {
-    val marker = new org.apache.hadoop.fs.Path(root, "_folded_through")
-    def readMarker(): Option[Long] =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-        finally in.close()
-      }
-    // the retry read sits in its own handler: a SECOND concurrent swap
-    // can vanish the marker again between the retry's exists and open,
-    // and that race must be absorbed (as "no fence yet"), not escape —
-    // the caller re-probes on its next batch anyway
-    def readMarkerAbsorbed(): Option[Long] =
-      try readMarker()
-      catch { case _: java.io.FileNotFoundException => None }
-    try {
-      val r = readMarker()
-      if (r.isEmpty && !fs.exists(root)) { Thread.sleep(50L); readMarkerAbsorbed() }
-      else r
-    } catch {
-      case _: java.io.FileNotFoundException =>
-        Thread.sleep(50L); readMarkerAbsorbed()
+  private def generationOf(version: Long): String = f"g$version%06d"
+  private def generationVersion(name: String): Option[Long] =
+    if (name.matches("g[0-9]+")) Some(name.drop(1).toLong) else None
+
+  private def manifestLog(s: SparkSession, root: String) =
+    new org.apache.spark.sql.execution.streaming.checkpointing
+      .HDFSMetadataLog[SegmentManifest](s, s"$root/_manifest")
+
+  /** The latest manifest version of the structure at `root`, if any. The
+    * existence probe keeps a read of an absent structure from creating it
+    * (the log's constructor makes its directory).
+    */
+  private def latest(s: SparkSession, root: String): Option[(Long, SegmentManifest)] = {
+    val dir = new org.apache.hadoop.fs.Path(root, "_manifest")
+    if (!dir.getFileSystem(s.sparkContext.hadoopConfiguration).exists(dir)) None
+    else manifestLog(s, root).getLatest()
+  }
+
+  /** Add manifest `version`, or fail by name if another writer added it. */
+  private def commit(s: SparkSession, root: String, version: Long, m: SegmentManifest): Unit =
+    if (!manifestLog(s, root).add(version, m))
+      throw new IllegalStateException(
+        s"manifest version $version of $root already exists — another " +
+          "writer committed to this structure concurrently")
+
+  /** The replay fence of the structure at `root`: the highest segment
+    * ordinal a fold consumed, if any fold has run.
+    */
+  private[graft] def fenceOf(s: SparkSession, root: String): Option[Long] =
+    latest(s, root).flatMap(_._2.fence)
+
+  /** A structure's leg directory; a state log is its own single leg `""`. */
+  private def legDir(dir: String, leg: String): String =
+    if (leg.isEmpty) dir else s"$dir/$leg"
+
+  /** A schema as a parquet write records it and a read infers it back:
+    * every field, element and value nullable.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case st: StructType =>
+      StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+
+  /** One committed snapshot of a structure, pinned to one manifest
+    * version: its generation directory `dir` (where the legs, the ANN
+    * index's `centroids` and the text index's `_nbuckets` live), the
+    * committed segment names and the replay fence.
+    */
+  private[graft] final class SegmentView(s: SparkSession, root: String, m: SegmentManifest) {
+    val dir: String = s"$root/${m.generation}"
+    val segs: Seq[String] = m.segments
+    val fence: Option[Long] = m.fence
+
+    /** `leg`'s committed segments, `seg` read as a partition column,
+      * with the schema the manifest recorded (no footer read).
+      */
+    def read(leg: String): DataFrame = {
+      val d = legDir(dir, leg)
+      s.read.schema(DataType.fromJson(m.schemas(leg)).asInstanceOf[StructType])
+        .option("basePath", d).parquet(segs.map(n => s"$d/$n"): _*)
     }
   }
 
-  /** The replay fence of the structure at `root`, on the session's
-    * filesystem ([[foldedThrough]]).
+  /** Where an [[append]] or a [[fold]] writes: segment `segment` of each
+    * leg under the generation directory `dir`. Each [[write]] records the
+    * leg's read schema — its data columns, then `seg`, then its
+    * partition columns, the order a read puts them in.
     */
-  private[graft] def fenceOf(s: SparkSession, root: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    foldedThrough(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
+  private[graft] final class SegmentWriter(val dir: String, segment: String) {
+    private val schemas = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Record the fence in a staging tree about to be published. */
-  private[graft] def writeFoldedThrough(fs: org.apache.hadoop.fs.FileSystem,
-                                        stagingRoot: org.apache.hadoop.fs.Path,
-                                        upTo: Long): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(stagingRoot, "_folded_through"), false)
-    try out.write(upTo.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+    def write(leg: String, rows: DataFrame, partitionBy: String*): Unit = {
+      rows.write.mode("overwrite").partitionBy(partitionBy: _*)
+        .parquet(s"${legDir(dir, leg)}/seg=$segment")
+      val (parts, data) = rows.schema.fields.partition(f => partitionBy.contains(f.name))
+      schemas.put(leg, nullable(StructType(
+        (data :+ StructField("seg", StringType)) ++ parts)).json)
+    }
 
-  /** The COMMITTED `seg=*` directory names under a leg (those whose
-    * write finished — `_SUCCESS` present); [[committedView]] lists each
-    * leg through here.
-    */
-  private[graft] def committedSegs(fs: org.apache.hadoop.fs.FileSystem,
-                                   legDir: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(legDir)) Seq.empty
-    else fs.listStatus(legDir).map(_.getPath)
-      .filter(p => p.getName.startsWith("seg=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      .map(_.getName).toSeq.sorted
-
-  // ---- the segment protocol of the CDC-maintained structures -------------
-  //
-  // The text index, the ANN index, the fp log, the band log, the IVM
-  // aggregate view (`CdcMaterializer.maintainAggregate`) and the durable
-  // windowed view (`StreamOps.maintainWindowedAgg`) all store
-  // batch-addressed `seg=` segments under one protocol: [[append]] writes a
-  // batch's segment past the replay fence, [[committedView]] is what every
-  // probe, stats call and fold reads, and [[fold]] publishes a new base.
-  // A structure supplies only its leg names and its staging writes.
-
-  /** A structure's leg directory; a state log is its own single leg `""`. */
-  private def legDir(root: String, leg: String): String =
-    if (leg.isEmpty) root else s"$root/$leg"
-
-  /** One committed snapshot of a structure: the segment names committed
-    * in every leg, and their reads.
-    */
-  private[graft] final class SegmentView(s: SparkSession, root: String,
-                                         val segs: Seq[String]) {
-    /** `leg`'s committed segments, `seg` read as a partition column. */
-    def read(leg: String): DataFrame = {
-      val dir = legDir(root, leg)
-      s.read.option("basePath", dir).parquet(segs.map(n => s"$dir/$n"): _*)
+    private[Layout] def written: Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      schemas.asScala.toMap
     }
   }
 
   /** The committed view of a CDC-maintained structure — the one read of
-    * every probe, stats call and fold. Each leg (`doclog` + `postings`
-    * for the text index, `doclog` + `cells` for the ANN index, `""` for
-    * a state log) is listed once through [[committedSegs]], and the legs
-    * are intersected: an append writes its legs as separate non-atomic
-    * jobs, so a reader racing a writer (or surviving its crash) could
-    * otherwise see one leg of a batch without the other, or a leg's torn
-    * `_temporary` remains. None when nothing is committed — an absent
-    * structure, one before its first committed batch, or a root briefly
-    * absent inside [[publishDir]]'s two-rename window. The log probes
-    * answer None empty (the ingest-screening contract); the index probes
-    * turn it into [[missingIndex]].
+    * every probe, stats call and fold: the latest manifest version, read
+    * once and pinned. No leg directory is listed. None when nothing is
+    * committed (an absent structure, or one before its first committed
+    * batch). The log probes answer None empty (the ingest-screening
+    * contract); the index probes turn it into [[missingIndex]].
     */
-  private[graft] def committedView(s: SparkSession, root: String,
-                                   legs: Seq[String]): Option[SegmentView] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = legs
-      .map(l => committedSegs(fs, new org.apache.hadoop.fs.Path(legDir(root, l))))
-      .reduce(_ intersect _)
-    if (segs.isEmpty) None else Some(new SegmentView(s, root, segs))
-  }
+  private[graft] def committedView(s: SparkSession, root: String): Option[SegmentView] =
+    latest(s, root).map { case (_, m) => new SegmentView(s, root, m) }
 
   /** An index probe's answer to an empty [[committedView]]: an absent
-    * maintained INDEX is a caller error or a transient publish swap,
-    * never a valid empty answer, so it throws the FileNotFoundException
-    * [[retryOnceOnMissing]] retries.
+    * maintained INDEX is a caller error, never a valid empty answer.
     */
   private[graft] def missingIndex(root: String): Nothing =
     throw new java.io.FileNotFoundException(
-      s"no committed segments under $root (absent index, or a publish " +
-        "swap in flight — probes retry via Layout.retryOnceOnMissing)")
+      s"no committed manifest under $root (absent index)")
 
   /** Append one batch's `segment` to the structure at `root`. A segment
     * at or below the replay fence was already folded into `seg=base`, so
-    * its replay is SKIPPED (false) — re-created rows would double against
-    * base through the probes' (key, ver) liveness joins. Otherwise the
-    * structure's leg writes run concurrently through [[inParallelLegs]]
-    * (their commit contract is [[committedView]]'s intersect, so order is
-    * free) and the answer is true. `legWrites` is evaluated only past the
-    * fence: a structure's own checks and first-batch setup never run for
-    * a fenced replay.
+    * its replay is SKIPPED (false). Otherwise the structure's leg writes
+    * run concurrently through [[inParallelLegs]] into the current
+    * generation, and the append commits by adding the next manifest
+    * version: the previous one plus the new segment (the first append's
+    * is version 0, in generation `g000000`). If that version already
+    * exists, a concurrent writer got there first and the append fails by
+    * name. `legWrites` is called only past the fence: a structure's own
+    * checks and first-batch setup never run for a fenced replay.
     */
   private[graft] def append(s: SparkSession, root: String, segment: String)
-                           (legWrites: => Seq[() => Unit]): Boolean =
-    if (fenceOf(s, root).exists(segmentOrdinal(segment) <= _)) false
-    else { inParallelLegs(legWrites); true }
+                           (legWrites: SegmentWriter => Seq[() => Unit]): Boolean = {
+    val last = latest(s, root)
+    if (last.flatMap(_._2.fence).exists(segmentOrdinal(segment) <= _)) false
+    else {
+      val version = last.fold(0L)(_._1 + 1)
+      val m = last.fold(SegmentManifest(generationOf(0), Nil, None, Map.empty))(_._2)
+      val out = new SegmentWriter(s"$root/${m.generation}", segment)
+      inParallelLegs(legWrites(out))
+      commit(s, root, version, m.copy(
+        segments = (m.segments :+ s"seg=$segment").distinct.sorted,
+        schemas = out.written ++ m.schemas))
+      true
+    }
+  }
 
   /** The one fold protocol of the CDC-maintained structures:
     *  1. take the cross-process fold lease ([[withFoldLease]]);
-    *  2. read the [[committedView]] of `legs` — a torn segment belongs
-    *     to an uncommitted batch that will replay, so it is dropped from
-    *     the published tree, never folded and never fenced;
-    *  3. compute the replay fence: the highest ordinal consumed, never
-    *     below the fence already recorded (a base-only re-fold keeps it);
-    *  4. `stage(view, staging)` writes the structure's whole new tree
-    *     under `<root>.<tag>-<pid>`;
-    *  5. write `_folded_through` into the staged tree and publish it with
-    *     [[publishDir]]'s two-rename swap, so the fence lands atomically
-    *     with the fold and a crash leaves the old tree or the new one for
-    *     [[recoverPublish]], never neither.
+    *  2. pin the [[committedView]] — a segment no version lists belongs
+    *     to an uncommitted batch that will replay, so it is never folded
+    *     and never fenced;
+    *  3. delete any generation newer than the pinned one: a crashed
+    *     fold's, which no version names (the lease rules out a live one);
+    *  4. `stage(view, out)` writes the structure's whole new tree — its
+    *     `seg=base` legs and any side files — into a fresh generation;
+    *  5. commit by adding one manifest version that names the generation,
+    *     lists `seg=base` and carries the replay fence: the highest
+    *     ordinal consumed, never below the fence already recorded (a
+    *     base-only re-fold keeps it);
+    *  6. keep the new generation and the two before it — a view pinned
+    *     before this fold still reads through it and the next one — and
+    *     delete every other generation with the manifest versions older
+    *     than the kept ones.
     * Never run concurrently with an append to the same structure: the
     * stream's foreachBatch serializes them in-process, and the lease
     * makes a second maintenance process fail by name.
     */
-  private[graft] def fold(s: SparkSession, root: String, legs: Seq[String],
-                          tag: String)(stage: (SegmentView, String) => Unit): Unit = {
+  private[graft] def fold(s: SparkSession, root: String)
+                         (stage: (SegmentView, SegmentWriter) => Unit): Unit = {
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     withFoldLease(fs, p) {
-      val view = committedView(s, root, legs)
-      require(view.isDefined, s"$tag: no committed segments under $root")
-      val upTo = (foldedThrough(fs, p).toSeq ++ view.get.segs
-        .filter(_ != "seg=base")
+      val (version, m) = latest(s, root).getOrElse(
+        throw new IllegalArgumentException(s"fold: no committed segments under $root"))
+      val pinned = generationVersion(m.generation).get
+      val (older, orphans) = fs.listStatus(p).flatMap(st => generationVersion(st.getPath.getName))
+        .partition(_ <= pinned)
+      orphans.foreach(g => fs.delete(new org.apache.hadoop.fs.Path(p, generationOf(g)), true))
+      val next = version + 1
+      val out = new SegmentWriter(s"$root/${generationOf(next)}", "base")
+      stage(new SegmentView(s, root, m), out)
+      val fence = (m.fence.toSeq ++ m.segments.filter(_ != "seg=base")
         .map(n => segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-      val staging = new org.apache.hadoop.fs.Path(
-        s"$root.$tag-${ProcessHandle.current().pid()}")
-      stage(view.get, staging.toString)
-      upTo.foreach(writeFoldedThrough(fs, staging, _))
-      publishDir(fs, staging, p)
+      commit(s, root, next, SegmentManifest(generationOf(next), Seq("seg=base"), fence, out.written))
+      val kept = (older.sorted :+ next).takeRight(3)
+      older.filterNot(kept.contains)
+        .foreach(g => fs.delete(new org.apache.hadoop.fs.Path(p, generationOf(g)), true))
+      manifestLog(s, root).purge(kept.head)
     }
   }
 
-  /** Automate [[publishDir]]'s documented crash recovery. For a
-    * published path `live`, inspect its sibling `.trash-*` /
-    * `.compact-*` / `.optimize-*` residues:
+  /** Automate the crash recovery of the rename-based protocols that
+    * remain: [[fileLevelSwap]] and the fold lease. For a path `live`:
     *
-    *  - `live` missing + a trash sibling present → the crash hit
-    *    between the two renames; rename the trash back (the OLD state —
-    *    the staged result, if also present, is re-derivable and
-    *    dropped).
-    *  - `live` missing + only a staging sibling present → the crash hit
-    *    after the old dir was consumed (or first publish); rename the
-    *    staging in (the NEW state — it is complete by the publish
-    *    protocol: staging is only ever a fully-written directory).
-    *  - `live` present → every `.trash-*`/`.compact-*`/`.optimize-*`
-    *    residue is a leftover from a completed or abandoned
-    *    maintenance run; delete them.
     *  - `.ftrash-*` residues ([[fileLevelSwap]]'s namespace, where live
-    *    exists throughout) are handled FIRST by their own `_PENDING`
-    *    commit marker: present → roll the incomplete swap back (drop
+    *    exists throughout) are decided by their own `_PENDING` commit
+    *    marker: present → roll the incomplete swap back (drop
     *    re-derivable replacements, restore displaced originals);
     *    absent → the swap committed, the trash is garbage.
+    *  - a dead holder's `.foldlock` and dead claimants' lease tombstones
+    *    are cleared; a live holder's lease is left in place.
     *
-    * Returns what it did as a small report string (callers log it).
-    * Run from the same maintenance context as the compactors — never
-    * concurrently with a publish in flight (a LIVE publisher's staging
-    * dir is indistinguishable from a crashed one's).
+    * A segment-protocol structure needs no recovery of its own: its
+    * manifest is its only commit point, and the next [[fold]] deletes a
+    * crashed fold's generation. Returns what it did as a small report
+    * string (callers log it). Run from the same maintenance context as
+    * the compactors — never concurrently with a swap in flight.
     */
   private[graft] def recoverPublish(fs: org.apache.hadoop.fs.FileSystem,
                                     live: org.apache.hadoop.fs.Path): String = {
@@ -821,31 +780,11 @@ object Layout {
       else fs.listStatus(parent).map(_.getPath)
         .filter(p => p.getName.startsWith(s"${live.getName}.$tag-"))
     val report = scala.collection.mutable.ListBuffer.empty[String]
-    // DIRECTORY-LEVEL restore first when live itself is gone: a
-    // publishDir crash between its two renames leaves the only complete
-    // copy under `.trash-*`. The ftrash rollback below mkdirs(live) —
-    // running IT first would fabricate a live dir holding only the
-    // displaced files, and the NEXT recovery call, seeing live present,
-    // would vacuum the `.trash-*` residue holding the real old state.
-    val dirTrash = siblings("trash")
-    if (!fs.exists(live) && dirTrash.nonEmpty) {
-      // with residues from TWO crashed maintenance runs the right old
-      // state is ambiguous — refuse rather than restore an arbitrary one
-      require(dirTrash.length == 1,
-        s"recover: ${dirTrash.length} trash residues for ${live.getName} " +
-          s"(${dirTrash.map(_.getName).mkString(", ")}) — which old state to " +
-          "restore is ambiguous; resolve manually")
-      require(fs.rename(dirTrash.head, live), s"recover: restore ${dirTrash.head}")
-      report += s"restored ${live.getName} from trash"
-    }
-    // FILE-LEVEL swap residues next ([[fileLevelSwap]]'s `.ftrash-*`
-    // namespace — live exists throughout that protocol, so these must
-    // NOT fall through to the "live present ⇒ vacuum" rule below): the
-    // `_PENDING` commit marker decides. Present → the swap never
-    // committed; undo any replacements already renamed in (their names
-    // are the marker's content; they are re-derivable) and restore the
-    // displaced originals — the only copies. Absent → the swap
-    // committed and the trash is garbage.
+    // `_PENDING` present → the swap never committed; undo any
+    // replacements already renamed in (their names are the marker's
+    // content; they are re-derivable) and restore the displaced
+    // originals — the only copies. Absent → the swap committed and the
+    // trash is garbage.
     val fRolledBack = siblings("ftrash").map { t =>
       val marker = new org.apache.hadoop.fs.Path(t, "_PENDING")
       if (fs.exists(marker)) {
@@ -869,16 +808,6 @@ object Layout {
     }
     if (fRolledBack.contains(true))
       report += s"rolled back incomplete file-level swap of ${live.getName}"
-    val staged = siblings("compact") ++ siblings("optimize")
-    if (!fs.exists(live) && staged.nonEmpty) {
-      require(fs.rename(staged.head, live), s"recover: publish ${staged.head}")
-      staged.tail.foreach(fs.delete(_, true))
-      report += s"published staged ${live.getName}"
-    } else {
-      val residues = siblings("trash") ++ staged
-      residues.foreach(fs.delete(_, true))
-      if (residues.nonEmpty) report += s"vacuumed ${residues.length} residues"
-    }
     // a fold that died between lease acquire and release left its
     // `.foldlock` behind — clear it iff the holder is provably dead
     // (same-host PID check / stale window), never a live holder's
@@ -1343,9 +1272,8 @@ object Layout {
       // metadata op — never deleted before replacements are in), staged
       // replacements renamed in, trash dropped last. A crash mid-swap
       // leaves every displaced file intact under the trash name and is
-      // rolled back deterministically by [[recoverPublish]]. (The
-      // whole-directory set-aside of [[publishDir]] doesn't apply here:
-      // non-candidate files must stay physically untouched in place.)
+      // rolled back deterministically by [[recoverPublish]].
+      // Non-candidate files stay physically untouched in place.
       val sp = new org.apache.hadoop.fs.Path(staging)
       val stagedFiles = fs.listStatus(sp)
         .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
@@ -1520,3 +1448,14 @@ object Layout {
     "q40_bloom_pruned_scan" -> q40Sql,
     "q41_surgical_delete" -> q41Sql)
 }
+
+/** One version of a segment-protocol structure's manifest
+  * ([[Layout.committedView]]): the current generation directory, the
+  * segments committed in it (sorted `seg=` names), the replay fence, and
+  * each leg's read schema (JSON), keyed by leg name. Top-level, so the
+  * metadata log's JSON reader can reflect on it.
+  */
+private[graft] final case class SegmentManifest(generation: String,
+                                                segments: Seq[String],
+                                                fence: Option[Long],
+                                                schemas: Map[String, String])

@@ -16,16 +16,31 @@ import graft.core.Tables._
   * plus build-once semantics, which this provides with the same
   * cross-JVM-safe staging + atomic-move + `_COMPLETE`-marker protocol as
   * the binlog fixture cache (parallel test/bench/verify JVMs share /tmp;
-  * the loser of a race discards its copy).
+  * the loser of a race discards its copy). A tree is named
+  * `graft-index-<key>-<fixture>-<sf>`; the key changes with the tree's
+  * layout, and building a tree deletes the same fixture's trees under
+  * other keys.
   */
 object PersistedIndexes {
 
   private def sfKey(sfDir: String): String = new java.io.File(sfDir).getName
 
-  private def cached(dirName: String)(build: String => Unit): String = synchronized {
+  private val TreeName = "graft-index-([^-]+)-(.+)".r
+
+  private[operators] def cached(dirName: String)(build: String => Unit): String = synchronized {
     val dir = Paths.get(sys.props("java.io.tmpdir"), dirName)
     val marker = dir.resolve("_COMPLETE")
     if (!Files.exists(marker)) {
+      dirName match {
+        case TreeName(key, fixture) =>
+          scala.util.Using.resource(Files.list(dir.getParent)) { st =>
+            st.forEach(p => p.getFileName.toString match {
+              case TreeName(other, `fixture`) if other != key => deleteRecursively(p)
+              case _ => ()
+            })
+          }
+        case _ => ()
+      }
       val staging = dir.resolveSibling(
         s"${dir.getFileName}.tmp-${ProcessHandle.current().pid()}")
       deleteRecursively(staging)
@@ -105,7 +120,7 @@ object PersistedIndexes {
     * by construction, so the probe oracle is the one-shot build's.
     */
   def textIndexLifecycle(s: SparkSession, sfDir: String): String =
-    cached(s"graft-index-r11d-textlc-${sfKey(sfDir)}") { dir =>
+    cached(s"graft-index-r11e-textlc-${sfKey(sfDir)}") { dir =>
       import s.implicits._
       val docs = documents(s, sfDir)
       val slices = Seq($"doc_id" % 10 < 7,

@@ -502,7 +502,7 @@ object Similarity {
                           segment: String, k: Int = 16): Boolean = {
     val s = images.sparkSession
     import s.implicits._
-    Layout.append(s, indexDir, segment) {
+    Layout.append(s, indexDir, segment) { out =>
       // the quantizer runs on a float view (the assigners' native-dot
       // path); the STORED embedding stays the exact long array the
       // integer-dot probe scores — cell choice may be float-rounded,
@@ -510,7 +510,7 @@ object Similarity {
       val live = images.filter(!$"deleted")
         .withColumn("emb_exact", $"embedding")
         .withColumn("embedding", $"embedding".cast("array<float>"))
-      val centPath = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
+      val centPath = new org.apache.hadoop.fs.Path(s"${out.dir}/centroids")
       val fs = centPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       val assigned =
         if (!fs.exists(centPath)) {
@@ -521,21 +521,15 @@ object Similarity {
           a
         } else assignToCentroids(live, s.read.parquet(centPath.toString))
       Seq(
-        () => assigned
+        () => out.write("cells", assigned
           .withColumn("embedding", $"emb_exact").drop("emb_exact")
           // cluster by cell before the partitionBy write (tasks x cells
           // small files per segment otherwise — see appendCdcTextSegment)
-          .repartition($"cell")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$indexDir/cells/seg=$segment"),
-        () => images.select($"vec_id", $"ver", $"deleted")
-          .coalesce(4)
-          .write.mode("overwrite").parquet(s"$indexDir/doclog/seg=$segment"))
+          .repartition($"cell"), "cell"),
+        () => out.write("doclog", images.select($"vec_id", $"ver", $"deleted")
+          .coalesce(4)))
     }
   }
-
-  /** The CDC ANN index's legs: the doc log and the cells. */
-  private[graft] val cdcAnnLegs = Seq("doclog", "cells")
 
   /** Fold the CDC ANN index to a live-only base segment — the ANN twin
     * of [[TextAnalysis.compactCdcTextIndex]]: superseded and deleted
@@ -543,12 +537,12 @@ object Similarity {
     * made under the persisted quantizer, which only a rebuild
     * replaces), the doc log collapses to live rows, tombstones vanish.
     * Probe-invariant by construction (spec-pinned); restores O(live)
-    * doc-log scans and O(1) seg fan-out per cell. Published through
+    * doc-log scans and O(1) seg fan-out per cell. Committed through
     * [[Layout.fold]].
     */
   def compactCdcAnnIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    Layout.fold(s, indexDir, cdcAnnLegs, "compact") { (view, staging) =>
+    Layout.fold(s, indexDir) { (view, out) =>
       val live = view.read("doclog")
         .groupBy($"vec_id")
         .agg(max(struct($"ver", $"deleted")).as("m"))
@@ -558,20 +552,17 @@ object Similarity {
       try {
         val cells = view.read("cells").drop("seg")
         // three independent staging legs off the pinned `live` frame,
-        // published atomically with the fold (guide §2.6)
+        // committed with the fold (guide §2.6)
         Layout.inParallelLegs(Seq(
-          () => cells
+          () => out.write("cells", cells
             .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
             .select(cells.columns.map(col): _*)
-            .repartition($"cell")
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$staging/cells/seg=base"),
-          () => live.select($"vec_id", $"ver", $"deleted")
-            .coalesce(4)
-            .write.mode("overwrite").parquet(s"$staging/doclog/seg=base"),
+            .repartition($"cell"), "cell"),
+          () => out.write("doclog", live.select($"vec_id", $"ver", $"deleted")
+            .coalesce(4)),
           // centroids carry over unchanged (the quantizer is rebuild-only)
-          () => s.read.parquet(s"$indexDir/centroids")
-            .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")))
+          () => s.read.parquet(s"${view.dir}/centroids")
+            .coalesce(1).write.mode("overwrite").parquet(s"${out.dir}/centroids")))
       } finally live.unpersist()
     }
   }
@@ -597,12 +588,12 @@ object Similarity {
     * assignment pass and one slim (k·dims rows) centroid shuffle,
     * nothing corpus-sized is collected or broadcast. Superseded and
     * tombstoned versions are dropped and the doc log collapses (a
-    * requantize subsumes a compact). Published through [[Layout.fold]].
+    * requantize subsumes a compact). Committed through [[Layout.fold]].
     */
   def requantizeCdcAnnIndex(s: SparkSession, indexDir: String, k: Int = 16,
                             iterations: Int = 2): Unit = {
     import s.implicits._
-    Layout.fold(s, indexDir, cdcAnnLegs, "optimize") { (view, staging) =>
+    Layout.fold(s, indexDir) { (view, out) =>
     val live = view.read("doclog")
       .groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
@@ -652,17 +643,13 @@ object Similarity {
           .withColumn("embedding", $"emb_exact").drop("emb_exact")
         // three independent staging legs (assigned reads the pinned
         // rows, cent is a k-row checkpoint) — run concurrently
-        // (guide §2.6); the fold publishes them atomically
+        // (guide §2.6); the fold commits them together
         Layout.inParallelLegs(Seq(
-          () => assigned
-            .repartition($"cell")
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$staging/cells/seg=base"),
-          () => live.select($"vec_id", $"ver", $"deleted")
-            .coalesce(4)
-            .write.mode("overwrite").parquet(s"$staging/doclog/seg=base"),
+          () => out.write("cells", assigned.repartition($"cell"), "cell"),
+          () => out.write("doclog", live.select($"vec_id", $"ver", $"deleted")
+            .coalesce(4)),
           () => cent.coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/centroids")))
+            .parquet(s"${out.dir}/centroids")))
       } finally rows.unpersist()
     } finally live.unpersist()
     }
@@ -685,7 +672,7 @@ object Similarity {
     import s.implicits._
     // committed view, like the probe: the policy must never threshold
     // on a torn in-flight append's half-written batch
-    val view = Layout.committedView(s, indexDir, cdcAnnLegs)
+    val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
     val live = view.read("doclog")
       .groupBy($"vec_id")
@@ -695,7 +682,7 @@ object Similarity {
     val occupancy = view.read("cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .groupBy($"cell").agg(count(lit(1)).as("n_live"))
-    s.read.parquet(s"$indexDir/centroids").select($"cell")
+    s.read.parquet(s"${view.dir}/centroids").select($"cell")
       .join(occupancy, Seq("cell"), "left")
       .select($"cell", coalesce($"n_live", lit(0L)).as("n_live"))
   }
@@ -783,10 +770,9 @@ object Similarity {
                                    nprobe: Int): DataFrame = {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
-    // committed view (Layout.committedView): a torn in-flight append is
-    // invisible, a mid-swap absence throws the FNF retryOnceOnMissing
-    // retries
-    val view = Layout.committedView(s, indexDir, cdcAnnLegs)
+    // one pinned manifest version (Layout.committedView): a torn
+    // in-flight append is invisible and a fold renames nothing away
+    val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
     val live = view.read("doclog")
       .groupBy($"vec_id")
@@ -798,7 +784,7 @@ object Similarity {
     val pruned =
       if (nprobe == Int.MaxValue) cellsBase
       else {
-        val probed = s.read.parquet(s"$indexDir/centroids")
+        val probed = s.read.parquet(s"${view.dir}/centroids")
           .select($"cell",
             aggregate(zip_with($"centroid", q, (x, y) => x * y.cast("double")),
               lit(0.0), (acc, v) => acc + v).as("cdot"))

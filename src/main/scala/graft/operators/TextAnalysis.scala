@@ -766,20 +766,20 @@ object TextAnalysis {
                            nBuckets: Int = textIndexBuckets): Boolean = {
     val s = images.sparkSession
     import s.implicits._
-    Layout.append(s, indexDir, segment) {
+    Layout.append(s, indexDir, segment) { out =>
       // the FIRST append defines the recorded bucket count (the text twin
       // of the ANN index's first-batch quantizer contract); every later
       // append must match it or its rows land in directories the probes
       // never prune to — silently unsearchable
-      textIndexBucketCount(s, indexDir) match {
+      textIndexBucketCount(s, out.dir) match {
         case Some(recorded) => require(recorded == nBuckets,
           s"append bucketed by $nBuckets but the index at $indexDir records " +
             s"$recorded term buckets (re-bucketed?) — pass the recorded count")
         case None => writeBucketMarker(new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration), indexDir, nBuckets)
+          .getFileSystem(s.sparkContext.hadoopConfiguration), out.dir, nBuckets)
       }
       Seq(
-        () => images.filter(!$"deleted")
+        () => out.write("postings", images.filter(!$"deleted")
           .select($"doc_id", $"ver",
             size(tokens($"text")).cast("long").as("dl"),
             explode(tokens($"text")).as("term"))
@@ -788,23 +788,23 @@ object TextAnalysis {
           .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
           // cluster by bucket before the partitionBy write: without this
           // every task writes into every bucket dir (tasks x buckets small
-          // files PER SEGMENT — a steady stream melts the probe's listing
+          // files PER SEGMENT — a steady stream melts the probe's read
           // cost); with it each bucket's rows land in O(1) files
-          .repartition($"tb")
-          .write.mode("overwrite").partitionBy("tb")
-          .parquet(s"$indexDir/postings/seg=$segment"),
+          .repartition($"tb"), "tb"),
         // the doc log records DELETES too (a tombstone is a version); slim
         // rows — a handful of files per segment, not one per task
-        () => images.select($"doc_id", $"ver", $"deleted",
+        () => out.write("doclog", images.select($"doc_id", $"ver", $"deleted",
             when($"deleted", lit(0L))
               .otherwise(size(tokens($"text")).cast("long")).as("dl"))
-          .coalesce(4)
-          .write.mode("overwrite").parquet(s"$indexDir/doclog/seg=$segment"))
+          .coalesce(4)))
     }
   }
 
-  /** The CDC text index's legs: the doc log and the postings. */
-  private val cdcTextLegs = Seq("doclog", "postings")
+  /** The CDC text index's recorded term-bucket count: the `_nbuckets` of
+    * its committed generation ([[Layout.committedView]]).
+    */
+  def cdcTextIndexBucketCount(s: SparkSession, indexDir: String): Option[Int] =
+    Layout.committedView(s, indexDir).flatMap(v => textIndexBucketCount(s, v.dir))
 
   /** Fold the CDC index to a live-only single base segment: superseded
     * and deleted versions' postings are DROPPED (the only operation that
@@ -815,19 +815,19 @@ object TextAnalysis {
     * compaction removes (spec-pinned) — but the probe's doc-log scan
     * shrinks from O(touched-versions) to O(live docs) and the pruned
     * posting read loses its seg fan-out (O(1) directories per bucket
-    * again). Published through [[Layout.fold]].
+    * again). Committed through [[Layout.fold]].
     */
   def compactCdcTextIndex(s: SparkSession, indexDir: String,
                           nBuckets: Int = textIndexBuckets): Unit = {
     import s.implicits._
-    textIndexBucketCount(s, indexDir).foreach(recorded =>
+    cdcTextIndexBucketCount(s, indexDir).foreach(recorded =>
       require(recorded == nBuckets,
         s"compact asked for $nBuckets term buckets but the index at $indexDir " +
           s"records $recorded (re-bucketed?) — pass the recorded count"))
     // posting files live inside their `tb=` directories, so read tasks
     // carry one bucket's rows and the partitionBy write lands them back
     // without an exchange
-    foldCdcTextIndex(s, indexDir, nBuckets, "compact")(
+    foldCdcTextIndex(s, indexDir, nBuckets)(
       _.select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb"))
   }
 
@@ -838,19 +838,19 @@ object TextAnalysis {
     * files back down to probe-sized reads without a full rebuild. A
     * re-bucket subsumes a compact (reading every posting row anyway, it
     * drops superseded and tombstoned versions and collapses the doc log
-    * for free), so it publishes through the same [[Layout.fold]]. The staged tree carries
-    * the new `_nbuckets` marker; subsequent appends and probes verify
+    * for free), so it commits through the same [[Layout.fold]]. The new
+    * generation carries the new `_nbuckets` marker; subsequent appends and probes verify
     * against it by name — under live ingest this runs exactly where the
     * compactors do (the serialized foreachBatch maintenance window or a
     * maintenance job), and an append still carrying the old count after
-    * the swap fails loudly instead of writing unsearchable rows.
+    * the fold fails loudly instead of writing unsearchable rows.
     */
   def rebucketCdcTextIndex(s: SparkSession, indexDir: String,
                            newBuckets: Int): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
     import s.implicits._
     // the one unavoidable shuffle: rows MOVE buckets
-    foldCdcTextIndex(s, indexDir, newBuckets, "optimize")(
+    foldCdcTextIndex(s, indexDir, newBuckets)(
       _.select($"term", $"doc_id", $"ver", $"dl", $"tf")
         .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
         .repartition($"tb"))
@@ -862,12 +862,12 @@ object TextAnalysis {
     * live rows. `postings` turns the live postings into the staged rows
     * partitioned by `tb`; the staged tree records `nBuckets`.
     */
-  private def foldCdcTextIndex(s: SparkSession, indexDir: String, nBuckets: Int,
-                               tag: String)(postings: DataFrame => DataFrame): Unit = {
+  private def foldCdcTextIndex(s: SparkSession, indexDir: String,
+                               nBuckets: Int)(postings: DataFrame => DataFrame): Unit = {
     import s.implicits._
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.fold(s, indexDir, cdcTextLegs, tag) { (view, staging) =>
+    Layout.fold(s, indexDir) { (view, out) =>
       val live = view.read("doclog")
         .groupBy($"doc_id")
         .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
@@ -876,20 +876,17 @@ object TextAnalysis {
         .filter(!$"deleted")
         .persist() // feeds the posting filter AND the folded doc log
       try {
-        // both staging legs read the cached `live` frame and publish
-        // atomically with the fold. They run one after the other, doclog
+        // both staging legs read the cached `live` frame and commit
+        // with the fold. They run one after the other, doclog
         // first, so the doclog write builds the cache: an adaptive write
         // that finds a cached frame not yet built launches a job to build
         // it, so two legs started together could both launch one (the
         // job count varied run to run), and a separate job pinning the
         // cache costs one job more per fold than this order
-        live.select($"doc_id", $"ver", $"deleted", $"dl")
-          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")
-        postings(view.read("postings")
-            .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver")))
-          .write.mode("overwrite").partitionBy("tb")
-          .parquet(s"$staging/postings/seg=base")
-        writeBucketMarker(fs, staging, nBuckets)
+        out.write("doclog", live.select($"doc_id", $"ver", $"deleted", $"dl"))
+        out.write("postings", postings(view.read("postings")
+            .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))), "tb")
+        writeBucketMarker(fs, out.dir, nBuckets)
       } finally live.unpersist()
     }
   }
@@ -925,9 +922,9 @@ object TextAnalysis {
   private def liveBucketOccupancy(s: SparkSession,
                                   indexDir: String): (Int, DataFrame) = {
     import s.implicits._
-    val nb = textIndexBucketCount(s, indexDir).getOrElse(textIndexBuckets)
-    val view = Layout.committedView(s, indexDir, cdcTextLegs)
+    val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
+    val nb = textIndexBucketCount(s, view.dir).getOrElse(textIndexBuckets)
     val live = view.read("doclog")
       .groupBy($"doc_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
@@ -1019,17 +1016,16 @@ object TextAnalysis {
                           terms: Seq[String], k: Int,
                           nBuckets: Int = textIndexBuckets): DataFrame = {
     import s.implicits._
+    // one pinned manifest version (Layout.committedView): a torn
+    // in-flight append is invisible and a fold renames nothing away
+    val view = Layout.committedView(s, indexDir)
+      .getOrElse(Layout.missingIndex(indexDir))
     // same drift guard as [[bm25TopKViaIndex]]: the wrong bucket count
     // prunes to the wrong directories and silently misses postings
-    textIndexBucketCount(s, indexDir).foreach(recorded =>
+    textIndexBucketCount(s, view.dir).foreach(recorded =>
       require(recorded == nBuckets,
         s"probe asked for $nBuckets term buckets but the index at $indexDir " +
           s"records $recorded (re-bucketed?) — pass the recorded count"))
-    // committed view (Layout.committedView): a torn in-flight append is
-    // invisible, a mid-swap absence throws the FNF retryOnceOnMissing
-    // retries
-    val view = Layout.committedView(s, indexDir, cdcTextLegs)
-      .getOrElse(Layout.missingIndex(indexDir))
     val live = view.read("doclog").groupBy($"doc_id")
       .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
       .select($"doc_id", $"m.ver".as("ver"),

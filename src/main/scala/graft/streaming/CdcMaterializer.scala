@@ -280,8 +280,8 @@ object CdcMaterializer {
       .groupBy(col(groupCol))
       .agg(sum(col("_sign")).as("n"), sum(col("_sign") * col("_v")).as("s"))
     val segment = Layout.segmentOf(batchId)
-    Layout.append(batch.sparkSession, tablePath, segment)(Seq(
-      () => deltas.write.mode("overwrite").parquet(s"$tablePath/seg=$segment")))
+    Layout.append(batch.sparkSession, tablePath, segment)(out =>
+      Seq(() => out.write("", deltas)))
   }
 
   /** Per group, the sums of `n` and `s` over the committed segments read
@@ -296,7 +296,7 @@ object CdcMaterializer {
 
   /** Current view: per group, live-row count `n` and exact sum `s`. */
   def readAggregate(s: SparkSession, tablePath: String): DataFrame = {
-    val view = Layout.committedView(s, tablePath, Seq(""))
+    val view = Layout.committedView(s, tablePath)
     require(view.isDefined, s"no aggregate state under $tablePath")
     summed(view.get.read("")).filter(col("n") =!= 0)
   }
@@ -310,10 +310,9 @@ object CdcMaterializer {
     * stream ([[compact]] contract).
     */
   def compactAggregate(s: SparkSession, tablePath: String): Unit =
-    Layout.fold(s, tablePath, Seq(""), "compact") { (view, staging) =>
-      summed(view.read(""))
-        .filter(col("n") =!= 0 || col("s") =!= 0)
-        .write.mode("overwrite").parquet(s"$staging/seg=base")
+    Layout.fold(s, tablePath) { (view, out) =>
+      out.write("", summed(view.read(""))
+        .filter(col("n") =!= 0 || col("s") =!= 0))
     }
 
   /** Maintain MANY tables from ONE binlog scan: the stream is the source's

@@ -593,8 +593,8 @@ object StreamOps {
   private[streaming] def writeWindowedUpdates(batch: DataFrame, tablePath: String,
                                               batchId: Long): Unit = {
     val segment = graft.operators.Layout.segmentOf(batchId)
-    graft.operators.Layout.append(batch.sparkSession, tablePath, segment)(Seq(
-      () => batch.write.mode("overwrite").parquet(s"$tablePath/seg=$segment")))
+    graft.operators.Layout.append(batch.sparkSession, tablePath, segment)(out =>
+      Seq(() => out.write("", batch)))
   }
 
   /** Per `keyCols` group of the committed segments read as `segs`, the
@@ -616,7 +616,7 @@ object StreamOps {
     */
   def readWindowedAgg(s: SparkSession, tablePath: String,
                       keyCols: Seq[String]): DataFrame = {
-    val view = graft.operators.Layout.committedView(s, tablePath, Seq(""))
+    val view = graft.operators.Layout.committedView(s, tablePath)
     require(view.isDefined, s"no windowed-agg state under $tablePath")
     latestWins(view.get.read(""), keyCols)
   }
@@ -628,9 +628,8 @@ object StreamOps {
     */
   def compactWindowedAgg(s: SparkSession, tablePath: String,
                          keyCols: Seq[String]): Unit =
-    graft.operators.Layout.fold(s, tablePath, Seq(""), "compact") { (view, staging) =>
-      latestWins(view.read(""), keyCols)
-        .write.mode("overwrite").parquet(s"$staging/seg=base")
+    graft.operators.Layout.fold(s, tablePath) { (view, out) =>
+      out.write("", latestWins(view.read(""), keyCols))
     }
 
   /** Streaming view of the events table staged as `nFiles` parquet files,

@@ -40,10 +40,10 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b1 = Seq((7L, vec(7007), 1L, false), (9L, Seq.empty[Long], 1L, true),
       (41L, vec(41), 1L, false))
     Similarity.appendCdcAnnSegment(images(b0), idx, "b000000", k = 4)
-    val centBefore = spark.read.parquet(s"$idx/centroids")
+    val centBefore = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     Similarity.appendCdcAnnSegment(images(b1), idx, "b000001", k = 4)
-    val centAfter = spark.read.parquet(s"$idx/centroids")
+    val centAfter = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     assert(centAfter === centBefore,
       "appending must never move the coarse quantizer")
@@ -52,10 +52,10 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b1Live = images(b1).filter(!col("deleted"))
       .withColumn("embedding", col("embedding").cast("array<float>"))
     val wantCells = Similarity
-      .assignToCentroids(b1Live, spark.read.parquet(s"$idx/centroids"))
+      .assignToCentroids(b1Live, spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids"))
       .select(col("vec_id"), col("cell")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val diskCells = spark.read.parquet(s"$idx/cells")
+    val diskCells = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/cells")
       .filter(col("seg") === "b000001")
       .select(col("vec_id"), col("cell").cast("int")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
@@ -111,11 +111,13 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val compacted = Similarity.mipsTopKViaCdcAnnIndex(spark, idx, qv, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(compacted === got, "compaction changed the probe")
-    val segDirs = new java.io.File(s"$idx/doclog").listFiles()
-      .filter(_.getName.startsWith("seg=")).map(_.getName).toSeq
+    val segDirs = new java.io.File(s"${ManifestFixtures.generation(spark, idx)}/doclog")
+      .listFiles().filter(_.getName.startsWith("seg=")).map(_.getName).toSeq
     assert(segDirs === Seq("seg=base"))
-    assert(spark.read.parquet(s"$idx/doclog").count() === 40L) // live only
-    val centCompacted = spark.read.parquet(s"$idx/centroids")
+    assert(ManifestFixtures.segs(spark, idx) === Set("seg=base"))
+    assert(spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/doclog")
+      .count() === 40L) // live only
+    val centCompacted = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     assert(centCompacted === centBefore, "compaction moved the quantizer")
 
@@ -127,9 +129,9 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The committed two-leg read contract, ANN twin of the text leg
     * (Layout.committedView): a half-committed append — doclog
-    * job done, cells job torn — is invisible to the probe and to the
-    * policy's stats; an absent index throws the FileNotFoundException
-    * retryOnceOnMissing retries, never an empty answer.
+    * job done, cells job torn, no manifest version — is invisible to the
+    * probe and to the policy's stats; an absent index throws
+    * FileNotFoundException, never an empty answer.
     */
   test("ANN probe and stats read committed doclog+cells pairs only; absent index throws FNF") {
     graft.functions.GraftFunctions.register(spark)
@@ -148,12 +150,14 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (before, statsBefore) = (probe(), stats())
     // half-committed batch: doclog committed, cells torn (crash
     // between the append's two jobs) — vec 3's re-embed must stay
-    // invisible; without the pair intersect the committed doclog row
-    // would TOMBSTONE-SHADOW the old version while the new cells row
-    // is unreadable, vanishing the doc entirely
+    // invisible; were the doclog row read alone, it would
+    // TOMBSTONE-SHADOW the old version while the new cells row is
+    // unreadable, vanishing the doc entirely
     Similarity.appendCdcAnnSegment(
       images(Seq((3L, vec(9003), 1L, false))), idx, "b000001", k = 4)
-    assert(new java.io.File(s"$idx/cells/seg=b000001/_SUCCESS").delete())
+    ManifestFixtures.uncommit(spark, idx)
+    assert(new java.io.File(
+      s"${ManifestFixtures.generation(spark, idx)}/cells/seg=b000001/_SUCCESS").delete())
     assert(probe() === before, "a half-committed append leaked into the probe")
     assert(stats() === statsBefore,
       "a half-committed append leaked into the policy's stats")
@@ -179,7 +183,7 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       (41L, vec(41), 1L, false))
     Similarity.appendCdcAnnSegment(images(b0), idx, "b000000", k = 4)
     Similarity.appendCdcAnnSegment(images(b1), idx, "b000001", k = 4)
-    val centOld = spark.read.parquet(s"$idx/centroids")
+    val centOld = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     val qv = vec(7)
     def probe(): Seq[(Long, Long, Long)] =
@@ -194,15 +198,14 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 1..3 of the FIRST batch; the new seeds from the k smallest LIVE
     // ids and Lloyd-refines over the whole corpus)
     for (leg <- Seq("doclog", "cells")) {
-      val segs = new java.io.File(s"$idx/$leg").listFiles()
-        .filter(_.getName.startsWith("seg=")).map(_.getName).toSeq
+      val segs = new java.io.File(s"${ManifestFixtures.generation(spark, idx)}/$leg")
+        .listFiles().filter(_.getName.startsWith("seg=")).map(_.getName).toSeq
       assert(segs === Seq("seg=base"), s"$leg not folded: $segs")
     }
-    val root = new org.apache.hadoop.fs.Path(idx)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Layout.foldedThrough(fs, root) === Some(1L),
+    assert(ManifestFixtures.segs(spark, idx) === Set("seg=base"))
+    assert(Layout.fenceOf(spark, idx) === Some(1L),
       "requantize must fence the consumed segments")
-    val centNew = spark.read.parquet(s"$idx/centroids")
+    val centNew = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     assert(centNew !== centOld, "requantize kept the stale quantizer")
 
@@ -240,10 +243,10 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // grown past its quantizer wants MORE cells, and requantize's k is
     // exactly that lever. The exact probe stays invariant whatever the
     // partition; the quantizer must really change again.
-    val cent4 = spark.read.parquet(s"$idx/centroids")
+    val cent4 = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     Similarity.requantizeCdcAnnIndex(spark, idx, k = 8)
-    val cent8 = spark.read.parquet(s"$idx/centroids")
+    val cent8 = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     assert(cent8 !== cent4, "growing k kept the old quantizer")
     assert(cent8.size > cent4.size,
@@ -367,14 +370,12 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!end.requantize,
       s"the fold(s) did not clear the skew demand: $end")
     assert(lastK > 8 &&
-      spark.read.parquet(s"$idx/centroids").count() === lastK.toLong,
+      spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/centroids").count() === lastK.toLong,
       s"the quantizer never grew (k=$lastK)")
 
     // fence at the LAST fold's batch; a replayed pre-fold segment skips
-    val p = new org.apache.hadoop.fs.Path(idx)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Layout.foldedThrough(fs, p) === Some(foldBatches.last.toLong),
-      s"fence ${Layout.foldedThrough(fs, p)} != last fold batch ${foldBatches.last}")
+    assert(Layout.fenceOf(spark, idx) === Some(foldBatches.last.toLong),
+      s"fence ${Layout.fenceOf(spark, idx)} != last fold batch ${foldBatches.last}")
     assert(!Similarity.appendCdcAnnSegment(
       images(batches(2)), idx, "b000003", k = 8),
       "a replay at or below the fence was not skipped")

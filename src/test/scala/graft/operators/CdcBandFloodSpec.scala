@@ -47,7 +47,7 @@ class CdcBandFloodSpec extends AnyFunSuite with BeforeAndAfterAll {
     val work = java.nio.file.Files.createTempDirectory("graft-bandflood")
     val log = work.resolve("bandlog").toString
     logOf(Seq((1L, tA, 0L, false), (2L, tB, 0L, false)), log)
-    val df = spark.read.parquet(log)
+    val df = spark.read.parquet(ManifestFixtures.generation(spark, log))
     df.schema("sh").dataType match {
       case ArrayType(BinaryType, _) => ()
       case other => fail(s"sh is $other, not array<binary> digests")

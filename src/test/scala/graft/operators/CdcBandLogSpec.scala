@@ -90,13 +90,11 @@ class CdcBandLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // consumed segment; a replayed pre-fold batch is then skipped
     CdcBinlog.compactCdcBandLog(spark, log)
     assert(pairs(log) === got, "compaction changed the report")
-    val segs = new java.io.File(log).listFiles()
-      .filter(_.getName.startsWith("seg=")).map(_.getName).toSeq
-    assert(segs === Seq("seg=base"), s"fold left segments: $segs")
-    assert(spark.read.parquet(log).count() === 4L) // live docs only
-    val root = new org.apache.hadoop.fs.Path(log)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Layout.foldedThrough(fs, root) === Some(1L))
+    val segs = ManifestFixtures.segs(spark, log)
+    assert(segs === Set("seg=base"), s"fold left segments: $segs")
+    assert(spark.read.parquet(ManifestFixtures.generation(spark, log))
+      .count() === 4L) // live docs only
+    assert(Layout.fenceOf(spark, log) === Some(1L))
     assert(!CdcBinlog.appendCdcFpSegment(bandRows(b1), log, "b000001"),
       "a replay at the fence was not skipped")
     assert(pairs(log) === got, "a fenced replay changed the report")
@@ -188,12 +186,11 @@ class CdcBandLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     // torn in-flight segment (committed-read contract): a would-be
-    // neighborhood change without _SUCCESS is invisible to the probe
+    // neighborhood change no manifest version lists is invisible to the probe
     val probe3 = CdcBinlog.cdcNearDupProbe(spark, log, 3L)
       .collect().map(_.toString).toSeq
     CdcBinlog.cdcm15BandImages(images(Seq((3L, null: String, 2L, true))))
-      .write.parquet(s"$log/seg=b000002")
-    assert(new java.io.File(s"$log/seg=b000002/_SUCCESS").delete())
+      .write.parquet(s"${ManifestFixtures.generation(spark, log)}/seg=b000002")
     assert(CdcBinlog.cdcNearDupProbe(spark, log, 3L)
       .collect().map(_.toString).toSeq === probe3,
       "a torn in-flight segment leaked into the probe")

@@ -34,8 +34,8 @@ class CdcBatchScreenSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def writeFpSeg(log: String, seg: String,
                          rows: Seq[(Long, Long, Boolean, String)]): Unit = {
     import spark.implicits._
-    rows.toDF("doc_id", "ver", "deleted", "fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$log/seg=$seg")
+    CdcBinlog.appendCdcFpSegment(rows.toDF("doc_id", "ver", "deleted", "fp")
+      .coalesce(1), log, seg)
   }
 
   private def seedFpLog(log: String): Unit = {
@@ -74,7 +74,7 @@ class CdcBatchScreenSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CdcBinlog.cdcFpProbeBatch(spark, s"$work/nolog",
       idsDf(probeIds)).isEmpty)
     writeFpSeg(log, "b000003", Seq((3L, 3L, false, "q")))
-    assert(new java.io.File(s"$log/seg=b000003/_SUCCESS").delete())
+    ManifestFixtures.uncommit(spark, log)
     assert(CdcBinlog.cdcFpProbeBatch(spark, log, idsDf(probeIds))
       .collect().map(_.toString).toSeq === batch.map(t =>
         s"[${t._1},${t._2},${t._3}]"),
@@ -149,7 +149,7 @@ class CdcBatchScreenSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a live row with an EMPTY bands array (the append protocol is
     // column-agnostic, so a degenerate payload is representable even
     // though cdcm15BandImages never emits one)
-    Seq((7L, 0L, false,
+    CdcBinlog.appendCdcFpSegment(Seq((7L, 0L, false,
         Seq.empty[Array[Byte]],
         Seq.empty[(Int, String)]))
       .toDF("doc_id", "ver", "deleted", "sh", "b0")
@@ -157,7 +157,7 @@ class CdcBatchScreenSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.functions.expr(
           "transform(b0, x -> named_struct('band_id', x._1, 'h', x._2))")
           .as("bands"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$log/seg=b000002")
+      .coalesce(1), log, "b000002")
     val probeIds = Seq(1L, 2L, 3L, 4L, 5L, 7L, 99L)
     val batch = CdcBinlog.cdcNearDupProbeBatch(spark, log, idsDf(probeIds))
       .collect()

@@ -23,8 +23,8 @@ class CdcFpLogCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def writeSeg(log: String, seg: String,
                        rows: Seq[(Long, Long, Boolean, String)]): Unit = {
     import spark.implicits._
-    rows.toDF("doc_id", "ver", "deleted", "fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$log/seg=$seg")
+    CdcBinlog.appendCdcFpSegment(rows.toDF("doc_id", "ver", "deleted", "fp")
+      .coalesce(1), log, seg)
   }
 
   private def groups(log: String): Seq[(String, Long, Long)] = {
@@ -33,9 +33,7 @@ class CdcFpLogCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(String, Long, Long)].collect().toSeq
   }
 
-  private def segDirs(log: String): Set[String] =
-    new java.io.File(log).listFiles().filter(_.getName.startsWith("seg="))
-      .map(_.getName).toSet
+  private def segDirs(log: String): Set[String] = ManifestFixtures.segs(spark, log)
 
   // three ingest segments: b0 inserts docs 1-5 (1,2 dups of fp "a";
   // 4,5 dups of "b"), b1 updates doc 2 away from "a" (group "a" dies)
@@ -60,7 +58,7 @@ class CdcFpLogCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(segDirs(log) === Set("seg=base"))
     assert(groups(log) === before)
     // the fold dropped the superseded and tombstoned rows: 4 live docs
-    assert(spark.read.parquet(log).count() === 4)
+    assert(spark.read.parquet(ManifestFixtures.generation(spark, log)).count() === 4)
   }
 
   test("ingest after compaction supersedes compacted rows exactly as before") {
@@ -110,8 +108,8 @@ class CdcFpLogCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The committed-segments read contract (cdcLogStats' view, now the
     * probe's and the report's too): an ABSENT log answers empty instead
-    * of throwing, and a torn in-flight append (`seg=` dir without
-    * `_SUCCESS`) is invisible — a reader racing a writer never sees a
+    * of throwing, and a torn in-flight append (a `seg=` dir no manifest
+    * version lists) is invisible — a reader racing a writer never sees a
     * half-written segment change an answer.
     */
   test("probe and report read committed segments only; an absent log answers empty") {
@@ -126,9 +124,9 @@ class CdcFpLogCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val probeBefore = CdcBinlog.cdcFpProbe(spark, log, 3L)
       .collect().map(_.toString).toSeq
     // torn append: docs 3 and 5 both "move away" from group b — but the
-    // segment never committed (its _SUCCESS is deleted)
+    // segment never committed (its manifest version is taken back)
     writeSeg(log, "b000003", Seq((3L, 3L, false, "q"), (5L, 3L, false, "r")))
-    assert(new java.io.File(s"$log/seg=b000003/_SUCCESS").delete())
+    ManifestFixtures.uncommit(spark, log)
     assert(groups(log) === before,
       "a torn in-flight segment leaked into the group report")
     assert(CdcBinlog.cdcFpProbe(spark, log, 3L)

@@ -56,7 +56,10 @@ class CdcIngestHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
       val odd = ids.filter(_ % 2 == 1)
       assert(ids.size >= 3 && odd.nonEmpty && odd.size < ids.size,
         s"the fixture must admit empty and non-empty frames: batches $ids")
-      assert(CdcBinlog.segNames(spark, log) == odd.map(id => f"seg=b$id%06d").toSet)
+      val want = odd.map(id => f"seg=b$id%06d").toSet
+      assert(CdcBinlog.segNames(spark, log) == want)
+      assert(new java.io.File(ManifestFixtures.generation(spark, log)).list()
+        .filter(_.startsWith("seg=")).toSet == want)
       assert(leg.appends == odd.size)
     }
   }

@@ -13,12 +13,13 @@ import org.scalatest.BeforeAndAfterAll
   * seg=base before the crash, the replay would re-create rows base
   * already holds, and the probes' (doc_id|vec_id, ver) liveness joins
   * would double-count them (text: df and per-doc scores inflate; ANN:
-  * duplicate vec_ids in the top-k). The `_folded_through` fence makes
+  * duplicate vec_ids in the top-k). The manifest's replay fence makes
   * the replay a SKIP instead; these tests pin the fence (replay after
   * fold changes nothing, physically and in the probe), that post-fence
-  * ingest still lands, and that a TORN segment (no _SUCCESS — a crashed
-  * append whose batch never committed) is dropped by the fold rather
-  * than folded, leaving its replay free to rewrite it.
+  * ingest still lands, and that a TORN segment (a segment directory no
+  * manifest version lists — a crashed append whose batch never
+  * committed) is left behind by the fold rather than folded, leaving
+  * its replay free to rewrite it.
   */
 class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -30,11 +31,11 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def fs = new org.apache.hadoop.fs.Path("/tmp")
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def segNames(root: String): Set[String] = ManifestFixtures.segs(spark, root)
 
-  private def segNames(dir: String): Set[String] =
-    Option(new java.io.File(dir).listFiles())
+  /** The `seg=` directories physically present in `leg` of the committed generation. */
+  private def segDirs(root: String, leg: String): Set[String] =
+    Option(new java.io.File(legDir(ManifestFixtures.generation(spark, root), leg)).listFiles())
       .map(_.map(_.getName).filter(_.startsWith("seg=")).toSet)
       .getOrElse(Set.empty)
 
@@ -70,7 +71,7 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
                                postFence: (Seq[String], Seq[String]) => Unit)
 
   private def recordedBuckets(idx: String): Int =
-    TextAnalysis.textIndexBucketCount(spark, idx).getOrElse(4)
+    TextAnalysis.cdcTextIndexBucketCount(spark, idx).getOrElse(4)
 
   private def appendText(idx: String, b: DataFrame, seg: String): Boolean =
     TextAnalysis.appendCdcTextSegment(b, idx, seg, nBuckets = recordedBuckets(idx))
@@ -174,22 +175,24 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(want.nonEmpty)
 
       e.fold(root)
-      e.legs.foreach(l => assert(segNames(legDir(root, l)) === Set("seg=base")))
-      assert(Layout.foldedThrough(fs, new org.apache.hadoop.fs.Path(root)) === Some(2L))
+      assert(segNames(root) === Set("seg=base"))
+      e.legs.foreach(l => assert(segDirs(root, l) === Set("seg=base")))
+      assert(Layout.fenceOf(spark, root) === Some(2L))
       assert(e.probe(root) === want, "the fold alone must be probe-invariant")
 
       // the crash replay: batch 2 re-runs after its segment was folded
       assert(!e.append(root, b2, "b000002"),
         "replay of a folded batch must be fenced")
-      e.legs.foreach(l => assert(segNames(legDir(root, l)) === Set("seg=base"),
+      assert(segNames(root) === Set("seg=base"))
+      e.legs.foreach(l => assert(segDirs(root, l) === Set("seg=base"),
         "the fenced replay must not re-create its segment"))
       assert(e.probe(root) === want,
         "a replayed folded batch double-counted rows through the probe")
 
       // post-fence ingest still lands and supersedes
       assert(e.append(root, textImages((1, t3, 3, false), (6, t2, 3, false)), "b000003"))
-      e.legs.foreach(l =>
-        assert(segNames(legDir(root, l)) === Set("seg=base", "seg=b000003")))
+      assert(segNames(root) === Set("seg=base", "seg=b000003"))
+      e.legs.foreach(l => assert(segDirs(root, l) === Set("seg=base", "seg=b000003")))
       e.postFence(want, e.probe(root))
     }
 
@@ -200,17 +203,20 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(e.append(root, textImages((1, t1, 0, false), (2, t2, 0, false)), "b000000"))
       val want = e.probe(root)
 
-      // a crashed append: the segment is written but its first leg's
-      // commit is torn
+      // a crashed append: every leg of the segment is written, but no
+      // manifest version lists it
       val b1 = textImages((3, t1, 1, false))
       assert(e.append(root, b1, "b000001"))
-      assert(fs.delete(new org.apache.hadoop.fs.Path(
-        s"${legDir(root, e.legs.head)}/seg=b000001/_SUCCESS"), false))
+      ManifestFixtures.uncommit(spark, root)
+      e.legs.foreach(l => assert(segDirs(root, l) === Set("seg=b000000", "seg=b000001")))
+      assert(segNames(root) === Set("seg=b000000"))
+      assert(e.probe(root) === want, "a torn segment must be invisible to the probe")
 
       e.fold(root)
-      // the torn segment is gone from the tree and NOT behind the fence
-      e.legs.foreach(l => assert(segNames(legDir(root, l)) === Set("seg=base")))
-      assert(Layout.foldedThrough(fs, new org.apache.hadoop.fs.Path(root)) === Some(0L))
+      // the torn segment is not in the new generation and NOT behind the fence
+      assert(segNames(root) === Set("seg=base"))
+      e.legs.foreach(l => assert(segDirs(root, l) === Set("seg=base")))
+      assert(Layout.fenceOf(spark, root) === Some(0L))
       assert(e.probe(root) === want, "the torn (uncommitted) batch must not be folded")
 
       // the batch replays (it never committed) and lands normally now
@@ -223,7 +229,6 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-fence-2fold")
     val idx = work.resolve("index").toString
-    val root = new org.apache.hadoop.fs.Path(idx)
     def probe() = collectStr(TextAnalysis
       .bm25TopKViaCdcIndex(spark, idx, Seq("alpha"), 10, nBuckets = 4)
       .orderBy("r_sparse"))
@@ -231,13 +236,13 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TextAnalysis.appendCdcTextSegment(
       textImages((1, "alpha a", 0, false)), idx, "b000000", nBuckets = 4))
     TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
-    assert(Layout.foldedThrough(fs, root) === Some(0L))
+    assert(Layout.fenceOf(spark, idx) === Some(0L))
 
     assert(TextAnalysis.appendCdcTextSegment(
       textImages((2, "alpha b", 2, false)), idx, "b000002", nBuckets = 4))
     TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
     // second fold: max(existing fence, newly folded) — never regresses
-    assert(Layout.foldedThrough(fs, root) === Some(2L))
+    assert(Layout.fenceOf(spark, idx) === Some(2L))
     val want = probe()
     assert(want.size === 2)
 
@@ -253,9 +258,9 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // a base-only re-fold (nothing new) keeps the fence
     TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
-    assert(Layout.foldedThrough(fs, root) === Some(3L))
+    assert(Layout.fenceOf(spark, idx) === Some(3L))
     TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
-    assert(Layout.foldedThrough(fs, root) === Some(3L))
+    assert(Layout.fenceOf(spark, idx) === Some(3L))
     assert(probe().size === 3)
   }
 }

@@ -82,12 +82,10 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val compacted = probeRows(
       TextAnalysis.bm25TopKViaCdcIndex(spark, idx, terms, 10).orderBy("r_sparse"))
     assert(compacted === got, "compaction changed the probe")
-    val segDirs = new java.io.File(s"$idx/doclog").listFiles()
-      .filter(_.getName.startsWith("seg=")).map(_.getName).toSeq
-    assert(segDirs === Seq("seg=base"),
-      s"compaction left segments: $segDirs")
+    val segs = ManifestFixtures.segs(spark, idx)
+    assert(segs === Set("seg=base"), s"compaction left segments: $segs")
     // superseded + deleted versions physically gone
-    val remaining = spark.read.parquet(s"$idx/doclog")
+    val remaining = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/doclog")
     assert(remaining.count() === 3L) // live docs 1, 3, 4 only
     assert(remaining.filter(org.apache.spark.sql.functions.col("deleted")).count() === 0L)
 
@@ -110,7 +108,7 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4L, "delta delta shared", 1L, false))
     TextAnalysis.appendCdcTextSegment(images(b0), idx, "b000000", nBuckets = 4)
     TextAnalysis.appendCdcTextSegment(images(b1), idx, "b000001", nBuckets = 4)
-    assert(TextAnalysis.textIndexBucketCount(spark, idx) === Some(4),
+    assert(TextAnalysis.cdcTextIndexBucketCount(spark, idx) === Some(4),
       "the first append must record the bucket count")
     def probe(nb: Int) = probeRows(
       TextAnalysis.bm25TopKViaCdcIndex(spark, idx, terms, 10, nBuckets = nb)
@@ -122,16 +120,16 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // physical contract: marker updated, folded to a live-only base
     // (a re-bucket subsumes a compact), fence at the last consumed batch
-    assert(TextAnalysis.textIndexBucketCount(spark, idx) === Some(16))
+    assert(TextAnalysis.cdcTextIndexBucketCount(spark, idx) === Some(16))
+    val gen = ManifestFixtures.generation(spark, idx)
     for (leg <- Seq("doclog", "postings")) {
-      val segs = new java.io.File(s"$idx/$leg").listFiles()
+      val segs = new java.io.File(s"$gen/$leg").listFiles()
         .filter(_.getName.startsWith("seg=")).map(_.getName).toSeq
       assert(segs === Seq("seg=base"), s"$leg not folded: $segs")
     }
-    val root = new org.apache.hadoop.fs.Path(idx)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Layout.foldedThrough(fs, root) === Some(1L))
-    val tbs = new java.io.File(s"$idx/postings/seg=base").listFiles()
+    assert(ManifestFixtures.segs(spark, idx) === Set("seg=base"))
+    assert(Layout.fenceOf(spark, idx) === Some(1L))
+    val tbs = new java.io.File(s"$gen/postings/seg=base").listFiles()
       .map(_.getName).filter(_.startsWith("tb="))
       .map(_.stripPrefix("tb=").toInt).toSeq
     assert(tbs.exists(_ >= 4),
@@ -178,12 +176,12 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats.size === 16, s"stats must cover all recorded buckets: $stats")
     val livePostings = {
       import org.apache.spark.sql.functions.{col, max => smax, struct => sstruct}
-      val doclog = spark.read.parquet(s"$idx/doclog")
+      val doclog = spark.read.parquet(s"${ManifestFixtures.generation(spark, idx)}/doclog")
       val live = doclog.groupBy(col("doc_id"))
         .agg(smax(sstruct(col("ver"), col("deleted"))).as("m"))
         .select(col("doc_id"), col("m.ver").as("ver"), col("m.deleted").as("deleted"))
         .filter(!col("deleted"))
-      spark.read.parquet(s"$idx/postings")
+      spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, idx)}/postings")
         .join(live.select(col("doc_id"), col("ver")), Seq("doc_id", "ver"))
         .count()
     }
@@ -202,10 +200,9 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     * an append writes doclog and postings as two non-atomic jobs, so a
     * probe or the policy's stats racing a writer (or surviving its
     * crash between the jobs) must not see a batch's doclog without its
-    * postings — the segment intersect drops a HALF-COMMITTED batch
-    * from both legs. An absent index throws the FileNotFoundException
-    * retryOnceOnMissing retries (the publish-swap window), never an
-    * empty answer.
+    * postings — a batch no manifest version lists is invisible in both
+    * legs. An absent index throws FileNotFoundException, never an empty
+    * answer.
     */
   test("probe and stats read committed doclog+postings pairs only; absent index throws FNF") {
     val work = java.nio.file.Files.createTempDirectory("graft-cdcidx-torn")
@@ -220,12 +217,14 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       TextAnalysis.bm25TopKViaCdcIndex(spark, idx, terms, 10).orderBy("r_sparse"))
     val statsBefore = TextAnalysis.cdcTextIndexStats(spark, idx)
       .collect().map(_.toString).toSeq
-    // half-committed batch: doclog leg committed, postings leg torn
-    // (a crash between the two append jobs — doc 1's update to delta
-    // must stay invisible to probe AND stats)
+    // half-committed batch: doclog leg written, postings leg torn, no
+    // manifest version (a crash between the two append jobs — doc 1's
+    // update to delta must stay invisible to probe AND stats)
     TextAnalysis.appendCdcTextSegment(images(Seq(
       (1L, "delta shared", 1L, false))), idx, "b000001")
-    assert(new java.io.File(s"$idx/postings/seg=b000001/_SUCCESS").delete())
+    ManifestFixtures.uncommit(spark, idx)
+    assert(new java.io.File(
+      s"${ManifestFixtures.generation(spark, idx)}/postings/seg=b000001/_SUCCESS").delete())
     assert(probeRows(TextAnalysis.bm25TopKViaCdcIndex(spark, idx, terms, 10)
         .orderBy("r_sparse")) === before,
       "a half-committed append leaked into the probe")

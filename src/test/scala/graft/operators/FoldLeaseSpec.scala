@@ -361,19 +361,19 @@ class FoldLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(TextAnalysis.appendCdcTextSegment(imgs, idx, f"b$b%06d", nBuckets = 4))
     }
     val live = new org.apache.hadoop.fs.Path(idx)
-    val before = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$idx/doclog"))
+    val before = ManifestFixtures.segs(spark, idx)
+    val gensBefore = ManifestFixtures.generations(idx)
     val token = Layout.acquireFoldLease(fs, live)
     val e = intercept[IllegalStateException] {
       TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
     }
     assert(e.getMessage.contains("fold lease"), e.getMessage)
-    // the loser failed BEFORE staging: no residues, segments untouched
-    assert(Layout.committedSegs(fs,
-      new org.apache.hadoop.fs.Path(s"$idx/doclog")) === before)
+    // the loser failed BEFORE staging: no new generation, segments untouched
+    assert(ManifestFixtures.segs(spark, idx) === before)
+    assert(ManifestFixtures.generations(idx) === gensBefore)
     Layout.releaseFoldLease(fs, live, token)
     // and with the lease gone the same fold succeeds
     TextAnalysis.compactCdcTextIndex(spark, idx, nBuckets = 4)
-    assert(Layout.committedSegs(fs,
-      new org.apache.hadoop.fs.Path(s"$idx/doclog")) === Seq("seg=base"))
+    assert(ManifestFixtures.segs(spark, idx) === Set("seg=base"))
   }
 }

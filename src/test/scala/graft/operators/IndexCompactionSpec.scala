@@ -9,7 +9,9 @@ import org.scalatest.BeforeAndAfterAll
   *    really is compacted — one `seg=base` per CDC leg, fenced at its
   *    last ingest batch — so the gate probes the folded layout;
   *  - the recorded term-bucket count (`_nbuckets`) fails by name when
-  *    it is corrupt.
+  *    it is corrupt;
+  *  - building a cached index deletes the same fixture's trees under
+  *    other cache keys, and no other fixture's.
   * Compaction and re-bucketing of the CDC indexes are pinned in
   * [[CdcTextIndexSpec]] and [[CdcAnnIndexSpec]].
   */
@@ -47,11 +49,36 @@ class IndexCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // last batch — otherwise the gate would be re-testing the
     // multi-segment merge-on-read path instead of compaction
     val dir = PersistedIndexes.textIndexLifecycle(spark, d)
-    assert(segDirs(s"$dir/postings") == Seq("seg=base"))
-    assert(segDirs(s"$dir/doclog") == Seq("seg=base"))
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Layout.foldedThrough(fs, root) === Some(2L))
+    val gen = ManifestFixtures.generation(spark, dir)
+    assert(segDirs(s"$gen/postings") == Seq("seg=base"))
+    assert(segDirs(s"$gen/doclog") == Seq("seg=base"))
+    assert(ManifestFixtures.segs(spark, dir) === Set("seg=base"))
+    assert(Layout.fenceOf(spark, dir) === Some(2L))
+  }
+
+  test("a cached build deletes its fixture's trees under older keys, not other fixtures'") {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    val fixture = s"spec${System.nanoTime()}-sf0.001"
+    def tree(name: String) = tmp.resolve(name)
+    val stale = tree(s"graft-index-k1-$fixture")
+    val other = tree(s"graft-index-k1-other$fixture")
+    Seq(stale, other).foreach { t =>
+      java.nio.file.Files.createDirectories(t)
+      java.nio.file.Files.writeString(t.resolve("_COMPLETE"), "ok")
+    }
+    try {
+      val built = PersistedIndexes.cached(s"graft-index-k2-$fixture") { dir =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "data"), "x")
+      }
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(built, "data")))
+      assert(!java.nio.file.Files.exists(stale), "the stale-key tree survived the build")
+      assert(java.nio.file.Files.exists(other.resolve("_COMPLETE")),
+        "another fixture's tree was deleted")
+    } finally Seq(stale, other, tree(s"graft-index-k2-$fixture")).foreach { t =>
+      if (java.nio.file.Files.exists(t)) java.nio.file.Files.walk(t)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    }
   }
 
   test("a corrupt _nbuckets marker fails BY NAME; a missing one is None") {

@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** The publish protocol's crash states, reconstructed and recovered:
-  * publishDir promises that a crash leaves a complete directory under
-  * an adjacent name, and recoverPublish turns that promise into an
-  * automated step — restore the old state if the live path vanished
-  * mid-swap, publish the staged state if only it survived, vacuum
-  * residues when the live path is healthy.
+/** The file-level swap's crash states, reconstructed and recovered:
+  * [[Layout.fileLevelSwap]] commits through its `_PENDING` marker, and
+  * recoverPublish turns that marker into an automated step — roll an
+  * incomplete swap back, vacuum a committed one's trash. The
+  * segment-protocol structures' crash states (a fold that dies before
+  * or after its manifest commit) are pinned in CdcFoldCrashResumeSpec.
   */
 class PublishRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -23,44 +23,6 @@ class PublishRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def fs = new org.apache.hadoop.fs.Path("/tmp")
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def mkdir(p: java.nio.file.Path, name: String): org.apache.hadoop.fs.Path = {
-    val d = p.resolve(name)
-    java.nio.file.Files.createDirectories(d)
-    java.nio.file.Files.write(d.resolve("part-0.parquet"), Array[Byte](1, 2, 3))
-    new org.apache.hadoop.fs.Path(d.toString)
-  }
-
-  test("crash between the two renames: trash restores, staged residue dropped") {
-    val work = java.nio.file.Files.createTempDirectory("graft-recov")
-    mkdir(work, "t.trash-999")
-    mkdir(work, "t.compact-999")
-    val live = new org.apache.hadoop.fs.Path(work.resolve("t").toString)
-    val r = Layout.recoverPublish(fs, live)
-    assert(r.startsWith("restored"))
-    assert(fs.exists(live))
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(work.toString)).length === 1)
-  }
-
-  test("crash after the old dir was consumed: the staged dir publishes") {
-    val work = java.nio.file.Files.createTempDirectory("graft-recov2")
-    mkdir(work, "t.compact-999")
-    val live = new org.apache.hadoop.fs.Path(work.resolve("t").toString)
-    assert(Layout.recoverPublish(fs, live).startsWith("published"))
-    assert(fs.exists(live))
-  }
-
-  test("healthy live path: residues vacuum, content untouched") {
-    val work = java.nio.file.Files.createTempDirectory("graft-recov3")
-    mkdir(work, "t")
-    mkdir(work, "t.trash-999")
-    mkdir(work, "t.optimize-999")
-    val live = new org.apache.hadoop.fs.Path(work.resolve("t").toString)
-    assert(Layout.recoverPublish(fs, live).startsWith("vacuumed"))
-    assert(fs.exists(live))
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(work.toString)).length === 1)
-    assert(Layout.recoverPublish(fs, live) === "clean")
-  }
 
   private def write(p: java.nio.file.Path, name: String, bytes: Byte*): Unit =
     java.nio.file.Files.write(p.resolve(name),
@@ -129,34 +91,6 @@ class PublishRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getPath.getName).toSet === Set("t", "stage"))
   }
 
-  /** The round-14 ADVICE shape: live is ABSENT (a publishDir crash left
-    * the only full copy under `.trash-*`) AND an incomplete file-level
-    * swap's `.ftrash-*` residue exists. Running the ftrash rollback
-    * first would mkdirs a fabricated live dir holding only the displaced
-    * files — and the next recovery call, seeing live present, would
-    * vacuum the `.trash-*` residue holding the real old state. The
-    * directory-level restore must run first.
-    */
-  test("live absent + trash + incomplete ftrash: directory restore precedes rollback") {
-    val work = java.nio.file.Files.createTempDirectory("graft-recov8")
-    val trashDir = work.resolve("t.trash-555")
-    java.nio.file.Files.createDirectories(trashDir)
-    write(trashDir, "part-base.parquet", 1)      // the REAL old state
-    write(trashDir, "part-old.parquet", 2)
-    val ftrashDir = work.resolve("t.ftrash-777")
-    java.nio.file.Files.createDirectories(ftrashDir)
-    write(ftrashDir, "part-d.parquet", 3)        // displaced — only copies
-    java.nio.file.Files.write(ftrashDir.resolve("_PENDING"),
-      "part-new1.parquet".getBytes("UTF-8"))
-    val live = new org.apache.hadoop.fs.Path(work.resolve("t").toString)
-    val r = Layout.recoverPublish(fs, live)
-    assert(r.contains("restored") && r.contains("rolled back"))
-    // the real old state AND the displaced originals both survive in live
-    assert(names(live) === Set("part-base.parquet", "part-old.parquet", "part-d.parquet"))
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(work.toString)).length === 1)
-    assert(Layout.recoverPublish(fs, live) === "clean")
-  }
-
   test("pre-existing ftrash residue for this pid: swap refuses, names recoverPublish") {
     val work = java.nio.file.Files.createTempDirectory("graft-recov9")
     val liveDir = work.resolve("t")
@@ -176,16 +110,5 @@ class PublishRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(names(live) === Set("part-old.parquet"))
     assert(names(new org.apache.hadoop.fs.Path(stageDir.toString)) ===
       Set("part-new.parquet"))
-  }
-
-  test("two trash residues with live missing: refuses rather than guess") {
-    val work = java.nio.file.Files.createTempDirectory("graft-recov7")
-    mkdir(work, "t.trash-111")
-    mkdir(work, "t.trash-222")
-    val live = new org.apache.hadoop.fs.Path(work.resolve("t").toString)
-    val e = intercept[IllegalArgumentException](Layout.recoverPublish(fs, live))
-    assert(e.getMessage.contains("ambiguous"))
-    // both residues survive the refusal — nothing was discarded
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(work.toString)).length === 2)
   }
 }

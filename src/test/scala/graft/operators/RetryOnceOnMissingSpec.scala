@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** [[Layout.retryOnceOnMissing]] guards the four cdcm probes against
-  * the publishDir two-rename window. Its three outcome classes — retry
+/** [[Layout.retryOnceOnMissing]] retries a probe body that fails on a
+  * missing path (a directory swapped aside and back, say); the
+  * benchmark's probes and the gates' `detached` probes run under it. Its
+  * three outcome classes — retry
   * then succeed (including across back-to-back swaps), retries-exhausted
   * rethrow naming recoverPublish, and non-missing passthrough — each get
   * a test, plus the bounded cause-chain walk (cyclic chains must not
@@ -31,7 +33,7 @@ class RetryOnceOnMissingSpec extends AnyFunSuite with BeforeAndAfterAll {
     * The body rebuilds its DataFrame from `spark.read` on each attempt,
     * exactly as the probe contract requires.
     */
-  test("probe racing a publishDir swap: attempt 1 hits the window, retry succeeds") {
+  test("probe racing a directory swap: attempt 1 hits the window, retry succeeds") {
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("graft-retry1")
     val liveStr = work.resolve("idx").toString

@@ -18,7 +18,8 @@ import org.scalatest.BeforeAndAfterAll
   *    and a replay at or below the fold's replay fence is skipped;
   *  - compaction: view identical before and after, every batch segment
   *    folded into `seg=base`;
-  *  - a torn segment (no `_SUCCESS`) is invisible and dropped by the fold;
+  *  - a torn segment (one no manifest version lists) is invisible and
+  *    left out of the fold;
   *  - a fully-retracted group (n=0) disappears from the view.
   */
 class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -37,9 +38,9 @@ class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.toSeq.toDF("_delta_type", "word", "v")
   }
 
-  /** The `seg=*` directory names under the view's root. */
+  /** The committed `seg=*` names of the view. */
   private def segs(path: String): Set[String] =
-    Option(new java.io.File(path).list()).toSet.flatten.filter(_.startsWith("seg="))
+    graft.operators.ManifestFixtures.segs(spark, path)
 
   private def view(path: String): Map[String, (Long, Long)] =
     CdcMaterializer.readAggregate(spark, path).collect()
@@ -91,7 +92,7 @@ class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The replay seam: foreachBatch is at-least-once, so a batch the
     * fold already consumed into `seg=base` can be replayed after it.
     * SUM deltas are signed increments — re-summing them double-counts
-    * silently — so the fold records a `_folded_through` replay fence and
+    * silently — so the fold records a manifest replay fence and
     * [[graft.operators.Layout.append]] skips any batch at or below it.
     */
   test("stale already-folded deltas surviving a crashed cleanup never double-count") {
@@ -130,9 +131,9 @@ class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** A batch whose write crashed leaves its segment without `_SUCCESS`:
-    * it belongs to an uncommitted batch that will replay, so the view
-    * must not count it and the fold must drop it.
+  /** A batch whose append crashed before its manifest commit leaves a
+    * segment no version lists: it belongs to an uncommitted batch that
+    * will replay, so the view must not count it and the fold must drop it.
     */
   test("a torn delta segment is invisible to the view and dropped by the fold") {
     val tmp = java.nio.file.Files.createTempDirectory("cdcagg-torn")
@@ -142,7 +143,7 @@ class CdcAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
         "word", "v", path, 0L)
       CdcMaterializer.writeAggDeltas(batch(("insert", "a", 5L)),
         "word", "v", path, 1L)
-      java.nio.file.Files.delete(java.nio.file.Paths.get(path, "seg=b000001", "_SUCCESS"))
+      graft.operators.ManifestFixtures.uncommit(spark, path)
       assert(view(path) == Map("a" -> (1L, 10L)),
         "the view counted a torn segment")
       CdcMaterializer.compactAggregate(spark, path)

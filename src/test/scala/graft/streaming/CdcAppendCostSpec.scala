@@ -69,11 +69,13 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(p => p.batchId -> p.numInputRows).toMap
   }
 
-  /** Per-segment appended (rows, bytes) for an index leg laid out as
-    * `<legDir>/seg=bNNNNNN`, keyed by batch id.
+  /** Per-segment appended (rows, bytes) for leg `leg` of the structure
+    * at `root`, laid out as `<generation>/<leg>/seg=bNNNNNN`, keyed by
+    * batch id.
     */
-  private def segStats(legDir: java.nio.file.Path): Map[Long, (Long, Long)] =
-    new java.io.File(legDir.toString).listFiles()
+  private def segStats(root: java.nio.file.Path, leg: String = ""): Map[Long, (Long, Long)] =
+    new java.io.File(s"${graft.operators.ManifestFixtures.generation(spark, root.toString)}/$leg")
+      .listFiles()
       .filter(_.getName.startsWith("seg=b")).map { seg =>
         val rows = spark.read.parquet(seg.getPath).count()
         val bytes = java.nio.file.Files.walk(seg.toPath).filter(
@@ -132,8 +134,8 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (w4, in4) = run(4)
     val (w8, in8) = run(8)
     for (legName <- Seq("doclog", "postings")) {
-      val s4 = segStats(w4.resolve("index").resolve(legName))
-      val s8 = segStats(w8.resolve("index").resolve(legName))
+      val s4 = segStats(w4.resolve("index"), legName)
+      val s8 = segStats(w8.resolve("index"), legName)
       // postings: <= 2 distinct terms per touched doc; doclog: <= 1 row
       // per touched key — both bounded by the batch's admitted rows
       val f = if (legName == "postings") 2.0 else 1.0
@@ -169,8 +171,8 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (w4, in4) = run(4)
     val (w8, in8) = run(8)
     for (legName <- Seq("doclog", "cells")) {
-      val s4 = segStats(w4.resolve("annindex").resolve(legName))
-      val s8 = segStats(w8.resolve("annindex").resolve(legName))
+      val s4 = segStats(w4.resolve("annindex"), legName)
+      val s8 = segStats(w8.resolve("annindex"), legName)
       assertBatchBounded(s"ann/$legName", s4, in4, 1.0)
       assertBatchBounded(s"ann/$legName", s8, in8, 1.0)
       assertTotalFlat(s"ann/$legName", s4, s8)
@@ -179,11 +181,11 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
       import spark.implicits._
       import org.apache.spark.sql.functions.{max, struct}
       val idx = w.resolve("annindex").toString
-      val live = spark.read.parquet(s"$idx/doclog")
+      val live = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, idx)}/doclog")
         .groupBy($"vec_id").agg(max(struct($"ver", $"deleted")).as("m"))
         .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
         .filter(!$"deleted")
-      val probeVec = spark.read.parquet(s"$idx/cells")
+      val probeVec = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, idx)}/cells")
         .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
         .orderBy($"vec_id").select($"embedding").head().getSeq[Long](0)
       Similarity.mipsTopKViaCdcAnnIndex(spark, idx, probeVec, 100)
@@ -209,7 +211,7 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
           .coalesce(4).persist()
         try {
           if (!imgs.isEmpty)
-            imgs.write.mode("overwrite").parquet(f"$log/seg=b$batchId%06d")
+            CdcBinlog.appendCdcFpSegment(imgs, log, f"b$batchId%06d")
         } finally imgs.unpersist()
       })
       (work, inputs)

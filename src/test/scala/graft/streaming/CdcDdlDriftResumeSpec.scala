@@ -136,8 +136,7 @@ class CdcDdlDriftResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(messages(death).exists(m =>
       m.contains("schema change") && m.contains("payloadDdl")),
       s"expected the named schema-change failure, got: $death")
-    val segsAtDeath = Option(new java.io.File(s"$idx/doclog").listFiles())
-      .map(_.count(_.getName.startsWith("seg="))).getOrElse(0)
+    val segsAtDeath = graft.operators.ManifestFixtures.segs(spark, idx).size
     assert(segsAtDeath >= 2,
       s"only $segsAtDeath segments committed before the drift — cap too coarse " +
         "for the death to land mid-stream")
@@ -147,8 +146,7 @@ class CdcDdlDriftResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the ALTER), SAME checkpoint. The drain must complete.
     val q2 = start(ddl2, evolution = true, Trigger.AvailableNow())
     q2.awaitTermination()
-    val segsAfter = Option(new java.io.File(s"$idx/doclog").listFiles())
-      .map(_.count(_.getName.startsWith("seg="))).getOrElse(0)
+    val segsAfter = graft.operators.ManifestFixtures.segs(spark, idx).size
     assert(segsAfter > segsAtDeath,
       "the resumed stream appended nothing past the drift point")
 
@@ -296,14 +294,12 @@ class CdcDdlDriftResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(messages(death).exists(m =>
       m.contains("schema change") && m.contains("bench.d1")),
       s"expected the named schema-change failure on d1, got: $death")
-    def segsOf(path: String): Int =
-      Option(new java.io.File(path).listFiles())
-        .map(_.count(_.getName.startsWith("seg="))).getOrElse(0)
-    assert(segsOf(s"$idx1/doclog") >= 2 && segsOf(s"$idx2/doclog") >= 2,
-      s"death landed too early (d1 ${segsOf(s"$idx1/doclog")}, " +
-        s"d2 ${segsOf(s"$idx2/doclog")} segments) — cap too coarse")
+    def segsOf(root: String): Int = graft.operators.ManifestFixtures.segs(spark, root).size
+    assert(segsOf(idx1) >= 2 && segsOf(idx2) >= 2,
+      s"death landed too early (d1 ${segsOf(idx1)}, " +
+        s"d2 ${segsOf(idx2)} segments) — cap too coarse")
     def centroids(): Seq[String] =
-      spark.read.parquet(s"$idx2/centroids")
+      spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, idx2)}/centroids")
         .orderBy($"cell").collect().map(_.toString).toSeq
     val centAtDeath = centroids()
 
@@ -338,11 +334,11 @@ class CdcDdlDriftResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       CdcBinlog.cdcm5BatchImages(all.filter(all("table") === "d2"), 0L),
       ref2, "b000000", k = 4))
     def annProbe(path: String): Seq[String] = {
-      val live = spark.read.parquet(s"$path/doclog").groupBy($"vec_id")
+      val live = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, path)}/doclog").groupBy($"vec_id")
         .agg(max(struct($"ver", $"deleted")).as("m"))
         .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
         .filter(!$"deleted")
-      val probeVec = spark.read.parquet(s"$path/cells")
+      val probeVec = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, path)}/cells")
         .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
         .orderBy($"vec_id").select($"embedding")
         .head().getSeq[Long](0)

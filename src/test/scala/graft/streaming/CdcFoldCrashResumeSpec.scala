@@ -6,24 +6,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The one maintenance crash CdcIndexRestartSpec doesn't reach: the
-  * FOLD ITSELF dying inside publishDir's two-rename swap while the
-  * ingest pipeline holds a live checkpoint. PublishRecoverySpec pins
-  * recoverPublish on fabricated static directories; here each crash
-  * state is reconstructed with REAL content from a real cdcm4 run —
-  * the old multi-segment index (snapshotted before the fold) and the
-  * genuinely folded result — and recovery must hand the RESUMED stream
-  * a state it can keep appending to, with the final probe matching the
-  * cdcm4 gate's oracle-checked answer.
-  *
-  * Two crash states, two recovery routes:
-  *  - between the renames (old under `.trash-*`, fold under
-  *    `.compact-*`, live gone) → the OLD state restores, and the
-  *    `_folded_through` fence — which travelled with the dropped
-  *    staging dir — must NOT survive into live (a stale fence over an
-  *    UNFOLDED index would silently drop legitimate replays);
-  *  - after the old state was consumed (only `.compact-*` left) → the
-  *    FOLDED state publishes, fence intact, and the resumed stream's
-  *    replayed batch must respect it against seg=base.
+  * FOLD ITSELF dying while the ingest pipeline holds a live checkpoint.
+  * A fold writes a whole new generation and commits it by adding one
+  * manifest version ([[graft.operators.Layout.fold]]), so it can die in
+  * two places, each reconstructed here with REAL content from a real
+  * run killed mid-stream and a real fold:
+  *  - before the manifest commit (the fold's version taken back): the
+  *    OLD generation is still current and carries no fence (a stale
+  *    fence over an UNFOLDED index would silently drop legitimate
+  *    replays); the orphan generation is ignored by every reader and
+  *    deleted by the next fold;
+  *  - after the manifest commit (the dead fold's lease left behind): the
+  *    NEW generation is current with its fence, and the resumed
+  *    stream's replayed batch must respect it against seg=base.
+  * Either way the resumed stream must keep appending, and the final
+  * answer must match the uninterrupted gate's (or run's).
   */
 class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -43,15 +40,6 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     try tw.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => java.nio.file.Files.deleteIfExists(p))
     finally tw.close()
-  }
-
-  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-    val tw = java.nio.file.Files.walk(from)
-    try tw.forEach { p =>
-      val t = to.resolve(from.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t)
-    } finally tw.close()
   }
 
   private lazy val cap = {
@@ -88,9 +76,84 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .start()
   }
 
-  private def segDirs(path: java.nio.file.Path): Int =
-    Option(path.toFile.listFiles())
-      .map(_.count(_.getName.startsWith("seg="))).getOrElse(0)
+  private def segCount(root: String): Int =
+    graft.operators.ManifestFixtures.segs(spark, root).size
+
+  /** Run a stream with `startFn`, kill it once `commits` non-empty
+    * batches are in and while batches remain (`commits` ≤ segments < 8,
+    * retried), and return the work dir.
+    */
+  private def killedMidStream(name: String, structure: String, commits: Int)
+                             (startFn: (java.nio.file.Path, Trigger) => StreamingQuery)
+      : java.nio.file.Path = {
+    var work: java.nio.file.Path = null
+    var landed = false
+    var attempt = 0
+    while (!landed && attempt < 5) {
+      attempt += 1
+      work = java.nio.file.Files.createTempDirectory(name)
+      val committed = new java.util.concurrent.CountDownLatch(commits)
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+          if (e.progress.numInputRows > 0) committed.countDown()
+      }
+      spark.streams.addListener(listener)
+      try {
+        val q1 = startFn(work, Trigger.ProcessingTime(0))
+        assert(committed.await(120, java.util.concurrent.TimeUnit.SECONDS))
+        q1.stop(); q1.awaitTermination()
+      } finally spark.streams.removeListener(listener)
+      val segs = segCount(work.resolve(structure).toString)
+      landed = segs >= commits && segs < 8
+      if (!landed) rmTree(work)
+    }
+    assert(landed, "kill never landed mid-stream in 5 attempts")
+    work
+  }
+
+  /** Crash before the commit: run `fold` for real, then take its
+    * manifest version back. Returns the orphan generation, marked with a
+    * sentinel file the next fold must delete.
+    */
+  private def crashBeforeCommit(root: String)(fold: => Unit): java.nio.file.Path = {
+    import graft.operators.{Layout, ManifestFixtures}
+    val oldGen = ManifestFixtures.generation(spark, root)
+    val oldSegs = ManifestFixtures.segs(spark, root)
+    fold
+    val newGen = ManifestFixtures.generation(spark, root)
+    ManifestFixtures.uncommit(spark, root)
+    assert(ManifestFixtures.generation(spark, root) === oldGen,
+      "taking the fold's version back did not restore the old generation")
+    assert(ManifestFixtures.segs(spark, root) === oldSegs)
+    assert(Layout.fenceOf(spark, root).isEmpty,
+      "the uncommitted fold's replay fence is visible over the UNFOLDED " +
+        "structure — a resume would silently drop legitimate replays")
+    val orphan = java.nio.file.Paths.get(newGen)
+    java.nio.file.Files.writeString(orphan.resolve("sentinel"), "orphan")
+    orphan
+  }
+
+  /** Crash after the commit: run `fold` for real and leave its lease
+    * behind, held by a process that is dead.
+    */
+  private def crashAfterCommit(root: String)(fold: => Unit): Unit = {
+    import graft.operators.Layout
+    fold
+    assert(Layout.fenceOf(spark, root).isDefined,
+      "the committed fold lost its replay fence — a replayed batch " +
+        "would double rows against seg=base")
+    val dead = new ProcessBuilder("true").start()
+    dead.waitFor()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root.foldlock"),
+      s"pid=${dead.pid()};host=${java.net.InetAddress.getLocalHost.getHostName};" +
+        "ts=0;nonce=0")
+  }
+
+  private def assertOrphanGone(orphan: java.nio.file.Path): Unit =
+    assert(!java.nio.file.Files.exists(orphan.resolve("sentinel")),
+      s"the next fold left the crashed fold's generation $orphan behind")
 
   private def probe(work: java.nio.file.Path): Seq[String] = {
     import graft.operators.{CdcBinlog, TextAnalysis}
@@ -99,101 +162,48 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("r_sparse").collect().map(_.toString).toSeq
   }
 
-  private def fs = new org.apache.hadoop.fs.Path("/tmp")
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def foldText(work: java.nio.file.Path): Unit =
+    graft.operators.TextAnalysis.compactCdcTextIndex(spark,
+      work.resolve("index").toString, nBuckets = 16)
 
-  /** Run the pipeline, kill it mid-stream (1 ≤ segments < 8, retried),
-    * fold the index for real, snapshot-reconstruct the requested crash
-    * state, and return the work dir — live gone, residues in place.
-    */
-  private def crashedFold(keepTrash: Boolean): java.nio.file.Path = {
-    import graft.operators.TextAnalysis
-    var work: java.nio.file.Path = null
-    var landed = false
-    var attempt = 0
-    while (!landed && attempt < 5) {
-      attempt += 1
-      work = java.nio.file.Files.createTempDirectory("graft-foldcrash")
-      val firstCommit = new java.util.concurrent.CountDownLatch(1)
-      val listener = new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-          if (e.progress.numInputRows > 0) firstCommit.countDown()
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q1 = start(work, Trigger.ProcessingTime(0))
-        assert(firstCommit.await(120, java.util.concurrent.TimeUnit.SECONDS))
-        q1.stop(); q1.awaitTermination()
-      } finally spark.streams.removeListener(listener)
-      val segs = segDirs(work.resolve("index").resolve("doclog"))
-      landed = segs >= 1 && segs < 8
-      if (!landed) rmTree(work)
-    }
-    assert(landed, "kill never landed mid-stream in 5 attempts")
-
-    val live = work.resolve("index")
-    val old = work.resolve("old-snapshot")
-    copyTree(live, old)
-    TextAnalysis.compactCdcTextIndex(spark, live.toString, nBuckets = 16)
-    // live now holds exactly what the fold staged; rewind the swap to
-    // the requested crash point with the real artifacts
-    java.nio.file.Files.move(live, work.resolve("index.compact-999"))
-    if (keepTrash) java.nio.file.Files.move(old, work.resolve("index.trash-999"))
-    else rmTree(old)
-    work
+  private lazy val textWant = {
+    graft.functions.GraftFunctions.register(spark)
+    graft.operators.CdcBinlog.cdcm4IndexFreshness(spark, dir)
+      .collect().map(_.toString).toSeq
   }
 
-  test("fold crash between renames: rollback drops the fence, resume + re-fold match the gate") {
-    import graft.operators.{CdcBinlog, Layout, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
-    val want = CdcBinlog.cdcm4IndexFreshness(spark, dir)
-      .collect().map(_.toString).toSeq
-
-    val work = crashedFold(keepTrash = true)
-    val live = new org.apache.hadoop.fs.Path(work.resolve("index").toString)
-    val report = Layout.recoverPublish(fs, live)
-    info(s"recoverPublish: $report")
-    assert(report.startsWith("restored"), s"expected the OLD state back, got: $report")
-    assert(Layout.foldedThrough(fs, live).isEmpty,
-      "the staged fold's replay fence leaked into the restored UNFOLDED " +
-        "index — a resume would silently drop legitimate replays")
-    assert(segDirs(work.resolve("index").resolve("doclog")) >= 1)
+  test("fold crash before the manifest commit: the old generation stays current, resume + re-fold match the gate") {
+    val want = textWant
+    val work = killedMidStream("graft-foldcrash", "index", 1)(start)
+    val idx = work.resolve("index").toString
+    val orphan = crashBeforeCommit(idx)(foldText(work))
+    assert(probe(work).nonEmpty)
 
     val q2 = start(work, Trigger.AvailableNow())
     q2.awaitTermination()
-    TextAnalysis.compactCdcTextIndex(spark, work.resolve("index").toString,
-      nBuckets = 16)
+    foldText(work)
+    assertOrphanGone(orphan)
     assert(probe(work) === want,
-      "rollback + resume + re-fold diverged from the uninterrupted gate")
+      "crash + resume + re-fold diverged from the uninterrupted gate")
     rmTree(work)
   }
 
-  test("fold crash after the old state was consumed: the fold publishes, resume respects the fence") {
-    import graft.operators.{CdcBinlog, Layout}
-    graft.functions.GraftFunctions.register(spark)
-    val want = CdcBinlog.cdcm4IndexFreshness(spark, dir)
-      .collect().map(_.toString).toSeq
-
-    val work = crashedFold(keepTrash = false)
-    val live = new org.apache.hadoop.fs.Path(work.resolve("index").toString)
-    val report = Layout.recoverPublish(fs, live)
-    info(s"recoverPublish: $report")
-    assert(report.startsWith("published"), s"expected the FOLDED state in, got: $report")
-    assert(Layout.foldedThrough(fs, live).isDefined,
-      "the published fold lost its replay fence — a replayed batch " +
-        "would double rows against seg=base")
+  test("fold crash after the manifest commit: the fold is current, resume respects the fence") {
+    val want = textWant
+    val work = killedMidStream("graft-foldcrash", "index", 1)(start)
+    crashAfterCommit(work.resolve("index").toString)(foldText(work))
 
     val q2 = start(work, Trigger.AvailableNow())
     q2.awaitTermination()
     assert(probe(work) === want,
-      "publish-forward + resume diverged from the uninterrupted gate — " +
+      "resume after a committed fold diverged from the uninterrupted gate — " +
         "a replayed folded batch doubled rows against seg=base")
+    foldText(work) // the dead fold's lease must not block the next one
+    assert(probe(work) === want)
     rmTree(work)
   }
 
-  // ---- the ANN twin: quantizer through crash recovery ------------------
+  // ---- the ANN twin: quantizer through the crash -----------------------
 
   private def startAnn(work: java.nio.file.Path, trigger: Trigger): StreamingQuery = {
     import graft.operators.{CdcBinlog, Similarity}
@@ -212,19 +222,23 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .start()
   }
 
-  private def centroids(work: java.nio.file.Path): Seq[(Int, Seq[Double])] =
-    spark.read.parquet(work.resolve("annindex").resolve("centroids").toString)
+  private def centroids(work: java.nio.file.Path): Seq[(Int, Seq[Double])] = {
+    val gen = graft.operators.ManifestFixtures.generation(spark,
+      work.resolve("annindex").toString)
+    spark.read.parquet(s"$gen/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+  }
 
   private def annProbe(work: java.nio.file.Path): Seq[String] = {
     import org.apache.spark.sql.functions.{max, struct}
     import spark.implicits._
     val idx = work.resolve("annindex").toString
-    val live = spark.read.parquet(s"$idx/doclog").groupBy($"vec_id")
+    val view = graft.operators.Layout.committedView(spark, idx).get
+    val live = view.read("doclog").groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val probeVec = spark.read.parquet(s"$idx/cells")
+    val probeVec = view.read("cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .orderBy($"vec_id").select($"embedding")
       .head().getSeq[Long](0)
@@ -232,179 +246,131 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("r_dense").collect().map(_.toString).toSeq
   }
 
-  /** The ANN compactor shares the text twin's publish protocol, but its
-    * fold carries one artifact the text index doesn't have: the coarse
-    * quantizer, staged as a COPY beside the folded cells. A crash
-    * between the renames must roll the OLD centroids back byte-exactly
-    * (publishing the staged copy instead would be invisible today —
-    * they're equal — but the invariant is what keeps a future fold that
-    * REBUILDS the quantizer from silently re-clustering a rolled-back
-    * index), and the resumed stream plus a re-fold must match an
-    * uninterrupted same-cap run on both the probe AND the quantizer.
+  /** An uninterrupted same-cap run (same admission → same batch 0 →
+    * value-identical quantizer, the cdcm5 restart leg's contract),
+    * folded with `fold` unless it is None: (centroids, probe).
     */
-  test("ANN fold crash between renames: old quantizer restores byte-exactly; resume + re-fold match") {
-    import graft.operators.{Layout, Similarity}
+  private def annReference(fold: Option[String => Unit]): (Seq[(Int, Seq[Double])], Seq[String]) = {
     graft.functions.GraftFunctions.register(spark)
-
-    // uninterrupted same-cap reference (same admission → same batch 0 →
-    // value-identical quantizer, the cdcm5 restart leg's contract)
     val ref = java.nio.file.Files.createTempDirectory("graft-annfold-ref")
     val qRef = startAnn(ref, Trigger.AvailableNow())
     qRef.awaitTermination()
-    assert(segDirs(ref.resolve("annindex").resolve("doclog")) >= 3)
-    Similarity.compactCdcAnnIndex(spark, ref.resolve("annindex").toString)
-    val wantCent = centroids(ref)
-    val wantProbe = annProbe(ref)
+    assert(segCount(ref.resolve("annindex").toString) >= 3)
+    fold.foreach(_(ref.resolve("annindex").toString))
+    try (centroids(ref), annProbe(ref)) finally rmTree(ref)
+  }
 
-    // run, kill mid-stream, fold for real, rewind the swap to
-    // between-the-renames with the real artifacts
-    var work: java.nio.file.Path = null
-    var landed = false
-    var attempt = 0
-    while (!landed && attempt < 5) {
-      attempt += 1
-      work = java.nio.file.Files.createTempDirectory("graft-annfold")
-      val firstCommit = new java.util.concurrent.CountDownLatch(1)
-      val listener = new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-          if (e.progress.numInputRows > 0) firstCommit.countDown()
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q1 = startAnn(work, Trigger.ProcessingTime(0))
-        assert(firstCommit.await(120, java.util.concurrent.TimeUnit.SECONDS))
-        q1.stop(); q1.awaitTermination()
-      } finally spark.streams.removeListener(listener)
-      val segs = segDirs(work.resolve("annindex").resolve("doclog"))
-      landed = segs >= 1 && segs < 8
-      if (!landed) rmTree(work)
-    }
-    assert(landed, "kill never landed mid-stream in 5 attempts")
-    val live = work.resolve("annindex")
+  private def compactAnn(idx: String): Unit =
+    graft.operators.Similarity.compactCdcAnnIndex(spark, idx)
+
+  /** The ANN compactor shares the text twin's protocol, but its fold
+    * carries one artifact the text index doesn't have: the coarse
+    * quantizer, written as a COPY into the new generation. A crash
+    * before the commit must leave the OLD centroids current
+    * byte-exactly (the invariant that keeps a future fold that REBUILDS
+    * the quantizer from silently re-clustering an unfolded index), and
+    * the resumed stream plus a re-fold must match an uninterrupted
+    * same-cap run on both the probe AND the quantizer.
+    */
+  test("ANN fold crash before the manifest commit: the old quantizer stays current; resume + re-fold match") {
+    val (wantCent, wantProbe) = annReference(Some(compactAnn))
+    val work = killedMidStream("graft-annfold", "annindex", 1)(startAnn)
+    val idx = work.resolve("annindex").toString
     val preFoldCent = centroids(work)
     assert(preFoldCent === wantCent,
       "same-cap admission produced a different quantizer — the reference " +
         "run is not comparable and the test premise broke")
-    val old = work.resolve("old-snapshot")
-    copyTree(live, old)
-    Similarity.compactCdcAnnIndex(spark, live.toString)
-    java.nio.file.Files.move(live, work.resolve("annindex.compact-999"))
-    java.nio.file.Files.move(old, work.resolve("annindex.trash-999"))
-
-    val liveP = new org.apache.hadoop.fs.Path(live.toString)
-    val report = Layout.recoverPublish(fs, liveP)
-    info(s"recoverPublish: $report")
-    assert(report.startsWith("restored"), s"expected the OLD state back, got: $report")
-    assert(Layout.foldedThrough(fs, liveP).isEmpty,
-      "the staged fold's replay fence leaked into the restored UNFOLDED index")
+    val orphan = crashBeforeCommit(idx)(compactAnn(idx))
     assert(centroids(work) === preFoldCent,
-      "rollback did not restore the pre-fold quantizer byte-exactly")
+      "the uncommitted fold moved the current quantizer")
 
     val q2 = startAnn(work, Trigger.AvailableNow())
     q2.awaitTermination()
-    Similarity.compactCdcAnnIndex(spark, live.toString)
+    compactAnn(idx)
+    assertOrphanGone(orphan)
     assert(centroids(work) === wantCent,
-      "the re-fold after recovery changed the quantizer")
+      "the re-fold after the crash changed the quantizer")
     assert(annProbe(work) === wantProbe,
-      "rollback + resume + re-fold diverged from the uninterrupted run")
-    rmTree(ref); rmTree(work)
+      "crash + resume + re-fold diverged from the uninterrupted run")
+    rmTree(work)
   }
 
-  /** The requantize twin: unlike a compact, the staged artifact carries
+  test("ANN fold crash after the manifest commit: the folded quantizer is current; resume + re-fold match") {
+    val (wantCent, wantProbe) = annReference(Some(compactAnn))
+    val work = killedMidStream("graft-annfold", "annindex", 1)(startAnn)
+    val idx = work.resolve("annindex").toString
+    crashAfterCommit(idx)(compactAnn(idx))
+    assert(centroids(work) === wantCent, "the fold changed the quantizer")
+
+    val q2 = startAnn(work, Trigger.AvailableNow())
+    q2.awaitTermination()
+    compactAnn(idx)
+    assert(centroids(work) === wantCent,
+      "the re-fold after the crash changed the quantizer")
+    assert(annProbe(work) === wantProbe,
+      "crash + resume + re-fold diverged from the uninterrupted run")
+    rmTree(work)
+  }
+
+  /** The requantize twin: unlike a compact, the new generation carries
     * a REBUILT quantizer, so the two crash states diverge in what they
-    * must preserve — a between-renames crash rolls the FIRST-BATCH
-    * centroids back byte-exactly (publishing the rebuilt ones with the
-    * OLD unfolded cells would mis-prune every probe: assignments and
-    * quantizer must always travel together), while an after-consume
-    * crash publishes the NEW quantizer with its matching re-assigned
-    * base. Either way the resumed stream's replayed batch sits at or
-    * below the published fence and must be skipped, and the exact probe
-    * — partition-invariant by construction — must match an
-    * uninterrupted same-cap run that never requantized at all.
+    * must preserve — a crash before the commit leaves the FIRST-BATCH
+    * centroids current with the OLD cells (assignments and quantizer
+    * always travel together in one generation), while a crash after it
+    * leaves the NEW quantizer current with its re-assigned base. Either
+    * way the resumed stream's replayed batch sits at or below the
+    * committed fence (if any) and must be skipped, and the exact probe —
+    * partition-invariant by construction — must match an uninterrupted
+    * same-cap run that never requantized at all.
     */
-  test("requantize crash: between-renames restores the old quantizer; after-consume publishes the new one; resume respects the fence") {
+  test("requantize crash before the manifest commit: the old quantizer stays current; a re-run rebuilds the same one; resume respects the fence") {
     import graft.operators.{Layout, Similarity}
-    graft.functions.GraftFunctions.register(spark)
-
-    // uninterrupted same-cap reference, NO requantize: the exact probe
-    // is invariant to the cell partition, so this is also the
-    // post-requantize ground truth
-    val ref = java.nio.file.Files.createTempDirectory("graft-annrq-ref")
-    val qRef = startAnn(ref, Trigger.AvailableNow())
-    qRef.awaitTermination()
-    assert(segDirs(ref.resolve("annindex").resolve("doclog")) >= 3)
-    val wantProbe = annProbe(ref)
-
-    // run, kill mid-stream (>= 2 segments so the requantize has real
-    // multi-batch state to consume, < 8 so batches remain to resume)
-    var work: java.nio.file.Path = null
-    var landed = false
-    var attempt = 0
-    while (!landed && attempt < 5) {
-      attempt += 1
-      work = java.nio.file.Files.createTempDirectory("graft-annrq")
-      val secondCommit = new java.util.concurrent.CountDownLatch(2)
-      val listener = new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-          if (e.progress.numInputRows > 0) secondCommit.countDown()
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q1 = startAnn(work, Trigger.ProcessingTime(0))
-        assert(secondCommit.await(120, java.util.concurrent.TimeUnit.SECONDS))
-        q1.stop(); q1.awaitTermination()
-      } finally spark.streams.removeListener(listener)
-      val segs = segDirs(work.resolve("annindex").resolve("doclog"))
-      landed = segs >= 2 && segs < 8
-      if (!landed) rmTree(work)
-    }
-    assert(landed, "kill never landed mid-stream in 5 attempts")
-
-    val live = work.resolve("annindex")
-    val liveP = new org.apache.hadoop.fs.Path(live.toString)
+    val (_, wantProbe) = annReference(None)
+    // >= 2 segments so the requantize has real multi-batch state to consume
+    val work = killedMidStream("graft-annrq", "annindex", 2)(startAnn)
+    val idx = work.resolve("annindex").toString
     val preCent = centroids(work) // the first batch's quantizer
-    val old = work.resolve("old-snapshot")
-    copyTree(live, old)
-    Similarity.requantizeCdcAnnIndex(spark, live.toString)
-    val reqCent = centroids(work) // the rebuilt quantizer
+    var reqCent: Seq[(Int, Seq[Double])] = null
+    var reqFence: Option[Long] = None
+    val orphan = crashBeforeCommit(idx) {
+      Similarity.requantizeCdcAnnIndex(spark, idx)
+      reqCent = centroids(work)
+      reqFence = Layout.fenceOf(spark, idx)
+    }
     assert(reqCent !== preCent, "the rebuild kept the first-batch quantizer")
-    val reqFence = Layout.foldedThrough(fs, liveP)
     assert(reqFence.isDefined)
-
-    // crash state A: between the renames — old under `.trash-*`, the
-    // requantized tree under `.optimize-*`, live gone
-    java.nio.file.Files.move(live, work.resolve("annindex.optimize-999"))
-    java.nio.file.Files.move(old, work.resolve("annindex.trash-999"))
-    val reportA = Layout.recoverPublish(fs, liveP)
-    info(s"recoverPublish A: $reportA")
-    assert(reportA.startsWith("restored"), s"expected the OLD state back, got: $reportA")
-    assert(Layout.foldedThrough(fs, liveP).isEmpty,
-      "the staged requantize's fence leaked into the restored UNFOLDED index")
     assert(centroids(work) === preCent,
-      "rollback did not restore the first-batch quantizer byte-exactly")
+      "the uncommitted requantize moved the current quantizer")
 
     // the re-run rebuilds the SAME quantizer over the same consumed
     // state (the re-cluster is deterministic: seeded by the k smallest
     // live ids, exact decimal means, deterministic argmax tie-breaks)
-    Similarity.requantizeCdcAnnIndex(spark, live.toString)
+    Similarity.requantizeCdcAnnIndex(spark, idx)
+    assertOrphanGone(orphan)
     assert(centroids(work) === reqCent,
       "re-running the requantize over the same corpus rebuilt a different quantizer")
-    assert(Layout.foldedThrough(fs, liveP) === reqFence)
+    assert(Layout.fenceOf(spark, idx) === reqFence)
 
-    // crash state B: after the old state was consumed — only the staged
-    // requantize left; recovery must publish it, quantizer and fence intact
-    java.nio.file.Files.move(live, work.resolve("annindex.optimize-998"))
-    val reportB = Layout.recoverPublish(fs, liveP)
-    info(s"recoverPublish B: $reportB")
-    assert(reportB.startsWith("published"), s"expected the staged state in, got: $reportB")
+    val q2 = startAnn(work, Trigger.AvailableNow())
+    q2.awaitTermination()
     assert(centroids(work) === reqCent,
-      "publish-forward lost the rebuilt quantizer")
-    assert(Layout.foldedThrough(fs, liveP) === reqFence,
-      "publish-forward lost the replay fence")
+      "resumed ingest replaced the rebuilt quantizer — appends must never touch it")
+    assert(segCount(idx) > 1,
+      "the resumed stream appended nothing — the fence swallowed live batches")
+    assert(annProbe(work) === wantProbe,
+      "requantize + crash + resume diverged from the uninterrupted run")
+    rmTree(work)
+  }
+
+  test("requantize crash after the manifest commit: the new quantizer is current; resume respects the fence") {
+    import graft.operators.Similarity
+    val (_, wantProbe) = annReference(None)
+    val work = killedMidStream("graft-annrq", "annindex", 2)(startAnn)
+    val idx = work.resolve("annindex").toString
+    val preCent = centroids(work)
+    crashAfterCommit(idx)(Similarity.requantizeCdcAnnIndex(spark, idx))
+    val reqCent = centroids(work)
+    assert(reqCent !== preCent, "the rebuild kept the first-batch quantizer")
 
     // resume from the SAME checkpoint: the replayed batch is at or
     // below the fence (skipped — its rows live in the rebuilt base);
@@ -413,14 +379,14 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     q2.awaitTermination()
     assert(centroids(work) === reqCent,
       "resumed ingest replaced the rebuilt quantizer — appends must never touch it")
-    assert(segDirs(work.resolve("annindex").resolve("doclog")) > 1,
+    assert(segCount(idx) > 1,
       "the resumed stream appended nothing — the fence swallowed live batches")
     assert(annProbe(work) === wantProbe,
-      "requantize + crash recovery + resume diverged from the uninterrupted run")
-    rmTree(ref); rmTree(work)
+      "requantize + crash + resume diverged from the uninterrupted run")
+    rmTree(work)
   }
 
-  // ---- the band-log twin: near-dup state through crash recovery --------
+  // ---- the band-log twin: near-dup state through the crash -------------
 
   private def startBand(work: java.nio.file.Path, trigger: Trigger): StreamingQuery = {
     import graft.operators.CdcBinlog
@@ -446,95 +412,46 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .cdcNearDupPairs(spark, work.resolve("bandlog").toString)
       .collect().map(_.toString).toSeq
 
-  /** [[crashedFold]] for the band log: kill mid-stream, fold for real,
-    * rewind publishDir's swap to the requested crash point.
-    */
-  private def crashedBandFold(keepTrash: Boolean): java.nio.file.Path = {
-    import graft.operators.CdcBinlog
-    var work: java.nio.file.Path = null
-    var landed = false
-    var attempt = 0
-    while (!landed && attempt < 5) {
-      attempt += 1
-      work = java.nio.file.Files.createTempDirectory("graft-bandfoldcrash")
-      val firstCommit = new java.util.concurrent.CountDownLatch(1)
-      val listener = new StreamingQueryListener {
-        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-          if (e.progress.numInputRows > 0) firstCommit.countDown()
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q1 = startBand(work, Trigger.ProcessingTime(0))
-        assert(firstCommit.await(120, java.util.concurrent.TimeUnit.SECONDS))
-        q1.stop(); q1.awaitTermination()
-      } finally spark.streams.removeListener(listener)
-      val segs = segDirs(work.resolve("bandlog"))
-      landed = segs >= 1 && segs < 8
-      if (!landed) rmTree(work)
-    }
-    assert(landed, "kill never landed mid-stream in 5 attempts")
+  private def foldBand(work: java.nio.file.Path): Unit =
+    graft.operators.CdcBinlog.compactCdcBandLog(spark, work.resolve("bandlog").toString)
 
-    val live = work.resolve("bandlog")
-    val old = work.resolve("old-snapshot")
-    copyTree(live, old)
-    CdcBinlog.compactCdcBandLog(spark, live.toString)
-    java.nio.file.Files.move(live, work.resolve("bandlog.compact-999"))
-    if (keepTrash) java.nio.file.Files.move(old, work.resolve("bandlog.trash-999"))
-    else rmTree(old)
-    work
-  }
-
-  test("band-log fold crash between renames: rollback drops the fence, resume + re-fold match the gate") {
-    import graft.operators.{CdcBinlog, Layout}
+  // the gate's own answer is admission-invariant (the report depends
+  // only on final latest images), so it is the ground truth for a
+  // differently-capped crash run too
+  private lazy val bandWant = {
     graft.functions.GraftFunctions.register(spark)
-    // the gate's own answer is admission-invariant (the report depends
-    // only on final latest images), so it is the ground truth for a
-    // differently-capped crash run too
-    val want = CdcBinlog.cdcm15NearDupFreshness(spark, dir)
+    val want = graft.operators.CdcBinlog.cdcm15NearDupFreshness(spark, dir)
       .collect().map(_.toString).toSeq
     assert(want.nonEmpty)
+    want
+  }
 
-    val work = crashedBandFold(keepTrash = true)
-    val live = new org.apache.hadoop.fs.Path(work.resolve("bandlog").toString)
-    val report = Layout.recoverPublish(fs, live)
-    info(s"recoverPublish: $report")
-    assert(report.startsWith("restored"), s"expected the OLD state back, got: $report")
-    assert(Layout.foldedThrough(fs, live).isEmpty,
-      "the staged fold's replay fence leaked into the restored UNFOLDED " +
-        "band log — a resume would silently drop legitimate replays")
-    assert(segDirs(work.resolve("bandlog")) >= 1)
+  test("band-log fold crash before the manifest commit: the old generation stays current, resume + re-fold match the gate") {
+    val want = bandWant
+    val work = killedMidStream("graft-bandfoldcrash", "bandlog", 1)(startBand)
+    val orphan = crashBeforeCommit(work.resolve("bandlog").toString)(foldBand(work))
 
     val q2 = startBand(work, Trigger.AvailableNow())
     q2.awaitTermination()
-    CdcBinlog.compactCdcBandLog(spark, work.resolve("bandlog").toString)
+    foldBand(work)
+    assertOrphanGone(orphan)
     assert(bandReport(work) === want,
-      "band-log rollback + resume + re-fold diverged from the gate")
+      "band-log crash + resume + re-fold diverged from the gate")
     rmTree(work)
   }
 
-  test("band-log fold crash after the old state was consumed: the fold publishes, resume respects the fence") {
-    import graft.operators.{CdcBinlog, Layout}
-    graft.functions.GraftFunctions.register(spark)
-    val want = CdcBinlog.cdcm15NearDupFreshness(spark, dir)
-      .collect().map(_.toString).toSeq
-    assert(want.nonEmpty)
-
-    val work = crashedBandFold(keepTrash = false)
-    val live = new org.apache.hadoop.fs.Path(work.resolve("bandlog").toString)
-    val report = Layout.recoverPublish(fs, live)
-    info(s"recoverPublish: $report")
-    assert(report.startsWith("published"), s"expected the FOLDED state in, got: $report")
-    assert(Layout.foldedThrough(fs, live).isDefined,
-      "the published band-log fold lost its replay fence — a replayed " +
-        "batch would double band rows against seg=base")
+  test("band-log fold crash after the manifest commit: the fold is current, resume respects the fence") {
+    val want = bandWant
+    val work = killedMidStream("graft-bandfoldcrash", "bandlog", 1)(startBand)
+    crashAfterCommit(work.resolve("bandlog").toString)(foldBand(work))
 
     val q2 = startBand(work, Trigger.AvailableNow())
     q2.awaitTermination()
     assert(bandReport(work) === want,
-      "band-log publish-forward + resume diverged from the gate — a " +
-        "replayed folded batch doubled rows against seg=base")
+      "band-log resume after a committed fold diverged from the gate — a " +
+        "replayed folded batch doubled band rows against seg=base")
+    foldBand(work) // the dead fold's lease must not block the next one
+    assert(bandReport(work) === want)
     rmTree(work)
   }
 }

@@ -101,9 +101,15 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
     work
   }
 
-  private def segDirs(path: java.nio.file.Path): Int =
-    Option(path.toFile.listFiles())
-      .map(_.count(_.getName.startsWith("seg="))).getOrElse(0)
+  /** The committed segment count of the structure at `root`. */
+  private def segDirs(root: java.nio.file.Path): Int =
+    graft.operators.ManifestFixtures.segs(spark, root.toString).size
+
+  private def segNames(root: java.nio.file.Path): Set[String] =
+    graft.operators.ManifestFixtures.segs(spark, root.toString)
+
+  private def gen(root: String): String =
+    graft.operators.ManifestFixtures.generation(spark, root)
 
   test("cdcm4 pipeline: kill mid-stream, resume, probe == uninterrupted run") {
     import graft.operators.{CdcBinlog, TextAnalysis}
@@ -130,7 +136,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
         .start()
     }
     val work = killThenResume("graft-cdcm4-restart", start,
-      w => segDirs(w.resolve("index").resolve("doclog")))
+      w => segDirs(w.resolve("index")))
 
     val got = TextAnalysis
       .bm25TopKViaCdcIndex(spark, work.resolve("index").toString,
@@ -171,19 +177,19 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     def centroids(work: java.nio.file.Path): Seq[(Int, Seq[Double])] =
-      spark.read.parquet(work.resolve("annindex").resolve("centroids").toString)
+      spark.read.parquet(s"${gen(work.resolve("annindex").toString)}/centroids")
         .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
 
     def probe(work: java.nio.file.Path): Seq[String] = {
       import spark.implicits._
       val idx = work.resolve("annindex").toString
-      val doclog = spark.read.parquet(s"$idx/doclog")
+      val doclog = spark.read.parquet(s"${gen(idx)}/doclog")
       val live = doclog.groupBy($"vec_id")
         .agg(org.apache.spark.sql.functions.max(
           org.apache.spark.sql.functions.struct($"ver", $"deleted")).as("m"))
         .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
         .filter(!$"deleted")
-      val probeVec = spark.read.parquet(s"$idx/cells")
+      val probeVec = spark.read.parquet(s"${gen(idx)}/cells")
         .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
         .orderBy($"vec_id").select($"embedding")
         .head().getSeq[Long](0)
@@ -195,12 +201,12 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ref = java.nio.file.Files.createTempDirectory("graft-cdcm5-ref")
     val qRef = start(ref, Trigger.AvailableNow())
     qRef.awaitTermination()
-    assert(segDirs(ref.resolve("annindex").resolve("doclog")) >= 3)
+    assert(segDirs(ref.resolve("annindex")) >= 3)
     val wantProbe = probe(ref)
     val wantCent = centroids(ref)
 
     val work = killThenResume("graft-cdcm5-restart", start,
-      w => segDirs(w.resolve("annindex").resolve("doclog")))
+      w => segDirs(w.resolve("annindex")))
 
     // the quantizer must be the one batch 0 defined — value-exact
     // (first-batch contract: a resume NEVER re-derives centroids)
@@ -214,7 +220,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The cdcm7 seam: a kill AFTER the mid-stream compaction. The resumed
     * run replays at most one uncommitted batch — if the fold already
-    * consumed that batch's segment, the `_folded_through` fence skips
+    * consumed that batch's segment, the manifest's replay fence skips
     * the replay instead of doubling rows against seg=base (the
     * CdcReplayFenceSpec seam, here driven through a real checkpoint
     * restart); the resumed gate code may also fold AGAIN (its in-memory
@@ -277,9 +283,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(commits.await(120, java.util.concurrent.TimeUnit.SECONDS))
         q1.stop(); q1.awaitTermination()
       } finally spark.streams.removeListener(listener)
-      val segs = Option(work.resolve("index").resolve("doclog").toFile.listFiles())
-        .map(_.map(_.getName).filter(_.startsWith("seg=")).toSet)
-        .getOrElse(Set.empty[String])
+      val segs = segNames(work.resolve("index"))
       landed = segs.contains("seg=base") && segs.size < 7
       if (!landed) rmTree(work)
     }
@@ -347,7 +351,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
         .start()
     }
     val work = killThenResume("graft-cdcm10-restart", start,
-      w => segDirs(w.resolve("idx_d1").resolve("doclog")))
+      w => segDirs(w.resolve("idx_d1")))
 
     val got = tables.map { tbl =>
       import org.apache.spark.sql.functions.lit
@@ -420,16 +424,16 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
         .start()
     }
     val work = killThenResume("graft-cdcm11-restart", start,
-      w => segDirs(w.resolve("idx_text").resolve("doclog")))
+      w => segDirs(w.resolve("idx_text")))
 
     val annIdx = work.resolve("idx_ann").toString
-    val doclog = spark.read.parquet(s"$annIdx/doclog")
+    val doclog = spark.read.parquet(s"${gen(annIdx)}/doclog")
     import spark.implicits._
     val live = doclog.groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val probeVec = spark.read.parquet(s"$annIdx/cells")
+    val probeVec = spark.read.parquet(s"${gen(annIdx)}/cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .orderBy($"vec_id").select($"embedding")
       .head().getSeq[Long](0)
@@ -520,7 +524,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     def centroids(work: java.nio.file.Path): Seq[(Int, Seq[Double])] =
-      spark.read.parquet(work.resolve("idx_ann").resolve("centroids").toString)
+      spark.read.parquet(s"${gen(work.resolve("idx_ann").toString)}/centroids")
         .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
 
     // landing = the text fold already happened AND the drain is
@@ -544,9 +548,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(commits.await(120, java.util.concurrent.TimeUnit.SECONDS))
         q1.stop(); q1.awaitTermination()
       } finally spark.streams.removeListener(listener)
-      val segs = Option(work.resolve("idx_text").resolve("doclog").toFile.listFiles())
-        .map(_.map(_.getName).filter(_.startsWith("seg=")).toSet)
-        .getOrElse(Set.empty[String])
+      val segs = segNames(work.resolve("idx_text"))
       landed = segs.contains("seg=base") && segs.size < 6
       if (!landed) rmTree(work)
     }
@@ -568,12 +570,12 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     import spark.implicits._
     val annIdx = work.resolve("idx_ann").toString
-    val doclog = spark.read.parquet(s"$annIdx/doclog")
+    val doclog = spark.read.parquet(s"${gen(annIdx)}/doclog")
     val live = doclog.groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val probeVec = spark.read.parquet(s"$annIdx/cells")
+    val probeVec = spark.read.parquet(s"${gen(annIdx)}/cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .orderBy($"vec_id").select($"embedding")
       .head().getSeq[Long](0)
@@ -618,7 +620,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
             .persist()
           try {
             if (!imgs.isEmpty)
-              imgs.write.mode("overwrite").parquet(f"$log/seg=b$batchId%06d")
+              CdcBinlog.appendCdcFpSegment(imgs, log, f"b$batchId%06d")
           } finally imgs.unpersist()
           ()
         }
@@ -705,9 +707,7 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(commits.await(120, java.util.concurrent.TimeUnit.SECONDS))
         q1.stop(); q1.awaitTermination()
       } finally spark.streams.removeListener(listener)
-      val segs = Option(work.resolve("bandlog").toFile.listFiles())
-        .map(_.map(_.getName).filter(_.startsWith("seg=")).toSet)
-        .getOrElse(Set.empty[String])
+      val segs = segNames(work.resolve("bandlog"))
       landed = segs.contains("seg=base") && segs.size < 7
       if (!landed) rmTree(work)
     }

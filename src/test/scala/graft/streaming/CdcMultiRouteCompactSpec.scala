@@ -91,8 +91,7 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     tables.foreach { tbl =>
       assert(folded(tbl).get() === 1, s"$tbl never reached its fold point " +
         s"(${appends(tbl).get()} appends) — thin batching, raise the cap divisor")
-      val segs = new java.io.File(s"${idxOf(tbl)}/doclog").listFiles()
-        .map(_.getName).filter(_.startsWith("seg=")).toSet
+      val segs = graft.operators.ManifestFixtures.segs(spark, idxOf(tbl))
       assert(segs.contains("seg=base") &&
         segs.size == appends(tbl).get() - foldAfter(tbl) + 1,
         s"$tbl: expected seg=base + ${appends(tbl).get() - foldAfter(tbl)} " +
@@ -114,7 +113,7 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The heterogeneous twin, with the fences themselves pinned: a text
     * fold (after its 3rd append) and an ANN fold (after its 4th) fire on
     * DIFFERENT batches of the same shared foreachBatch, and afterwards
-    * each structure's `_folded_through` must equal the ordinal of ITS OWN
+    * each structure's replay fence must equal the ordinal of ITS OWN
     * last pre-fold batch — not the other's (a fence written to or read
     * from the wrong root silently drops one route's replays). The union
     * probe must still match the never-compacted cdcm11 gate.
@@ -174,11 +173,7 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(txtIds.size >= 5 && annIds.size >= 5,
       s"thin batching (text=${txtIds.size}, ann=${annIds.size} appends) — " +
         "raise the cap divisor")
-    def fence(idx: String): Option[Long] = {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      Layout.foldedThrough(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
+    def fence(idx: String): Option[Long] = Layout.fenceOf(spark, idx)
     assert(fence(txtIdx) === Some(txtIds(2)),
       s"text fence ${fence(txtIdx)} != its own 3rd appended batch ${txtIds(2)}")
     assert(fence(annIdx) === Some(annIds(3)),
@@ -188,12 +183,12 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, max, struct}
-    val doclog = spark.read.parquet(s"$annIdx/doclog")
+    val doclog = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/doclog")
     val live = doclog.groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val probeVec = spark.read.parquet(s"$annIdx/cells")
+    val probeVec = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .orderBy($"vec_id").select($"embedding")
       .head().getSeq[Long](0)
@@ -257,7 +252,7 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
           try {
             // cdcm14's MARKER-DRIVEN appender: each batch buckets by
             // the recorded count, whatever the last re-bucket left
-            val nb = TextAnalysis.textIndexBucketCount(spark, txtIdx)
+            val nb = TextAnalysis.cdcTextIndexBucketCount(spark, txtIdx)
               .getOrElse(8)
             if (!t.isEmpty &&
                 TextAnalysis.appendCdcTextSegment(t, txtIdx,
@@ -274,7 +269,8 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
                 Similarity.appendCdcAnnSegment(v, annIdx, f"b$batchId%06d")) {
               annBatches.add(batchId)
               if (annBatches.size == 4) {
-                preCentroids.set(spark.read.parquet(s"$annIdx/centroids")
+                preCentroids.set(spark.read.parquet(
+                    s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/centroids")
                   .orderBy("cell").collect().map(_.toString).toSeq)
                 Similarity.requantizeCdcAnnIndex(spark, annIdx, k = 16)
               }
@@ -291,11 +287,7 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(txtIds.size >= 5 && annIds.size >= 5,
       s"thin batching (text=${txtIds.size}, ann=${annIds.size} appends) — " +
         "raise the cap divisor")
-    def fence(idx: String): Option[Long] = {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      Layout.foldedThrough(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
+    def fence(idx: String): Option[Long] = Layout.fenceOf(spark, idx)
     // per-structure fences at each route's OWN lifecycle point
     assert(fence(txtIdx) === Some(txtIds(2)),
       s"text fence ${fence(txtIdx)} != its own 3rd appended batch ${txtIds(2)}")
@@ -305,27 +297,29 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the two structures share a fence ordinal — per-structure staggering lost")
     // the re-bucket really landed AND the marker drove later appends:
     // recorded count grown, postings physically occupy buckets >= 8
-    assert(TextAnalysis.textIndexBucketCount(spark, txtIdx) === Some(32))
-    val grownDirs = new java.io.File(s"$txtIdx/postings").listFiles()
+    assert(TextAnalysis.cdcTextIndexBucketCount(spark, txtIdx) === Some(32))
+    val grownDirs = new java.io.File(
+        s"${graft.operators.ManifestFixtures.generation(spark, txtIdx)}/postings").listFiles()
       .filter(_.getName.startsWith("seg=")).flatMap(_.listFiles())
       .map(_.getName).filter(_.startsWith("tb="))
       .map(_.stripPrefix("tb=").toInt).toSet
     assert(grownDirs.exists(_ >= 8),
       s"no postings landed beyond the old 8-bucket range: $grownDirs")
     // the requantize really replaced the quantizer
-    val postCentroids = spark.read.parquet(s"$annIdx/centroids")
+    val postCentroids = spark.read.parquet(
+        s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/centroids")
       .orderBy("cell").collect().map(_.toString).toSeq
     assert(preCentroids.get().nonEmpty && postCentroids != preCentroids.get(),
       "requantize left the centroids unchanged — the rebuild never published")
 
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, max, struct}
-    val doclog = spark.read.parquet(s"$annIdx/doclog")
+    val doclog = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/doclog")
     val live = doclog.groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val probeVec = spark.read.parquet(s"$annIdx/cells")
+    val probeVec = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .orderBy($"vec_id").select($"embedding")
       .head().getSeq[Long](0)
@@ -423,7 +417,7 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
           val t = CdcBinlog.cdcm4BatchImages(
             b.filter(b("table") === "d1"), batchId).persist()
           try {
-            val nb = TextAnalysis.textIndexBucketCount(spark, txtIdx)
+            val nb = TextAnalysis.cdcTextIndexBucketCount(spark, txtIdx)
               .getOrElse(2)
             if (!t.isEmpty &&
                 TextAnalysis.appendCdcTextSegment(t, txtIdx,
@@ -507,11 +501,7 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!fpAdvice().compact, s"fp owes maintenance: ${fpAdvice()}")
     assert(!bandAdvice().compact, s"band owes maintenance: ${bandAdvice()}")
     // per-structure fences at each policy's OWN chosen batch
-    def fence(idx: String): Option[Long] = {
-      val p = new org.apache.hadoop.fs.Path(idx)
-      Layout.foldedThrough(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
+    def fence(idx: String): Option[Long] = Layout.fenceOf(spark, idx)
     assert(fence(txtIdx) === Some(txtFenceAt.get()),
       s"text fence ${fence(txtIdx)} != its policy's chosen batch ${txtFenceAt.get()}")
     assert(fence(annIdx) === Some(annFenceAt.get()),
@@ -523,19 +513,19 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fence(fpTwin).isEmpty && fence(bandTwin).isEmpty,
       "an unmaintained twin grew a fence")
     // marker/quantizer state matches the policies' last suggestions
-    assert(TextAnalysis.textIndexBucketCount(spark, txtIdx)
+    assert(TextAnalysis.cdcTextIndexBucketCount(spark, txtIdx)
       === Some(lastNb.get()))
     assert(lastNb.get() > 2 && lastK.get() > 2,
       s"policies fired but nothing grew (nb=${lastNb.get()}, k=${lastK.get()})")
 
     // truth 1: text+ANN union probe == the never-maintained cdcm11 gate
     import spark.implicits._
-    val doclog = spark.read.parquet(s"$annIdx/doclog")
+    val doclog = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/doclog")
     val live = doclog.groupBy($"vec_id")
       .agg(max(struct($"ver", $"deleted")).as("m"))
       .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
       .filter(!$"deleted")
-    val probeVec = spark.read.parquet(s"$annIdx/cells")
+    val probeVec = spark.read.parquet(s"${graft.operators.ManifestFixtures.generation(spark, annIdx)}/cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .orderBy($"vec_id").select($"embedding")
       .head().getSeq[Long](0)

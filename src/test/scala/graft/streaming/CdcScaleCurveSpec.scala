@@ -102,6 +102,8 @@ class CdcScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
         .agg(max(struct(col("ver"), col("deleted"))).as("m"))
         .filter(!col("m.deleted")).count()
 
+    def gen(root: String): String = graft.operators.ManifestFixtures.generation(spark, root)
+
     val q = spark.readStream.format("mysql-binlog")
       .option("payloadDdl", CdcBinlog.payloadDdl)
       .option("maxBytesPerTrigger", cap.toString)
@@ -115,28 +117,28 @@ class CdcScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
             if (timed(text.appendNanos)(TextAnalysis.appendCdcTextSegment(
                   imgs, txtIdx, f"b$batchId%06d", nBuckets = 16))) {
               text.appended(batchId) = spark.read
-                .parquet(f"$txtIdx/doclog/seg=b$batchId%06d").count()
+                .parquet(f"${gen(txtIdx)}/doclog/seg=b$batchId%06d").count()
             }
             if (text.appended.contains(batchId) &&
                 text.appends.incrementAndGet() == 3) {
-              text.liveAtFold.set(liveKeys(s"$txtIdx/doclog", "doc_id"))
+              text.liveAtFold.set(liveKeys(s"${gen(txtIdx)}/doclog", "doc_id"))
               timed(text.foldNanos)(TextAnalysis.compactCdcTextIndex(
                 spark, txtIdx, nBuckets = 16))
               text.foldRows.set(spark.read
-                .parquet(s"$txtIdx/doclog/seg=base").count())
+                .parquet(s"${gen(txtIdx)}/doclog/seg=base").count())
             }
             val bandImgs = CdcBinlog.cdcm15BandImages(imgs).coalesce(4)
             if (timed(band.appendNanos)(CdcBinlog.appendCdcFpSegment(
                   bandImgs, bandLog, f"b$batchId%06d"))) {
               band.appended(batchId) = spark.read
-                .parquet(f"$bandLog/seg=b$batchId%06d").count()
+                .parquet(f"${gen(bandLog)}/seg=b$batchId%06d").count()
             }
             if (band.appended.contains(batchId) &&
                 band.appends.incrementAndGet() == 3) {
-              band.liveAtFold.set(liveKeys(bandLog, "doc_id"))
+              band.liveAtFold.set(liveKeys(gen(bandLog), "doc_id"))
               timed(band.foldNanos)(CdcBinlog.compactCdcBandLog(spark, bandLog))
               band.foldRows.set(spark.read
-                .parquet(s"$bandLog/seg=base").count())
+                .parquet(s"${gen(bandLog)}/seg=base").count())
             }
           }
           val v = CdcBinlog.cdcm5BatchImages(batch, batchId).persist()
@@ -145,14 +147,14 @@ class CdcScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
               if (timed(ann.appendNanos)(Similarity.appendCdcAnnSegment(
                     v, annIdx, f"b$batchId%06d"))) {
                 ann.appended(batchId) = spark.read
-                  .parquet(f"$annIdx/doclog/seg=b$batchId%06d").count()
+                  .parquet(f"${gen(annIdx)}/doclog/seg=b$batchId%06d").count()
               }
               if (ann.appended.contains(batchId) &&
                   ann.appends.incrementAndGet() == 3) {
-                ann.liveAtFold.set(liveKeys(s"$annIdx/doclog", "vec_id"))
+                ann.liveAtFold.set(liveKeys(s"${gen(annIdx)}/doclog", "vec_id"))
                 timed(ann.foldNanos)(Similarity.compactCdcAnnIndex(spark, annIdx))
                 ann.foldRows.set(spark.read
-                  .parquet(s"$annIdx/doclog/seg=base").count())
+                  .parquet(s"${gen(annIdx)}/doclog/seg=base").count())
               }
             }
           } finally v.unpersist()

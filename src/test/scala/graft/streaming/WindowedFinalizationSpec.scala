@@ -29,9 +29,9 @@ class WindowedFinalizationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  /** The `seg=*` directory names under the view's root. */
+  /** The committed `seg=*` names of the view. */
   private def segs(path: String): Set[String] =
-    Option(new java.io.File(path).list()).toSet.flatten.filter(_.startsWith("seg="))
+    graft.operators.ManifestFixtures.segs(spark, path)
 
   test("folded read equals the complete-mode gate result on the staged events stream") {
     val dir = "/root/testdata/sf0.001"
@@ -81,7 +81,9 @@ class WindowedFinalizationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // addressing, not by sink transactionality
     // detach (eager localCheckpoint) — the overwrite below deletes the
     // very files a lazy plan would re-read
-    val replay = spark.read.parquet(s"$view/seg=b000001").localCheckpoint(true)
+    val replay = spark.read.parquet(
+      s"${graft.operators.ManifestFixtures.generation(spark, view)}/seg=b000001")
+      .localCheckpoint(true)
     StreamOps.writeWindowedUpdates(replay, view, 1L)
     assert(folded === expected)
 
@@ -107,10 +109,10 @@ class WindowedFinalizationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("ws", "k").collect().map(_.toString).toSeq
     StreamOps.writeWindowedUpdates(
       Seq(("2024-01-01 10:00:00", "a", 1L, 1.0)).toDF("ws", "k", "n", "s"), view, 0L)
-    // batch 1's write crashed before its commit: no _SUCCESS
+    // batch 1's append crashed before its manifest commit
     StreamOps.writeWindowedUpdates(
       Seq(("2024-01-01 10:00:00", "a", 2L, 5.0)).toDF("ws", "k", "n", "s"), view, 1L)
-    Files.delete(java.nio.file.Paths.get(view, "seg=b000001", "_SUCCESS"))
+    graft.operators.ManifestFixtures.uncommit(spark, view)
     assert(folded === Seq("[2024-01-01 10:00:00,a,1,1.0]"),
       "the read took its latest update from a torn segment")
     StreamOps.compactWindowedAgg(spark, view, Seq("ws", "k"))
