@@ -2558,7 +2558,9 @@ object CdcBinlog {
     * (or the text/ANN doclog folds — any log whose rows are
     * (`keyCol`, ver, deleted, payload...) under the seg= layout reads
     * the same way: `logDir` is a log's root or an index leg such as
-    * `<index>/doclog`; pass `keyCol = "vec_id"` for the ANN doclog).
+    * `<index>/doclog`, read through the index's manifest; pass
+    * `keyCol = "vec_id"` for the ANN doclog). An absent log, or a leg
+    * the index's manifest does not record, answers all zeros.
     * Returns ONE row: (n_rows, n_keys, n_live, n_segments) where
     * n_rows counts every version incl. tombstones (what the per-report
     * argmax reads), n_live counts keys whose latest version is not
@@ -2569,7 +2571,7 @@ object CdcBinlog {
     * pruning keeps the payload arrays unread, but the scan is still
     * O(log), so at very large corpora the amplification trigger belongs
     * at fold-consideration cadence (every N batches), while the SEGMENT
-    * trigger is one directory listing — free enough for every append.
+    * trigger is one manifest read — free enough for every append.
     * The cdcm18 gate measures both after every append (its log is
     * test-scale); the semantics it pins are cadence-independent.
     */
@@ -2578,7 +2580,8 @@ object CdcBinlog {
     import s.implicits._
     val leg = new org.apache.hadoop.fs.Path(logDir)
     val (view, legName) = Layout.committedView(s, logDir).map(_ -> "")
-      .orElse(Layout.committedView(s, leg.getParent.toString).map(_ -> leg.getName))
+      .orElse(Layout.committedView(s, leg.getParent.toString)
+        .filter(_.legs.contains(leg.getName)).map(_ -> leg.getName))
       .getOrElse(return Seq((0L, 0L, 0L, 0)).toDF("n_rows", "n_keys", "n_live", "n_segments"))
     val nSegs = view.segs.count(_ != "seg=base")
     view.read(legName)

@@ -206,10 +206,12 @@ object Layout {
   }
 
   /** Run a probe body, retrying (bounded, with backoff) while it fails on
-    * a missing path. The segment-protocol structures no longer need it:
-    * their readers pin a manifest version whose files no fold renames
-    * away ([[committedView]]). It is kept for the benchmark's probes and
-    * for the gates' `detached` probes. Each retry re-runs `body` from
+    * a missing path. The segment-protocol structures no longer need it
+    * for a fold: their readers pin a manifest version whose files no
+    * fold renames away ([[committedView]]); only a read still running
+    * when a third fold's retention deletes its generation can miss a
+    * path. It is kept for the benchmark's probes and for the gates'
+    * `detached` probes. Each retry re-runs `body` from
     * scratch — it must REBUILD its DataFrames (a by-name block calling
     * `spark.read` again) and MATERIALIZE them (a lazy frame returned
     * unexecuted would defeat the guard). The guard retries up to
@@ -234,7 +236,7 @@ object Layout {
             t.isInstanceOf[java.nio.file.NoSuchFileException] ||
             (t.isInstanceOf[org.apache.spark.sql.AnalysisException] &&
               t.getMessage != null && t.getMessage.contains("PATH_NOT_FOUND")) ||
-            (t.isInstanceOf[IllegalArgumentException] && // a view's root, mid-swap
+            (t.isInstanceOf[IllegalArgumentException] && // a view's deleted generation
               t.getMessage != null && t.getMessage.contains("'basePath'")))
           return true
         t = t.getCause
@@ -536,30 +538,32 @@ object Layout {
   // windowed view (`StreamOps.maintainWindowedAgg`) all store
   // batch-addressed `seg=` segments under one protocol. A structure's root
   // holds generation directories (`g<version>`) and a versioned manifest,
-  // `_manifest` — Spark's HDFSMetadataLog, the metadata log of Structured
-  // Streaming. Each version names the current generation, the segments
-  // committed in it, the replay fence and each leg's read schema, and
-  // adding a version is the ONLY commit point:
+  // `_manifest`, laid out like Structured Streaming's metadata log. Each
+  // version names the current generation, the segments committed in it,
+  // the replay fence and each leg's read schema, and adding a version is
+  // the ONLY commit point:
   //  - [[append]] writes a batch's legs into the current generation, then
   //    adds the version that lists the new segment;
   //  - [[fold]] writes a whole new tree into a fresh generation, then adds
   //    the version that names it;
   //  - [[committedView]] reads the latest version once and resolves every
   //    path through it.
-  // Nothing is renamed, so a reader cannot see a torn or missing state: a
-  // segment no version lists (a crashed append's) and a generation no
-  // version names (a crashed fold's) are invisible, and a fold leaves the
-  // generation a reader pinned in place. A structure supplies only its leg
-  // writes and its staging writes.
+  // No data directory is renamed or rewritten once a version lists it, so
+  // a reader cannot see a torn or missing state: a segment no version
+  // lists (a crashed append's) and a generation no version names (a
+  // crashed fold's) are invisible, and a fold leaves the generation a
+  // reader pinned in place for the next two folds. A structure supplies
+  // only its leg writes and its staging writes.
   //
   // The replay fence: foreachBatch is AT-LEAST-ONCE, and a crash between a
-  // batch's append and its checkpoint commit replays the batch. A replay
-  // rewrites exactly its own segment with the same rows (batch offsets come
-  // from the checkpoint WAL and the image derivation is deterministic) —
-  // unless a fold already consumed the segment into `seg=base`: re-created
-  // rows would then double against base through the probes' (key, ver)
-  // liveness joins. So every fold records the highest ordinal it consumed,
-  // and [[append]] skips any segment at or below it.
+  // batch's append and its checkpoint commit replays the batch with the
+  // same rows (batch offsets come from the checkpoint WAL and the image
+  // derivation is deterministic): an uncommitted segment is rewritten, a
+  // committed one is left as it is. A fold, though, consumes segments into
+  // `seg=base` and lists base alone: a replay of a consumed segment would
+  // re-create rows that double against base through the probes' (key,
+  // ver) liveness joins. So every fold records the highest ordinal it
+  // consumed, and [[append]] skips any segment at or below it.
 
   /** Batch `batchId`'s segment name, `bNNNNNN`. */
   private[graft] def segmentOf(batchId: Long): String = f"b$batchId%06d"
@@ -582,26 +586,49 @@ object Layout {
   private def generationVersion(name: String): Option[Long] =
     if (name.matches("g[0-9]+")) Some(name.drop(1).toLong) else None
 
-  private def manifestLog(s: SparkSession, root: String) =
-    new org.apache.spark.sql.execution.streaming.checkpointing
-      .HDFSMetadataLog[SegmentManifest](s, s"$root/_manifest")
+  // The manifest is a directory of version files, `_manifest/<version>`,
+  // each one JSON record written whole under a temp name, synced and
+  // renamed into place: a version exists with its full content or not at
+  // all (the Structured Streaming metadata-log layout, through the plain
+  // FileSystem API).
 
-  /** The latest manifest version of the structure at `root`, if any. The
-    * existence probe keeps a read of an absent structure from creating it
-    * (the log's constructor makes its directory).
-    */
+  private def manifestDir(root: String) = new org.apache.hadoop.fs.Path(root, "_manifest")
+  private implicit val manifestFormats: org.json4s.Formats = org.json4s.DefaultFormats
+
+  /** The latest manifest version of the structure at `root`, if any. */
   private def latest(s: SparkSession, root: String): Option[(Long, SegmentManifest)] = {
-    val dir = new org.apache.hadoop.fs.Path(root, "_manifest")
-    if (!dir.getFileSystem(s.sparkContext.hadoopConfiguration).exists(dir)) None
-    else manifestLog(s, root).getLatest()
+    val dir = manifestDir(root)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val names = try fs.listStatus(dir).map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Array.empty[String] }
+    names.filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).maxOption.map { v =>
+      val in = fs.open(new org.apache.hadoop.fs.Path(dir, v.toString))
+      try v -> org.json4s.jackson.Serialization.read[SegmentManifest](
+        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
   }
 
   /** Add manifest `version`, or fail by name if another writer added it. */
-  private def commit(s: SparkSession, root: String, version: Long, m: SegmentManifest): Unit =
-    if (!manifestLog(s, root).add(version, m))
+  private def commit(s: SparkSession, root: String, version: Long, m: SegmentManifest): Unit = {
+    val dir = manifestDir(root)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val target = new org.apache.hadoop.fs.Path(dir, version.toString)
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".$version.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, false)
+    try {
+      out.write(org.json4s.jackson.Serialization.write(m)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.hsync()
+      catch { case _: UnsupportedOperationException => out.hflush() }
+    } finally out.close()
+    if (fs.exists(target) || !fs.rename(tmp, target)) {
+      fs.delete(tmp, false)
       throw new IllegalStateException(
         s"manifest version $version of $root already exists — another " +
           "writer committed to this structure concurrently")
+    }
+  }
 
   /** The replay fence of the structure at `root`: the highest segment
     * ordinal a fold consumed, if any fold has run.
@@ -633,6 +660,7 @@ object Layout {
     val dir: String = s"$root/${m.generation}"
     val segs: Seq[String] = m.segments
     val fence: Option[Long] = m.fence
+    val legs: Set[String] = m.schemas.keySet
 
     /** `leg`'s committed segments, `seg` read as a partition column,
       * with the schema the manifest recorded (no footer read).
@@ -685,26 +713,31 @@ object Layout {
 
   /** Append one batch's `segment` to the structure at `root`. A segment
     * at or below the replay fence was already folded into `seg=base`, so
-    * its replay is SKIPPED (false). Otherwise the structure's leg writes
-    * run concurrently through [[inParallelLegs]] into the current
+    * its replay is SKIPPED (false). A segment the latest version already
+    * lists is committed whole, and its replay writes nothing (true):
+    * rewriting it in place would expose a torn segment to readers, and to
+    * a fold, until the rewrite finished. Otherwise the structure's leg
+    * writes run concurrently through [[inParallelLegs]] into the current
     * generation, and the append commits by adding the next manifest
     * version: the previous one plus the new segment (the first append's
     * is version 0, in generation `g000000`). If that version already
     * exists, a concurrent writer got there first and the append fails by
-    * name. `legWrites` is called only past the fence: a structure's own
-    * checks and first-batch setup never run for a fenced replay.
+    * name. `legWrites` is called only for a segment not yet committed: a
+    * structure's own checks and first-batch setup never run for a replay
+    * of a committed or fenced batch.
     */
   private[graft] def append(s: SparkSession, root: String, segment: String)
                            (legWrites: SegmentWriter => Seq[() => Unit]): Boolean = {
     val last = latest(s, root)
     if (last.flatMap(_._2.fence).exists(segmentOrdinal(segment) <= _)) false
+    else if (last.exists(_._2.segments.contains(s"seg=$segment"))) true
     else {
       val version = last.fold(0L)(_._1 + 1)
       val m = last.fold(SegmentManifest(generationOf(0), Nil, None, Map.empty))(_._2)
       val out = new SegmentWriter(s"$root/${m.generation}", segment)
       inParallelLegs(legWrites(out))
       commit(s, root, version, m.copy(
-        segments = (m.segments :+ s"seg=$segment").distinct.sorted,
+        segments = (m.segments :+ s"seg=$segment").sorted,
         schemas = out.written ++ m.schemas))
       true
     }
@@ -725,8 +758,8 @@ object Layout {
     *     base-only re-fold keeps it);
     *  6. keep the new generation and the two before it — a view pinned
     *     before this fold still reads through it and the next one — and
-    *     delete every other generation with the manifest versions older
-    *     than the kept ones.
+    *     delete every other generation, the manifest versions older than
+    *     the kept ones and any crashed commit's temp version file.
     * Never run concurrently with an append to the same structure: the
     * stream's foreachBatch serializes them in-process, and the lease
     * makes a second maintenance process fail by name.
@@ -751,7 +784,11 @@ object Layout {
       val kept = (older.sorted :+ next).takeRight(3)
       older.filterNot(kept.contains)
         .foreach(g => fs.delete(new org.apache.hadoop.fs.Path(p, generationOf(g)), true))
-      manifestLog(s, root).purge(kept.head)
+      // no append runs beside a fold, so a temp file is a crashed commit's
+      fs.listStatus(manifestDir(root)).map(_.getPath).filter { f =>
+        val n = f.getName
+        n.endsWith(".tmp") || (n.forall(_.isDigit) && n.toLong < kept.head)
+      }.foreach(fs.delete(_, false))
     }
   }
 
@@ -939,6 +976,12 @@ object Layout {
     import s.implicits._
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // a crashed earlier run's staged copy of the tail is garbage: one
+    // table is never optimized concurrently (the file-level swap assumes
+    // one writer), so every staging sibling is a dead run's
+    fs.listStatus(p.getParent).map(_.getPath)
+      .filter(_.getName.startsWith(s"${p.getName}.optimize-"))
+      .foreach(fs.delete(_, true))
     val manifest = clusteredManifestPath(dir)
     val clustered: Set[String] =
       if (fs.exists(new org.apache.hadoop.fs.Path(manifest)))
@@ -1453,7 +1496,7 @@ object Layout {
   * ([[Layout.committedView]]): the current generation directory, the
   * segments committed in it (sorted `seg=` names), the replay fence, and
   * each leg's read schema (JSON), keyed by leg name. Top-level, so the
-  * metadata log's JSON reader can reflect on it.
+  * manifest's JSON reader can reflect on it.
   */
 private[graft] final case class SegmentManifest(generation: String,
                                                 segments: Seq[String],

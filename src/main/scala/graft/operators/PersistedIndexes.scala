@@ -120,7 +120,7 @@ object PersistedIndexes {
     * by construction, so the probe oracle is the one-shot build's.
     */
   def textIndexLifecycle(s: SparkSession, sfDir: String): String =
-    cached(s"graft-index-r11e-textlc-${sfKey(sfDir)}") { dir =>
+    cached(s"graft-index-r11f-textlc-${sfKey(sfDir)}") { dir =>
       import s.implicits._
       val docs = documents(s, sfDir)
       val slices = Seq($"doc_id" % 10 < 7,

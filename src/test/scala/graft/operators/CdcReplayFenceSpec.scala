@@ -19,7 +19,9 @@ import org.scalatest.BeforeAndAfterAll
   * ingest still lands, and that a TORN segment (a segment directory no
   * manifest version lists — a crashed append whose batch never
   * committed) is left behind by the fold rather than folded, leaving
-  * its replay free to rewrite it.
+  * its replay free to rewrite it, and that a replay of a COMMITTED
+  * segment writes nothing, so a crash inside it cannot tear the segment
+  * a later fold consumes.
   */
 class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -222,6 +224,38 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the batch replays (it never committed) and lands normally now
       assert(e.append(root, b1, "b000001"))
       assert(e.probe(root).size === want.size + 1)
+    }
+
+    test(s"${e.label}: a committed segment's crashed replay tears nothing — fold and resume keep its rows") {
+      graft.functions.GraftFunctions.register(spark)
+      val root = java.nio.file.Files.createTempDirectory("graft-fence-replay")
+        .resolve("structure").toString
+      assert(e.append(root, textImages((1, t1, 0, false), (2, t2, 0, false)), "b000000"))
+      val b1 = textImages((3, t1, 1, false), (4, t3, 1, false))
+      assert(e.append(root, b1, "b000001"))
+      val want = e.probe(root)
+
+      // the replay of batch 1 dies mid-write: its first leg is left the
+      // way Spark's overwrite leaves a killed job, holding only
+      // `_temporary`
+      val replay = scala.util.Try(Layout.append(spark, root, "b000001") { out =>
+        e.legs.take(1).map { l => () =>
+          val seg = new java.io.File(s"${legDir(out.dir, l)}/seg=b000001")
+          org.apache.commons.io.FileUtils.deleteDirectory(seg)
+          assert(new java.io.File(seg, "_temporary").mkdirs())
+          throw new RuntimeException("crash mid-write")
+        }
+      })
+      val afterReplay = e.probe(root)
+
+      // a maintenance fold runs before the stream resumes, then the
+      // resumed replay is fenced and batch 1's rows stay
+      e.fold(root)
+      assert(Layout.fenceOf(spark, root) === Some(1L))
+      assert(!e.append(root, b1, "b000001"))
+      assert(e.probe(root) === want, "the fold and the resume lost batch 1's rows")
+      assert(afterReplay === want, "the replay tore a committed segment")
+      assert(replay.toOption === Some(true), s"a committed segment's replay wrote: $replay")
     }
   }
 

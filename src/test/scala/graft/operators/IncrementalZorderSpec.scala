@@ -87,4 +87,28 @@ class IncrementalZorderSpec extends AnyFunSuite with BeforeAndAfterAll {
       .forEach(p => java.nio.file.Files.deleteIfExists(p))
     finally tw.close()
   }
+
+  test("a crashed run's staged tail is removed by the next run") {
+    graft.functions.GraftFunctions.register(spark)
+    val work = java.nio.file.Files.createTempDirectory("graft-izo3")
+    val out = work.resolve("t").toString
+    table().repartition(3).write.mode("overwrite").parquet(out)
+    // a run that died after staging, before its swap: a full staged copy
+    val stale = work.resolve("t.optimize-999999")
+    table().write.parquet(stale.toString)
+    // another table's staging beside it is not this table's to remove
+    val other = work.resolve("t2.optimize-999999")
+    java.nio.file.Files.createDirectories(other)
+    val before = spark.read.parquet(out).orderBy("id").collect().toSeq
+    assert(Layout.incrementalZorder(spark, out, Seq("x", "y"), 2) === 3)
+    assert(!java.nio.file.Files.exists(stale), "stale staging survived the next run")
+    assert(java.nio.file.Files.exists(other), "another table's staging was removed")
+    assert(spark.read.parquet(out).orderBy("id").collect().toSeq === before)
+    val left = Option(work.toFile.listFiles()).toSeq.flatten.map(_.getName).toSet
+    assert(left === Set("t", "t.clustered-manifest", "t2.optimize-999999"), s"residues: $left")
+    val tw = java.nio.file.Files.walk(work)
+    try tw.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally tw.close()
+  }
 }

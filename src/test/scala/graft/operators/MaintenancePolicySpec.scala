@@ -270,6 +270,9 @@ class MaintenancePolicySpec extends AnyFunSuite with BeforeAndAfterAll {
         CdcBinlog.cdcLogStats(spark, s"$idx/doclog", keyCol = "vec_id"),
         ampFactor = 1.5)
       assert(!after.compact && after.nRows === 8L && after.nLive === 8L)
+      // a leg the index's manifest does not record answers all zeros
+      assert(CdcBinlog.cdcLogStats(spark, s"$idx/nolog", keyCol = "vec_id")
+        .as[(Long, Long, Long, Int)].collect().toSeq === Seq((0L, 0L, 0L, 0)))
     }
   }
 

@@ -102,8 +102,8 @@ class RetryOnceOnMissingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(got === 42)
     assert(attempt === 2)
-    // a committed view's read planned while its root (the `basePath`)
-    // is renamed away inside a publish swap
+    // a committed view's read planned while its generation (the
+    // `basePath`) is deleted by a later fold's retention
     attempt = 0
     assert(Layout.retryOnceOnMissing {
       attempt += 1
