@@ -1234,7 +1234,7 @@ object CdcBinlog {
 
   // cdcm1 — the STREAMING materialization path under the oracle: run the
   // CdcMaterializer end-to-end (micro-batch source → AvailableNow stream →
-  // bucketed parquet table with latest-wins merges and tombstones) over
+  // merge-on-read parquet table: latest-wins delta segments and tombstones) over
   // the fixture, then read the final table back. The result must equal
   // the latest-image ground truth — the same oracle as cdcb4, reached
   // through the full streaming sink instead of a window query. Fresh
@@ -1505,7 +1505,7 @@ object CdcBinlog {
   // Δ(T ⋈ D) = ΔT ⋈ D — so the change stream is enriched per micro-batch
   // with a BROADCAST hash join (work proportional to the delta, never to
   // |T| or a re-join of the full view) and the enriched deltas flow
-  // through the same bucket-addressed latest-wins merge as cdcm1.
+  // through the same merge-on-read latest-wins table as cdcm1.
   // Update-before images join too (same key domain), so a future
   // group-moving dimension key would retract correctly. The oracle
   // recomputes the view from the latest-image ground truth joined to the

@@ -533,9 +533,10 @@ object Layout {
 
   // ---- the segment protocol of the CDC-maintained structures -------------
   //
-  // The text index, the ANN index, the fp log, the band log, the IVM
-  // aggregate view (`CdcMaterializer.maintainAggregate`) and the durable
-  // windowed view (`StreamOps.maintainWindowedAgg`) all store
+  // The text index, the ANN index, the fp log, the band log, the
+  // materialized table (`CdcMaterializer.materialize`), the IVM aggregate
+  // view (`CdcMaterializer.maintainAggregate`) and the durable windowed
+  // view (`StreamOps.maintainWindowedAgg`) all store
   // batch-addressed `seg=` segments under one protocol. A structure's root
   // holds generation directories (`g<version>`) and a versioned manifest,
   // `_manifest`, laid out like Structured Streaming's metadata log. Each
@@ -592,6 +593,14 @@ object Layout {
   // all (the Structured Streaming metadata-log layout, through the plain
   // FileSystem API).
 
+  /** The on-disk format of a segment-protocol structure: the manifest
+    * record and the generation and segment layout it names. Change it
+    * with that format; a tree cached across runs
+    * ([[PersistedIndexes.cached]]) records it and is rebuilt when it
+    * differs.
+    */
+  private[graft] val ManifestFormat = "segment-manifest-json-1"
+
   private def manifestDir(root: String) = new org.apache.hadoop.fs.Path(root, "_manifest")
   private implicit val manifestFormats: org.json4s.Formats = org.json4s.DefaultFormats
 
@@ -641,11 +650,12 @@ object Layout {
     if (leg.isEmpty) dir else s"$dir/$leg"
 
   /** A schema as a parquet write records it and a read infers it back:
-    * every field, element and value nullable.
+    * every field, element and value nullable, no field metadata.
     */
   private def nullable(t: DataType): DataType = t match {
     case st: StructType =>
-      StructType(st.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      StructType(st.fields.map(f =>
+        StructField(f.name, nullable(f.dataType), nullable = true)))
     case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
     case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
     case other => other
@@ -675,17 +685,31 @@ object Layout {
   /** Where an [[append]] or a [[fold]] writes: segment `segment` of each
     * leg under the generation directory `dir`. Each [[write]] records the
     * leg's read schema — its data columns, then `seg`, then its
-    * partition columns, the order a read puts them in.
+    * partition columns, the order a read puts them in. A leg that
+    * `recorded` (the schemas an append's manifest version holds) already
+    * has must keep its schema: a drifted segment would commit and then
+    * read back as nulls or fail at read time, so [[write]] fails by name
+    * before it writes.
     */
-  private[graft] final class SegmentWriter(val dir: String, segment: String) {
+  private[graft] final class SegmentWriter(val dir: String, segment: String,
+                                           recorded: Map[String, String]) {
     private val schemas = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
     def write(leg: String, rows: DataFrame, partitionBy: String*): Unit = {
+      val (parts, data) = rows.schema.fields.partition(f => partitionBy.contains(f.name))
+      val schema = nullable(StructType(
+        (data :+ StructField("seg", StringType)) ++ parts)).json
+      // the recorded schema normalized too: an older version may still
+      // carry field metadata
+      recorded.get(leg).filter(r => nullable(DataType.fromJson(r)).json != schema).foreach { was =>
+        throw new IllegalStateException(
+          s"schema drift in ${legDir(dir, leg)}: segment $segment has " +
+            s"${DataType.fromJson(schema).simpleString}, the committed segments " +
+            s"${DataType.fromJson(was).simpleString}")
+      }
       rows.write.mode("overwrite").partitionBy(partitionBy: _*)
         .parquet(s"${legDir(dir, leg)}/seg=$segment")
-      val (parts, data) = rows.schema.fields.partition(f => partitionBy.contains(f.name))
-      schemas.put(leg, nullable(StructType(
-        (data :+ StructField("seg", StringType)) ++ parts)).json)
+      schemas.put(leg, schema)
     }
 
     private[Layout] def written: Map[String, String] = {
@@ -722,7 +746,9 @@ object Layout {
     * version: the previous one plus the new segment (the first append's
     * is version 0, in generation `g000000`). If that version already
     * exists, a concurrent writer got there first and the append fails by
-    * name. `legWrites` is called only for a segment not yet committed: a
+    * name, as does a leg whose schema differs from the one the latest
+    * version records ([[SegmentWriter]]), before that leg writes.
+    * `legWrites` is called only for a segment not yet committed: a
     * structure's own checks and first-batch setup never run for a replay
     * of a committed or fenced batch.
     */
@@ -734,11 +760,11 @@ object Layout {
     else {
       val version = last.fold(0L)(_._1 + 1)
       val m = last.fold(SegmentManifest(generationOf(0), Nil, None, Map.empty))(_._2)
-      val out = new SegmentWriter(s"$root/${m.generation}", segment)
+      val out = new SegmentWriter(s"$root/${m.generation}", segment, m.schemas)
       inParallelLegs(legWrites(out))
       commit(s, root, version, m.copy(
         segments = (m.segments :+ s"seg=$segment").sorted,
-        schemas = out.written ++ m.schemas))
+        schemas = m.schemas ++ out.written))
       true
     }
   }
@@ -776,7 +802,7 @@ object Layout {
         .partition(_ <= pinned)
       orphans.foreach(g => fs.delete(new org.apache.hadoop.fs.Path(p, generationOf(g)), true))
       val next = version + 1
-      val out = new SegmentWriter(s"$root/${generationOf(next)}", "base")
+      val out = new SegmentWriter(s"$root/${generationOf(next)}", "base", Map.empty)
       stage(new SegmentView(s, root, m), out)
       val fence = (m.fence.toSeq ++ m.segments.filter(_ != "seg=base")
         .map(n => segmentOrdinal(n.stripPrefix("seg=")))).maxOption

@@ -19,7 +19,9 @@ import graft.core.Tables._
   * the loser of a race discards its copy). A tree is named
   * `graft-index-<key>-<fixture>-<sf>`; the key changes with the tree's
   * layout, and building a tree deletes the same fixture's trees under
-  * other keys.
+  * other keys. `_COMPLETE` holds [[Layout.ManifestFormat]], and a tree
+  * whose marker holds another format is rebuilt in place, so a change
+  * to the maintained structures' on-disk format needs no key bump.
   */
 object PersistedIndexes {
 
@@ -30,7 +32,9 @@ object PersistedIndexes {
   private[operators] def cached(dirName: String)(build: String => Unit): String = synchronized {
     val dir = Paths.get(sys.props("java.io.tmpdir"), dirName)
     val marker = dir.resolve("_COMPLETE")
-    if (!Files.exists(marker)) {
+    def current = Files.exists(marker) && Files.readString(marker) == Layout.ManifestFormat
+    if (!current) {
+      deleteRecursively(dir) // absent, or built in another format
       dirName match {
         case TreeName(key, fixture) =>
           scala.util.Using.resource(Files.list(dir.getParent)) { st =>
@@ -46,14 +50,14 @@ object PersistedIndexes {
       deleteRecursively(staging)
       Files.createDirectories(staging)
       build(staging.toString)
-      Files.writeString(staging.resolve("_COMPLETE"), "ok")
+      Files.writeString(staging.resolve("_COMPLETE"), Layout.ManifestFormat)
       try Files.move(staging, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
         case _: Exception =>
           val deadline = System.nanoTime() + 300L * 1000000000L
-          while (!Files.exists(marker) && System.nanoTime() < deadline) Thread.sleep(100)
+          while (!current && System.nanoTime() < deadline) Thread.sleep(100)
           deleteRecursively(staging)
-          if (!Files.exists(marker))
+          if (!current)
             throw new IllegalStateException(s"index at $dir incomplete after wait")
       }
     }

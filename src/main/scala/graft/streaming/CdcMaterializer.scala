@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 import graft.core.GraftSession.withCallSite
 import graft.operators.Layout
@@ -14,32 +14,35 @@ import graft.operators.Layout
   * `jdbc.clj:205-331`); here one streaming job keeps a parquet table
   * current — no lakehouse format needed.
   *
-  * Scale design: the table is hash-partitioned on the primary key into
-  * `nBuckets` directories, and each micro-batch rewrites ONLY the buckets
-  * it touches (`partitionOverwriteMode=dynamic` + static bucket-id
-  * pruning on the read side). Per-trigger cost is
-  * O(touched buckets ÷ nBuckets × table), not O(table): a trickle of
-  * changes against a 100 TB table rewrites a few buckets, a bulk load
-  * rewrites them all — both the plan you'd want. A trigger runs one
-  * shuffle-free job to find its touched buckets and one write (two jobs
-  * under AQE) that shuffles once, on the bucket, and writes each touched
-  * bucket as one file; the table's schema comes from a parquet footer
-  * read on the driver, not from a schema-inference job.
+  * Scale design: merge-on-read on `Layout`'s segment protocol. Each
+  * micro-batch keeps its latest image per key and appends it as its own
+  * segment `seg=b<batchId>` ([[Layout.append]]); nothing already
+  * committed is read or rewritten, so per-trigger cost is O(batch), not
+  * O(table): one shuffle for the dedup and one small file (two jobs
+  * under AQE), whether the table holds a thousand keys or a billion.
   *
-  * Merge is latest-wins on the envelope's total order
-  * (log_file, log_pos, log_seq), which makes it idempotent: a replayed
-  * batch (foreachBatch's at-least-once corner) re-merges to the same
-  * table. Deletes persist as tombstone rows inside the table (so a
-  * bucket whose keys all die still produces output rows and its
-  * partition gets rewritten — dynamic overwrite skips partitions absent
-  * from the output); [[readTable]] filters them and a periodic compact
-  * (plain rewrite) can drop them.
+  * Latest-wins is on the envelope's total order (`fileSeq(log_file)`,
+  * `log_file`, `log_pos`, `log_seq`), inside a batch and across
+  * segments alike, which makes the merge idempotent: a replayed batch
+  * (foreachBatch's at-least-once corner) writes nothing once its
+  * segment is committed or folded, and rows merged again under another
+  * batch id change no answer. Deletes persist as tombstone rows;
+  * [[readTable]] reads one pinned manifest version, applies latest-wins
+  * per key over `seg=base` ∪ the committed deltas and filters the
+  * tombstones. Reads pay for the deltas since the last [[compact]],
+  * which folds them into a tombstone-free base ([[Layout.fold]]); the
+  * fold is explicit, like [[compactAggregate]]. The table records its
+  * key column and base bucket count in the side file `_table` of its
+  * generation (the first append writes it, every fold carries it), so
+  * the read and the fold take no key. A table belongs to one stream
+  * checkpoint: segments are named by batch id.
   */
 object CdcMaterializer {
 
   /** Start maintaining `tablePath` from a CDC change stream (the
     * mysql-binlog source's envelope: `_delta_type`, `log_file`, `log_pos`,
-    * `log_seq`, payload incl. `keyCol`).
+    * `log_seq`, payload incl. `keyCol`). `nBuckets` sizes the base that
+    * [[compact]] writes.
     */
   def materialize(changes: DataFrame, keyCol: String, tablePath: String,
                   checkpoint: String, nBuckets: Int = 64,
@@ -48,7 +51,9 @@ object CdcMaterializer {
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) => mergeBatch(batch, keyCol, tablePath, nBuckets) }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        mergeBatch(batch, keyCol, tablePath, nBuckets, batchId)
+      }
       .start()
 
   /** Numeric binlog extension for latest-wins ordering. MySQL extends the
@@ -62,158 +67,92 @@ object CdcMaterializer {
     when(ext === "", lit(-1L)).otherwise(ext.cast("long"))
   }
 
-  /** One idempotent merge of a batch of change rows into the table: one
-    * job finds the touched buckets, one shuffled write (two jobs under
-    * AQE) rewrites them.
+  /** Per `keyCol`, the row latest on the envelope's total order. */
+  private def latestPerKey(rows: DataFrame, keyCol: String): DataFrame = {
+    val w = Window.partitionBy(col(keyCol))
+      .orderBy(fileSeq(col("log_file")).desc, col("log_file").desc,
+        col("log_pos").desc, col("log_seq").desc)
+    rows.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1).drop("_rn")
+  }
+
+  /** Append batch `batchId` as segment [[Layout.segmentOf]]`(batchId)`:
+    * its latest image per key, tombstones included, update-before rows
+    * dropped. The first append records `keyCol` and `nBuckets`; a later
+    * one keyed otherwise fails by name, and one whose columns differ from
+    * the table's fails in [[Layout.append]]'s schema check — both before
+    * anything is written.
     */
   private[streaming] def mergeBatch(batch: DataFrame, keyCol: String,
-                                    tablePath: String, nBuckets: Int): Unit =
+                                    tablePath: String, nBuckets: Int,
+                                    batchId: Long): Unit =
     withCallSite(batch.sparkSession, "CdcMaterializer.mergeBatch") {
       val s = batch.sparkSession
-      // persist: the touched-bucket scan and the merge would otherwise each
-      // re-decode the batch's binlog span from the source (materializeAll
-      // already persists for the same reason)
-      val b = batch.filter(col("_delta_type") =!= "update-before")
-        .withColumn("_bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
-        .persist()
-      try {
-        // touched bucket ids: bounded by nBuckets, safe to collect — and as
-        // literals they prune the existing-table read to those partitions.
-        // None touched means nothing to write.
-        val touched = bucketSet(b)
-        if (touched.nonEmpty) {
-          // the existing table, read with its footer's schema (no inference
-          // job); a batch whose columns differ fails in unionByName, before
-          // anything is written
-          val all = readExisting(s, tablePath)
-            .fold(b)(_.where(col("_bucket").isin(touched: _*)).unionByName(b))
-          // one shuffle, on the bucket: the window's (bucket, key) partitions
-          // need no second one, and each touched bucket is written by one
-          // task as one file
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("_bucket"), col(keyCol))
-            .orderBy(fileSeq(col("log_file")).desc, col("log_file").desc,
-              col("log_pos").desc, col("log_seq").desc)
-          // the merge streams straight into the partitions it reads: dynamic
-          // overwrite stages every task's output and replaces the touched
-          // `_bucket=N` directories only at job commit, after every task has
-          // read them. Writer-scoped — never mutate the shared session conf
-          // (a sibling job's full-table overwrite must stay STATIC).
-          all.repartition(col("_bucket"))
-            .withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).drop("_rn")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket").parquet(tablePath)
+      Layout.append(s, tablePath, Layout.segmentOf(batchId)) { out =>
+        recorded(s, out.dir) match {
+          case Some((key, _)) => require(key == keyCol,
+            s"merge keyed by $keyCol but the table at $tablePath is keyed by $key")
+          case None => record(s, out.dir, keyCol, nBuckets)
         }
-      } finally b.unpersist()
+        Seq(() => out.write("", latestPerKey(
+          batch.filter(col("_delta_type") =!= "update-before"), keyCol)))
+      }
+      ()
     }
 
-  /** The distinct `_bucket` ids of `df` in one shuffle-free job: a set per
-    * partition, merged on the driver.
-    */
-  private def bucketSet(df: DataFrame): Seq[Int] =
-    df.select(col("_bucket")).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val seen = scala.collection.mutable.BitSet.empty
-        rows.foreach(r => seen += r.getInt(0))
-        Iterator.single(seen.toArray)
-      }
-      .collect().flatten.distinct.sorted.toSeq
+  private def sideFile(dir: String) = new org.apache.hadoop.fs.Path(dir, "_table")
 
-  /** The table at `tablePath`, read with the schema in one data file's
-    * parquet footer (read on the driver: no schema-inference job), or
-    * None while it has no data file.
-    */
-  private def readExisting(s: SparkSession, tablePath: String): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val conf = s.sparkContext.hadoopConfiguration
-    // the table's own filesystem (HDFS/S3/local alike — java.io.File would
-    // answer "no" for every non-local URI and silently drop the previously
-    // materialized rows of touched buckets)
-    val fs = root.getFileSystem(conf)
-    def visible(p: org.apache.hadoop.fs.Path) =
-      !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    val file =
-      if (!fs.exists(root)) None
-      else fs.listStatus(root).iterator
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("_bucket="))
-        .flatMap(d => fs.listStatus(d.getPath).iterator
-          .filter(f => f.isFile && visible(f.getPath)))
-        .nextOption()
-    file.map { f =>
-      // options from the session's conf: the no-options overload parses a
-      // fresh Hadoop conf from its XML resources on every call
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf),
-        org.apache.parquet.HadoopReadOptions.builder(conf)
-          .withMetadataFilter(org.apache.parquet.format.converter
-            .ParquetMetadataConverter.SKIP_ROW_GROUPS)
-          .build())
-      // Spark writes its schema into every file's key-value metadata
-      val sparkSchema =
-        try Option(reader.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        finally reader.close()
-      sparkSchema match {
-        case Some(json) =>
-          val data = DataType.fromJson(json).asInstanceOf[StructType]
-          val schema = StructType(data.fields.map(_.copy(nullable = true)))
-            .add("_bucket", IntegerType)
-          s.read.schema(schema).parquet(tablePath)
-        case None => s.read.parquet(tablePath)
-      }
+  /** The key column and base bucket count recorded in generation `dir`. */
+  private def recorded(s: SparkSession, dir: String): Option[(String, Int)] = {
+    val f = sideFile(dir)
+    val fs = f.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(f)) None
+    else {
+      val in = fs.open(f)
+      val Array(key, n) = try new String(in.readAllBytes(), "UTF-8").split("\n")
+        finally in.close()
+      Some(key -> n.toInt)
     }
   }
 
-  /** Current state of the materialized table (tombstones filtered). */
-  def readTable(s: SparkSession, tablePath: String): DataFrame =
-    readExisting(s, tablePath).getOrElse(s.read.parquet(tablePath))
-      .filter(col("_delta_type") =!= "delete")
+  private def record(s: SparkSession, dir: String, keyCol: String, nBuckets: Int): Unit = {
+    val f = sideFile(dir)
+    val out = f.getFileSystem(s.sparkContext.hadoopConfiguration).create(f, true)
+    try out.write(s"$keyCol\n$nBuckets".getBytes("UTF-8")) finally out.close()
+  }
 
-  /** Periodic tombstone compaction: physically drops delete rows. Only
-    * buckets that CONTAIN a tombstone are rewritten (bucket-id pruning on
-    * the read, dynamic overwrite on the write — same O(touched) profile
-    * as the merge); a bucket whose keys all died gets its partition
-    * directory removed outright, since dynamic overwrite cannot express
-    * "rewrite to empty". Run between triggers (or from a maintenance
-    * job), not concurrently with the maintaining stream's own writes.
+  /** Current state of the materialized table (tombstones filtered), read
+    * from one pinned manifest version with the schema it records (no
+    * schema-inference job).
+    */
+  def readTable(s: SparkSession, tablePath: String): DataFrame = {
+    val view = Layout.committedView(s, tablePath)
+    require(view.isDefined, s"no materialized table under $tablePath")
+    val rows = view.get.read("").drop("seg")
+    // one segment, a delta or the base, already holds one row per key
+    val merged =
+      if (view.get.segs.size == 1) rows
+      else latestPerKey(rows, recorded(s, view.get.dir).get._1)
+    merged.filter(col("_delta_type") =!= "delete")
+  }
+
+  /** Fold the committed deltas into a fresh `seg=base` through
+    * [[Layout.fold]]: latest-wins per key, tombstones dropped, written as
+    * the recorded `nBuckets` files hashed on the key; the fold fences the
+    * batches it consumed. A table whose keys all died folds to an empty,
+    * readable base. Run between triggers or from a maintenance job, never
+    * concurrently with the maintaining stream ([[Layout.fold]]'s lease
+    * fails a second maintenance process by name).
     */
   def compact(s: SparkSession, tablePath: String): Unit =
     withCallSite(s, "CdcMaterializer.compact") {
-      val hPath = new org.apache.hadoop.fs.Path(tablePath)
-      val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // cross-process fold lease (the structure compactors' contract): two
-      // concurrent tombstone compactions of the same table would race the
-      // dynamic bucket overwrites — the loser fails by name instead
-      Layout.withFoldLease(fs, hPath) {
-        val t = readExisting(s, tablePath).getOrElse(s.read.parquet(tablePath))
-        val tombBuckets = bucketSet(t.filter(col("_delta_type") === "delete"))
-        if (tombBuckets.nonEmpty) {
-          // only needed for the degenerate-case guard below — keep the
-          // common tombstone-free call to a single scan
-          val allBuckets = bucketSet(t).toSet
-          val live = t.where(col("_bucket").isin(tombBuckets: _*))
-            .filter(col("_delta_type") =!= "delete")
-            .localCheckpoint(true)
-          val liveBuckets = bucketSet(live).toSet
-          // Degenerate case: EVERY key in the table is dead. Deleting all
-          // partition directories would leave a parquet root with no data
-          // files — unreadable by every subsequent read/merge. Tombstones are
-          // logically invisible anyway (readTable filters them), so skip:
-          // compaction is an optimization and must never break the table.
-          if (liveBuckets.isEmpty && tombBuckets.toSet == allBuckets) live.unpersist()
-          else {
-            if (liveBuckets.nonEmpty)
-              live.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_bucket").parquet(tablePath)
-            live.unpersist()
-            tombBuckets.filterNot(liveBuckets).foreach { bId =>
-              fs.delete(new org.apache.hadoop.fs.Path(hPath, s"_bucket=$bId"), true)
-            }
-          }
-        }
+      Layout.fold(s, tablePath) { (view, out) =>
+        val (key, nBuckets) = recorded(s, view.dir).get
+        // the window reuses the bucket shuffle: one exchange in all
+        out.write("", latestPerKey(
+          view.read("").drop("seg").repartition(nBuckets, col(key)), key)
+          .filter(col("_delta_type") =!= "delete"))
+        record(s, out.dir, key, nBuckets)
       }
     }
 
@@ -334,7 +273,7 @@ object CdcMaterializer {
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist() // one decode serves every table below
         try schemas.foreach { case (qualified, (ddl, keyCol)) =>
           val (db, table) = graft.core.GraftSession.splitQualified(qualified)
@@ -346,7 +285,7 @@ object CdcMaterializer {
                 fields.zipWithIndex.map { case (f, i) =>
                   col("row").getItem(i).cast(f.dataType).as(f.name)
                 }): _*)
-          mergeBatch(typed, keyCol, s"$basePath/$qualified", nBuckets)
+          mergeBatch(typed, keyCol, s"$basePath/$qualified", nBuckets, batchId)
         } finally cached.unpersist()
       }
       .start()

@@ -77,6 +77,28 @@ class CdcFpLogCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(groups(compacted).nonEmpty)
   }
 
+  test("a drifted append fails by name; the version and the answer are unchanged") {
+    import spark.implicits._
+    val log = java.nio.file.Files.createTempDirectory("graft-fpdrift").resolve("fplog").toString
+    seedLog(log)
+    val version = ManifestFixtures.version(log)
+    val before = groups(log)
+    // `fp` as a number, and a column more: either would commit a segment
+    // that reads back as nulls or fails every later read
+    val drifted = Seq(
+      Seq((6L, 3L, false, 7L)).toDF("doc_id", "ver", "deleted", "fp"),
+      Seq((6L, 3L, false, "b", 1)).toDF("doc_id", "ver", "deleted", "fp", "extra"))
+    drifted.foreach { rows =>
+      val e = intercept[IllegalStateException](CdcBinlog.appendCdcFpSegment(rows, log, "b000003"))
+      assert(e.getMessage.contains("schema drift") && e.getMessage.contains("b000003"), e.getMessage)
+      assert(ManifestFixtures.version(log) === version)
+      assert(groups(log) === before)
+    }
+    // the same append with the log's schema commits
+    writeSeg(log, "b000003", Seq((6L, 3L, false, "b")))
+    assert(ManifestFixtures.version(log) === version.map(_ + 1))
+  }
+
   /** cdcFpProbe — the single-doc exact-dup screen: probe == the doc's
     * cdcFpGroups group minus itself, and the two-phase fp pruning must
     * not be fooled by HISTORY (doc 2 carried fp "a" at ver 0 but lives

@@ -11,7 +11,8 @@ import org.scalatest.BeforeAndAfterAll
   *  - the recorded term-bucket count (`_nbuckets`) fails by name when
   *    it is corrupt;
   *  - building a cached index deletes the same fixture's trees under
-  *    other cache keys, and no other fixture's.
+  *    other cache keys, and no other fixture's; a tree whose `_COMPLETE`
+  *    holds another format tag is rebuilt.
   * Compaction and re-bucketing of the CDC indexes are pinned in
   * [[CdcTextIndexSpec]] and [[CdcAnnIndexSpec]].
   */
@@ -79,6 +80,30 @@ class IndexCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
         .sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
     }
+  }
+
+  test("a cached tree of another format is rebuilt, not reused") {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    val name = s"graft-index-k1-spec${System.nanoTime()}-sf0.001"
+    val tree = tmp.resolve(name)
+    java.nio.file.Files.createDirectories(tree)
+    java.nio.file.Files.writeString(tree.resolve("data"), "old")
+    java.nio.file.Files.writeString(tree.resolve("_COMPLETE"), "an-older-format")
+    try {
+      var builds = 0
+      def build(): String = PersistedIndexes.cached(name) { dir =>
+        builds += 1
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "data"), "new")
+      }
+      assert(build() === tree.toString)
+      assert(java.nio.file.Files.readString(tree.resolve("data")) === "new")
+      assert(java.nio.file.Files.readString(tree.resolve("_COMPLETE")) === Layout.ManifestFormat)
+      // a tree of the current format is reused as it is
+      build()
+      assert(builds === 1)
+    } finally java.nio.file.Files.walk(tree)
+      .sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
   }
 
   test("a corrupt _nbuckets marker fails BY NAME; a missing one is None") {

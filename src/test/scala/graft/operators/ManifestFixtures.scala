@@ -21,6 +21,11 @@ object ManifestFixtures {
     Option(new java.io.File(root).listFiles()).toSeq.flatten
       .map(_.getName).filter(_.matches("g[0-9]+")).toSet
 
+  /** The latest manifest version of the structure at `root`, if any. */
+  def version(root: String): Option[Long] =
+    Option(new java.io.File(root, "_manifest").listFiles()).toSeq.flatten
+      .map(_.getName).filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).maxOption
+
   /** Delete the latest manifest version: the state a writer leaves when
     * it crashes after writing its files and before its commit.
     */

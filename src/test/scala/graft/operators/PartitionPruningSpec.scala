@@ -15,8 +15,8 @@ import org.scalatest.BeforeAndAfterAll
   * instead of the whole table.
   *
   * The engine's production tables are written partition-directory-per-key
-  * where a dominant access dimension exists (the CdcMaterializer buckets
-  * are the hash-partitioned cousin); this spec stages orders partitioned
+  * where a dominant access dimension exists (the CdcMaterializer's base,
+  * hashed on the key into files, is the file-level cousin); this spec stages orders partitioned
   * by month, joins on the partition column against a dimension filtered
   * OFF-join-key (so static pushdown cannot see it), and pins:
   *  - the optimized plan carries a `dynamicpruning` predicate on the

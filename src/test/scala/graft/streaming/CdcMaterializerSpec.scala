@@ -2,18 +2,19 @@ package graft.streaming
 
 import java.math.{BigDecimal => JBigDecimal}
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.binlog.BinlogWriter._
+import graft.operators.ManifestFixtures
 
 /** CDC → parquet table maintenance: latest image per key after every
   * trigger, deletes dropped from reads, idempotent re-merge, and — the
-  * scale property — untouched hash-bucket partitions are NOT rewritten by
-  * a batch that doesn't contain their keys.
+  * scale property — a batch appends exactly one new segment and leaves
+  * every file a committed manifest version lists as it was.
   */
 class CdcMaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -30,11 +31,56 @@ class CdcMaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val ddl = "id INT, word STRING"
   private val nBuckets = 8
 
-  private def partFiles(table: String, bucket: Int): Set[String] = {
-    val d = new java.io.File(s"$table/_bucket=$bucket")
-    if (!d.exists()) Set.empty
-    else d.listFiles().map(_.getName).filter(_.startsWith("part-")).toSet
+  private def changes(rows: (String, String, Long, Int, Int, String)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
   }
+
+  private def merge(batch: DataFrame, table: String, batchId: Long): Unit =
+    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets, batchId)
+
+  private def state(table: String): Seq[(Int, String)] = rows(CdcMaterializer.readTable(spark, table))
+
+  private def rows(t: DataFrame): Seq[(Int, String)] =
+    t.select("id", "word").collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+
+  /** The committed segments' rows as stored, tombstones included. */
+  private def stored(table: String): DataFrame =
+    graft.operators.Layout.committedView(spark, table).get.read("")
+
+  /** Every data file the latest manifest version lists, with its size
+    * and modification time.
+    */
+  private def committedFiles(table: String): Map[String, (Long, Long)] = {
+    val gen = ManifestFixtures.generation(spark, table)
+    ManifestFixtures.segs(spark, table).toSeq.flatMap { seg =>
+      Option(new java.io.File(s"$gen/$seg").listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("part-"))
+        .map(f => f.getPath -> (f.length(), f.lastModified()))
+    }.toMap
+  }
+
+  /** Run `batch` and check that it committed exactly one new segment and
+    * left every previously listed file unchanged; returns the new
+    * segment's data files.
+    */
+  private def appendsOneSegment(table: String)(batch: => Unit): Seq[String] = {
+    val segs = ManifestFixtures.segs(spark, table)
+    val files = committedFiles(table)
+    batch
+    val added = ManifestFixtures.segs(spark, table) -- segs
+    assert(added.size === 1, s"the batch committed segments $added")
+    val now = committedFiles(table)
+    files.foreach { case (f, st) =>
+      assert(now.get(f).contains(st), s"committed file $f was rewritten or removed")
+    }
+    now.keys.filter(_.contains(s"/${added.head}/")).toSeq
+  }
+
+  /** Ordinal of the latest committed batch segment. */
+  private def lastBatch(table: String): Long =
+    ManifestFixtures.segs(spark, table).filter(_ != "seg=base")
+      .map(n => graft.operators.Layout.segmentOrdinal(n.stripPrefix("seg="))).max
 
   test("materialize: upserts, deletes, untouched buckets keep their files") {
     val dir = Files.createTempDirectory("mat-src")
@@ -61,16 +107,12 @@ class CdcMaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
       q.awaitTermination(60000)
     }
     run()
-    val state1 = CdcMaterializer.readTable(spark, table)
-      .select("id", "word").collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    assert(state1.toSeq === Seq((1, "ONE"), (3, "three"), (4, "four")))
+    assert(state(table) === Seq((1, "ONE"), (3, "three"), (4, "four")))
 
-    // pick a surviving key whose bucket batch 2 will NOT touch
-    def bucketOf(id: Int): Int =
-      spark.range(1).select(pmod(hash(lit(id)), lit(nBuckets))).head.getInt(0)
-    val touched2 = Set(bucketOf(3), bucketOf(10))
-    val untouchedId = Seq(1, 4).find(i => !touched2.contains(bucketOf(i)))
-    val before = untouchedId.map(i => partFiles(table, bucketOf(i)))
+    // fold into the bucketed base, whose files batch 2 must leave alone
+    CdcMaterializer.compact(spark, table)
+    assert(ManifestFixtures.segs(spark, table) === Set("seg=base"))
+    assert(committedFiles(table).nonEmpty)
 
     // batch 2: new key 10, update key 3
     w.writeTableMap(23, "foo", "auto", cols, ts = 1002)
@@ -78,122 +120,85 @@ class CdcMaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
       .writeUpdate(23, cols, Seq((Seq(3, "three"), Seq(3, "THREE"))), ts = 1002)
       .writeXid(3, ts = 1002)
       .save(f1)
-    run()
-    val state2 = CdcMaterializer.readTable(spark, table)
-      .select("id", "word").collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    assert(state2.toSeq === Seq((1, "ONE"), (3, "THREE"), (4, "four"), (10, "ten")))
+    appendsOneSegment(table)(run())
+    val state2 = state(table)
+    assert(state2 === Seq((1, "ONE"), (3, "THREE"), (4, "four"), (10, "ten")))
 
-    // the scale property: a bucket batch 2 didn't touch still has the
-    // exact same part files (dynamic partition overwrite left it alone)
-    (untouchedId, before) match {
-      case (Some(i), Some(files)) =>
-        assert(files.nonEmpty)
-        assert(partFiles(table, bucketOf(i)) === files,
-          s"untouched bucket ${bucketOf(i)} was rewritten")
-      case _ => // all buckets collided at nBuckets=8; property untestable here
-    }
-
-    // idempotence: re-merging the last batch's rows changes nothing
+    // idempotence: the committed batch replays as a no-op, and the whole
+    // log merged again under a new batch id changes no answer
     val replay = spark.read.format("mysql-binlog")
       .option("payloadDdl", ddl).load(dir.toString)
       .filter(col("log_pos") >= 0) // full log replay, worst case
-    CdcMaterializer.mergeBatch(replay, "id", table, nBuckets)
-    val state3 = CdcMaterializer.readTable(spark, table)
-      .select("id", "word").collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    assert(state3.toSeq === state2.toSeq)
+    val version = ManifestFixtures.version(table)
+    merge(replay, table, lastBatch(table))
+    assert(ManifestFixtures.version(table) === version)
+    appendsOneSegment(table)(merge(replay, table, lastBatch(table) + 1))
+    assert(state(table) === state2)
   }
 
   test("merge latest-wins survives the 999999 -> 1000000 file rollover") {
-    import spark.implicits._
     val table = Files.createTempDirectory("mat-rollover").resolve("t").toString
     // same key, one image per side of MySQL's 6->7 digit extension
     // rollover; string ordering would rank binlog.999999 ABOVE
-    // binlog.1000000 and keep the stale image
-    val batch = Seq(
+    // binlog.1000000 and keep the stale image — inside one batch...
+    merge(changes(
       ("insert", "binlog.999999", 900L, 0, 1, "stale"),
-      ("update", "binlog.1000000", 500L, 0, 1, "fresh"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets)
-    val got = CdcMaterializer.readTable(spark, table)
-      .select("id", "word").collect().map(r => (r.getInt(0), r.getString(1)))
-    assert(got.toSeq === Seq((1, "fresh")))
+      ("update", "binlog.1000000", 500L, 0, 1, "fresh")), table, 0L)
+    assert(state(table) === Seq((1, "fresh")))
+    // ...and across segments: the stale image in a LATER batch still loses
+    merge(changes(("insert", "binlog.999999", 900L, 0, 1, "stale")), table, 1L)
+    assert(state(table) === Seq((1, "fresh")))
   }
 
-  test("compact physically drops tombstones; clean buckets keep their files") {
-    import spark.implicits._
+  test("compact folds every delta into a tombstone-free base") {
     val table = Files.createTempDirectory("mat-compact").resolve("t").toString
-    def bucketOf(id: Int): Int =
-      spark.range(1).select(pmod(hash(lit(id)), lit(nBuckets))).head.getInt(0)
-    // keys 1..4 live, then 2 dies; pick key ids so at least one bucket has
-    // no tombstone (bucketOf is deterministic, nBuckets=8)
-    val batch = Seq(
+    val b0 = changes(
       ("insert", "f", 1L, 0, 1, "one"),
       ("insert", "f", 1L, 1, 2, "two"),
       ("insert", "f", 1L, 2, 3, "three"),
       ("insert", "f", 1L, 3, 4, "four"),
       ("delete", "f", 2L, 0, 2, "two"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets)
-    assert(spark.read.parquet(table).filter($"_delta_type" === "delete").count() === 1)
-
-    val tombBucket = bucketOf(2)
-    val cleanKey = Seq(1, 3, 4).find(i => bucketOf(i) != tombBucket)
-    val cleanBefore = cleanKey.map(i => partFiles(table, bucketOf(i)))
-    val tombBucketAlive = Seq(1, 3, 4).exists(i => bucketOf(i) == tombBucket)
+    merge(b0, table, 0L)
+    merge(changes(("update", "f", 3L, 0, 3, "THREE"), ("delete", "f", 3L, 1, 4, "four")),
+      table, 1L)
+    assert(stored(table).filter(col("_delta_type") === "delete").count() === 2)
+    val answer = state(table)
+    assert(answer === Seq((1, "one"), (3, "THREE")))
 
     CdcMaterializer.compact(spark, table)
 
-    // tombstones are physically gone; logical state unchanged
-    assert(spark.read.parquet(table).filter($"_delta_type" === "delete").count() === 0)
-    val state = CdcMaterializer.readTable(spark, table)
-      .select("id", "word").collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    assert(state.toSeq === Seq((1, "one"), (3, "three"), (4, "four")))
-    // a bucket with no tombstone was not rewritten
-    (cleanKey, cleanBefore) match {
-      case (Some(i), Some(files)) =>
-        assert(files.nonEmpty)
-        assert(partFiles(table, bucketOf(i)) === files,
-          s"clean bucket ${bucketOf(i)} was rewritten by compact")
-      case _ =>
-    }
-    // a bucket whose keys all died loses its partition directory outright
-    if (!tombBucketAlive)
-      assert(!new java.io.File(s"$table/_bucket=$tombBucket").exists(),
-        "all-dead bucket directory should be removed")
-    // compacting an already-clean table is a no-op
-    val filesNow = (0 until nBuckets).map(partFiles(table, _))
+    // one base segment, live rows only, at most nBuckets files
+    assert(ManifestFixtures.segs(spark, table) === Set("seg=base"))
+    assert(stored(table).filter(col("_delta_type") === "delete").count() === 0)
+    assert(stored(table).count() === 2)
+    assert(committedFiles(table).size <= nBuckets)
+    assert(state(table) === answer)
+    // a replay of a folded batch is fenced: nothing is written
+    val version = ManifestFixtures.version(table)
+    merge(b0, table, 0L)
+    assert(ManifestFixtures.version(table) === version)
+    assert(state(table) === answer)
+    // compacting an already-folded table keeps the answer
     CdcMaterializer.compact(spark, table)
-    assert((0 until nBuckets).map(partFiles(table, _)) === filesNow)
+    assert(state(table) === answer)
   }
 
-  test("compact on an all-dead table is a safe no-op (never an unreadable root)") {
-    import spark.implicits._
+  test("compact of an all-dead table leaves a readable empty table") {
     val table = Files.createTempDirectory("mat-alldead").resolve("t").toString
-    val batch = Seq(
+    merge(changes(
       ("insert", "f", 1L, 0, 1, "one"),
       ("insert", "f", 1L, 1, 2, "two"),
       ("delete", "f", 2L, 0, 1, "one"),
-      ("delete", "f", 2L, 1, 2, "two"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets)
+      ("delete", "f", 2L, 1, 2, "two")), table, 0L)
     CdcMaterializer.compact(spark, table)
-    // the table stays readable (tombstones retained rather than deleting
-    // every partition directory) and logically empty
+    // the base holds no row at all, and the table stays readable
+    assert(ManifestFixtures.segs(spark, table) === Set("seg=base"))
+    assert(stored(table).count() === 0)
     assert(CdcMaterializer.readTable(spark, table).count() === 0)
-    // and a later merge over it still works
-    val revive = Seq(("insert", "g", 3L, 0, 1, "back"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    CdcMaterializer.mergeBatch(revive, "id", table, nBuckets)
-    assert(CdcMaterializer.readTable(spark, table)
-      .select("word").collect().map(_.getString(0)).toSeq === Seq("back"))
+    // and a later insert revives it
+    merge(changes(("insert", "g", 3L, 0, 1, "back")), table, 1L)
+    assert(state(table) === Seq((1, "back")))
   }
-
-  private def allPartFiles(table: String): Set[String] =
-    (0 until nBuckets).flatMap(b => partFiles(table, b).map(f => s"$b/$f")).toSet
-
-  private def state(table: String): Seq[(Int, String)] =
-    CdcMaterializer.readTable(spark, table)
-      .select("id", "word").collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
 
   /** Jobs `body` launches, counted by a listener over this thread's job
     * group; a marker job closes the window, so every earlier job start
@@ -227,78 +232,81 @@ class CdcMaterializerSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("column drift fails the merge before anything is written") {
     import spark.implicits._
     val table = Files.createTempDirectory("mat-drift").resolve("t").toString
-    val batch = Seq(("insert", "f", 1L, 0, 1, "one"), ("insert", "f", 1L, 1, 2, "two"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets)
-    val files = allPartFiles(table)
+    merge(changes(("insert", "f", 1L, 0, 1, "one"), ("insert", "f", 1L, 1, 2, "two")), table, 0L)
+    val version = ManifestFixtures.version(table)
+    val files = committedFiles(table)
     val answer = state(table)
     assert(answer === Seq((1, "one"), (2, "two")))
 
     // one column more than the table
     val extra = Seq(("update", "f", 2L, 0, 1, "ONE", 7L))
       .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word", "extra")
-    val e1 = intercept[org.apache.spark.sql.AnalysisException](
-      CdcMaterializer.mergeBatch(extra, "id", table, nBuckets))
-    assert(e1.getCondition === "NUM_COLUMNS_MISMATCH", e1.getMessage)
-    assert(allPartFiles(table) === files)
-    assert(state(table) === answer)
-
-    // one column fewer: the table's `word` cannot be resolved in the batch
+    // one column fewer: the table's `word` is missing
     val missing = Seq(("update", "f", 2L, 0, 2))
       .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id")
-    val e2 = intercept[org.apache.spark.sql.AnalysisException](
-      CdcMaterializer.mergeBatch(missing, "id", table, nBuckets))
-    assert(e2.getMessage.contains("Cannot resolve column name \"word\""), e2.getMessage)
-    assert(allPartFiles(table) === files)
-    assert(state(table) === answer)
-  }
-
-  test("merge keeps untouched keys of a touched bucket, in at most 3 jobs") {
-    import spark.implicits._
-    val table = Files.createTempDirectory("mat-samebucket").resolve("t").toString
-    // two keys sharing one bucket
-    val ids = (1 to 64).map(i => i -> spark.range(1)
-      .select(pmod(hash(lit(i)), lit(nBuckets))).head.getInt(0))
-    val (a, bucket) = ids.head
-    val b = ids.tail.collectFirst { case (i, bk) if bk == bucket => i }.get
-    val both = Seq(("insert", "f", 1L, 0, a, "a1"), ("insert", "f", 1L, 1, b, "b1"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    CdcMaterializer.mergeBatch(both, "id", table, nBuckets)
-
-    // the second merge rewrites that bucket straight from a read of it
-    val onlyA = Seq(("update", "f", 2L, 0, a, "a2"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    val jobs = jobsOf(CdcMaterializer.mergeBatch(onlyA, "id", table, nBuckets))
-    assert(state(table) === Seq((a, "a2"), (b, "b1")).sortBy(_._1))
-    assert(jobs <= 3, s"a merge into an existing table launched $jobs jobs")
-    // one file per touched bucket per batch
-    assert(partFiles(table, bucket).size === 1)
-
-    // a batch of only before-images touches no bucket and writes nothing
-    val files = allPartFiles(table)
-    val before = Seq(("update-before", "f", 3L, 0, b, "b1"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    val beforeJobs = jobsOf(CdcMaterializer.mergeBatch(before, "id", table, nBuckets))
-    assert(allPartFiles(table) === files)
-    assert(state(table) === Seq((a, "a2"), (b, "b1")).sortBy(_._1))
-    assert(beforeJobs <= 1, s"an update-before-only batch launched $beforeJobs jobs")
-  }
-
-  test("readTable of an existing table takes its schema from a footer: the read is one job") {
-    import spark.implicits._
-    val table = Files.createTempDirectory("mat-read").resolve("t").toString
-    val batch = Seq(("insert", "f", 1L, 0, 1, "one"), ("insert", "f", 1L, 1, 2, "two"),
-      ("delete", "f", 1L, 2, 2, "two"), ("insert", "f", 1L, 3, 3, "three"))
-      .toDF("_delta_type", "log_file", "log_pos", "log_seq", "id", "word")
-    CdcMaterializer.mergeBatch(batch, "id", table, nBuckets)
-    var rows = Seq.empty[(Int, String)]
-    val jobs = jobsOf {
-      rows = CdcMaterializer.readTable(spark, table).select("id", "word")
-        .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+    Seq(extra, missing).foreach { drifted =>
+      val e = intercept[IllegalStateException](merge(drifted, table, 1L))
+      assert(e.getMessage.contains("schema drift"), e.getMessage)
+      assert(ManifestFixtures.version(table) === version)
+      assert(committedFiles(table) === files)
+      assert(state(table) === answer)
+      assert(!new java.io.File(s"${ManifestFixtures.generation(spark, table)}/seg=b000001").exists(),
+        "the drifted batch wrote its segment")
     }
-    assert(rows === Seq((1, "one"), (3, "three")))
+  }
+
+  test("a merge keeps untouched keys and runs at most 2 jobs") {
+    val table = Files.createTempDirectory("mat-samekeys").resolve("t").toString
+    merge(changes(("insert", "f", 1L, 0, 1, "a1"), ("insert", "f", 1L, 1, 2, "b1")), table, 0L)
+
+    // the second merge writes key 1's new image without reading the table
+    var files = Seq.empty[String]
+    val jobs = jobsOf {
+      files = appendsOneSegment(table)(
+        merge(changes(("update", "f", 2L, 0, 1, "a2")), table, 1L))
+    }
+    assert(state(table) === Seq((1, "a2"), (2, "b1")))
+    assert(jobs <= 2, s"a merge into an existing table launched $jobs jobs")
+    assert(files.size === 1, s"the batch wrote $files")
+
+    // a batch of only before-images changes no answer
+    val beforeJobs = jobsOf(appendsOneSegment(table)(
+      merge(changes(("update-before", "f", 3L, 0, 2, "b1")), table, 2L)))
+    assert(state(table) === Seq((1, "a2"), (2, "b1")))
+    assert(beforeJobs <= 2, s"an update-before-only batch launched $beforeJobs jobs")
+  }
+
+  test("readTable reads the manifest's schema: the read is one job") {
+    val table = Files.createTempDirectory("mat-read").resolve("t").toString
+    merge(changes(("insert", "f", 1L, 0, 1, "one"), ("insert", "f", 1L, 1, 2, "two"),
+      ("delete", "f", 1L, 2, 2, "two"), ("insert", "f", 1L, 3, 3, "three")), table, 0L)
+    var got = Seq.empty[(Int, String)]
+    val jobs = jobsOf { got = state(table) }
+    assert(got === Seq((1, "one"), (3, "three")))
     // a schema-inference job before the scan would make this 2
     assert(jobs <= 1, s"readTable(...).collect() launched $jobs jobs")
+    // over several segments the frame is still planned without a job
+    merge(changes(("update", "f", 2L, 0, 1, "ONE")), table, 1L)
+    assert(jobsOf(CdcMaterializer.readTable(spark, table)) === 0)
+    assert(state(table) === Seq((1, "ONE"), (3, "three")))
+  }
+
+  test("readTable pinned before compact reads the same rows after it") {
+    val table = Files.createTempDirectory("mat-pinned").resolve("t").toString
+    merge(changes(("insert", "f", 1L, 0, 1, "one"), ("insert", "f", 1L, 1, 2, "two")), table, 0L)
+    merge(changes(("update", "f", 2L, 0, 1, "ONE"), ("delete", "f", 2L, 1, 2, "two"),
+      ("insert", "f", 2L, 2, 3, "three")), table, 1L)
+    val frame = CdcMaterializer.readTable(spark, table)
+    val before = rows(frame)
+    assert(before === Seq((1, "ONE"), (3, "three")))
+    val generation = ManifestFixtures.generation(spark, table)
+    CdcMaterializer.compact(spark, table)
+    assert(ManifestFixtures.generation(spark, table) !== generation, "the fold wrote no new generation")
+    assert(rows(frame) === before, "the pinned frame changed after the fold committed")
+    merge(changes(("insert", "f", 3L, 0, 4, "four")), table, 2L)
+    CdcMaterializer.compact(spark, table)
+    assert(rows(frame) === before, "the pinned frame changed after one more fold")
+    assert(state(table) === Seq((1, "ONE"), (3, "three"), (4, "four")))
   }
 
   test("materializeAll: one scan maintains several typed tables") {
