@@ -29,7 +29,6 @@ object GraftConf {
   def local(appName: String, cpus: Int): SparkSession = {
     val spark = builder(cpus).appName(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     spark
   }
 }

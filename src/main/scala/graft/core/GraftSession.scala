@@ -21,7 +21,6 @@ object GraftSession {
     }
     // events needs the nano-timestamp handling of Tables.events
     Tables.events(spark, dir).createOrReplaceTempView("events")
-    graft.functions.GraftFunctions.register(spark)
   }
 
   /** Run `body` with every Spark job it launches attributed to `name`:

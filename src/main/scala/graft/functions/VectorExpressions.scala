@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions, SparkSessionExtensionsProvider}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -22,7 +23,8 @@ import org.apache.spark.sql.types._
   * Accepted element-type pairs: any mix of float/double → double;
   * long×long → long.
   *
-  * Registered as SQL function `graft_dot` via [[GraftFunctions.register]].
+  * Installed as SQL function `graft_dot` in every session by
+  * [[GraftExtensions]].
   */
 case class FloatDotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -44,6 +46,12 @@ case class FloatDotProduct(left: Expression, right: Expression)
 
   private lazy val integral: Boolean =
     elemType(left).contains(LongType) && elemType(right).contains(LongType)
+  // the interpreted path's element widths, resolved once, not per row
+  private lazy val leftFloat: Boolean = elemType(left).contains(FloatType)
+  private lazy val rightFloat: Boolean = elemType(right).contains(FloatType)
+
+  private def load(arr: ArrayData, float: Boolean, i: Int): Double =
+    if (float) arr.getFloat(i).toDouble else arr.getDouble(i)
 
   override def dataType: DataType = if (integral) LongType else DoubleType
   override def prettyName: String = "graft_dot"
@@ -72,17 +80,11 @@ case class FloatDotProduct(left: Expression, right: Expression)
       }
       acc
     } else {
-      def get(arr: ArrayData, t: DataType, i: Int): Double = t match {
-        case FloatType => arr.getFloat(i).toDouble
-        case _ => arr.getDouble(i)
-      }
-      val lt = elemType(left).get
-      val rt = elemType(right).get
       var acc = 0.0
       var i = 0
       while (i < n) {
         if (elementsNullable && (x.isNullAt(i) || y.isNullAt(i))) return null
-        acc += get(x, lt, i) * get(y, rt, i)
+        acc += load(x, leftFloat, i) * load(y, rightFloat, i)
         i += 1
       }
       acc
@@ -133,42 +135,51 @@ case class FloatDotProduct(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  /** Idempotently register graft SQL functions on a session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => FloatDotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashBands(exprs.head, 4), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => ShingleArray(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHashBits(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder", exprs => {
-        require(exprs.length >= 3,
-          s"graft_zorder(bits, dim1, dim2, ...) takes >= 3 arguments, got ${exprs.length}")
-        val bits = exprs.head match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_zorder: bits must be an integer literal, got $other")
-        }
-        ZOrderLong(bits, exprs.tail)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_min_k", exprs => {
-        // a named arity error instead of a raw IndexOutOfBounds from the
-        // builder during analysis
-        require(exprs.length == 2,
-          s"graft_min_k(value, k) takes 2 arguments, got ${exprs.length}")
-        BoundedMinK(exprs.head, exprs(1))
-      }, "built-in")
-  }
-
-  /** Column-API form (goes through the registered function so no internal
-    * Column constructors are needed).
+  /** graft's SQL functions, by name: the one list that both
+    * [[GraftExtensions]] and [[register]] install.
     */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
-  }
+  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_dot" -> (exprs => FloatDotProduct(exprs.head, exprs(1))),
+    "graft_minhash" -> (exprs => MinHashBands(exprs.head, 4)),
+    "graft_shingles" -> (exprs => ShingleArray(exprs.head)),
+    "graft_simhash" -> (exprs => SimHashBits(exprs.head)),
+    "graft_zorder" -> { exprs =>
+      require(exprs.length >= 3,
+        s"graft_zorder(bits, dim1, dim2, ...) takes >= 3 arguments, got ${exprs.length}")
+      val bits = exprs.head match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"graft_zorder: bits must be an integer literal, got $other")
+      }
+      ZOrderLong(bits, exprs.tail)
+    },
+    "graft_min_k" -> { exprs =>
+      // a named arity error instead of a raw IndexOutOfBounds from the
+      // builder during analysis
+      require(exprs.length == 2,
+        s"graft_min_k(value, k) takes 2 arguments, got ${exprs.length}")
+      BoundedMinK(exprs.head, exprs(1))
+    })
+
+  /** Idempotently register graft SQL functions on a session. Every
+    * session already has them from its creation ([[GraftExtensions]]);
+    * registering again replaces each with itself.
+    */
+  def register(spark: SparkSession): Unit =
+    builders.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
+    }
+}
+
+/** Installs graft's SQL functions in every session Spark creates. Listed
+  * in `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * which the session builder loads through `ServiceLoader`; sessions cloned
+  * or forked from one (streaming micro-batches, `newSession`) share it.
+  */
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(extensions: SparkSessionExtensions): Unit =
+    GraftFunctions.builders.foreach { case (name, build) =>
+      extensions.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), build))
+    }
 }

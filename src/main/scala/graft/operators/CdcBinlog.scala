@@ -1751,10 +1751,7 @@ object CdcBinlog {
     import s.implicits._
     val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
-    val live = view.read("doclog").groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestLive(view.read("doclog"), "vec_id")
     view.read("cells").join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .orderBy($"vec_id").select($"embedding")
       .head().getSeq[Long](0) // <= 1 slim row
@@ -1982,13 +1979,9 @@ object CdcBinlog {
     */
   private[graft] def cdcFpGroups(s: SparkSession, logDir: String): DataFrame = {
     import s.implicits._
-    Layout.committedView(s, logDir).map(_.read("")).getOrElse(
-        return Seq.empty[(String, Long, Long)]
-          .toDF("fp", "keeper_doc_id", "n_docs"))
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"doc_id", $"m.deleted".as("deleted"), $"m.fp".as("fp"))
-      .filter(!$"deleted")
+    val log = Layout.committedView(s, logDir).map(_.read("")).getOrElse(
+      return Seq.empty[(String, Long, Long)].toDF("fp", "keeper_doc_id", "n_docs"))
+    Layout.latestLive(log, "doc_id", "fp")
       .groupBy($"fp")
       .agg(min($"doc_id").as("keeper_doc_id"), count(lit(1)).as("n_docs"))
       .filter($"n_docs" >= 2)
@@ -2058,24 +2051,19 @@ object CdcBinlog {
     val empty = Seq.empty[(Long, String)].toDF("dup_doc_id", "fp")
     val log = Layout.committedView(s, logDir).map(_.read(""))
       .getOrElse(return empty)
-    val t = log.filter($"doc_id" === docId)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"m.deleted".as("deleted"), $"m.fp".as("fp"))
-      .collect() // <= 1 row by construction (one group key)
-    if (t.isEmpty || t.head.getBoolean(0)) empty
+    val t = Layout.latestLive(log.filter($"doc_id" === docId), "doc_id", "fp")
+      .select($"fp")
+      .collect() // the live row or nothing (one group key)
+    if (t.isEmpty) empty
     else {
-      val fp = t.head.getString(1)
+      val fp = t.head.getString(0)
       val candIds = log.filter($"fp" === fp && $"doc_id" =!= docId)
         .select($"doc_id").distinct()
       val small = underCap(candIds, maxBroadcastCandidates)
-      log.join(if (small) broadcast(candIds) else candIds, "doc_id")
-        .groupBy($"doc_id")
-        .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-        .select($"doc_id".as("dup_doc_id"), $"m.deleted".as("deleted"),
-          $"m.fp".as("fp"))
-        .filter(!$"deleted" && $"fp" === fp)
-        .select($"dup_doc_id", $"fp")
+      Layout.latestLive(log.join(if (small) broadcast(candIds) else candIds, "doc_id"),
+          "doc_id", "fp")
+        .filter($"fp" === fp)
+        .select($"doc_id".as("dup_doc_id"), $"fp")
         .orderBy($"dup_doc_id")
     }
   }
@@ -2117,12 +2105,8 @@ object CdcBinlog {
   private def compactCdcLog(s: SparkSession, logDir: String): Unit =
     Layout.fold(s, logDir) { (view, out) =>
       val log = view.read("")
-      val carried = Seq("ver", "deleted") ++
-        log.columns.filterNot(Set("doc_id", "ver", "deleted", "seg"))
-      out.write("", log.groupBy(col("doc_id"))
-        .agg(max(struct(carried.map(col): _*)).as("m"))
-        .select(col("doc_id") +: carried.map(c => col(s"m.$c").as(c)): _*)
-        .filter(!col("deleted"))
+      out.write("", Layout.latestLive(log, "doc_id",
+          log.columns.filterNot(Set("doc_id", "ver", "deleted", "seg")).toIndexedSeq: _*)
         .coalesce(4))
     }
 
@@ -2217,11 +2201,7 @@ object CdcBinlog {
     // shingle/band arrays never enter the agg exchange; the winning
     // versions' arrays come back by a (doc_id, ver) join, the same
     // split the text/ANN folds use.
-    val liveKeys = log.select($"doc_id", $"ver", $"deleted")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val liveKeys = Layout.latestLive(log.select($"doc_id", $"ver", $"deleted"), "doc_id")
     log.join(liveKeys.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
       .select($"doc_id", $"sh", $"bands")
   }
@@ -2317,15 +2297,13 @@ object CdcBinlog {
     val empty = Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
     val log = Layout.committedView(s, logDir).map(_.read(""))
       .getOrElse(return empty)
-    val t = log.filter($"doc_id" === docId)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"sh", $"bands")).as("m"))
-      .select($"m.deleted".as("deleted"), $"m.sh".as("sh"), $"m.bands".as("bands"))
-      .collect() // <= 1 row by construction (one group key)
-    if (t.isEmpty || t.head.getBoolean(0)) empty
+    val t = Layout.latestLive(log.filter($"doc_id" === docId), "doc_id", "sh", "bands")
+      .select($"sh", $"bands")
+      .collect() // the live row or nothing (one group key)
+    if (t.isEmpty) empty
     else {
-      val tShingles = t.head.getSeq[Array[Byte]](1)
-      val tBands = t.head.getSeq[org.apache.spark.sql.Row](2)
+      val tShingles = t.head.getSeq[Array[Byte]](0)
+      val tBands = t.head.getSeq[org.apache.spark.sql.Row](1)
       // a live image with NO bands has no buckets and hence no
       // neighborhood — answer empty like the deleted/unknown cases
       // (unreachable via cdcm15BandImages, which always emits 2 bands,
@@ -2340,13 +2318,9 @@ object CdcBinlog {
         .filter(inBuckets)
         .select($"doc_id").distinct()
       val small = underCap(candIds, maxBroadcastCandidates)
-      val liveCand = log
-        .join(if (small) broadcast(candIds) else candIds, "doc_id")
-        .groupBy($"doc_id")
-        .agg(max(struct($"ver", $"deleted", $"sh", $"bands")).as("m"))
-        .select($"doc_id", $"m.deleted".as("deleted"),
-          $"m.sh".as("sh"), $"m.bands".as("bands"))
-        .filter(!$"deleted")
+      val liveCand = Layout.latestLive(
+          log.join(if (small) broadcast(candIds) else candIds, "doc_id"),
+          "doc_id", "sh", "bands")
         // live-bands re-check: candidacy is defined on CURRENT images
         .select($"doc_id", $"sh", explode($"bands").as("b"))
         .filter(inBuckets)
@@ -2430,22 +2404,15 @@ object CdcBinlog {
     val targets = docIds.select($"doc_id").distinct()
     val tSmall = underCap(targets, maxBroadcastCandidates)
     def sideT(df: DataFrame): DataFrame = if (tSmall) broadcast(df) else df
-    val tLive = log.join(sideT(targets), "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"doc_id".as("probe_doc_id"), $"m.deleted".as("deleted"),
-        $"m.fp".as("fp"))
-      .filter(!$"deleted")
+    val tLive = Layout.latestLive(log.join(sideT(targets), "doc_id"), "doc_id", "fp")
+      .select($"doc_id".as("probe_doc_id"), $"fp")
     val candIds = log.select($"doc_id", $"fp")
       .join(sideT(tLive.select($"fp").distinct()), "fp")
       .select($"doc_id").distinct()
     val cSmall = underCap(candIds, maxBroadcastCandidates)
-    log.join(if (cSmall) broadcast(candIds) else candIds, "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"doc_id".as("dup_doc_id"), $"m.deleted".as("deleted"),
-        $"m.fp".as("fp"))
-      .filter(!$"deleted")
+    Layout.latestLive(log.join(if (cSmall) broadcast(candIds) else candIds, "doc_id"),
+        "doc_id", "fp")
+      .select($"doc_id".as("dup_doc_id"), $"fp")
       .join(sideT(tLive.select($"probe_doc_id", $"fp")), "fp")
       .filter($"dup_doc_id" =!= $"probe_doc_id")
       .select($"probe_doc_id", $"dup_doc_id", $"fp")
@@ -2485,12 +2452,8 @@ object CdcBinlog {
     val targets = docIds.select($"doc_id").distinct()
     val tSmall = underCap(targets, maxBroadcastCandidates)
     def sideT(df: DataFrame): DataFrame = if (tSmall) broadcast(df) else df
-    val tLive = log.join(sideT(targets), "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"sh", $"bands")).as("m"))
-      .select($"doc_id".as("probe_doc_id"), $"m.deleted".as("deleted"),
-        $"m.sh".as("sh_t"), $"m.bands".as("bands_t"))
-      .filter(!$"deleted")
+    val tLive = Layout.latestLive(log.join(sideT(targets), "doc_id"), "doc_id", "sh", "bands")
+      .select($"doc_id".as("probe_doc_id"), $"sh".as("sh_t"), $"bands".as("bands_t"))
     // (probe, band-key) rows: a null/empty bands array explodes to
     // nothing — that target has no buckets and screens empty
     val tBands = tLive.select($"probe_doc_id", explode($"bands_t").as("b"))
@@ -2503,12 +2466,8 @@ object CdcBinlog {
     val cSmall = underCap(candIds, maxBroadcastCandidates)
     def sideC(df: DataFrame): DataFrame = if (cSmall) broadcast(df) else df
     // slim liveness argmax over candidates; arrays fetched by join
-    val liveKeys = log.select($"doc_id", $"ver", $"deleted")
-      .join(sideC(candIds), "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val liveKeys = Layout.latestLive(
+        log.select($"doc_id", $"ver", $"deleted").join(sideC(candIds), "doc_id"), "doc_id")
       .select($"doc_id", $"ver")
     val liveCand = log.join(sideC(liveKeys), Seq("doc_id", "ver"))
       .select($"doc_id".as("cand_id"), $"sh", $"bands")
@@ -2686,13 +2645,7 @@ object CdcBinlog {
                                    at_cap: Boolean, reason: String)
 
   def maintenanceAdviceReport(s: SparkSession,
-                              structures: Seq[(String, String, String)],
-                              textBudgetFraction: Double = 0.25,
-                              annSkewRatio: Double = 4.0,
-                              annGrowthFactor: Double = 4.0,
-                              annMaxK: Int = 1 << 12,
-                              logAmpFactor: Double = 4.0,
-                              logMaxSegments: Int = 16): DataFrame = {
+                              structures: Seq[(String, String, String)]): DataFrame = {
     import s.implicits._
     val rows = structures.map { case (name, kind, path) =>
       kind.split(":", 2).toList match {
@@ -2701,25 +2654,22 @@ object CdcBinlog {
         case "text" :: _ =>
           // one stats pass per structure (guide §1.2); the budget the
           // advice used is re-derived from its own totalPostings
-          val a = graft.operators.TextAnalysis.cdcTextIndexAdvice(
-            s, path, budgetFraction = textBudgetFraction)
-          val budget = math.max(1L, (a.totalPostings * textBudgetFraction).toLong)
+          val a = graft.operators.TextAnalysis.cdcTextIndexAdvice(s, path)
+          val budget = math.max(1L,
+            (a.totalPostings * graft.operators.TextAnalysis.textBudgetFraction).toLong)
           StructureAdvice(name, "text", a.rebucket, a.suggestedBuckets.toLong,
             a.totalPostings, a.maxBucket.toDouble / budget, at_cap = false,
             a.reason)
         case "ann" :: _ =>
           val a = graft.operators.Similarity.annMaintenanceAdvice(
-            graft.operators.Similarity.cdcAnnIndexStats(s, path),
-            skewRatio = annSkewRatio, growthFactor = annGrowthFactor,
-            maxK = annMaxK)
+            graft.operators.Similarity.cdcAnnIndexStats(s, path))
           StructureAdvice(name, "ann", a.requantize, a.suggestedK.toLong,
             a.nLive,
             if (a.meanCell > 0) a.maxCell / a.meanCell else 0.0,
             a.atCap, a.reason)
         case "log" :: rest =>
           val keyCol = rest.headOption.getOrElse("doc_id")
-          val a = logMaintenanceAdvice(cdcLogStats(s, path, keyCol),
-            ampFactor = logAmpFactor, maxSegments = logMaxSegments)
+          val a = logMaintenanceAdvice(cdcLogStats(s, path, keyCol))
           StructureAdvice(name, "log", a.compact, -1L, a.nLive,
             a.amplification, at_cap = false, a.reason)
         case other =>
@@ -2800,7 +2750,6 @@ object CdcBinlog {
   def cdcm21BatchScreen(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm21") { work =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val fpLog = work.resolve("fplog").toString
       val bandLog = work.resolve("bandlog").toString
       // one decode, two screening structures (cdcm19's fan-out shape),
@@ -2866,7 +2815,6 @@ object CdcBinlog {
   // the hash.
   def cdcm15NearDupFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm15") { work =>
-      graft.functions.GraftFunctions.register(s)
       val log = work.resolve("bandlog").toString
       val band = foldedLogLeg("band log", log, compactCdcBandLog(s, log))
       ingest(s, work, fixtureDir(d), divisor = 6)(Route(
@@ -3184,7 +3132,6 @@ object CdcBinlog {
   def cdcm19PolicyDaemonFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm19") { work =>
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val txtIdx = work.resolve("idx_text").toString
       val annIdx = work.resolve("idx_ann").toString
       val fpLog = work.resolve("fplog").toString

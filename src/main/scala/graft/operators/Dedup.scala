@@ -132,7 +132,6 @@ object Dedup {
   // dd02 — MinHash(4) + LSH (2 bands × 2 rows) near-dup candidate pairs,
   // verified with exact shingle Jaccard ≥ 0.2.
   def dd02MinhashLsh(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // signature computation is the compute-heavy narrow stage: the
     // single-pass graft_minhash expression (one md5 per shingle, all four
     // window minima in one traversal) spread over all cores. The banding
@@ -274,7 +273,6 @@ object Dedup {
     * md5 gate's 128-bit key makes negligible.
     */
   def dd02MinhashLshXx(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     def bandsXx(docs: DataFrame): DataFrame = {
       val shs = docs.select($"doc_id", shingles($"text").as("sh"))
@@ -304,7 +302,6 @@ object Dedup {
     c.isin("8", "9", "a", "b", "c", "d", "e", "f")
 
   def dd03Simhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     // signatures computed in one narrow pass (graft_simhash expression):
     // only (doc_id, sig) rows reach the cluster groupBy — no per-token
@@ -365,7 +362,6 @@ object Dedup {
   // removal that barely moves Jaccard but caps per-shingle join fan-out at
   // threshold², making the shuffle skew-proof by construction.
   def dd04NgramJaccard(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val base = spread(s, documents(s, d))
       .select(
@@ -447,7 +443,6 @@ object Dedup {
   // within-bucket pair work stays ~N·64/2 — linear in N — instead of
   // N²/2^const, which is quadratic at fixed resolution.
   def dd05EmbeddingDup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val nb = nBitsForDir(d)
     val base = embeddings(s, d)
@@ -541,7 +536,6 @@ object Dedup {
   /** Recompute path: corpus-derived sets built inline from corpus text. */
   def incrementalDedup(fresh: DataFrame, corpus: DataFrame): DataFrame = {
     import corpus.sparkSession.implicits._
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     incrementalCore(fresh,
       corpus.select(TextAnalysis.fingerprint($"text").as("fp")).distinct(),
       bandsOf(corpus),
@@ -549,7 +543,6 @@ object Dedup {
   }
 
   def dd06IncrementalDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val docs = spread(s, documents(s, d))
     incrementalDedup(docs.filter($"doc_id" % 10 >= 8), docs.filter($"doc_id" % 10 < 8))
@@ -570,7 +563,6 @@ object Dedup {
   def buildDedupIndex(corpus: DataFrame, indexDir: String,
                       segment: String = "base"): Unit = {
     import corpus.sparkSession.implicits._
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     bandsOf(corpus).repartition($"band_id", $"h")
       .write.mode("overwrite").parquet(s"$indexDir/bands/seg=$segment")
     corpus.select($"doc_id".as("corpus_id"), shingles($"text").as("csh"))
@@ -597,7 +589,6 @@ object Dedup {
     * index itself are keyed on).
     */
   def dd06ViaIndex(s: SparkSession, fresh: DataFrame, indexDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // refuse the pre-segment flat layout outright: mixing it with seg=
     // subdirectories would fail partition discovery on every later read
     val bandsPath = new org.apache.hadoop.fs.Path(s"$indexDir/bands")
@@ -714,7 +705,6 @@ object Dedup {
   // "n-gram overlap with eval" decontamination pass a training pipeline
   // runs after dedup.
   def dd08Decontaminate(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val bucket = conv(substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
       .cast("long") % 100
@@ -779,7 +769,6 @@ object Dedup {
   private[operators] def dd13BloomDecontaminateWith(
       s: SparkSession, d: String,
       bitsPerKey: Long = 16L, kHashes: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val bucket = conv(substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
       .cast("long") % 100
@@ -1132,7 +1121,6 @@ object Dedup {
   private[operators] def fuzzyKeyNeighbors(p: DataFrame,
                                            detach: Boolean = true): DataFrame = {
     val s = p.sparkSession
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     // Duplicate-heavy corpora make KEY-level neighborhood joins
     // quadratic in the duplicate groups (an equal-name group of size g

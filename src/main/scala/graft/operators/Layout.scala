@@ -64,8 +64,6 @@ object Layout {
     */
   def zorderCluster(df: DataFrame, cols: Seq[String], outDir: String,
                     nFiles: Int, bits: Int = 16): Unit = {
-    val s = df.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val dims = scaledDims(df, cols, bits)
     df.withColumn("_zkey",
         call_function("graft_zorder", lit(bits) +: dims: _*))
@@ -734,6 +732,26 @@ object Layout {
   private[graft] def missingIndex(root: String): Nothing =
     throw new java.io.FileNotFoundException(
       s"no committed manifest under $root (absent index)")
+
+  /** The live-version rule of the versioned structures (the fp and band
+    * logs, the text and ANN indexes' `doclog` legs), whose rows are
+    * (`key`, ver, deleted, payload…): per key, the row with the highest
+    * (ver, deleted, carried…) struct — so a tombstone wins a tie at an
+    * equal ver — with tombstones dropped. Columns come out as (`key`,
+    * ver, deleted, carried…), the order the appends write, so a fold
+    * that stages this frame keeps the schema later appends are checked
+    * against. Every probe, stats call and fold over those structures
+    * decides liveness here. Only ver, deleted and the carried columns
+    * enter the aggregate, so a caller that wants wide payload back joins
+    * it on (`key`, ver).
+    */
+  private[graft] def latestLive(rows: DataFrame, key: String, carried: String*): DataFrame = {
+    val fields = Seq("ver", "deleted") ++ carried
+    rows.groupBy(col(key))
+      .agg(max(struct(fields.map(col): _*)).as("m"))
+      .select(col(key) +: fields.map(c => col(s"m.$c").as(c)): _*)
+      .filter(!col("deleted"))
+  }
 
   /** Append one batch's `segment` to the structure at `root`. A segment
     * at or below the replay fence was already folded into `seg=base`, so

@@ -206,7 +206,6 @@ object Multimodal {
     * means). Columns: (media_type, item, peer, hamming).
     */
   private[operators] def phashPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     // phash travels twice: as the bit STRING (band extraction — the LSH
     // key) and as the 32-bit INTEGER (verify — one xor + popcount per
@@ -557,7 +556,6 @@ object Multimodal {
 
   def mm10MediaEmbedSearch(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val dim = 8
     // probe and corpus are SEPARATE pipelines, each filtered before the
     // opaque encoder: the doc_id predicates push into the parquet scans,

@@ -19,7 +19,6 @@ object Similarity {
 
   // sim01 — brute-force cosine top-10 for the query vector vec_id = 0.
   def sim01BruteTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -53,7 +52,6 @@ object Similarity {
   // boundary rows cannot flip between Spark and the oracle.
   val sim11Tau = 0.2
   def sim11RangeSearch(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -82,7 +80,6 @@ object Similarity {
   // scan is nprobe/k of the corpus and nothing corpus-sized moves.
   def sim11bRangeViaIndex(s: SparkSession, d: String,
                           tau: Double = sim11Tau): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -116,7 +113,6 @@ object Similarity {
   // values are bit-identical to the oracle.
   val sim12PrefixDims = 8
   def sim12TruncatedPrefilter(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -153,7 +149,6 @@ object Similarity {
   // plane. At 100 TB the bucket id is the shuffle/partition key and
   // per-query cost is (nBits+1)·bucket-size, not |table|.
   def sim02LshTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val nb = nBitsForDir(d)
     val e = embeddings(s, d).withColumn("bucket", signBucket($"embedding", nb))
@@ -181,27 +176,27 @@ object Similarity {
        |LIMIT 10""".stripMargin
   }
 
-  /** Per-label centroids (exact decimal-mean per dimension) — sim03's
-    * coarse quantizer. One tiny aggregation; at 100 TB it is computed once
-    * (or k-means-refined), PERSISTED, and broadcast per query — see
-    * [[buildIvfIndex]] / [[sim03ViaIndex]].
+  /** Exact decimal-mean centroid per dimension of each `key` group's
+    * embeddings: sim03's per-label coarse quantizer, and the per-cell
+    * centroids of every seeded or persisted IVF index. One tiny
+    * aggregation; at 100 TB it is computed once (or k-means-refined),
+    * PERSISTED, and broadcast per query — see [[buildIvfIndex]] /
+    * [[sim03ViaIndex]].
     */
-  def ivfCentroids(e: DataFrame): DataFrame = {
-    import e.sparkSession.implicits._
-    e.select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .groupBy($"label", $"pos")
-      .agg((sum($"v".cast("decimal(38,10)")).cast("double") / count(lit(1))).as("c"))
-      .groupBy($"label")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"label", transform($"pc", p => p.getField("c")).as("centroid"))
-  }
+  private[operators] def meanCentroids(rows: DataFrame, key: String): DataFrame =
+    rows.select(col(key), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy(col(key), col("pos"))
+      .agg((sum(col("v").cast("decimal(38,10)")).cast("double") / count(lit(1))).as("c"))
+      .groupBy(col(key))
+      .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
+      .select(col(key), transform(col("pc"), p => p.getField("c")).as("centroid"))
 
   /** Persist the IVF coarse-quantizer (per-cell centroid arrays) so query
     * time never re-aggregates the corpus. Rebuild on corpus drift (or
     * maintain incrementally — means compose from per-cell sums/counts).
     */
   def buildIvfIndex(e: DataFrame, indexDir: String): Unit =
-    ivfCentroids(e).write.mode("overwrite").parquet(s"$indexDir/centroids")
+    meanCentroids(e, "label").write.mode("overwrite").parquet(s"$indexDir/centroids")
 
   private def ivfProbe(e: DataFrame, cent: DataFrame, q: DataFrame,
                        preFilter: Column = lit(true)): DataFrame = {
@@ -233,11 +228,10 @@ object Similarity {
   // quantizer doesn't know the filter — the standard engine contract);
   // the oracle replays the same probed-cells + WHERE logic.
   def sim18FilteredSearch(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
-    ivfProbe(e, ivfCentroids(e), q, preFilter = $"vec_id" % 7 === 3)
+    ivfProbe(e, meanCentroids(e, "label"), q, preFilter = $"vec_id" % 7 === 3)
   }
 
   val sim18Sql: String = {
@@ -259,18 +253,16 @@ object Similarity {
   // sim03 — IVF probe: rank cells by centroid distance to the query,
   // search the top-3 cells exhaustively.
   def sim03IvfTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
-    ivfProbe(e, ivfCentroids(e), q)
+    ivfProbe(e, meanCentroids(e, "label"), q)
   }
 
   /** sim03 against the persisted index: identical semantics (spec-pinned),
     * centroids read from parquet — the query path aggregates nothing.
     */
   def sim03ViaIndex(s: SparkSession, d: String, indexDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -299,7 +291,6 @@ object Similarity {
   // the bucket is the shuffle key, per-query work is bucket-sized, and the
   // query side is a peer dataset (NOT broadcast — it grows with the data).
   def sim04KnnJoin(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val base = embeddings(s, d).withColumn("bucket", signBucket($"embedding", nBitsForDir(d)))
     val q = base.filter($"vec_id" % 50 === 0)
@@ -365,17 +356,6 @@ object Similarity {
         (-$"best".getField("nsid")).cast("int").as("cell"): _*)
   }
 
-  /** Exact decimal-mean centroid per cell (same math as [[ivfCentroids]]). */
-  private[operators] def cellCentroids(assigned: DataFrame): DataFrame = {
-    import assigned.sparkSession.implicits._
-    assigned.select($"cell", posexplode($"embedding").as(Seq("pos", "v")))
-      .groupBy($"cell", $"pos")
-      .agg((sum($"v".cast("decimal(38,10)")).cast("double") / count(lit(1))).as("c"))
-      .groupBy($"cell")
-      .agg(array_sort(collect_list(struct($"pos", $"c"))).as("pc"))
-      .select($"cell", transform($"pc", p => p.getField("c")).as("centroid"))
-  }
-
   /** The IVF candidate stage shared by top-k probe and range probe:
     * exact cosines over the top-nprobe cells' rows only (cell-pruned
     * scan, broadcast query — nothing corpus-sized moves).
@@ -405,12 +385,11 @@ object Similarity {
   }
 
   def sim05KmeansIvf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
     val assigned = assignCells(e, 16)
-    cellProbe(assigned, cellCentroids(assigned), q)
+    cellProbe(assigned, meanCentroids(assigned, "cell"), q)
   }
 
   /** Persist the full IVF index: the corpus CELL-PARTITIONED (the inverted
@@ -431,7 +410,7 @@ object Similarity {
       // segment-addressed (seg=base), the layout the CDC ANN index shares
       assigned.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$indexDir/cells/seg=base")
-      cellCentroids(assigned).write.mode("overwrite")
+      meanCentroids(assigned, "cell").write.mode("overwrite")
         .parquet(s"$indexDir/centroids")
     } finally assigned.unpersist()
   }
@@ -449,8 +428,11 @@ object Similarity {
     // the per-row k·dims inner loop of every append/requantize: the
     // codegen'd graft_dot (double widen before multiply, left-to-right
     // fold — bit-identical to the HOF form it replaced, which ran
-    // INTERPRETED per element and was the whole pass at requantize scale)
-    graft.functions.GraftFunctions.register(batch.sparkSession)
+    // INTERPRETED per element and was the whole pass at requantize scale).
+    // `batch`'s embedding is the callers' float view (`cast("array<float>")`)
+    // of the index's long embeddings: that cast is what makes graft_dot
+    // type-check against the double centroids — long×floating fails
+    // analysis by design (FloatDotProduct.checkInputDataTypes)
     def dotd(a: Column, b: Column): Column = call_function("graft_dot", a, b)
     // ranking drops the row's own norm: it scales every seed's cosine by
     // the same positive constant, so the argmax is unchanged and the
@@ -517,7 +499,7 @@ object Similarity {
           // checkpoint: the assignment feeds the centroid aggregate AND
           // the segment write — and must not replay the source batch
           val a = assignCells(live, k).localCheckpoint(true)
-          cellCentroids(a).write.mode("overwrite").parquet(centPath.toString)
+          meanCentroids(a, "cell").write.mode("overwrite").parquet(centPath.toString)
           a
         } else assignToCentroids(live, s.read.parquet(centPath.toString))
       Seq(
@@ -543,11 +525,7 @@ object Similarity {
   def compactCdcAnnIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
     Layout.fold(s, indexDir) { (view, out) =>
-      val live = view.read("doclog")
-        .groupBy($"vec_id")
-        .agg(max(struct($"ver", $"deleted")).as("m"))
-        .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-        .filter(!$"deleted")
+      val live = Layout.latestLive(view.read("doclog"), "vec_id")
         .persist() // feeds the cell filter AND the folded doc log
       try {
         val cells = view.read("cells").drop("seg")
@@ -558,8 +536,7 @@ object Similarity {
             .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
             .select(cells.columns.map(col): _*)
             .repartition($"cell"), "cell"),
-          () => out.write("doclog", live.select($"vec_id", $"ver", $"deleted")
-            .coalesce(4)),
+          () => out.write("doclog", live.coalesce(4)),
           // centroids carry over unchanged (the quantizer is rebuild-only)
           () => s.read.parquet(s"${view.dir}/centroids")
             .coalesce(1).write.mode("overwrite").parquet(s"${out.dir}/centroids")))
@@ -594,11 +571,7 @@ object Similarity {
                             iterations: Int = 2): Unit = {
     import s.implicits._
     Layout.fold(s, indexDir) { (view, out) =>
-    val live = view.read("doclog")
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestLive(view.read("doclog"), "vec_id")
       .persist()
     try {
       val cells = view.read("cells").drop("seg")
@@ -636,7 +609,7 @@ object Similarity {
           // and standard IVF keeps k fixed across Lloyd rounds anyway.
           // A k-row left join per round.
           cent = cent.select($"cell", $"centroid".as("prev"))
-            .join(cellCentroids(assignToCentroids(floatView, cent)), Seq("cell"), "left")
+            .join(meanCentroids(assignToCentroids(floatView, cent), "cell"), Seq("cell"), "left")
             .select($"cell", coalesce($"centroid", $"prev").as("centroid"))
             .localCheckpoint(true)
         val assigned = assignToCentroids(floatView, cent)
@@ -646,8 +619,7 @@ object Similarity {
         // (guide §2.6); the fold commits them together
         Layout.inParallelLegs(Seq(
           () => out.write("cells", assigned.repartition($"cell"), "cell"),
-          () => out.write("doclog", live.select($"vec_id", $"ver", $"deleted")
-            .coalesce(4)),
+          () => out.write("doclog", live.coalesce(4)),
           () => cent.coalesce(1).write.mode("overwrite")
             .parquet(s"${out.dir}/centroids")))
       } finally rows.unpersist()
@@ -674,11 +646,7 @@ object Similarity {
     // on a torn in-flight append's half-written batch
     val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
-    val live = view.read("doclog")
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestLive(view.read("doclog"), "vec_id")
     val occupancy = view.read("cells")
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .groupBy($"cell").agg(count(lit(1)).as("n_live"))
@@ -769,16 +737,11 @@ object Similarity {
                                    qVec: Seq[Long], kTop: Int,
                                    nprobe: Int): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     // one pinned manifest version (Layout.committedView): a torn
     // in-flight append is invisible and a fold renames nothing away
     val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
-    val live = view.read("doclog")
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestLive(view.read("doclog"), "vec_id")
     val q = lit(qVec.toArray)
     val cellsBase = view.read("cells")
     val pruned =
@@ -806,7 +769,6 @@ object Similarity {
     * itself is touched only for the query vector.
     */
   def sim05ViaIndex(s: SparkSession, d: String, indexDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -952,7 +914,6 @@ object Similarity {
   // are what lives hot (16 GB/B vectors instead of 64), and the rerank
   // touches 50 rows.
   def sim06QuantRerank(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val amax = array_max(transform($"embedding", x => abs(x.cast("double"))))
     val qz = embeddings(s, d)
@@ -1082,7 +1043,6 @@ object Similarity {
   }
 
   def sim07PqAdc(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val M = 8; val sub = 8; val K = 16
     val e = embeddings(s, d)
@@ -1153,7 +1113,6 @@ object Similarity {
   }
 
   def sim07ViaIndex(s: SparkSession, d: String, indexDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     pqProbe(embeddings(s, d), s.read.parquet(s"$indexDir/codebook"),
       s.read.parquet(s"$indexDir/codes").filter($"vec_id" =!= 0))
@@ -1219,7 +1178,7 @@ object Similarity {
     codesPath.getFileSystem(e.sparkSession.sparkContext.hadoopConfiguration)
       .delete(codesPath, true)
     val assigned = assignCells(e, k)
-    cellCentroids(assigned).write.mode("overwrite")
+    meanCentroids(assigned, "cell").write.mode("overwrite")
       .parquet(s"$indexDir/centroids")
     val cbRow = pqCodebookRow(e, m, sub, kpq)
     persistCodebook(cbRow, indexDir)
@@ -1231,7 +1190,6 @@ object Similarity {
 
   def sim08ViaIndex(s: SparkSession, d: String, indexDir: String,
                     nprobe: Int = 3, kAdc: Int = 50, kOut: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val e = embeddings(s, d)
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -1299,7 +1257,6 @@ object Similarity {
   def ivfPqKnnJoin(s: SparkSession, d: String, queries: DataFrame,
                    nprobe: Int = 3,
                    maxBroadcastBatch: Long = 1L << 20): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     // bounded probe, not a full count: one slim scan stops at cap+1 rows
@@ -1554,7 +1511,6 @@ object Similarity {
   private[operators] def semanticDedup(e: DataFrame, tau: Double,
                                        kk: Int, reps: Int): DataFrame = {
     val s = e.sparkSession
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val assigned = assignCells(e, kk)
     // ONE aggregation pass yields both the per-cell counts and the rep
@@ -1662,7 +1618,6 @@ object Similarity {
   // IEEE-exact divisions — bit-identical cross-engine (txt13's
   // determinism notes).
   def sim09HybridRrf(s: SparkSession, d: String, kCand: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val k = if (kCand > 0) kCand
       else math.max(parquetRowCount(s"$d/embeddings.parquet"),
@@ -1698,7 +1653,6 @@ object Similarity {
   // at 100 TB this touches nprobe code directories + |terms| posting
   // buckets and fuses ≤ 2·kCand slim rows — the corpus appears nowhere.
   def sim09bHybridIndexed(s: SparkSession, d: String, kCand: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val denseRaw = sim08ViaIndex(s, d, PersistedIndexes.ivfPqIndex(s, d),
       kOut = kCand)
@@ -1830,31 +1784,13 @@ object Similarity {
       .selectExpr("vec_id",
         "transform(embedding, x -> cast(floor((cast(x as double) + 2.0d) * 1000000.0d) as bigint)) as sv")
       .persist()
-    try {
-      // init: the k smallest vec_ids, centroid id = rank in that order
-      var cents: Seq[(Int, Array[Long])] =
-        scaled.orderBy($"vec_id").limit(k).collect().zipWithIndex.map {
-          case (r, i) => (i, r.getSeq[Long](r.fieldIndex("sv")).toArray)
-        }.toSeq
-      var out: DataFrame = null
-      for (it <- 1 to iterations) {
-        val stats = kmeansStats(kmeansAssign(scaled, cents))
-        if (it < iterations)
-          cents = stats.collect() // bounded: k·dims rows of scalars
-            .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-            .map { case (cid, rows) =>
-              (cid, rows.sortBy(_.getInt(1)).map(_.getLong(2)).toArray)
-            }
-        else
-          out = stats
-            .select($"cid".cast("int").as("cid"), $"dim".cast("int").as("dim"),
-              $"cval", $"n")
-            .orderBy($"cid", $"dim")
-            .localCheckpoint(true) // detach before the cache below releases
-            .orderBy($"cid", $"dim")
-      }
-      out
-    } finally scaled.unpersist()
+    // the last Lloyd update's stats are the gate output
+    try kmeansStats(kmeansAssign(scaled, lloydCentroids(scaled, k, iterations - 1)))
+      .select($"cid".cast("int").as("cid"), $"dim".cast("int").as("dim"), $"cval", $"n")
+      .orderBy($"cid", $"dim")
+      .localCheckpoint(true) // detach before the cache below releases
+      .orderBy($"cid", $"dim")
+    finally scaled.unpersist()
   }
 
   /** The two-iteration Lloyd training replay (el → init/c0 → assign a1 →
@@ -1890,9 +1826,10 @@ object Similarity {
       |    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
       |    FROM d2s) WHERE rn = 1)""".stripMargin
 
-  /** Train centroids with `iterations` full Lloyd updates (same init and
-    * arithmetic as [[sim14KmeansTrain]]) and return the final k·dims
-    * scalars — the bounded-coordinator handoff sim15 searches with.
+  /** Train centroids with `iterations` full Lloyd updates from the k
+    * smallest vec_ids (centroid id = rank in that order) and return the
+    * final k·dims scalars — the bounded-coordinator handoff sim15
+    * searches with, and sim14's input to its last update.
     */
   private[operators] def lloydCentroids(scaled: DataFrame, k: Int,
                                         iterations: Int): Seq[(Int, Array[Long])] = {
@@ -2032,7 +1969,6 @@ object Similarity {
   // contract; ties break on vec_id. The oracle replays the same greedy
   // as a recursive CTE carrying the selected set as a list.
   def sim13MmrRerank(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val kCand = 20
     val kOut = 5

@@ -868,12 +868,7 @@ object TextAnalysis {
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     Layout.fold(s, indexDir) { (view, out) =>
-      val live = view.read("doclog")
-        .groupBy($"doc_id")
-        .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
-        .select($"doc_id", $"m.ver".as("ver"),
-          $"m.deleted".as("deleted"), $"m.dl".as("dl"))
-        .filter(!$"deleted")
+      val live = Layout.latestLive(view.read("doclog"), "doc_id", "dl")
         .persist() // feeds the posting filter AND the folded doc log
       try {
         // both staging legs read the cached `live` frame and commit
@@ -883,7 +878,7 @@ object TextAnalysis {
         // it, so two legs started together could both launch one (the
         // job count varied run to run), and a separate job pinning the
         // cache costs one job more per fold than this order
-        out.write("doclog", live.select($"doc_id", $"ver", $"deleted", $"dl"))
+        out.write("doclog", live)
         out.write("postings", postings(view.read("postings")
             .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))), "tb")
         writeBucketMarker(fs, out.dir, nBuckets)
@@ -925,11 +920,7 @@ object TextAnalysis {
     val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
     val nb = textIndexBucketCount(s, view.dir).getOrElse(textIndexBuckets)
-    val live = view.read("doclog")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestLive(view.read("doclog"), "doc_id")
     val occupancy = view.read("postings")
       .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
       .groupBy($"tb").agg(count(lit(1)).as("n_postings"))
@@ -958,6 +949,11 @@ object TextAnalysis {
       stats.select("tb", "n_postings").collect().map(_.getLong(1)),
       probeReadBudget)
 
+  /** [[cdcTextIndexAdvice]]'s default probe-read budget: this share of
+    * the index's live postings.
+    */
+  private[graft] val textBudgetFraction = 0.25
+
   /** One-pass stats→advice for the fractional-budget policy the gates
     * run (budget = max(1, totalPostings · fraction)): the occupancy DAG
     * executes ONCE and both the budget and the advice derive from the
@@ -969,7 +965,7 @@ object TextAnalysis {
     * non-negative totals `(total * 0.25).toLong == total / 4`.
     */
   def cdcTextIndexAdvice(s: SparkSession, indexDir: String,
-                         budgetFraction: Double = 0.25): TextMaintenanceAdvice = {
+                         budgetFraction: Double = textBudgetFraction): TextMaintenanceAdvice = {
     // [[liveBucketOccupancy]]'s frame, with the empty-bucket zero-fill
     // done on the k collected rows instead of a range join (one fewer
     // join per measurement; the advice only folds sum/max/length, so
@@ -1026,11 +1022,7 @@ object TextAnalysis {
       require(recorded == nBuckets,
         s"probe asked for $nBuckets term buckets but the index at $indexDir " +
           s"records $recorded (re-bucketed?) — pass the recorded count"))
-    val live = view.read("doclog").groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"),
-        $"m.deleted".as("deleted"), $"m.dl".as("dl"))
-      .filter(!$"deleted")
+    val live = Layout.latestLive(view.read("doclog"), "doc_id", "dl")
     val stats = live.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
     val tbs = termBuckets(s, terms, nBuckets)
     val posts = view.read("postings")
@@ -1126,7 +1118,6 @@ object TextAnalysis {
   // doc_id < 2^20; out-of-range ids raise by name rather than sampling
   // wrong (at true 100 TB cardinality you'd widen the pack to two longs).
   def txt20StratifiedSample(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val n = 20
     val draw = conv(substring(md5($"doc_id".cast("string")), 1, 10), 16, 10)
@@ -1481,7 +1472,6 @@ object TextAnalysis {
   // dodges the same way). Ties break to the lexicographically smallest
   // shingle on both engines.
   def txt21Boilerplate(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val docs = graft.core.Tables.documents(s, d)
     val dfreq = docs

@@ -13,8 +13,8 @@ object VectorOps {
 
   /** Exact sequential dot product of two float-array columns, as double.
     * Resolves to the codegen'd [[graft.functions.FloatDotProduct]]
-    * expression (register via [[graft.functions.GraftFunctions.register]];
-    * all graft query entry points do). Numerically identical to the
+    * expression (installed in every session by
+    * [[graft.functions.GraftExtensions]]). Numerically identical to the
     * HOF form `aggregate(zip_with(a, b, _*_), 0.0, _+_)` it replaced.
     */
   def dot(a: Column, b: Column): Column =

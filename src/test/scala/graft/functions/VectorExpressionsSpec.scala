@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -101,5 +103,22 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       """select vec_id, graft_dot(embedding, embedding) as n2
         |from emb order by vec_id limit 3""".stripMargin).collect()
     assert(rows.length === 3 && rows.forall(r => math.abs(r.getDouble(1) - 1.0) < 0.01))
+  }
+
+  test("graft_dot's interpreted path widens each element, folds left to right") {
+    def arr(t: DataType, xs: Any*) = Literal.create(xs, ArrayType(t, containsNull = true))
+    val f = arr(FloatType, 0.1f, -2.5f, 3.3f)
+    val d = arr(DoubleType, 0.7d, 1e-3d, -4.1d)
+    def want(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+    val fs = Seq(0.1f, -2.5f, 3.3f).map(_.toDouble)
+    val ds = Seq(0.7d, 1e-3d, -4.1d)
+    assert(FloatDotProduct(f, d).eval() === want(fs, ds))
+    assert(FloatDotProduct(d, f).eval() === want(ds, fs))
+    assert(FloatDotProduct(f, f).eval() === want(fs, fs))
+    assert(FloatDotProduct(d, d).eval() === want(ds, ds))
+    assert(FloatDotProduct(arr(LongType, 3L, -4L), arr(LongType, 5L, 6L)).eval() === -9L)
+    assert(FloatDotProduct(f, arr(DoubleType, 1.0d)).eval() === null) // lengths differ
+    assert(FloatDotProduct(f, arr(DoubleType, 1.0d, null, 2.0d)).eval() === null)
   }
 }

@@ -99,6 +99,29 @@ class CdcFpLogCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ManifestFixtures.version(log) === version.map(_ + 1))
   }
 
+  /** Layout.latestLive's tie rule: at an equal ver the tombstone wins,
+    * even against a live row whose payload sorts higher — in the report,
+    * both probes and the fold alike.
+    */
+  test("at an equal ver the tombstone wins: report, probes and fold agree") {
+    import spark.implicits._
+    val log = java.nio.file.Files.createTempDirectory("graft-fptie").resolve("fplog").toString
+    writeSeg(log, "b000000", Seq(
+      (1L, 0L, false, "a"), (2L, 0L, false, "a"), (3L, 0L, false, "a")))
+    writeSeg(log, "b000001", Seq((2L, 1L, false, "z"), (2L, 1L, true, "a")))
+    def probe(doc: Long) = CdcBinlog.cdcFpProbe(spark, log, doc)
+      .select($"dup_doc_id").as[Long].collect().toSeq
+    def batch = CdcBinlog.cdcFpProbeBatch(spark, log, Seq(1L, 2L).toDF("doc_id"))
+      .select($"probe_doc_id", $"dup_doc_id").as[(Long, Long)].collect().toSeq
+    val want = Seq(("a", 1L, 2L))
+    assert(groups(log) === want)
+    assert(probe(2L).isEmpty && probe(1L) === Seq(3L))
+    assert(batch === Seq((1L, 3L)))
+    CdcBinlog.compactCdcFpLog(spark, log)
+    assert(spark.read.parquet(ManifestFixtures.generation(spark, log)).count() === 2)
+    assert(groups(log) === want && probe(2L).isEmpty && batch === Seq((1L, 3L)))
+  }
+
   /** cdcFpProbe — the single-doc exact-dup screen: probe == the doc's
     * cdcFpGroups group minus itself, and the two-phase fp pruning must
     * not be fooled by HISTORY (doc 2 carried fp "a" at ver 0 but lives
