@@ -1439,11 +1439,12 @@ object CdcBinlog {
   }
 
   /** A probe's answer DETACHED from the workdir (the [[withRotatingWorkdir]]
-    * contract), built under [[Layout.retryOnceOnMissing]]: the by-name
-    * block rebuilds AND executes the probe.
+    * contract), executed now. Every gate probes after [[ingest]] has
+    * returned: the stream has stopped and the shutdown folds are done, so
+    * no fold can race the probe, and a missing path here is a bug to
+    * surface, not a window to retry through.
     */
-  private def detached(probe: => DataFrame): DataFrame =
-    Layout.retryOnceOnMissing(probe.localCheckpoint(true))
+  private def detached(probe: DataFrame): DataFrame = probe.localCheckpoint(true)
 
   def cdcm1MaterializedTable(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm1") { work =>

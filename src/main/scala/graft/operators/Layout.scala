@@ -208,8 +208,8 @@ object Layout {
     * for a fold: their readers pin a manifest version whose files no
     * fold renames away ([[committedView]]); only a read still running
     * when a third fold's retention deletes its generation can miss a
-    * path. It is kept for the benchmark's probes and for the gates'
-    * `detached` probes. Each retry re-runs `body` from
+    * path. It is kept only for the benchmark's probes, which run
+    * alongside the benchmark's folds. Each retry re-runs `body` from
     * scratch — it must REBUILD its DataFrames (a by-name block calling
     * `spark.read` again) and MATERIALIZE them (a lazy frame returned
     * unexecuted would defeat the guard). The guard retries up to

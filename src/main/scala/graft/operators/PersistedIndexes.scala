@@ -6,14 +6,17 @@ import org.apache.spark.sql.functions.lit
 
 import graft.core.Tables._
 
-/** Cached on-disk index builds backing the `*_via_index` gate queries.
+/** Cached on-disk index builds backing the index-probing gate queries:
+  * dd06b's dedup index ([[dedupIndex]]), sim03b's centroids
+  * ([[ivfIndex]]), sim05b's and sim11b's ANN index ([[annIndex]]),
+  * sim07b's PQ codes ([[pqIndex]]), the IVF-PQ index of sim08, sim09b and
+  * sim10 ([[ivfPqIndex]]) and the text index of txt18 and sim09b
+  * ([[textIndexLifecycle]]), one tree per fixture and sf dir.
   *
-  * The index-probe operators ([[Dedup.dd06ViaIndex]],
-  * [[Similarity.sim03ViaIndex]], [[Similarity.sim05ViaIndex]]) are the
-  * production shape — build on corpus drift, probe per query — and were
-  * previously only spec-pinned equal to their inline twins. Registering
-  * them as gate queries needs a deterministic index location per sf dir
-  * plus build-once semantics, which this provides with the same
+  * The index-probe operators are the production shape — build on corpus
+  * drift, probe per query. Registering them as gate queries needs a
+  * deterministic index location per sf dir plus build-once semantics,
+  * which this provides with the same
   * cross-JVM-safe staging + atomic-move + `_COMPLETE`-marker protocol as
   * the binlog fixture cache (parallel test/bench/verify JVMs share /tmp;
   * the loser of a race discards its copy). A tree is named
@@ -108,20 +111,13 @@ object PersistedIndexes {
       Similarity.buildIvfPqIndex(embeddings(s, sfDir), dir)
     }
 
-  /** sim09b's persisted inverted keyword index: term-bucketed postings
-    * (dl denormalized), per-term df, corpus stats.
-    */
-  def textIndex(s: SparkSession, sfDir: String): String =
-    cached(s"graft-index-r11b-text-${sfKey(sfDir)}") { dir =>
-      TextAnalysis.buildTextIndex(documents(s, sfDir), dir)
-    }
-
-  /** txt18's maintenance-lifecycle index: the CDC text index fed the
-    * corpus as three insert-only batches (70%, 20%, 10% — segments
-    * `b000000`–`b000002`, `ver` the batch ordinal), then compacted back
-    * to one base segment — the steady-state shape of an index that has
-    * lived through ingest. Covers the same full corpus as [[textIndex]]
-    * by construction, so the probe oracle is the one-shot build's.
+  /** The corpus's text index, probed by txt18 and sim09b: the CDC text
+    * index fed the corpus as three insert-only batches (70%, 20%, 10% —
+    * segments `b000000`–`b000002`, `ver` the batch ordinal), then
+    * compacted back to one base segment at [[TextAnalysis.textIndexBuckets]]
+    * term buckets — the steady-state shape of an index that has lived
+    * through ingest. Every doc is live, so its probe scores the full
+    * corpus ([[TextAnalysis.bm25IndexOracleCtes]]).
     */
   def textIndexLifecycle(s: SparkSession, sfDir: String): String =
     cached(s"graft-index-r11f-textlc-${sfKey(sfDir)}") { dir =>

@@ -1644,12 +1644,15 @@ object Similarity {
   // sim09b — the INDEXED hybrid composition sim09's scaladoc promises: the
   // dense candidate stream comes from the persisted IVF-PQ index (sim08's
   // partition-pruned probe, generalized to top-kCand with ranks) and the
-  // sparse stream from the persisted inverted keyword index
-  // ([[TextAnalysis.bm25TopKViaIndex]] — reads only the query terms'
-  // posting buckets). Fusion is a FULL OUTER RRF over the two ≤ kCand-row
-  // streams (a doc missing from one stream contributes nothing for that
-  // side — the standard RRF treatment; sim09's inner join is the
-  // rank-everything special case where nothing is ever missing). Per query
+  // sparse stream from the persisted inverted keyword index — txt18's
+  // text index ([[PersistedIndexes.textIndexLifecycle]]), probed by
+  // [[TextAnalysis.bm25TopKViaCdcIndex]], which reads only the query
+  // terms' posting buckets; the query doc 0 is dropped from the
+  // candidates but counts toward df, n and sumdl. Fusion is a FULL OUTER
+  // RRF over the two ≤ kCand-row streams (a doc missing from one stream
+  // contributes nothing for that side — the standard RRF treatment;
+  // sim09's inner join is the rank-everything special case where nothing
+  // is ever missing). Per query
   // at 100 TB this touches nprobe code directories + |terms| posting
   // buckets and fuses ≤ 2·kCand slim rows — the corpus appears nowhere.
   def sim09bHybridIndexed(s: SparkSession, d: String, kCand: Int = 50): DataFrame = {
@@ -1658,8 +1661,9 @@ object Similarity {
       kOut = kCand)
     val dense = rankedTopK(denseRaw.select($"vec_id".as("id"), $"cos"),
       $"cos", $"id", kCand, "r_dense")
-    val sparse = TextAnalysis.bm25TopKViaIndex(s, PersistedIndexes.textIndex(s, d),
-      TextAnalysis.bm25Terms, kCand, excludeDocId = 0L)
+    val sparse = TextAnalysis.bm25TopKViaCdcIndex(s,
+      PersistedIndexes.textIndexLifecycle(s, d), TextAnalysis.bm25Terms, kCand,
+      excludeDocId = Some(0L))
       .select($"doc_id".as("id"), $"bm25", $"r_sparse")
     dense.join(sparse, Seq("id"), "full_outer")
       .select($"id", $"cos", $"bm25", $"r_dense", $"r_sparse",
@@ -1675,7 +1679,8 @@ object Similarity {
     * index's per-(term, doc) postings, per-term df and corpus stats from
     * the documents table, scores with the txt13 BM25-RSJ formula, and
     * folds per-doc term scores in sorted term order — exactly the
-    * bm25TopKViaIndex fold contract. FULL OUTER RRF fusion, top 10.
+    * [[TextAnalysis.bm25TopKViaCdcIndex]] fold contract, doc 0 excluded
+    * after the statistics are counted. FULL OUTER RRF fusion, top 10.
     */
   def sim09bSql(kCand: Int = 50): String = {
     val terms = TextAnalysis.bm25Terms

@@ -586,54 +586,34 @@ object TextAnalysis {
   // pruning, no DPP machinery needed) — the same layout contract as
   // sim05's cell directories.
   //
-  // Build cost: one (term, doc_id) aggregation of the exploded token
-  // stream — the single corpus-sized shuffle, paid at BUILD time, slim
-  // (term, doc_id, dl) rows. Rebuild on corpus drift; a corpus that
-  // changes in place is the CDC-maintained index's job (below).
+  // The index is maintained from a change stream (cdcm4), which UPDATES
+  // and DELETES docs, so it is MERGE-ON-READ versioned (the Lucene/Delta
+  // shape, built from Spark primitives): postings rows carry the writing
+  // version, and a slim per-segment DOC LOG records (doc_id, ver,
+  // deleted, dl) for every key the batch touched. Nothing is ever
+  // rewritten on ingest — append cost stays O(batch) — and the probe
+  // reconstructs liveness: latest version per doc from the doc log
+  // ([[Layout.latestLive]], one argmax over slim rows), postings joined on
+  // (doc_id, ver) so stale versions drop out, df/n/sumdl counted from
+  // LIVE rows only. Probe results are therefore exactly a full rebuild
+  // over the latest images — the freshness contract cdcm4 puts under the
+  // DuckDB oracle. An index over a static corpus is the insert-only case
+  // of the same stream ([[PersistedIndexes.textIndexLifecycle]], probed by
+  // txt18 and sim09b). Both legs commit through [[Layout.append]] and
+  // [[Layout.fold]]; the generation records its term-bucket count in
+  // `_nbuckets`.
 
   def textIndexBuckets: Int = 64
 
-  /** Build the index over `docs` as one `seg=base` segment: postings,
-    * per-term df and corpus stats, plus the `_nbuckets` marker.
-    */
-  def buildTextIndex(docs: DataFrame, indexDir: String,
-                     nBuckets: Int = textIndexBuckets): Unit = {
-    val s = docs.sparkSession
-    import s.implicits._
-    // a (re)build starts a NEW index: earlier segments described a corpus
-    // that no longer exists — the buildAnnIndex wipe contract
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    val base = docs
-      .select($"doc_id", size(tokens($"text")).cast("long").as("dl"),
-        explode(tokens($"text")).as("term"))
-    base.groupBy($"term", $"doc_id", $"dl").agg(count(lit(1)).as("tf"))
-      .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$indexDir/postings/seg=base")
-    // per-term document frequency — recomputed from the written postings
-    // (slim read, no second corpus tokenization), bucketed like them
-    s.read.parquet(s"$indexDir/postings/seg=base")
-      .groupBy($"term").agg(count(lit(1)).as("df"))
-      .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$indexDir/termstats/seg=base")
-    // corpus stats over ALL the docs (zero-match docs count toward n and
-    // sumdl — the txt13 statistics contract)
-    docs.select(size(tokens($"text")).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
-      .write.mode("overwrite").parquet(s"$indexDir/stats/seg=base")
-    writeBucketMarker(fs, indexDir, nBuckets)
-  }
-
-  /** The index's RECORDED term-bucket count (`_nbuckets` at the root).
-    * The bucket count became a runtime property when re-bucketing
-    * ([[rebucketCdcTextIndex]]) arrived: a probe pruning with the wrong
-    * count reads the wrong directories and silently misses postings, so
-    * the layout records its own count and the probes verify against it
-    * by name. Indexes built
-    * before the marker existed return None (verification skipped).
+  /** The RECORDED term-bucket count (`_nbuckets`) of the generation
+    * directory `indexDir` — [[cdcTextIndexBucketCount]] resolves an
+    * index root to its committed generation. The bucket count is a
+    * runtime property since re-bucketing ([[rebucketCdcTextIndex]]): a
+    * probe pruning with the wrong count reads the wrong directories and
+    * silently misses postings, so the layout records its own count and
+    * the probes verify against it by name. The first append writes the
+    * marker and every fold carries it, so None means no append has
+    * recorded a count in `indexDir` yet.
     */
   def textIndexBucketCount(s: SparkSession, indexDir: String): Option[Int] = {
     val marker = new org.apache.hadoop.fs.Path(indexDir, "_nbuckets")
@@ -668,8 +648,8 @@ object TextAnalysis {
 
   /** The query terms' bucket ids, computed by Spark's own hash expression
     * over a local relation at plan-build time (constant-folded — no job):
-    * the ONE derivation both the build's partitionBy column and the
-    * probe's pruning literals share, so they can never drift.
+    * the same `pmod(hash(term), nBuckets)` the append's partitionBy
+    * column uses, so the pruning literals can never drift from it.
     */
   private def termBuckets(s: SparkSession, terms: Seq[String],
                           nBuckets: Int): Seq[Int] = {
@@ -678,88 +658,12 @@ object TextAnalysis {
     terms.indices.map(row.getInt).distinct
   }
 
-  /** Top-k BM25-RSJ candidates from the PERSISTED index: reads only the
-    * query terms' posting buckets (static partition pruning), scores each
-    * hit against broadcast df/corpus stats, folds per-doc term scores in
-    * SORTED TERM ORDER (collect_list order is nondeterministic; the
-    * array_sort fixes the double-addition order so the oracle's
-    * `list(sc ORDER BY term)` fold is bit-identical), and cuts to top-k
-    * with ranks via [[Similarity.rankedTopK]] — per-partition top-k, no
-    * corpus-sized sort. Only docs matching >= 1 term appear (retrieval
-    * semantics); the corpus text is never touched.
-    */
-  def bm25TopKViaIndex(s: SparkSession, indexDir: String, terms: Seq[String],
-                       k: Int, nBuckets: Int = textIndexBuckets,
-                       excludeDocId: Long = Long.MinValue): DataFrame = {
-    import s.implicits._
-    // pruning with a bucket count that differs from the layout's reads
-    // the wrong directories and silently MISSES postings — fail by name
-    // against the recorded count instead (absent on pre-marker indexes)
-    textIndexBucketCount(s, indexDir).foreach(recorded =>
-      require(recorded == nBuckets,
-        s"probe asked for $nBuckets term buckets but the index at $indexDir " +
-          s"records $recorded (re-bucketed?) — pass the recorded count"))
-    val tbs = termBuckets(s, terms, nBuckets)
-    // n/sumdl/df are long sums over the `seg=` directories (one,
-    // `seg=base`, for a one-shot build) — exact in any order
-    val stats = s.read.parquet(s"$indexDir/stats")
-      .agg(sum($"n").as("n"), sum($"sumdl").as("sumdl"))
-    val tstats = s.read.parquet(s"$indexDir/termstats")
-      .filter($"tb".isin(tbs: _*) && $"term".isin(terms: _*))
-      .groupBy($"term").agg(sum($"df").as("df"))
-    val posts = s.read.parquet(s"$indexDir/postings")
-      .filter($"tb".isin(tbs: _*) && $"term".isin(terms: _*))
-      .filter($"doc_id" =!= excludeDocId)
-      .select($"term", $"doc_id", $"dl", $"tf")
-    bm25ScoreTopK(posts, tstats, stats, k)
-  }
-
-  /** The BM25-RSJ scoring core shared by [[bm25TopKViaIndex]] and
-    * [[bm25TopKViaCdcIndex]]: `posts` = (term, doc_id, dl, tf) pruned
-    * hits, `tstats` = per-term df (≤ |query terms| rows — broadcast),
-    * `stats` = one (n, sumdl) row. Per-doc term scores fold in SORTED
-    * TERM ORDER so the double addition is bit-identical to the oracle's
-    * `list(sc ORDER BY term)` fold; top-k cuts per-partition via
-    * rankedTopK — never a corpus-sized global sort.
-    */
-  private def bm25ScoreTopK(posts: DataFrame, tstats: DataFrame,
-                            stats: DataFrame, k: Int): DataFrame = {
-    import posts.sparkSession.implicits._
-    def dbl(c: Column): Column = c.cast("double")
-    val idf = (dbl($"n") - dbl($"df") + lit(0.5)) / (dbl($"df") + lit(0.5))
-    val norm = lit(1.2) * (lit(0.25) +
-      lit(0.75) * (dbl($"dl") / (dbl($"sumdl") / dbl($"n"))))
-    val sc = idf * ((dbl($"tf") * lit(2.2)) / (dbl($"tf") + norm))
-    val perDoc = posts.join(broadcast(tstats), "term").crossJoin(broadcast(stats))
-      .select($"doc_id", struct($"term", sc.as("sc")).as("ts"))
-      .groupBy($"doc_id")
-      .agg(aggregate(array_sort(collect_list($"ts")), lit(0.0),
-        (acc, x) => acc + x.getField("sc")).as("bm25"))
-    Similarity.rankedTopK(perDoc, $"bm25", $"doc_id", k, "r_sparse")
-  }
-
-  // ---- CDC-maintained text index (cdcm4) -------------------------------
-  //
-  // The one-shot index above assumes docs are immutable; a CDC stream
-  // UPDATES and DELETES them. The CDC index handles both
-  // with MERGE-ON-READ versioning (the Lucene/Delta shape, built from
-  // Spark primitives): postings rows carry the writing version, and a
-  // slim per-segment DOC LOG records (doc_id, ver, deleted, dl) for
-  // every key the batch touched. Nothing is ever rewritten on ingest —
-  // append cost stays O(batch) — and the probe reconstructs liveness:
-  // latest version per doc from the doc log (one argmax over slim
-  // rows), postings joined on (doc_id, ver) so stale versions drop out,
-  // df/n/sumdl recomputed from LIVE rows only. Probe results are
-  // therefore exactly a full rebuild over the latest images — the
-  // freshness contract cdcm4 puts under the DuckDB oracle.
-
   /** Append one CDC micro-batch's per-key latest images to the index.
     * `images` must hold one row per touched key: (doc_id, text, ver,
     * deleted), with `ver` strictly increasing across a key's successive
     * batches (the batch id — stream order makes it monotone). Replaying
-    * a batch rewrites exactly its own segment — idempotent — unless a
-    * fold already consumed it: [[Layout.append]] then skips it (false).
-    * Returns true iff a segment was written.
+    * a committed batch writes nothing (true); a batch a fold already
+    * consumed is skipped (false) — [[Layout.append]]'s replay contract.
     */
   def appendCdcTextSegment(images: DataFrame, indexDir: String,
                            segment: String,
@@ -1000,24 +904,36 @@ object TextAnalysis {
     TextMaintenanceAdvice(over, suggested, nb, maxBucket, mean, total, reason)
   }
 
-  /** Top-k BM25 over the CDC-maintained index, exactly as fresh as the
-    * last appended batch. Plan shape at scale: the doc-log argmax is one
-    * shuffle of slim 4-long rows (the only corpus-proportional step —
-    * periodic compaction ([[compactCdcTextIndex]]) folds the log to live
-    * rows); the liveness join's posting side is bucket-pruned to the
-    * query terms, so AQE broadcasts it and the corpus-sized side never
-    * shuffles twice; scoring is [[bm25ScoreTopK]]'s pruned-hits path.
+  /** Top-k BM25-RSJ candidates from the index, exactly as fresh as the
+    * last appended batch: reads only the query terms' posting buckets
+    * (static partition pruning) and never the corpus text. Plan shape at
+    * scale: the doc-log argmax is one shuffle of slim 4-long rows (the
+    * only corpus-proportional step — periodic compaction
+    * ([[compactCdcTextIndex]]) folds the log to live rows); the liveness
+    * join's posting side is bucket-pruned to the query terms, so AQE
+    * broadcasts it and the corpus-sized side never shuffles twice. Each
+    * hit is scored against the broadcast df and corpus stats, per-doc
+    * term scores fold in SORTED TERM ORDER (collect_list order is
+    * nondeterministic; the array_sort fixes the double-addition order so
+    * the oracle's `list(sc ORDER BY term)` fold is bit-identical), and
+    * the top-k cut with ranks is [[Similarity.rankedTopK]]'s —
+    * per-partition top-k, no corpus-sized sort. Only docs matching >= 1
+    * term appear (retrieval semantics). `excludeDocId` drops one doc
+    * from the candidates AFTER df, n and sumdl are counted, so it still
+    * counts toward them (sim09b's query doc, the oracle's
+    * `pt.doc_id <> 0`).
     */
   def bm25TopKViaCdcIndex(s: SparkSession, indexDir: String,
                           terms: Seq[String], k: Int,
-                          nBuckets: Int = textIndexBuckets): DataFrame = {
+                          nBuckets: Int = textIndexBuckets,
+                          excludeDocId: Option[Long] = None): DataFrame = {
     import s.implicits._
     // one pinned manifest version (Layout.committedView): a torn
     // in-flight append is invisible and a fold renames nothing away
     val view = Layout.committedView(s, indexDir)
       .getOrElse(Layout.missingIndex(indexDir))
-    // same drift guard as [[bm25TopKViaIndex]]: the wrong bucket count
-    // prunes to the wrong directories and silently misses postings
+    // the wrong bucket count prunes to the wrong directories and
+    // silently misses postings — fail by name against the recorded one
     textIndexBucketCount(s, view.dir).foreach(recorded =>
       require(recorded == nBuckets,
         s"probe asked for $nBuckets term buckets but the index at $indexDir " +
@@ -1032,7 +948,24 @@ object TextAnalysis {
     // df from LIVE postings only — a stale or deleted version must not
     // inflate document frequency
     val tstats = posts.groupBy($"term").agg(count(lit(1)).as("df"))
-    bm25ScoreTopK(posts, tstats, stats, k)
+    def dbl(c: Column): Column = c.cast("double")
+    val idf = (dbl($"n") - dbl($"df") + lit(0.5)) / (dbl($"df") + lit(0.5))
+    val norm = lit(1.2) * (lit(0.25) +
+      lit(0.75) * (dbl($"dl") / (dbl($"sumdl") / dbl($"n"))))
+    val sc = idf * ((dbl($"tf") * lit(2.2)) / (dbl($"tf") + norm))
+    val perDoc = posts.join(broadcast(tstats), "term").crossJoin(broadcast(stats))
+      .select($"doc_id", struct($"term", sc.as("sc")).as("ts"))
+      .groupBy($"doc_id")
+      .agg(aggregate(array_sort(collect_list($"ts")), lit(0.0),
+        (acc, x) => acc + x.getField("sc")).as("bm25"))
+    // the excluded doc is dropped from a top-(k + 1) cut, where no filter
+    // can move: a doc_id filter would be pushed down into the scored
+    // side's scans, which then stop sharing the doc-log and postings
+    // exchanges with the df side (two more jobs per probe)
+    val hits = excludeDocId.fold(perDoc)(id =>
+      perDoc.orderBy($"bm25".desc, $"doc_id").limit(math.min(k, Int.MaxValue - 1) + 1)
+        .filter($"doc_id" =!= id))
+    Similarity.rankedTopK(hits, $"bm25", $"doc_id", k, "r_sparse")
   }
 
   // txt18 — the index MAINTENANCE lifecycle under the oracle: the gate's
@@ -1041,7 +974,8 @@ object TextAnalysis {
   // segment — and only then probed. Every maintenance step is exact by
   // construction (the doc-log liveness and long-sum stats are order-free,
   // compaction keeps every live posting), so the probe must hash-match
-  // the same full-corpus BM25 the one-shot build would give; a regression
+  // the same full-corpus BM25 a single insert-only batch would give (the
+  // oracle recomputes it from the documents table); a regression
   // in append bookkeeping, segment layout, or the fold's publish surfaces
   // HERE as a hash mismatch rather than only in a spec. k=100 with the
   // (bm25, doc_id) total order keeps the cut deterministic cross-engine.
@@ -1152,7 +1086,7 @@ object TextAnalysis {
     * WITH): recompute per-(term, doc) postings, per-term df and corpus
     * stats from the documents table, score with the txt13 BM25-RSJ
     * formula, fold per-doc term scores in sorted term order — the
-    * [[bm25TopKViaIndex]] contract. ONE definition shared by sim09b's
+    * [[bm25TopKViaCdcIndex]] contract. ONE definition shared by sim09b's
     * oracle and txt18's, so a scoring fix can never reach one and
     * silently miss the other (the latestImageOracle discipline).
     * `sscWhere` is the candidate-exclusion predicate (`pt.doc_id <> 0`

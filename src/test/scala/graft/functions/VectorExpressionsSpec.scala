@@ -18,7 +18,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("graft_dot is bit-identical to the HOF fold on real embeddings") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = e.filter($"vec_id" === 0).select($"embedding".as("qv"))
@@ -32,7 +31,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_dot participates in whole-stage codegen") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val df = e.select(call_function("graft_dot", $"embedding", $"embedding").as("n2"))
@@ -46,7 +44,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_dot rejects non-float-array inputs at analysis") {
-    GraftFunctions.register(spark)
     val err = intercept[Exception] {
       spark.sql("select graft_dot(array(1.0, 2.0), array(1.0, 2.0))").collect()
     }
@@ -54,7 +51,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_shingles equals the HOF array_distinct(transform(...)) pipeline") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import graft.operators.Dedup
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -68,7 +64,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_minhash equals the HOF shingle+md5 pipeline on real docs") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import graft.operators.Dedup
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -84,7 +79,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_simhash equals the explode+bitsum pipeline") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     import graft.operators.Dedup
     val d = "/root/testdata/sf0.001"
@@ -96,7 +90,6 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL surface: graft_dot usable from spark.sql") {
-    GraftFunctions.register(spark)
     graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .createOrReplaceTempView("emb")
     val rows = spark.sql(

@@ -31,7 +31,6 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 8).map(i => (seed * 31 + i * 17) % 2001 - 1000)
 
   test("quantizer stability, supersession, tombstones, brute-force equivalence, replay") {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-cdcann")
     val idx = work.resolve("ann").toString
 
@@ -134,7 +133,6 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     * FileNotFoundException, never an empty answer.
     */
   test("ANN probe and stats read committed doclog+cells pairs only; absent index throws FNF") {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-cdcann-torn")
     val idx = work.resolve("ann").toString
     intercept[java.io.FileNotFoundException] {
@@ -173,7 +171,6 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("requantize: new quantizer over the live corpus, exact probe invariant, fence fenced, ingest continues") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("graft-cdcann-rq")
     val idx = work.resolve("ann").toString
@@ -294,7 +291,6 @@ class CdcAnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     * replayed pre-fold segment must be fence-skipped.
     */
   test("skew trigger fires under a deterministic hot-cell stream; requantize clears it; fence + probe hold") {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-cdcann-skew")
     val idx = work.resolve("ann").toString
 

@@ -27,9 +27,6 @@ class CdcBandFloodSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def beforeAll(): Unit =
-    graft.functions.GraftFunctions.register(spark)
-
   override def afterAll(): Unit = spark.stop()
 
   private val tA = "the quick brown fox jumps over the lazy dog near the river bank today"

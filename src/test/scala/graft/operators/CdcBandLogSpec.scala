@@ -22,8 +22,6 @@ class CdcBandLogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  override def beforeAll(): Unit = graft.functions.GraftFunctions.register(spark)
-
   private def images(rows: Seq[(Long, String, Long, Boolean)]): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text", "ver", "deleted")

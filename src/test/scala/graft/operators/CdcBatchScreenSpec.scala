@@ -26,8 +26,6 @@ class CdcBatchScreenSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  override def beforeAll(): Unit = graft.functions.GraftFunctions.register(spark)
-
   // ---- fp log fixture (CdcFpLogCompactSpec's seed): live state
   // 1->"a", 2->"z", 3->"b", 5->"b"; doc 4 tombstoned; doc 2 carries
   // fp "a" in HISTORY only

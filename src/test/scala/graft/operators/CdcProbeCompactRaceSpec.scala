@@ -11,8 +11,8 @@ import org.scalatest.BeforeAndAfterAll
   * completed probe must equal the reference result. A probe pins one
   * manifest version and nothing it pinned is renamed or deleted within
   * the next two folds, so the probes need no retry: the first test runs
-  * them through [[Layout.retryOnceOnMissing]] (the benchmark's and the
-  * gates' guard), the second runs them bare and counts every failure.
+  * them through [[Layout.retryOnceOnMissing]] (the benchmark's guard),
+  * the second runs them bare and counts every failure.
   */
 class CdcProbeCompactRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -35,7 +35,6 @@ class CdcProbeCompactRaceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** A four-batch index, its probe, and the reference answer. */
   private def fixture(): (String, () => Seq[String]) = {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-race")
     val idx = work.resolve("index").toString
     (0 until 4).foreach { b =>

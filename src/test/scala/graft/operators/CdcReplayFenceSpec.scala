@@ -165,7 +165,6 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   for (e <- entries) {
     test(s"${e.label}: a replayed folded batch is fenced${e.fencedClaim}") {
-      graft.functions.GraftFunctions.register(spark)
       val root = java.nio.file.Files.createTempDirectory("graft-fence")
         .resolve("structure").toString
       // batch 2 updates doc 4, inserts doc 5 and deletes doc 2
@@ -199,7 +198,6 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     test(s"${e.label}: a torn segment is dropped by the fold, not folded — its replay rewrites it") {
-      graft.functions.GraftFunctions.register(spark)
       val root = java.nio.file.Files.createTempDirectory("graft-fence-torn")
         .resolve("structure").toString
       assert(e.append(root, textImages((1, t1, 0, false), (2, t2, 0, false)), "b000000"))
@@ -227,7 +225,6 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     test(s"${e.label}: a committed segment's crashed replay tears nothing — fold and resume keep its rows") {
-      graft.functions.GraftFunctions.register(spark)
       val root = java.nio.file.Files.createTempDirectory("graft-fence-replay")
         .resolve("structure").toString
       assert(e.append(root, textImages((1, t1, 0, false), (2, t2, 0, false)), "b000000"))
@@ -260,7 +257,6 @@ class CdcReplayFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("text: the fence is monotone across successive folds") {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-fence-2fold")
     val idx = work.resolve("index").toString
     def probe() = collectStr(TextAnalysis

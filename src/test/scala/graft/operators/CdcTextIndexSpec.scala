@@ -61,15 +61,14 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // live docs present
     assert(got.map(_._1).toSet === Set(1L, 3L, 4L))
 
-    // equivalence: full rebuild over the LATEST images scores identically
-    // (df/n/sumdl must count live docs only for this to hold)
-    import spark.implicits._
-    val latest = Seq((1L, "delta shared"), (3L, "gamma shared gamma gamma"),
-      (4L, "delta delta shared")).toDF("doc_id", "text")
-    TextAnalysis.buildTextIndex(latest, rebuilt)
+    // equivalence: a fresh one-batch index of the LATEST images scores
+    // identically (df/n/sumdl must count live docs only for this to hold)
+    TextAnalysis.appendCdcTextSegment(images(Seq(
+      (1L, "delta shared", 0L, false), (3L, "gamma shared gamma gamma", 0L, false),
+      (4L, "delta delta shared", 0L, false))), rebuilt, "b000000")
     val want = probeRows(
-      TextAnalysis.bm25TopKViaIndex(spark, rebuilt, terms, 10).orderBy("r_sparse"))
-    assert(got === want, "CDC merge-on-read probe != full rebuild over latest images")
+      TextAnalysis.bm25TopKViaCdcIndex(spark, rebuilt, terms, 10).orderBy("r_sparse"))
+    assert(got === want, "CDC merge-on-read probe != fresh index of the latest images")
 
     // replay: re-appending batch 1's segment (streaming retry) is a no-op
     TextAnalysis.appendCdcTextSegment(images(b1), idx, "b000001")
@@ -151,22 +150,21 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       nBuckets = 16), "a replay at the fence was not skipped")
     assert(probe(16) === got, "a fenced replay changed the probe")
 
-    // ingest continues at the new count and still equals a full rebuild
-    // over the latest images
-    import spark.implicits._
+    // ingest continues at the new count and still equals a fresh
+    // one-batch index of the latest images
     TextAnalysis.appendCdcTextSegment(images(Seq(
       (1L, "gamma shared", 2L, false),
       (5L, "delta shared delta", 2L, false))), idx, "b000002", nBuckets = 16)
-    val latest = Seq((1L, "gamma shared"), (3L, "gamma shared gamma gamma"),
-      (4L, "delta delta shared"), (5L, "delta shared delta"))
-      .toDF("doc_id", "text")
     val rebuilt = work.resolve("rebuilt").toString
-    TextAnalysis.buildTextIndex(latest, rebuilt, nBuckets = 16)
+    TextAnalysis.appendCdcTextSegment(images(Seq(
+      (1L, "gamma shared", 0L, false), (3L, "gamma shared gamma gamma", 0L, false),
+      (4L, "delta delta shared", 0L, false), (5L, "delta shared delta", 0L, false))),
+      rebuilt, "b000000", nBuckets = 16)
     val want = probeRows(
-      TextAnalysis.bm25TopKViaIndex(spark, rebuilt, terms, 10, nBuckets = 16)
+      TextAnalysis.bm25TopKViaCdcIndex(spark, rebuilt, terms, 10, nBuckets = 16)
         .orderBy("r_sparse"))
     assert(probe(16) === want,
-      "post-rebucket ingest diverged from a full rebuild over latest images")
+      "post-rebucket ingest diverged from a fresh index of the latest images")
 
     // the re-bucket TRIGGER measurement: per-bucket live posting
     // occupancy at the RECORDED count — one row per bucket (empties at
@@ -256,6 +254,49 @@ class CdcTextIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, null, 0L, true))), idx, "b000000")
     val got = probeRows(TextAnalysis.bm25TopKViaCdcIndex(spark, idx, Seq("solo", "term"), 10))
     assert(got.map(_._1) === Seq(1L))
+    val tw = java.nio.file.Files.walk(work)
+    try tw.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally tw.close()
+  }
+
+  test("excludeDocId drops the doc from the candidates after df, n and sumdl count it") {
+    val work = java.nio.file.Files.createTempDirectory("graft-cdcidx-ex")
+    val idx = work.resolve("cdc").toString
+    val docs = Seq(
+      (1L, "alpha shared", 0L, false),
+      (2L, "alpha beta", 0L, false),
+      (3L, "gamma alpha alpha", 0L, false),
+      (4L, "shared delta delta", 0L, false))
+    TextAnalysis.appendCdcTextSegment(images(docs), idx, "b000000")
+    val all = probeRows(
+      TextAnalysis.bm25TopKViaCdcIndex(spark, idx, terms, 10).orderBy("r_sparse"))
+    val excluded = probeRows(
+      TextAnalysis.bm25TopKViaCdcIndex(spark, idx, terms, 10, excludeDocId = Some(1L))
+        .orderBy("r_sparse"))
+    assert(all.exists(_._1 == 1L), "the excluded doc must match a query term")
+    assert(!excluded.exists(_._1 == 1L), "the excluded doc is still a candidate")
+    // doc 1 carries alpha and shared, so its postings still count toward
+    // their df (and its length toward n and sumdl): every other doc's
+    // score is the unexcluded probe's, bit for bit, and the ranks are
+    // the unexcluded order with doc 1 taken out
+    val rest = all.filter(_._1 != 1L)
+    assert(excluded.map(r => (r._1, r._2)) === rest.map(r => (r._1, r._2)))
+    assert(excluded.map(_._3) === (1L to rest.size.toLong))
+    // doc 1 is in the unexcluded top 3, so a cut to k before the
+    // exclusion would return two rows here
+    assert(all.take(3).exists(_._1 == 1L))
+    assert(probeRows(TextAnalysis.bm25TopKViaCdcIndex(spark, idx, terms, rest.size,
+      excludeDocId = Some(1L)).orderBy("r_sparse")) === excluded)
+    // an index that never held doc 1 scores the others differently, so
+    // the equality above is not vacuous
+    val without = work.resolve("without").toString
+    TextAnalysis.appendCdcTextSegment(images(docs.filter(_._1 != 1L)), without, "b000000")
+    val fresh = probeRows(TextAnalysis.bm25TopKViaCdcIndex(spark, without, terms, 10))
+      .map(r => r._1 -> r._2).toMap
+    assert(rest.exists(r => fresh(r._1) != r._2),
+      "dropping doc 1 from the corpus left every score unchanged")
+
     val tw = java.nio.file.Files.walk(work)
     try tw.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => java.nio.file.Files.deleteIfExists(p))

@@ -130,7 +130,6 @@ class ExecutedPlanSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("every execute-on-call gate's executed plans avoid cartesian " +
       "products and single-task shapes") {
-    graft.functions.GraftFunctions.register(spark)
     val registered = graft.SparkEntry.queries
     val stale = GlobalPlanSweepSpec.executesOnCall -- registered.keySet
     assert(stale.isEmpty, s"executesOnCall names unknown gates: $stale")

@@ -352,7 +352,6 @@ class FoldLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a real compactor loses by name under a held lease; the structure is intact") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-lease-cdc")
     val idx = work.resolve("index").toString
     (0 until 3).foreach { b =>

@@ -36,7 +36,6 @@ class GlobalPlanSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val executesOnCall = GlobalPlanSweepSpec.executesOnCall
 
   test("no gate plans a non-broadcast cartesian product") {
-    graft.functions.GraftFunctions.register(spark)
     val offenders = graft.SparkEntry.queries.toSeq
       .filterNot { case (name, _) => executesOnCall(name) }
       .sortBy(_._1)
@@ -99,7 +98,6 @@ class GlobalPlanSweepSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("no gate plans an unpartitioned Window or mid-plan global Sort over unreduced input") {
-    graft.functions.GraftFunctions.register(spark)
     val offenders = graft.SparkEntry.queries.toSeq
       .filterNot { case (name, _) => executesOnCall(name) }
       .sortBy(_._1)

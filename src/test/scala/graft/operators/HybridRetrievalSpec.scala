@@ -75,11 +75,11 @@ class HybridRetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vals.sortBy { case (v, id) => (-v, id) }.sameElements(vals))
   }
 
-  test("bm25TopKViaIndex == inline bm25Scores on matching docs (bit-identical fold)") {
+  test("bm25TopKViaCdcIndex == inline bm25Scores on matching docs (bit-identical fold)") {
     import spark.implicits._
-    val idx = PersistedIndexes.textIndex(spark, d)
+    val idx = PersistedIndexes.textIndexLifecycle(spark, d)
     val viaIndex = TextAnalysis
-      .bm25TopKViaIndex(spark, idx, TextAnalysis.bm25Terms, 10000)
+      .bm25TopKViaCdcIndex(spark, idx, TextAnalysis.bm25Terms, 10000)
       .select($"doc_id", $"bm25").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val inline = TextAnalysis.bm25Scores(spark, d)

@@ -44,7 +44,6 @@ class IncrementalZorderSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rewritten tail prunes a corner box the unsorted ingest could not") {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-izo")
     val out = work.resolve("t").toString
     val df = table()
@@ -76,7 +75,6 @@ class IncrementalZorderSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("no manifest -> everything is tail (full optimize), then idempotent") {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-izo2")
     val out = work.resolve("t").toString
     table().repartition(5).write.mode("overwrite").parquet(out)
@@ -89,7 +87,6 @@ class IncrementalZorderSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a crashed run's staged tail is removed by the next run") {
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-izo3")
     val out = work.resolve("t").toString
     table().repartition(3).write.mode("overwrite").parquet(out)

@@ -27,8 +27,6 @@ class IndexCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  override def beforeAll(): Unit = graft.functions.GraftFunctions.register(spark)
-
   private val d = "/root/testdata/sf0.001"
 
   private def segDirs(path: String): Seq[String] = {

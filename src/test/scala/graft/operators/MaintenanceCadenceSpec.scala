@@ -26,8 +26,6 @@ class MaintenanceCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  override def beforeAll(): Unit = graft.functions.GraftFunctions.register(spark)
-
   // the daemon shape in miniature: ONE image set per batch feeds both
   // log routes. Docs rotate through batches ((d + v) % 4 == 0, ver = v)
   // so versions pile up (real read amplification), words form exact-dup

@@ -21,9 +21,6 @@ class MaintenancePolicySpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def beforeAll(): Unit =
-    graft.functions.GraftFunctions.register(spark)
-
   override def afterAll(): Unit = spark.stop()
 
   private def withTmp(test: java.nio.file.Path => Unit): Unit = {

@@ -27,9 +27,6 @@ class MinhashCollapseSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def beforeAll(): Unit =
-    graft.functions.GraftFunctions.register(spark)
-
   override def afterAll(): Unit = spark.stop()
 
   private def corpus(rows: Seq[(String, String)]): DataFrame = {

@@ -49,7 +49,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dd04: hot-shingle cut is a LEFT ANTI join that AQE promotes to broadcast") {
-    graft.functions.GraftFunctions.register(spark)
     val p = Dedup.dd04NgramJaccard(spark, d)
     val s = plan(p)
     assert(s.contains("LeftAnti"), s.take(1500))
@@ -86,7 +85,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim02 multi-probe: probe side broadcasts, base never cartesians") {
-    graft.functions.GraftFunctions.register(spark)
     val p = Similarity.sim02LshTopK(spark, d)
     val s = plan(p)
     assert(s.contains("BroadcastHashJoin"), s.take(1500))
@@ -96,7 +94,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mm05: band join is an equi-join (no cartesian/BNL), top-k via window") {
-    graft.functions.GraftFunctions.register(spark)
     val p = Multimodal.mm05PhashNearDup(spark, d)
     val s = plan(p)
     assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"),
@@ -105,7 +102,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dd06ViaIndex: no corpus text scan, band probe stays an equi-join") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan-idx")
     val corpusPath = dir.resolve("corpus.parquet").toString
@@ -123,7 +119,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim05ViaIndex: probe is partition-pruned (DPP on the cell directories)") {
-    graft.functions.GraftFunctions.register(spark)
     val idx = PersistedIndexes.annIndex(spark, d)
     val s = plan(Similarity.sim05ViaIndex(spark, d, idx))
     // the inverted-file scan must carry a dynamic-pruning partition filter
@@ -260,9 +255,9 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim09b sparse probe: postings scan is bucket-pruned, corpus text never scanned") {
-    graft.functions.GraftFunctions.register(spark)
-    val idx = PersistedIndexes.textIndex(spark, d)
-    val p = TextAnalysis.bm25TopKViaIndex(spark, idx, TextAnalysis.bm25Terms, 50)
+    val idx = PersistedIndexes.textIndexLifecycle(spark, d)
+    val p = TextAnalysis.bm25TopKViaCdcIndex(spark, idx, TextAnalysis.bm25Terms, 50,
+      excludeDocId = Some(0L))
     val scans = fileScans(p)
     val postScans = scans.filter(_.relation.location.rootPaths.mkString.contains("postings"))
     assert(postScans.nonEmpty, plan(p).take(1500))
@@ -284,7 +279,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dd08: eval side broadcasts; train side never cartesians") {
-    graft.functions.GraftFunctions.register(spark)
     val p = Dedup.dd08Decontaminate(spark, d)
     val s = plan(p)
     assert(s.contains("BroadcastHashJoin"), s.take(1500))
@@ -348,7 +342,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dd10: corpus never shuffles — broadcast rep joins, bounded agg, no window") {
-    graft.functions.GraftFunctions.register(spark)
     val p = Similarity.dd10SemanticDedup(spark, d)
     val s = plan(p)
     // rep fetch + pair generation are broadcast hash joins (the rep side
@@ -402,7 +395,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim08: codes scan is partition-pruned to the probed cells, corpus never shuffles") {
-    graft.functions.GraftFunctions.register(spark)
     val idx = PersistedIndexes.ivfPqIndex(spark, d)
     val p = Similarity.sim08ViaIndex(spark, d, idx)
     val s = plan(p)
@@ -490,7 +482,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sim11: range search never shuffles the corpus — scan-stage filter, broadcast query") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    graft.functions.GraftFunctions.register(spark)
     val p = Similarity.sim11RangeSearch(spark, d)
     val s = plan(p)
     assert(s.contains("BroadcastNestedLoopJoin") || s.contains("BroadcastExchange"),
@@ -551,7 +542,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("sim12: both cuts are TakeOrdered — the corpus is never globally sorted or shuffled") {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    graft.functions.GraftFunctions.register(spark)
     val p = Similarity.sim12TruncatedPrefilter(spark, d)
     val s = plan(p)
     assert(s.split("TakeOrderedAndProject").length - 1 >= 2,
@@ -667,7 +657,6 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rank-filter gates get WindowGroupLimit — hot window partitions ship <= k rows per map task") {
-    graft.functions.GraftFunctions.register(spark)
     // Spark inserts a per-partition group limit BELOW the window's
     // exchange for rank()/row_number() <= k filters: each map task cuts
     // its slice of every window partition to k rows before anything

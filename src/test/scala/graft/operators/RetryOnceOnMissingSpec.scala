@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** [[Layout.retryOnceOnMissing]] retries a probe body that fails on a
   * missing path (a directory swapped aside and back, say); the
-  * benchmark's probes and the gates' `detached` probes run under it. Its
+  * benchmark's probes run under it. Its
   * three outcome classes — retry
   * then succeed (including across back-to-back swaps), retries-exhausted
   * rethrow naming recoverPublish, and non-missing passthrough — each get

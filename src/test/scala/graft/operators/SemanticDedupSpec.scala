@@ -22,7 +22,6 @@ class SemanticDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("identical vectors collapse to the smallest id; orthogonal survive") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // seeds (vec_id < k): two orthogonal directions -> two cells.
     // vec 2, 3, 4 are the SAME direction as seed 0 (identical after
     // normalization: cos = 1); vec 5 is seed 1's direction; vec 6 is a
@@ -92,7 +91,6 @@ class SemanticDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_min_k: bounded k-smallest across partitions, sorted, null-safe") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     // 100 values per group over 7 partitions forces partial-buffer merges
     val df = (0 until 200).map(i => (i % 2, (i / 2 + 37 * i) % 997))
@@ -114,7 +112,6 @@ class SemanticDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pair-count bound: a degenerate all-one-cell corpus does N*reps work, not N^2") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val n = 200
     // identical embeddings -> one cell, the worst case the round-7 shape

@@ -53,7 +53,6 @@ class SignBucketScalingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim03 via the persisted IVF index equals the inline-centroid path") {
-    graft.functions.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
     val idx = java.nio.file.Files.createTempDirectory("ivf-idx").toString
     Similarity.buildIvfIndex(graft.core.Tables.embeddings(spark, d), idx)
@@ -65,7 +64,6 @@ class SignBucketScalingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim07 via the persisted PQ index: equal results, codes-only scan") {
-    graft.functions.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
     val idx = java.nio.file.Files.createTempDirectory("pq-idx").toString
     Similarity.buildPqIndex(graft.core.Tables.embeddings(spark, d), idx)
@@ -90,7 +88,6 @@ class SignBucketScalingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sim05 via the persisted ANN index: equal results, cell-pruned scan") {
-    graft.functions.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
     val idx = java.nio.file.Files.createTempDirectory("ann-idx").toString
     Similarity.buildAnnIndex(graft.core.Tables.embeddings(spark, d), idx)

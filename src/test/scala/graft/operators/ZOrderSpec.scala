@@ -23,7 +23,6 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def zorder(bits: Int, vals: Long*): java.lang.Long = {
-    graft.functions.GraftFunctions.register(spark)
     val cols = lit(bits) +: vals.map(v => lit(v))
     val r = spark.range(1)
       .select(call_function("graft_zorder", cols: _*).as("z")).head()
@@ -41,7 +40,6 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("null dimension nulls the key; SQL-path type errors are named") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.range(1)
       .select(call_function("graft_zorder", lit(8),
         lit(null).cast("long"), lit(1L)).as("z")).head()

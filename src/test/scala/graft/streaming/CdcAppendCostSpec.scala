@@ -116,7 +116,6 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cdcm4 text index: append work is O(batch) — measured, 5 vs 9 batches") {
     import graft.operators.{CdcBinlog, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
 
     def run(div: Int): (java.nio.file.Path, Map[Long, Long]) = {
       val work = java.nio.file.Files.createTempDirectory(s"graft-cost4-$div")
@@ -154,7 +153,6 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cdcm5 ANN index: append work is O(batch) — measured, 5 vs 9 batches") {
     import graft.operators.{CdcBinlog, Similarity}
-    graft.functions.GraftFunctions.register(spark)
 
     def run(div: Int): (java.nio.file.Path, Map[Long, Long]) = {
       val work = java.nio.file.Files.createTempDirectory(s"graft-cost5-$div")
@@ -198,7 +196,6 @@ class CdcAppendCostSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cdcm6 fp log: append work is O(batch) — measured, 5 vs 9 batches") {
     import graft.operators.{CdcBinlog, TextAnalysis}
     import org.apache.spark.sql.functions.md5
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
 
     def run(div: Int): (java.nio.file.Path, Map[Long, Long]) = {

@@ -92,7 +92,6 @@ class CdcDdlDriftResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("typed pipeline dies at the ALTER, resumes with evolved ddl, index converges") {
     import graft.operators.{CdcBinlog, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
     val work = java.nio.file.Files.createTempDirectory("graft-ddl-drift")
     val fix = work.resolve("log")
     java.nio.file.Files.createDirectories(fix)
@@ -237,7 +236,6 @@ class CdcDdlDriftResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("fan-out: d1's ALTER kills the multiplex, the evolved resume converges BOTH routes; d2's quantizer is untouched") {
     import graft.operators.{CdcBinlog, Similarity, TextAnalysis}
     import org.apache.spark.sql.functions.{max, struct}
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("graft-ddl-fanout")
     val fix = work.resolve("log")

@@ -167,7 +167,6 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
       work.resolve("index").toString, nBuckets = 16)
 
   private lazy val textWant = {
-    graft.functions.GraftFunctions.register(spark)
     graft.operators.CdcBinlog.cdcm4IndexFreshness(spark, dir)
       .collect().map(_.toString).toSeq
   }
@@ -251,7 +250,6 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     * folded with `fold` unless it is None: (centroids, probe).
     */
   private def annReference(fold: Option[String => Unit]): (Seq[(Int, Seq[Double])], Seq[String]) = {
-    graft.functions.GraftFunctions.register(spark)
     val ref = java.nio.file.Files.createTempDirectory("graft-annfold-ref")
     val qRef = startAnn(ref, Trigger.AvailableNow())
     qRef.awaitTermination()
@@ -419,7 +417,6 @@ class CdcFoldCrashResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
   // only on final latest images), so it is the ground truth for a
   // differently-capped crash run too
   private lazy val bandWant = {
-    graft.functions.GraftFunctions.register(spark)
     val want = graft.operators.CdcBinlog.cdcm15NearDupFreshness(spark, dir)
       .collect().map(_.toString).toSeq
     assert(want.nonEmpty)

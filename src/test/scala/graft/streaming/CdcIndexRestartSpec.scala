@@ -113,7 +113,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cdcm4 pipeline: kill mid-stream, resume, probe == uninterrupted run") {
     import graft.operators.{CdcBinlog, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
 
     // reference: the gate's own uninterrupted run
     val want = CdcBinlog.cdcm4IndexFreshness(spark, dir)
@@ -158,7 +157,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   test("cdcm5 pipeline: kill mid-stream, resume — probe AND quantizer identical") {
     import graft.operators.{CdcBinlog, Similarity}
-    graft.functions.GraftFunctions.register(spark)
 
     def start(work: java.nio.file.Path, trigger: Trigger) = {
       val idx = work.resolve("annindex").toString
@@ -230,7 +228,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   test("cdcm7 pipeline: kill AFTER the mid-stream compaction, resume, probe matches") {
     import graft.operators.{CdcBinlog, Layout, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
 
     def start(work: java.nio.file.Path, trigger: Trigger) = {
       val idx = work.resolve("index").toString
@@ -310,7 +307,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   test("cdcm10 pipeline: kill mid-stream, resume — both routed indexes identical") {
     import graft.operators.{CdcBinlog, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
     val want = CdcBinlog.cdcm10MultiIndexRouting(spark, dir)
       .collect().map(_.toString).toSeq
 
@@ -379,7 +375,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cdcm11 pipeline: kill mid-stream, resume — text and vector legs identical") {
     import graft.operators.{CdcBinlog, Similarity, TextAnalysis}
     import org.apache.spark.sql.functions.{col, lit, max, struct}
-    graft.functions.GraftFunctions.register(spark)
     val want = CdcBinlog.cdcm11HeteroIndexRouting(spark, dir)
       .collect().map(_.toString).toSeq
 
@@ -468,7 +463,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cdcm12 pipeline: kill after a fold, resume — all three structures identical") {
     import graft.operators.{CdcBinlog, Layout, Similarity, TextAnalysis}
     import org.apache.spark.sql.functions.{col, lit, max, md5, row_number, struct, expr}
-    graft.functions.GraftFunctions.register(spark)
     val want = CdcBinlog.cdcm12TriFanout(spark, dir)
       .collect().map(_.toString).toSeq
 
@@ -605,7 +599,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cdcm6 pipeline: kill mid-stream, resume, duplicate groups identical") {
     import graft.operators.{CdcBinlog, TextAnalysis}
     import org.apache.spark.sql.functions.md5
-    graft.functions.GraftFunctions.register(spark)
 
     def start(work: java.nio.file.Path, trigger: Trigger) = {
       import spark.implicits._
@@ -649,7 +642,6 @@ class CdcIndexRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cdcm15 pipeline: kill AFTER the mid-stream band-log fold, resume, near-dup report matches") {
     import graft.operators.{CdcBinlog, Layout}
-    graft.functions.GraftFunctions.register(spark)
 
     // the gate's pipeline: band images appended per batch, the log
     // folded after the third append (the newest maintained-state kind

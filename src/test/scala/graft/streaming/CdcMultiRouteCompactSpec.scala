@@ -38,7 +38,6 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("both routed indexes fold mid-stream on staggered schedules; probe matches the gate") {
     import graft.operators.{CdcBinlog, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
     val want = CdcBinlog.cdcm10MultiIndexRouting(spark, dir)
       .collect().map(_.toString).toSeq
 
@@ -120,7 +119,6 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   test("hetero staggered folds leave exact per-structure fences; probe matches cdcm11") {
     import graft.operators.{CdcBinlog, Layout, Similarity, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
     val want = CdcBinlog.cdcm11HeteroIndexRouting(spark, dir)
       .collect().map(_.toString).toSeq
 
@@ -224,7 +222,6 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   test("hetero staggered re-bucket + requantize under the shared pass; probe matches cdcm11") {
     import graft.operators.{CdcBinlog, Layout, Similarity, TextAnalysis}
-    graft.functions.GraftFunctions.register(spark)
     val want = CdcBinlog.cdcm11HeteroIndexRouting(spark, dir)
       .collect().map(_.toString).toSeq
 
@@ -358,7 +355,6 @@ class CdcMultiRouteCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("maintenance daemon: all four maintained kinds fold by their own policies under the shared pass") {
     import graft.operators.{CdcBinlog, Layout, Similarity, TextAnalysis}
     import org.apache.spark.sql.functions.{col, lit, max, md5, struct, sum}
-    graft.functions.GraftFunctions.register(spark)
     val want = CdcBinlog.cdcm11HeteroIndexRouting(spark, dir)
       .collect().map(_.toString).toSeq
 

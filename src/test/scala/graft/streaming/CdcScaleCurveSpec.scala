@@ -80,7 +80,6 @@ class CdcScaleCurveSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def run(sfDir: String): Curve = {
     import graft.operators.{CdcBinlog, Similarity, TextAnalysis}
     import org.apache.spark.sql.functions.{col, max, struct}
-    graft.functions.GraftFunctions.register(spark)
     val fix = CdcBinlog.fixtureDir(sfDir)
     val totalBytes = new java.io.File(fix).listFiles()
       .filter(f => f.isFile && f.getName.startsWith("binlog.0"))
